@@ -130,6 +130,18 @@ def _cover_pdf_hier(pdf: pd.DataFrame, res: int, cover_res: int) -> pd.DataFrame
 _HIER_SCHEMA = "polygon_id string, tile long, fine boolean, full_inside boolean"
 
 
+def _collect_small(polygons: DataFrame, collect_threshold: int) -> pd.DataFrame | None:
+    """The counted cover gate as one bounded job: the (polygon_id, ring)
+    rows iff there are at most ``collect_threshold`` of them, else None
+    (``collect_threshold=0`` is the forced distributed path and runs no
+    job). ``limit(threshold + 1)`` both counts and collects, so the gate
+    costs one Spark job instead of a count plus a collect."""
+    if not collect_threshold:
+        return None
+    pdf = polygons.select("polygon_id", "ring").limit(collect_threshold + 1).toPandas()
+    return pdf if len(pdf) <= collect_threshold else None
+
+
 def polygon_cover_hier(
     polygons: DataFrame, res: int, cover_res: int, collect_threshold: int = 2000
 ) -> DataFrame:
@@ -141,10 +153,9 @@ def polygon_cover_hier(
     def per_polygon(pdf: pd.DataFrame) -> pd.DataFrame:
         return _cover_pdf_hier(pdf, res, cover_res)
 
-    if collect_threshold and polygons.count() <= collect_threshold:
-        pdf = polygons.select("polygon_id", "ring").toPandas()
-        spark = polygons.sparkSession
-        return spark.createDataFrame(
+    pdf = _collect_small(polygons, collect_threshold)
+    if pdf is not None:
+        return polygons.sparkSession.createDataFrame(
             _cover_pdf_hier(pdf, res, cover_res), schema=_HIER_SCHEMA
         )
     return (
@@ -171,10 +182,9 @@ def polygon_cover(
     def per_polygon(pdf: pd.DataFrame) -> pd.DataFrame:
         return _cover_pdf(pdf, res)
 
-    if collect_threshold and polygons.count() <= collect_threshold:
-        pdf = polygons.select("polygon_id", "ring").toPandas()
-        spark = polygons.sparkSession
-        return spark.createDataFrame(
+    pdf = _collect_small(polygons, collect_threshold)
+    if pdf is not None:
+        return polygons.sparkSession.createDataFrame(
             _cover_pdf(pdf, res),
             schema="polygon_id string, tile long, full_inside boolean",
         )

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .spread import kernel_width
+
 
 def range_ranked(
     df: DataFrame, order_cols: list[str], rank_col: str = "rank"
@@ -35,14 +37,10 @@ def range_ranked(
     import numpy as np
 
     sc = df.sparkSession.sparkContext
-    # scale-adaptive width from session config (shuffle partitions track
-    # cluster size at scale). NOT df.rdd.getNumPartitions(): touching
+    # width from session config, NOT df.rdd.getNumPartitions(): touching
     # .rdd on a post-shuffle frame forces AQE to execute its query
     # stages eagerly — measured 10x on the vocab_growth lineage.
-    want = max(
-        sc.defaultParallelism,
-        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-    )
+    want = kernel_width(df.sparkSession)
     parted = (
         df.repartitionByRange(want, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)

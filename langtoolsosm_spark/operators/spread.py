@@ -14,11 +14,27 @@ least that many partitions — at production scale inputs arrive pre-split
 repartition is deterministic (Spark sorts before round-robin
 repartitioning, SPARK-23207) and every consumer here is an aggregate /
 join / distinct whose result is partitioning-independent.
+
+``kernel_width`` is the one width rule for an exchange that feeds heavy
+Python work (grouped pandas/Arrow kernels, range-ranked passes).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+
+def kernel_width(spark: SparkSession) -> int:
+    """Partition count for an exchange feeding a Python kernel:
+    ``max(defaultParallelism, spark.sql.shuffle.partitions)`` — shuffle
+    partitions track cluster size at scale. Callers pass it as an EXPLICIT
+    count: AQE's CoalesceShufflePartitions sizes partitions by shuffle
+    bytes and never merges a fixed-count exchange, so a few-KB exchange
+    in front of seconds of per-group Python still lands on every core."""
+    return max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
 
 
 def scan_spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:

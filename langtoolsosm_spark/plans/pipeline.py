@@ -42,7 +42,12 @@ def flagship(
     Column pruning note: ``bytes`` is never selected here, so the parquet
     scan reads only the metadata columns (verified via .explain ReadSchema).
     """
-    images, polygons, features, _ = load_synth(spark, synth_dir)
+    # only the three tables used here: load_synth's wikidata read would
+    # cost a schema-inference job per pass for nothing
+    images, polygons, features = (
+        spark.read.parquet(f"{synth_dir}/{name}.parquet")
+        for name in ("images", "polygons", "features")
+    )
     pts = images.select("image_id", "caption", "lat", "lon")
     if replicate > 1:
         # scale the measured workload without regenerating data: replicas

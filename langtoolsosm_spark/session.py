@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical RAM, capped at 48g: local mode runs
+    every executor inside this one JVM, and the rest of RAM is left to
+    the Python workers and the OS."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "langtoolsosm_spark",
     cores: int | None = None,
@@ -26,7 +34,8 @@ def get_spark(
     cores=None -> local[*]. shuffle_partitions defaults to the core count
     (local mode: one JVM, shuffles through local disk — 200 partitions
     would just add scheduling overhead; on a real cluster this is set to
-    ~2-3x total executor cores).
+    ~2-3x total executor cores). Driver memory (local mode) is
+    ``$SPARK_DRIVER_MEM`` if set, else half of physical RAM capped at 48g.
 
     ``cluster=True`` (or env SPARK_GRAFT_CLUSTER=1): spark-submit owns
     the master URL, executor topology, driver memory, and shuffle
@@ -44,7 +53,8 @@ def get_spark(
     builder = SparkSession.builder
     if not cluster:
         builder = builder.master(f"local[{cores}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
         )
     if not cluster:
         builder = builder.config(

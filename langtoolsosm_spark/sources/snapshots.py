@@ -434,52 +434,69 @@ def write_partitioned(
     without touching them — the Iceberg manifest-stats model.
 
     The write itself is distributed (one pass, hash-partitioned by
-    ``partition_col``); only manifest bookkeeping is driver-side.
+    ``partition_col``); only manifest bookkeeping is driver-side. Each
+    group's Arrow table goes straight to parquet (``applyInArrow``: no
+    pandas round trip), so file columns keep Spark's Arrow types.
+
+    Width: the groups are hash-repartitioned to ``kernel_width`` (max of
+    defaultParallelism and shuffle partitions) before the grouped write.
+    The count is explicit because AQE sizes an unfixed exchange by shuffle
+    bytes, and a few-KB exchange feeding one parquet write per group would
+    be coalesced onto one task that writes every file serially; a
+    fixed-count exchange is never coalesced, and it already clusters by
+    ``__pid``, so the grouped kernel adds no second shuffle.
     """
+    from pyspark.sql import functions as F
+
+    from ..operators.spread import kernel_width
+
     skip = skip_partitions or set()
     if stats_col is not None:
         _require_integral_cols(df, [stats_col], "write_partitioned")
     data_dir = table.data_dir
 
-    def _write_partition(pid_iter):
-        # executor-side: write one parquet file per spark partition
-        import pyarrow as pa  # re-import inside task
+    def _write_group(tbl):
+        # executor-side: one parquet file per __pid group
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pqw
         import time as _t
         import uuid as _u
 
-        for pdf in pid_iter:
-            if len(pdf) == 0:
-                continue
-            t0 = _t.time()
-            pid = int(pdf["__pid"].iloc[0])
-            if pid in skip:
-                continue
-            fn = f"part-{pid:05d}-{_u.uuid4().hex}.parquet"
-            tbl = pa.Table.from_pandas(pdf.drop(columns=["__pid"]), preserve_index=False)
-            pqw.write_table(tbl, os.path.join(data_dir, fn))
-            smin = int(pdf[stats_col].min()) if stats_col else None
-            smax = int(pdf[stats_col].max()) if stats_col else None
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "partition_id": [pid],
-                    "file": [fn],
-                    "rows": [len(pdf)],
-                    "duration_ms": [int((_t.time() - t0) * 1000)],
-                    "stat_min": [smin],
-                    "stat_max": [smax],
-                }
-            ).to_pandas()
-
-    from pyspark.sql import functions as F
+        t0 = _t.time()
+        schema = pa.schema(
+            [("partition_id", pa.int64()), ("file", pa.string()), ("rows", pa.int64()),
+             ("duration_ms", pa.int64()), ("stat_min", pa.int64()), ("stat_max", pa.int64())]
+        )
+        pid = tbl.column("__pid")[0].as_py()
+        if pid in skip:
+            return schema.empty_table()
+        fn = f"part-{pid:05d}-{_u.uuid4().hex}.parquet"
+        pqw.write_table(tbl.drop_columns(["__pid"]), os.path.join(data_dir, fn))
+        mm = pc.min_max(tbl.column(stats_col)).as_py() if stats_col else {}
+        return pa.table(
+            {
+                "partition_id": [pid],
+                "file": [fn],
+                "rows": [tbl.num_rows],
+                "duration_ms": [int((_t.time() - t0) * 1000)],
+                "stat_min": [mm.get("min")],
+                "stat_max": [mm.get("max")],
+            },
+            schema=schema,
+        )
 
     with_pid = df.withColumn("__pid", F.abs(F.hash(F.col(partition_col))))
-    manifest_df = with_pid.groupBy("__pid").applyInPandas(
-        lambda pdf: next(iter(_write_partition([pdf])), _empty_manifest_pdf()),
-        schema="partition_id long, file string, rows long, duration_ms long, "
-        "stat_min long, stat_max long",
+    manifest_df = (
+        with_pid.repartition(kernel_width(df.sparkSession), "__pid")
+        .groupBy("__pid")
+        .applyInArrow(
+            _write_group,
+            schema="partition_id long, file string, rows long, duration_ms long, "
+            "stat_min long, stat_max long",
+        )
     )
-    recs = [r.asDict() for r in manifest_df.collect() if r["file"] is not None]
+    recs = [r.asDict() for r in manifest_df.collect()]
 
     snaps = []
     batch = batch_partitions or len(recs) or 1
@@ -508,13 +525,3 @@ def write_partitioned(
             )
         )
     return snaps
-
-
-def _empty_manifest_pdf():
-    import pandas as pd
-
-    return pd.DataFrame(
-        {"partition_id": pd.Series([], dtype="int64"), "file": pd.Series([], dtype="object"),
-         "rows": pd.Series([], dtype="int64"), "duration_ms": pd.Series([], dtype="int64"),
-         "stat_min": pd.Series([], dtype="int64"), "stat_max": pd.Series([], dtype="int64")}
-    )

@@ -181,3 +181,31 @@ def test_pip_join_shuffled_paths_match_broadcast(spark, tables):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(a, b)
+
+
+@pytest.mark.parametrize("hier", [False, True], ids=["cover", "cover_hier"])
+def test_cover_gate_paths_agree_at_threshold(spark, tables, hier):
+    """The cover gate's boundary: ``collect_threshold`` equal to the
+    polygon count takes the driver-side path, one less takes the
+    distributed applyInPandas path, and both give the same cover."""
+    _, polygons, _ = tables
+    n = polygons.count()
+
+    def cover(threshold):
+        if hier:
+            return pip_mod.polygon_cover_hier(polygons, 6, 8, collect_threshold=threshold)
+        return pip_mod.polygon_cover(polygons, 6, collect_threshold=threshold)
+
+    def distributed(df):
+        return "FlatMapGroupsInPandas" in df._jdf.queryExecution().analyzed().toString()
+
+    def rows(df):
+        pdf = df.toPandas()
+        return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+    at, below = cover(n), cover(n - 1)
+    assert not distributed(at)
+    assert distributed(below)
+    got = rows(at)
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, rows(below))

@@ -1,0 +1,180 @@
+"""Snapshot writer: width of the grouped write and parity with the
+pandas-kernel writer it replaced.
+
+``_pandas_write`` is the reference: the earlier ``write_partitioned``
+write path (``groupBy("__pid").applyInPandas``, one
+``pa.Table.from_pandas`` parquet file per group), committed with the
+same manifest bookkeeping.
+"""
+
+import os
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from langtoolsosm_spark.operators.spread import kernel_width
+from langtoolsosm_spark.sources.snapshots import (
+    SnapshotTable,
+    compact_table,
+    write_partitioned,
+)
+
+
+def _pandas_write(df, table, partition_col, stats_col):
+    data_dir = table.data_dir
+
+    def kern(pdf):
+        pid = int(pdf["__pid"].iloc[0])
+        fn = f"part-{pid:05d}-ref.parquet"
+        pq.write_table(
+            pa.Table.from_pandas(pdf.drop(columns=["__pid"]), preserve_index=False),
+            os.path.join(data_dir, fn),
+        )
+        return pd.DataFrame({
+            "partition_id": [pid], "file": [fn], "rows": [len(pdf)],
+            "stat_min": [int(pdf[stats_col].min())], "stat_max": [int(pdf[stats_col].max())],
+        })
+
+    recs = (
+        df.withColumn("__pid", F.abs(F.hash(F.col(partition_col))))
+        .groupBy("__pid")
+        .applyInPandas(
+            kern, "partition_id long, file string, rows long, stat_min long, stat_max long"
+        )
+        .collect()
+    )
+    return table.commit(
+        files=[r["file"] for r in recs],
+        lineage=[
+            {"partition_id": r["partition_id"], "rows": r["rows"], "duration_ms": 0,
+             "file": r["file"], "stats": {stats_col: [r["stat_min"], r["stat_max"]]}}
+            for r in recs
+        ],
+    )
+
+
+@pytest.fixture(scope="module")
+def enriched(spark):
+    """Flagship-shaped rows (string / double / long columns, a nullable
+    string) over 30 tiles of uneven size."""
+    rng = np.random.default_rng(7)
+    n = 600
+    tile = np.concatenate([np.arange(30), rng.zipf(1.6, n - 30) % 30])
+    pdf = pd.DataFrame({
+        "image_id": [f"img{i:04d}" for i in range(n)],
+        "caption": [f"caption {i}" for i in range(n)],
+        "lat": rng.uniform(40.5, 42.8, n),
+        "lon": rng.uniform(0.2, 3.3, n),
+        "tile": (tile * 7919).astype("int64"),
+        "polygon_id": [f"p{t % 4}" for t in tile],
+        # null in most rows, never in a whole group (see the types test)
+        "nearest_name": [None if i >= 30 and i % 3 else f"feature {i % 11}" for i in range(n)],
+    })
+    return spark.createDataFrame(
+        pdf,
+        "image_id string, caption string, lat double, lon double, tile long, "
+        "polygon_id string, nearest_name string",
+    ).repartition(3)
+
+
+def _lineage(table):
+    return sorted(
+        (r["partition_id"], r["rows"], *r["stats"]["tile"])
+        for s in table.snapshots() for r in s["lineage"]
+    )
+
+
+def _content(df):
+    pdf = df.toPandas()
+    return pdf.sort_values("image_id").reset_index(drop=True)
+
+
+def test_write_partitioned_uses_every_core(spark, tmp_path):
+    """A few-KB frame with many groups still writes on ``kernel_width``
+    tasks: AQE must not coalesce the grouped write onto one task."""
+    n_groups = 40
+    df = spark.range(0, 400, 1, 1).select(
+        (F.col("id") % n_groups).alias("tile"), F.col("id").alias("v")
+    )
+    sc = spark.sparkContext
+    group = "test-write-width"
+    sc.setJobGroup(group, "write_partitioned width")
+    try:
+        snaps = write_partitioned(df, SnapshotTable(str(tmp_path / "t")), "tile")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sum(len(s["files"]) for s in snaps) == n_groups
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(sid)
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    widest = max(st.numTasks for st in stages if st is not None)
+    assert widest >= min(kernel_width(spark), n_groups)
+
+
+def test_arrow_writer_matches_pandas_writer(spark, enriched, tmp_path):
+    new = SnapshotTable(str(tmp_path / "new"))
+    ref = SnapshotTable(str(tmp_path / "ref"))
+    write_partitioned(enriched, new, "tile", stats_col="tile")
+    _pandas_write(enriched, ref, "tile", "tile")
+
+    # same files: one per group, same (partition_id, rows, min, max)
+    assert len(new.live_files()) == len(ref.live_files()) == 30
+    assert _lineage(new) == _lineage(ref)
+    # same content, order-insensitive
+    pd.testing.assert_frame_equal(_content(new.read(spark)), _content(ref.read(spark)))
+    # same parquet schema as from_pandas wrote, metadata aside
+    ref_schema = pq.read_schema(ref.live_files()[0]).remove_metadata()
+    for f in new.live_files():
+        assert pq.read_schema(f).remove_metadata() == ref_schema
+
+
+def test_arrow_writer_keeps_spark_types(spark, tmp_path):
+    """Where the pandas kernel changed column types per group — a long
+    with nulls became float64, an all-null string became Arrow ``null``
+    (a file Spark then refuses to read as string) — the Arrow writer
+    keeps Spark's types in every file."""
+    df = spark.createDataFrame(
+        [(t, None if t % 2 else t * 10, None if t < 3 else "x") for t in range(6)],
+        "tile long, n long, s string",
+    )
+    table = SnapshotTable(str(tmp_path / "t"))
+    write_partitioned(df, table, "tile", stats_col="tile")
+    for f in table.live_files():
+        schema = pq.read_schema(f)
+        assert (schema.field("n").type, schema.field("s").type) == (pa.int64(), pa.string())
+    assert sorted(table.read(spark).collect()) == sorted(df.collect())
+
+
+def test_mixed_writer_table_reads_resumes_and_compacts(spark, enriched, tmp_path):
+    """Files from both writers in one table: the Arrow writer resumes past
+    groups the pandas writer committed, and the table reads back whole
+    through read / read_range / compact_table."""
+    table = SnapshotTable(str(tmp_path / "mixed"))
+    _pandas_write(enriched.filter(F.col("tile") >= 7919 * 10), table, "tile", "tile")
+    done = table.committed_partitions()
+    assert len(done) == 20
+    n_ref = len(table.live_files())
+    snaps = write_partitioned(enriched, table, "tile", stats_col="tile", skip_partitions=done)
+    # only the groups the pandas writer skipped were written
+    assert {r["partition_id"] for s in snaps for r in s["lineage"]}.isdisjoint(done)
+    assert len(table.live_files()) == 30 > n_ref
+    assert len(table.committed_partitions()) == 30
+
+    want = _content(enriched)
+    pd.testing.assert_frame_equal(_content(table.read(spark)), want)
+    lo, hi = 7919 * 5, 7919 * 15
+    pd.testing.assert_frame_equal(
+        _content(table.read_range(spark, "tile", lo, hi)),
+        want[(want["tile"] >= lo) & (want["tile"] <= hi)].reset_index(drop=True),
+    )
+    compact_table(table, spark, target_files=3, stats_col="tile")
+    assert len(table.live_files()) == 3
+    pd.testing.assert_frame_equal(_content(table.read(spark)), want)
