@@ -7,48 +7,20 @@ plus a sign-LSH bucketed approximate variant as the scale path.
 At 100 TB the exact path is the per-bucket kernel of the LSH/IVF variant,
 not a global cross join: candidates are bounded by bucket occupancy and
 the shuffle key is the bucket id.
+
+Every corpus top-k family (exact, IVF, LSH, PQ-ADC, SQ8, shortlist
+rescore) runs through ``corpus_topk``: the families supply only a
+driver-side ``prepare`` and a per-batch ``score``. Their DataFrame
+join formulations live in ``tests/reference/ann_join.py`` as parity
+references.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-
-def _quantized_flat(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, i, xq): posexploded, scalar-quantized to int (x1000)."""
-    return emb.select(
-        F.col(id_col), F.posexplode(vec_col).alias("i", "x")
-    ).withColumn("xq", F.round(F.col("x").cast("double") * 1000.0).cast("long")).drop("x")
-
-
-def topk_dot(
-    emb: DataFrame,
-    queries: DataFrame | None = None,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k neighbors by quantized dot product (self-join when
-    ``queries`` is None means every % 50 == 0 id is a query — the driver
-    fixture; pass an explicit queries frame in real use)."""
-    flat = _quantized_flat(emb, id_col, vec_col)
-    if queries is None:
-        q = flat.filter(F.col(id_col) % 50 == 0)
-    else:
-        q = _quantized_flat(queries, id_col, vec_col)
-    q = q.select(F.col(id_col).alias("query_id"), "i", F.col("xq").alias("qx"))
-    dots = (
-        q.join(flat, "i")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.sum(F.col("qx") * F.col("xq")).alias("dot"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("neighbor_id").asc())
-    return (
-        dots.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dot")
-    )
+# int64 min: the score of a (query, corpus) pair that is not a candidate
+NEG = -(1 << 63)
 
 
 def topk_dot_kernel(
@@ -60,127 +32,24 @@ def topk_dot_kernel(
     shard_rows: int = 65_536,
 ) -> DataFrame:
     """Exact top-k neighbors by quantized dot product — the scale-safe
-    plan. Bit-identical to ``topk_dot`` (same quantization, same
-    (dot desc, id asc) total order; the dimension-explode SQL formulation
-    stays the DuckDB oracle spec) but executes as ``mapInPandas``
-    passes over the corpus with the query matrix broadcast: per-partition
-    NumPy dot products + partial top-k, then a k-row-per-query global
-    merge. The explode-join formulation materializes
-    |queries| x |corpus| x dim rows into a shuffle — a factored cross
-    product that dies at 100x; here nothing shuffles but the
-    <= k x partitions partial winners.
-
-    Quantization runs JVM-side (``F.transform`` + the shared
-    ``_quantize``) so rounding parity with the oracle is byte-exact; the
-    kernel only ever does integer arithmetic on the quantized values
-    (via float64 matmul when magnitudes stay under 2^53 — exact — else
-    int64).
-
-    The query side is driver-collected, but gated by a count first (the
-    ``dedup_apply`` pattern): above ``shard_rows`` queries it is
-    processed in ``ceil(n / shard_rows)`` deterministic id-sharded
-    chunks (``pmod(id, n_shards)``), each its own bounded broadcast —
-    driver and executor memory never hold more than one shard's matrix
-    at a time, because every shard's partial result is materialized
-    (eager localCheckpoint) before its broadcast is destroyed. The
-    union of per-shard partials feeds one global merge; shards partition
-    the query set, so the result is the byte-exact union of per-shard
-    exact answers.
-    """
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    from .spread import scan_spread
-
-    qarr = F.transform(F.col(vec_col), lambda x: _quantize(x))
-    corpus = scan_spread(
-        emb.select(F.col(id_col).alias("__cid"), qarr.alias("__q"))
+    plan: ``corpus_topk`` passes with the query matrix broadcast.
+    Bit-identical to the dimension-explode SQL formulation (the DuckDB
+    oracle spec, kept as ``tests/reference/ann_join.py::topk_dot``: same
+    quantization, same (dot desc, id asc) total order), which
+    materializes |queries| x |corpus| x dim rows into a shuffle — a
+    factored cross product that dies at 100x. Quantization runs JVM-side
+    (``_quantized_vecs``) for byte-exact rounding parity; the kernel only
+    does integer arithmetic (``_guarded_matmul``). ``queries=None``
+    means every % 50 == 0 id (the driver fixture)."""
+    corpus = _corpus_vecs(emb, id_col, vec_col, spread=True)
+    qsrc = (
+        corpus.filter(F.col("__cid") % 50 == 0)
+        if queries is None
+        else _corpus_vecs(queries, id_col, vec_col)
     )
-    qsrc = corpus if queries is None else queries.select(
-        F.col(id_col).alias("__cid"), qarr.alias("__q")
-    )
-    if queries is None:
-        qsrc = qsrc.filter(F.col("__cid") % 50 == 0)
-    n_q = qsrc.count()
-    n_shards = max(1, math.ceil(n_q / shard_rows))
-    NEG = np.iinfo(np.int64).min
-
-    def make_run(bc):
-        def run(batches):
-            qids, Q = bc.value
-            nq, dim = Q.shape
-            qmax = int(np.abs(Q).max()) if Q.size else 0
-            for pdf in batches:
-                nb = len(pdf)
-                if nb == 0 or nq == 0:
-                    continue
-                cid = pdf["__cid"].to_numpy(np.int64)
-                X = np.array(pdf["__q"].tolist(), dtype=np.int64)
-                xmax = int(np.abs(X).max()) if X.size else 0
-                # float64 matmul (BLAS) is exact while every product and
-                # the running sum stay under 2^53; else int64
-                if qmax * xmax * dim < (1 << 53):
-                    D = (Q.astype(np.float64) @ X.T.astype(np.float64)).astype(np.int64)
-                else:
-                    D = Q @ X.T
-                D[qids[:, None] == cid[None, :]] = NEG  # never match self
-                kk = min(k, nb)
-                out_q, out_n, out_d = [], [], []
-                for qi in range(nq):
-                    row = D[qi]
-                    # exact partial top-k under (dot desc, id asc): keep
-                    # every boundary tie, settle ties by id, then truncate
-                    thresh = np.partition(row, nb - kk)[nb - kk]
-                    keep = np.flatnonzero(row >= thresh)
-                    keep = keep[np.lexsort((cid[keep], -row[keep]))][:kk]
-                    keep = keep[row[keep] != NEG]
-                    out_q.append(np.full(len(keep), qids[qi], dtype=np.int64))
-                    out_n.append(cid[keep])
-                    out_d.append(row[keep])
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "dot": np.concatenate(out_d),
-                    }
-                )
-
-        return run
-
-    parts = []
-    for s in range(n_shards):
-        shard = qsrc if n_shards == 1 else qsrc.filter(
-            F.pmod(F.col("__cid"), F.lit(n_shards)) == s
-        )
-        q_pdf = shard.toPandas().sort_values("__cid", kind="stable")
-        qids = q_pdf["__cid"].to_numpy(np.int64)
-        Q = (
-            np.array(q_pdf["__q"].tolist(), dtype=np.int64)
-            if len(q_pdf)
-            else np.zeros((0, 1), dtype=np.int64)
-        )
-        bc = emb.sparkSession.sparkContext.broadcast((qids, Q))
-        part = corpus.mapInPandas(
-            make_run(bc), schema="query_id long, neighbor_id long, dot long"
-        )
-        # materialize the <= k x partitions partial winners, then release
-        # the shard's broadcast — nothing downstream re-reads it, and a
-        # long-lived session doesn't accumulate query-matrix copies
-        part = part.localCheckpoint(eager=True)
-        bc.destroy()
-        parts.append(part)
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dot")
+    return corpus_topk(
+        corpus, qsrc, k, lambda qids, Q: Q,
+        lambda Q, cid, X: _guarded_matmul(Q, X), shard_rows=shard_rows,
     )
 
 
@@ -330,48 +199,10 @@ def _buckets_keyed(
     )
 
 
-def ivf_assign(
-    emb: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF coarse quantization: (id, centroid_id, l2q) — each vector joins
-    its nearest coarse centroid by exact quantized L2, ties broken by the
-    smaller centroid id.
-
-    Centroids are the ``n_centroids`` smallest-id vectors (a deterministic
-    'training' that both engines reproduce — k-means would converge to an
-    engine-dependent float fixpoint and break the oracle). The centroid
-    table broadcasts; assignment is one zip_with expression per row pair —
-    no shuffle beyond the broadcast join and the per-id argmin aggregate.
-    """
-    cents = emb.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("__cv")
-    )
-    l2q = F.aggregate(
-        F.zip_with(
-            vec_col, "__cv", lambda a, b: (_quantize(a) - _quantize(b)) * (_quantize(a) - _quantize(b))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    d = emb.crossJoin(F.broadcast(cents)).withColumn("__d", l2q)
-    return (
-        d.groupBy(id_col)
-        .agg(F.min(F.struct(F.col("__d"), F.col("centroid_id"))).alias("__m"))
-        .select(
-            id_col,
-            F.col("__m.centroid_id").alias("centroid_id"),
-            F.col("__m.__d").alias("l2q"),
-        )
-    )
-
-
 def _guarded_matmul(A, B):
     """Exact integer A @ B.T for (n, dim) int64 operands: float64 BLAS
     while every product times the inner dim stays under 2^53 (exact in
-    IEEE double — the ``topk_dot_kernel`` discipline), else int64."""
+    IEEE double), else int64."""
     import numpy as np
 
     amax = int(np.abs(A).max()) if A.size else 0
@@ -382,13 +213,38 @@ def _guarded_matmul(A, B):
     return A @ B.T
 
 
-def _np_partial_topk(D, qids, cid, k, NEG):
-    """Per-query partial top-k under (dot desc, id asc) over a masked dot
-    matrix (invalid pairs already set to NEG). Unlike the unmasked
-    ``topk_dot_kernel`` inner loop, NEG entries can dominate a row, so
-    they are dropped BEFORE the threshold partition (a NEG threshold
-    would let NEG entries crowd real candidates out of the truncation).
-    Returns (query_id, neighbor_id, dot) arrays or None."""
+def _sq_l2(A, B):
+    """Exact integer squared L2 between every row of A and every row of
+    B: (nA, nB) int64, ``|a|^2 - 2 a.b + |b|^2`` with the dot through
+    ``_guarded_matmul``."""
+    return (
+        (A * A).sum(axis=1)[:, None]
+        - 2 * _guarded_matmul(A, B)
+        + (B * B).sum(axis=1)[None, :]
+    )
+
+
+def _probe_mask(Q, C, ids, nprobe: int):
+    """(nq, n_lists) bool: each query's ``nprobe`` nearest coarse lists
+    under (l2 asc, list id asc) — the join form's ``row_number() <=
+    nprobe`` probe rule. ``C`` rows follow ``ids``."""
+    import numpy as np
+
+    d2 = _sq_l2(Q, C)
+    mask = np.zeros(d2.shape, dtype=bool)
+    npb = min(nprobe, len(ids))
+    for i in range(len(Q)):
+        mask[i, np.lexsort((ids, d2[i]))[:npb]] = True
+    return mask
+
+
+def _np_partial_topk(D, qids, cid, k):
+    """Per-query partial top-k under (score desc, id asc) over a masked
+    score matrix (invalid pairs already set to ``NEG``). NEG entries can
+    dominate a row, so they are dropped BEFORE the threshold partition
+    (a NEG threshold would let NEG entries crowd real candidates out of
+    the truncation). Returns (query_id, neighbor_id, dot) arrays or
+    None."""
     import numpy as np
 
     out_q, out_n, out_d = [], [], []
@@ -419,10 +275,10 @@ def _merge_topk_partials(
     parts: list[DataFrame], k: int, out_col: str = "dot", negate: bool = False
 ) -> DataFrame:
     """Global (dot desc, id asc) row_number merge over the per-partition
-    partial winners — identical to the ``topk_dot_kernel`` merge. The
-    ascending-metric families (ADC / SQ8 distances) ride the same merge
-    by negating the metric in their kernels; ``negate=True`` flips it
-    back on output (dot desc == distance asc, ties id asc either way)."""
+    partial winners. The ascending-metric families (ADC / SQ8 distances)
+    ride the same merge by negating the metric in their kernels;
+    ``negate=True`` flips it back on output (dot desc == distance asc,
+    ties id asc either way)."""
     merged = parts[0]
     for p in parts[1:]:
         merged = merged.unionByName(p)
@@ -437,6 +293,105 @@ def _merge_topk_partials(
     )
 
 
+def _empty_topk(spark, out_col: str = "dot") -> DataFrame:
+    """The ranked top-k schema with no rows (no queries or no candidates)."""
+    return spark.createDataFrame(
+        [], f"query_id long, neighbor_id long, rank int, {out_col} long"
+    )
+
+
+def corpus_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    prepare,
+    score,
+    out_col: str = "dot",
+    negate: bool = False,
+    shard_rows: int = 65_536,
+) -> DataFrame:
+    """Per-query top-k over ``corpus`` as broadcast-query corpus passes —
+    the one driver loop behind every corpus top-k family. ``corpus`` and
+    ``queries`` are (``__cid`` long, ``__xq`` array<long>) frames.
+
+    Per query shard, ``prepare(qids, Q)`` builds the family's payload on
+    the driver (probe mask, bucket mask, ADC tables, shortlist pairs)
+    from the id-sorted query ids and quantized matrix, and
+    ``(qids, payload)`` is broadcast. One ``mapInPandas`` pass over the
+    corpus calls ``score(payload, cid, X)`` per batch for an (nq, nb)
+    int64 matrix: higher is better and ``NEG`` marks a pair that is not
+    a candidate. Self pairs are masked, each batch keeps its exact
+    partial top-k under (score desc, id asc), the shard's partial
+    winners are materialized (eager localCheckpoint) and only then is
+    its broadcast destroyed — driver and executors never hold more than
+    one shard's payload. One window merge ranks the union of all
+    shards; shards partition the query set, so the result is the union
+    of exact per-shard answers. Ascending metrics (distances) score
+    ``-d`` and pass ``negate=True`` to get ``d`` back in ``out_col``.
+
+    Gate and cost model: the queries are collected by ONE bounded job,
+    ``limit(shard_rows + 1)``; up to ``shard_rows`` rows that collect is
+    the only shard and no count runs. Above it, the sorted unique query
+    ids are cut into ``ceil(n_q / shard_rows)`` contiguous id ranges,
+    each collected by its own range filter. A call therefore costs
+    ``ceil(n_q / shard_rows)`` full corpus scans, and no broadcast holds
+    more than ``shard_rows`` query rows (query ids are unique). Crossing
+    the threshold costs time — one more corpus scan per shard — never
+    memory, so no second gate is needed."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+
+    def shard_pdfs():
+        first = queries.limit(shard_rows + 1).toPandas()
+        if len(first) <= shard_rows:
+            yield first
+            return
+        ids = np.unique(queries.select("__cid").toPandas()["__cid"].to_numpy())
+        for r in np.array_split(ids, math.ceil(len(ids) / shard_rows)):
+            yield queries.filter(
+                F.col("__cid").between(int(r[0]), int(r[-1]))
+            ).toPandas()
+
+    def run_with(bc):
+        def run(batches):
+            qids, payload = bc.value
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                cid = pdf["__cid"].to_numpy(np.int64)
+                X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
+                D = score(payload, cid, X)
+                D[qids[:, None] == cid[None, :]] = NEG  # never match self
+                got = _np_partial_topk(D, qids, cid, k)
+                if got is not None:
+                    yield pd.DataFrame(
+                        {"query_id": got[0], "neighbor_id": got[1], "dot": got[2]}
+                    )
+
+        return run
+
+    sc = corpus.sparkSession.sparkContext
+    parts = []
+    for q_pdf in shard_pdfs():
+        if not len(q_pdf):
+            continue
+        q_pdf = q_pdf.sort_values("__cid", kind="stable")
+        qids = q_pdf["__cid"].to_numpy(np.int64)
+        Q = np.array(q_pdf["__xq"].tolist(), dtype=np.int64)
+        bc = sc.broadcast((qids, prepare(qids, Q)))
+        parts.append(
+            corpus.mapInPandas(
+                run_with(bc), schema="query_id long, neighbor_id long, dot long"
+            ).localCheckpoint(eager=True)
+        )
+        bc.destroy()
+    if not parts:
+        return _empty_topk(corpus.sparkSession, out_col)
+    return _merge_topk_partials(parts, k, out_col, negate)
+
+
 def _ivf_topk_kernel(
     emb: DataFrame,
     cents: DataFrame,
@@ -447,116 +402,48 @@ def _ivf_topk_kernel(
     shard_rows: int = 65_536,
     _corpus: DataFrame | None = None,
 ) -> DataFrame:
-    """Executor kernel shared by the IVF rescores: ONE corpus pass per
-    query shard. Coarse assignment (argmin quantized L2 against the
-    broadcast codebook, ties to the smaller centroid id), the per-query
-    probe mask, and the exact quantized-dot partial top-k all run in
-    NumPy inside ``mapInPandas``; nothing shuffles but <= k x partitions
-    partial winners into the global merge window.
+    """The IVF rescore shared by both IVF families, as ``corpus_topk``
+    passes over the % 50 == 0 fixture queries: the shard's probe mask is
+    the payload; each batch assigns its vectors to their nearest coarse
+    list (argmin quantized L2, ties to the smaller centroid id) and
+    scores the exact quantized dot of the probed pairs. ``cents``:
+    (centroid_id, __cv array<long>), already quantized.
 
-    Byte-identical to the candidate-join formulation
-    (``ivf_ann_topk_join``): same quantization, same
-    (l2 asc, centroid_id asc) probe order, same (dot desc, id asc) total
-    order — parity is pytest-pinned and the DuckDB oracle gates the
-    registry entries. The join formulation shipped every
-    (query, candidate) pair through two vector re-attach joins and a
-    per-pair zip_with aggregate — with nprobe/n_centroids = 1/2 of the
-    corpus that is a half cross join (218 s at sf1); here the same dots
-    are one BLAS matmul per batch.
-
-    ``cents``: (centroid_id, __cv array<long>) — already quantized.
-    Queries (the % 50 == 0 fixture sample) are driver-collected behind
-    the counted ``shard_rows`` gate exactly like ``topk_dot_kernel``.
-    """
-    import math
-
+    Byte-identical to ``tests/reference/ann_join.py::ivf_ann_topk_join``
+    (same quantization, same (l2 asc, centroid_id asc) probe order, same
+    (dot desc, id asc) order; pytest-pinned, and the DuckDB oracle gates
+    the registry entries), which shipped every (query, candidate) pair
+    through two vector re-attach joins — with nprobe/n_centroids = 1/2 a
+    half cross join (218 s at sf1); here it is one matmul per batch."""
     import numpy as np
-    import pandas as pd
 
     c_pdf = cents.toPandas().sort_values("centroid_id", kind="stable")
+    if not len(c_pdf):
+        # no coarse lists -> no probes -> no candidates
+        return _empty_topk(emb.sparkSession)
     cent_ids = c_pdf["centroid_id"].to_numpy(np.int64)
-    C = (
-        np.array(c_pdf["__cv"].tolist(), dtype=np.int64)
-        if len(c_pdf)
-        else np.zeros((0, 1), dtype=np.int64)
+    C = np.array(c_pdf["__cv"].tolist(), dtype=np.int64)
+    corpus = _corpus if _corpus is not None else _corpus_vecs(
+        emb, id_col, vec_col, spread=True
     )
-    from .spread import scan_spread
 
-    corpus = _corpus if _corpus is not None else scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
+    def score(payload, cid, X):
+        Q, mask = payload
+        D = _guarded_matmul(Q, X)
+        # nearest coarse list per corpus vector: position into the
+        # centroid_id-sorted C, so argmin's first-minimum rule IS the
+        # (l2, centroid_id) struct-min tie rule
+        D[~mask[:, _sq_l2(X, C).argmin(axis=1)]] = NEG
+        return D
+
+    return corpus_topk(
+        corpus,
+        corpus.filter(F.col("__cid") % 50 == 0),
+        k,
+        lambda qids, Q: (Q, _probe_mask(Q, C, cent_ids, nprobe)),
+        score,
+        shard_rows=shard_rows,
     )
-    qsrc = corpus.filter(F.col("__cid") % 50 == 0)
-    n_q = qsrc.count()
-    n_shards = max(1, math.ceil(n_q / shard_rows))
-    NEG = np.iinfo(np.int64).min
-    sc = emb.sparkSession.sparkContext
-
-    def make_run(bc):
-        def run(batches):
-            qids, Q, mask, C = bc.value
-            nq = len(qids)
-            for pdf in batches:
-                nb = len(pdf)
-                if nb == 0 or nq == 0 or not len(C):
-                    continue
-                cid = pdf["__cid"].to_numpy(np.int64)
-                X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
-                # nearest coarse list per corpus vector: position into the
-                # centroid_id-sorted C, so argmin's first-minimum rule IS
-                # the (l2, centroid_id) struct-min tie rule
-                G = _guarded_matmul(X, C)
-                d2 = (
-                    (X * X).sum(axis=1)[:, None]
-                    - 2 * G
-                    + (C * C).sum(axis=1)[None, :]
-                )
-                pos = d2.argmin(axis=1)
-                D = _guarded_matmul(Q, X)
-                D[~mask[:, pos]] = NEG
-                D[qids[:, None] == cid[None, :]] = NEG  # never match self
-                got = _np_partial_topk(D, qids, cid, k, NEG)
-                if got is None:
-                    continue
-                yield pd.DataFrame(
-                    {"query_id": got[0], "neighbor_id": got[1], "dot": got[2]}
-                )
-
-        return run
-
-    parts = []
-    for s in range(n_shards):
-        shard = qsrc if n_shards == 1 else qsrc.filter(
-            F.pmod(F.col("__cid"), F.lit(n_shards)) == s
-        )
-        q_pdf = shard.toPandas().sort_values("__cid", kind="stable")
-        qids = q_pdf["__cid"].to_numpy(np.int64)
-        Q = (
-            np.array(q_pdf["__xq"].tolist(), dtype=np.int64)
-            if len(q_pdf)
-            else np.zeros((0, 1), dtype=np.int64)
-        )
-        # probe mask: row_number over (l2 asc, centroid_id asc) <= nprobe
-        mask = np.zeros((len(qids), len(cent_ids)), dtype=bool)
-        if len(qids) and len(cent_ids):
-            Gq = _guarded_matmul(Q, C)
-            d2q = (
-                (Q * Q).sum(axis=1)[:, None]
-                - 2 * Gq
-                + (C * C).sum(axis=1)[None, :]
-            )
-            npb = min(nprobe, len(cent_ids))
-            for i in range(len(qids)):
-                mask[i, np.lexsort((cent_ids, d2q[i]))[:npb]] = True
-        bc = sc.broadcast((qids, Q, mask, C))
-        part = corpus.mapInPandas(
-            make_run(bc), schema="query_id long, neighbor_id long, dot long"
-        )
-        part = part.localCheckpoint(eager=True)
-        bc.destroy()
-        parts.append(part)
-    return _merge_topk_partials(parts, k)
 
 
 def ivf_ann_topk(
@@ -573,68 +460,14 @@ def ivf_ann_topk(
     occupancy). Deterministic end to end -> exact DuckDB oracle.
 
     Executes as the masked ``_ivf_topk_kernel`` corpus pass (r8: the
-    candidate-join formulation, kept as ``ivf_ann_topk_join`` and pinned
+    candidate-join formulation, kept as
+    ``tests/reference/ann_join.py::ivf_ann_topk_join`` and pinned
     byte-identical in pytest, shipped every (query, candidate) pair
     through two vector joins — quadratic in probed-list occupancy)."""
     cents = _quantized_vecs(
         emb.filter(F.col(id_col) < n_centroids), id_col, vec_col, "__cv"
     ).withColumnRenamed(id_col, "centroid_id")
     return _ivf_topk_kernel(emb, cents, k, nprobe, id_col, vec_col)
-
-
-def ivf_ann_topk_join(
-    emb: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Candidate-join formulation of ``ivf_ann_topk`` — the oracle-shaped
-    reference the kernel is parity-tested against (not a query path)."""
-    assigned = ivf_assign(emb, n_centroids, id_col, vec_col)
-    cents = emb.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("__cv")
-    )
-    q = emb.filter(F.col(id_col) % 50 == 0).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    l2q = F.aggregate(
-        F.zip_with(
-            "__qv", "__cv", lambda a, b: (_quantize(a) - _quantize(b)) * (_quantize(a) - _quantize(b))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.col("__d").asc(), F.col("centroid_id").asc())
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("__d", l2q)
-        .withColumn("__pr", F.row_number().over(wp))
-        .filter(F.col("__pr") <= nprobe)
-        .select("query_id", "centroid_id")
-    )
-    cand = (
-        probes.join(assigned.select(id_col, "centroid_id"), "centroid_id")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", F.col(id_col).alias("neighbor_id"))
-    )
-    qv = emb.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qe"))
-    nv = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__ne"))
-    dot = F.aggregate(
-        F.zip_with("__qe", "__ne", lambda a, b: _quantize(a) * _quantize(b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("neighbor_id").asc())
-    return (
-        cand.join(qv, "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("dot", dot)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dot")
-    )
 
 
 def _quantized_vecs(emb: DataFrame, id_col: str, vec_col: str, out: str) -> DataFrame:
@@ -644,21 +477,21 @@ def _quantized_vecs(emb: DataFrame, id_col: str, vec_col: str, out: str) -> Data
     )
 
 
-def _assign_to(vecs: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """(id, centroid_id): argmin quantized L2 against a broadcast centroid
-    table (cents: centroid_id, __cv array<long>), ties to smaller id."""
-    l2 = F.aggregate(
-        F.zip_with("__xq", "__cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+def _corpus_vecs(
+    emb: DataFrame, id_col: str, vec_col: str, spread: bool = False, pin: bool = False
+) -> DataFrame:
+    """(__cid, __xq): the quantized frame every corpus pass scans.
+    ``spread`` rebalances it over the session's cores (``scan_spread``);
+    ``pin`` materializes it (eager localCheckpoint) for callers that scan
+    it more than once."""
+    from .spread import scan_spread
+
+    df = _quantized_vecs(emb, id_col, vec_col, "__xq").select(
+        F.col(id_col).alias("__cid"), "__xq"
     )
-    return (
-        vecs.crossJoin(F.broadcast(cents))
-        .withColumn("__d", l2)
-        .groupBy(id_col)
-        .agg(F.min(F.struct(F.col("__d"), F.col("centroid_id"))).alias("__m"))
-        .select(id_col, F.col("__m.centroid_id").alias("centroid_id"))
-    )
+    if spread:
+        df = scan_spread(df)
+    return df.localCheckpoint(eager=True) if pin else df
 
 
 def ivf_train_lloyd(
@@ -684,17 +517,14 @@ def ivf_train_lloyd(
     training): one pass per round with map-side partial sums instead of
     the assignment join -> re-attach join -> posexplode aggregate chain
     (~10 shuffle stages per round); the join formulation survives as
-    ``ivf_train_lloyd_join``, pytest-pinned byte-identical."""
+    ``tests/reference/ann_join.py::ivf_train_lloyd_join``, pytest-pinned
+    byte-identical."""
     import numpy as np
 
-    from .spread import scan_spread
-
     spark = emb.sparkSession
-    corpus = _corpus if _corpus is not None else scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
-    ).localCheckpoint(eager=True)
+    corpus = _corpus if _corpus is not None else _corpus_vecs(
+        emb, id_col, vec_col, spread=True, pin=True
+    )
     seeds_pdf = (
         corpus.filter(F.col("__cid") < n_centroids)
         .toPandas()
@@ -715,37 +545,6 @@ def ivf_train_lloyd(
     return spark.createDataFrame(rows, "centroid_id long, __cv array<long>")
 
 
-def ivf_train_lloyd_join(
-    emb: DataFrame,
-    n_centroids: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Join formulation of ``ivf_train_lloyd`` — the oracle-shaped
-    reference the corpus-pass kernel is parity-tested against."""
-    vecs = _quantized_vecs(emb, id_col, vec_col, "__xq")
-    cents = emb.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("centroid_id"),
-        F.transform(F.col(vec_col), lambda x: _quantize(x)).alias("__cv"),
-    )
-    for _ in range(iters):
-        assigned = _assign_to(vecs, cents, id_col)
-        comp = (
-            assigned.join(vecs, id_col)
-            .select("centroid_id", F.posexplode("__xq").alias("d", "xq"))
-            .groupBy("centroid_id", "d")
-            .agg(F.sum("xq").alias("__s"), F.count(F.lit(1)).alias("__c"))
-            .withColumn("cq", F.expr("CAST(div(__s, __c) AS BIGINT)"))
-        )
-        cents = comp.groupBy("centroid_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "cq"))), lambda s: s["cq"]
-            ).alias("__cv")
-        )
-    return cents
-
-
 def ivf_lloyd_ann_topk(
     emb: DataFrame,
     k: int = 5,
@@ -760,76 +559,15 @@ def ivf_lloyd_ann_topk(
     candidate than seed-vector lists (the VERDICT-flagged weakness of the
     seed-only variant). Probing, assignment and the exact quantized-dot
     rescore run in the shared masked ``_ivf_topk_kernel`` (r8; the join
-    formulation survives as ``ivf_lloyd_ann_topk_join`` for parity)."""
-    from .spread import scan_spread
-
-    corpus = scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
-    ).localCheckpoint(eager=True)
+    formulation survives as
+    ``tests/reference/ann_join.py::ivf_lloyd_ann_topk_join`` for
+    parity)."""
+    corpus = _corpus_vecs(emb, id_col, vec_col, spread=True, pin=True)
     cents = ivf_train_lloyd(
         emb, n_centroids, iters, id_col, vec_col, _corpus=corpus
     )
     return _ivf_topk_kernel(
         emb, cents, k, nprobe, id_col, vec_col, _corpus=corpus
-    )
-
-
-def ivf_lloyd_ann_topk_join(
-    emb: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Candidate-join formulation of ``ivf_lloyd_ann_topk`` — the
-    parity-test reference (not a query path; uses the join training so
-    the topk parity pin covers training parity transitively)."""
-    cents = ivf_train_lloyd_join(emb, n_centroids, iters, id_col, vec_col)
-    vecs = _quantized_vecs(emb, id_col, vec_col, "__xq")
-    assigned = _assign_to(vecs, cents, id_col)
-    l2 = F.aggregate(
-        F.zip_with("__xq", "__cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("__d").asc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        vecs.filter(F.col(id_col) % 50 == 0)
-        .select(F.col(id_col).alias("query_id"), "__xq")
-        .crossJoin(F.broadcast(cents))
-        .withColumn("__d", l2)
-        .withColumn("__pr", F.row_number().over(wp))
-        .filter(F.col("__pr") <= nprobe)
-        .select("query_id", "centroid_id")
-    )
-    cand = (
-        probes.join(assigned.select(id_col, "centroid_id"), "centroid_id")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", F.col(id_col).alias("neighbor_id"))
-    )
-    qv = emb.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qe"))
-    nv = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__ne"))
-    dot = F.aggregate(
-        F.zip_with("__qe", "__ne", lambda a, b: _quantize(a) * _quantize(b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.join(qv, "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("dot", dot)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dot")
     )
 
 
@@ -890,23 +628,18 @@ def _lsh_topk_kernel(
     vec_col: str,
     shard_rows: int = 65_536,
 ) -> DataFrame:
-    """Executor kernel for the multi-probe sign-LSH top-k: ONE corpus
-    pass per query shard. Corpus bucket codes (the
-    ``sign_lsh_buckets_kernel`` matmul, parity-pinned vs the expression
-    form), the per-query (table, probed-bucket) membership mask and the
-    exact quantized-dot partial top-k all run in NumPy inside
-    ``mapInPandas``. A (query, corpus) pair is valid iff SOME table's
-    corpus bucket is within Hamming ``probe_radius`` of the query's
-    bucket — exactly the candidate set of the (table, bucket) join +
-    distinct in ``ann_lsh_topk_join``, without materializing it. On the
-    uniform fixture that candidate set approaches |Q| x |corpus| (the
-    LSH worst case), which is why the join + two vector re-attaches grew
-    superlinearly; the masked matmul pays the same dots at BLAS speed
-    and shuffles only <= k x partitions partial winners."""
-    import math
-
+    """The multi-probe sign-LSH top-k as ``corpus_topk`` passes: the
+    query shard's (table, probed-bucket) mask is the payload, and each
+    batch scores the exact quantized dot of the pairs where SOME table's
+    corpus bucket (the ``sign_lsh_buckets_kernel`` matmul) is within
+    Hamming ``probe_radius`` of the query's bucket — exactly the
+    candidate set of the (table, bucket) join + distinct in
+    ``tests/reference/ann_join.py::ann_lsh_topk_join``, never
+    materialized. On the uniform fixture that set approaches |Q| x
+    |corpus| (the LSH worst case), where the join + two vector
+    re-attaches grew superlinearly; the masked matmul pays the same dots
+    at BLAS speed."""
     import numpy as np
-    import pandas as pd
 
     S = np.array(
         [
@@ -927,76 +660,32 @@ def _lsh_topk_kernel(
         bits = (G > 0).astype(np.int64).reshape(len(M), n_tables, n_bits)
         return (bits * pw[None, None, :]).sum(axis=2)
 
-    corpus = _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-        F.col(id_col).alias("__cid"), "__xq"
-    )
-    if queries is None:
-        qsrc = corpus.filter(F.col("__cid") % 50 == 0)
-    else:
-        qsrc = _quantized_vecs(queries, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
-    n_q = qsrc.count()
-    n_shards = max(1, math.ceil(n_q / shard_rows))
-    NEG = np.iinfo(np.int64).min
-    sc = emb.sparkSession.sparkContext
-
-    def make_run(bc):
-        def run(batches):
-            qids, Q, mask = bc.value  # mask: (nq, T, n_buckets) bool
-            nq = len(qids)
-            for pdf in batches:
-                nb = len(pdf)
-                if nb == 0 or nq == 0:
-                    continue
-                cid = pdf["__cid"].to_numpy(np.int64)
-                X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
-                code = buckets(X)  # (nb, T)
-                valid = np.zeros((nq, nb), dtype=bool)
-                for t in range(n_tables):
-                    valid |= mask[:, t, code[:, t]]
-                D = _guarded_matmul(Q, X)
-                D[~valid] = NEG
-                D[qids[:, None] == cid[None, :]] = NEG  # never match self
-                got = _np_partial_topk(D, qids, cid, k, NEG)
-                if got is None:
-                    continue
-                yield pd.DataFrame(
-                    {"query_id": got[0], "neighbor_id": got[1], "dot": got[2]}
-                )
-
-        return run
-
-    parts = []
-    for s in range(n_shards):
-        shard = qsrc if n_shards == 1 else qsrc.filter(
-            F.pmod(F.col("__cid"), F.lit(n_shards)) == s
-        )
-        q_pdf = shard.toPandas().sort_values("__cid", kind="stable")
-        qids = q_pdf["__cid"].to_numpy(np.int64)
-        Q = (
-            np.array(q_pdf["__xq"].tolist(), dtype=np.int64)
-            if len(q_pdf)
-            else np.zeros((0, 1), dtype=np.int64)
-        )
-        qb = (
-            buckets(Q)
-            if len(qids)
-            else np.zeros((0, n_tables), dtype=np.int64)
-        )
+    def prepare(qids, Q):
+        qb = buckets(Q)
         mask = np.zeros((len(qids), n_tables, n_buckets), dtype=bool)
         rows = np.arange(len(qids))
         for m in pmasks:
             for t in range(n_tables):
                 mask[rows, t, qb[:, t] ^ m] = True
-        bc = sc.broadcast((qids, Q, mask))
-        part = corpus.mapInPandas(
-            make_run(bc), schema="query_id long, neighbor_id long, dot long"
-        )
-        part = part.localCheckpoint(eager=True)
-        bc.destroy()
-        parts.append(part)
-    return _merge_topk_partials(parts, k)
+        return Q, mask
+
+    def score(payload, cid, X):
+        Q, mask = payload  # mask: (nq, T, n_buckets) bool
+        code = buckets(X)  # (nb, T)
+        valid = np.zeros((len(Q), len(X)), dtype=bool)
+        for t in range(n_tables):
+            valid |= mask[:, t, code[:, t]]
+        D = _guarded_matmul(Q, X)
+        D[~valid] = NEG
+        return D
+
+    corpus = _corpus_vecs(emb, id_col, vec_col)
+    qsrc = (
+        corpus.filter(F.col("__cid") % 50 == 0)
+        if queries is None
+        else _corpus_vecs(queries, id_col, vec_col)
+    )
+    return corpus_topk(corpus, qsrc, k, prepare, score, shard_rows=shard_rows)
 
 
 def ann_lsh_topk(
@@ -1020,82 +709,10 @@ def ann_lsh_topk(
     expression-bucket and kernel-bucket variants now run the same masked
     kernel (bucket parity between the two implementations is pinned in
     test_round4_fixes; the join formulation survives as
-    ``ann_lsh_topk_join`` and the result is pinned byte-identical)."""
+    ``tests/reference/ann_join.py::ann_lsh_topk_join`` and the result is
+    pinned byte-identical)."""
     return _lsh_topk_kernel(
         emb, queries, k, n_tables, n_bits, probe_radius, dim, id_col, vec_col
-    )
-
-
-def ann_lsh_topk_join(
-    emb: DataFrame,
-    k: int = 5,
-    n_tables: int = 4,
-    n_bits: int = 6,
-    probe_radius: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    queries: DataFrame | None = None,
-    kernel_buckets: bool | None = None,
-) -> DataFrame:
-    """Candidate-join formulation of ``ann_lsh_topk`` — the oracle-shaped
-    parity-test reference (not a query path).
-
-    Scale path: candidates are bounded by (tables x probes x bucket
-    occupancy); the only shuffles are the (table, bucket) candidate join
-    and the id-keyed vector re-attach. On clustered real-world embeddings
-    the candidate fraction drops exponentially with n_bits; the uniform
-    fixture is the worst case (documented in BENCH notes) — the default
-    (4 tables, 6 bits, radius 2) holds recall@5 >= 0.95 there.
-
-    ``kernel_buckets`` picks the bucket implementation (None = auto by
-    dim, see ``_buckets_keyed``): expression buckets stay JVM-codegen at
-    dim<=128; the broadcast-matrix kernel keeps planning O(1) in dim.
-    """
-    keyed = _buckets_keyed(emb, n_tables, n_bits, dim, id_col, vec_col, kernel_buckets)
-    if queries is None:
-        q = keyed.filter(F.col(id_col) % 50 == 0)
-    else:
-        q = _buckets_keyed(
-            queries, n_tables, n_bits, dim, id_col, vec_col, kernel_buckets
-        )
-    probes = q.select(
-        F.col(id_col).alias("query_id"),
-        "table",
-        F.explode(
-            F.array(*[F.lit(m) for m in probe_masks(n_bits, probe_radius)])
-        ).alias("mask"),
-        F.col("bucket").alias("qbucket"),
-    ).select(
-        "query_id", "table", F.col("qbucket").bitwiseXOR(F.col("mask")).alias("bucket")
-    )
-    # candidate id pairs, deduped across tables/probes BEFORE the vector
-    # re-attach (distinct on two ids, never on arrays)
-    cand = (
-        probes.join(keyed, ["table", "bucket"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", F.col(id_col).alias("neighbor_id"))
-        .distinct()
-    )
-    qvec = (queries if queries is not None else emb).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qe")
-    )
-    nvec = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__ne"))
-    dot = F.aggregate(
-        F.zip_with("__qe", "__ne", lambda a, b: _quantize(a) * _quantize(b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.join(qvec, "query_id")
-        .join(nvec, "neighbor_id")
-        .withColumn("dot", dot)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dot")
     )
 
 
@@ -1225,12 +842,7 @@ def _lloyd_rounds(corpus, books: dict, iters: int, sd: int) -> dict:
                 X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
                 for s, (cs, C) in bks.items():
                     Xs = X[:, s * sd:(s + 1) * sd]
-                    ds = (
-                        (Xs * Xs).sum(axis=1)[:, None]
-                        - 2 * _guarded_matmul(Xs, C)
-                        + (C * C).sum(axis=1)[None, :]
-                    )
-                    idx = ds.argmin(axis=1)
+                    idx = _sq_l2(Xs, C).argmin(axis=1)
                     t, c = acc[s]
                     np.add.at(t, idx, Xs)
                     np.add.at(c, idx, 1)
@@ -1298,11 +910,10 @@ def pq_train(
     integer means are combined. The join formulation (broadcast assign
     join -> re-attach join -> posexplode aggregate, ~10 shuffle stages
     per round on what is always a tiny aggregate) survives as
-    ``pq_train_join``, pytest-pinned byte-identical."""
+    ``tests/reference/ann_join.py::pq_train_join``, pytest-pinned
+    byte-identical."""
     import numpy as np
     import pandas as pd
-
-    from .spread import scan_spread
 
     first = emb.select(vec_col).first()
     if first is None:
@@ -1312,11 +923,9 @@ def pq_train(
         raise ValueError(f"pq: m={m} must divide dim={dim}")
     sd = dim // m
     spark = emb.sparkSession
-    corpus = _corpus if _corpus is not None else scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
-    ).localCheckpoint(eager=True)
+    corpus = _corpus if _corpus is not None else _corpus_vecs(
+        emb, id_col, vec_col, spread=True, pin=True
+    )
     seeds_pdf = (
         corpus.filter(F.col("__cid") < k_codes)
         .toPandas()
@@ -1346,38 +955,6 @@ def pq_train(
     return spark.createDataFrame(rows, "s int, code long, __cv array<long>")
 
 
-def pq_train_join(
-    emb: DataFrame,
-    m: int = 8,
-    k_codes: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    _sub: DataFrame | None = None,
-) -> DataFrame:
-    """Join formulation of ``pq_train`` — the oracle-shaped reference the
-    corpus-pass kernel is parity-tested against (not a query path)."""
-    sub = _sub if _sub is not None else _subvectors(emb, m, id_col, vec_col)
-    cents = sub.filter(F.col(id_col) < k_codes).select(
-        "s", F.col(id_col).alias("code"), F.col("__sv").alias("__cv")
-    )
-    for _ in range(iters):
-        a = _pq_assign(sub, cents, id_col)
-        comp = (
-            a.join(sub, [id_col, "s"])
-            .select("s", "code", F.posexplode("__sv").alias("ds", "xq"))
-            .groupBy("s", "code", "ds")
-            .agg(F.sum("xq").alias("__t"), F.count(F.lit(1)).alias("__c"))
-            .withColumn("cq", F.expr("CAST(div(__t, __c) AS BIGINT)"))
-        )
-        cents = comp.groupBy("s", "code").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("ds", "cq"))), lambda x: x["cq"]
-            ).alias("__cv")
-        ).localCheckpoint(eager=True)
-    return cents
-
-
 def _pq_artifacts(
     emb: DataFrame,
     m: int,
@@ -1403,11 +980,7 @@ def _pq_artifacts(
     formulations still pay the subvector explode + assignment pass."""
     from .spread import scan_spread
 
-    corpus = scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
-    ).localCheckpoint(eager=True)
+    corpus = _corpus_vecs(emb, id_col, vec_col, spread=True, pin=True)
     # the codebook lands driver-side from pq_train's corpus-pass rounds
     # (m x k rows, already materialized as a local-data frame)
     cents = pq_train(emb, m, k_codes, iters, id_col, vec_col, _corpus=corpus)
@@ -1446,14 +1019,9 @@ def _adc_lut(books: dict, Q, sd: int) -> dict:
     exact integer L2 of the query subvector vs every codebook entry}`` —
     the same values as the broadcast ``qd`` frame of the join
     formulation, computed once per query shard."""
-    lut = {}
-    for s, (_codes, C) in books.items():
-        Qs = Q[:, s * sd:(s + 1) * sd]
-        G = _guarded_matmul(Qs, C)
-        lut[s] = (
-            (Qs * Qs).sum(axis=1)[:, None] - 2 * G + (C * C).sum(axis=1)[None, :]
-        )
-    return lut
+    return {
+        s: _sq_l2(Q[:, s * sd:(s + 1) * sd], C) for s, (_codes, C) in books.items()
+    }
 
 
 def _pq_adc_topk_kernel(
@@ -1467,145 +1035,64 @@ def _pq_adc_topk_kernel(
     shard_rows: int = 65_536,
     _corpus: DataFrame | None = None,
 ) -> DataFrame:
-    """Executor kernel shared by the PQ ADC scans (``pq_ann_topk`` and,
-    with ``coarse_cents``/``nprobe``, ``ivf_pq_ann_topk``): ONE corpus
-    pass per query shard. Per batch the corpus vectors' PQ codes are
-    re-derived in NumPy (per-subspace argmin against the broadcast
-    codebook — byte-identical to ``_pq_assign``), ADC distances come
-    from ``m`` lookups into the shard's precomputed query tables, the
-    optional IVF probe mask zeroes out non-probed lists, and the partial
-    top-k under (adc asc, neighbor asc) rides the shared negated-metric
-    machinery. Nothing shuffles but <= k x partitions partial winners.
-
-    The join formulation shipped every corpus code row against every
-    query's lookup row (|corpus| x m x |queries| joined rows — 64 M at
-    sf1 before the aggregate); here the same sums are ``m`` fancy-indexed
-    adds per batch. Parity with the ``*_join`` references is
-    pytest-pinned and the DuckDB oracle gates the registry entries."""
-    import math
-
+    """The PQ ADC scan shared by ``pq_ann_topk`` and, with
+    ``coarse_cents``/``nprobe``, ``ivf_pq_ann_topk``, as ``corpus_topk``
+    passes ranked (adc asc, neighbor asc): the shard's ADC tables (and
+    IVF probe mask) are the payload; each batch re-derives its PQ codes
+    (per-subspace argmin — byte-identical to ``_pq_assign``) and sums
+    ``m`` table lookups. The join formulation (parity-pinned in
+    ``tests/reference/ann_join.py``) joined |corpus| x m x |queries|
+    rows — 64 M at sf1 before the aggregate."""
     import numpy as np
-    import pandas as pd
 
     books = _pq_books(pq_cents)
     spark = emb.sparkSession
     if not books:
         # empty codebook (no seed ids below k_codes): the join form's qd
         # frame is empty, so the ADC result is too
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, adc long"
-        )
+        return _empty_topk(spark, "adc")
     sd = next(iter(books.values()))[1].shape[1]
-    dim = sd * max(books) + sd if books else sd
 
-    coarse_ids = None
-    C_coarse = None
+    coarse_ids = C_coarse = None
     if coarse_cents is not None:
         c_pdf = coarse_cents.toPandas().sort_values("centroid_id", kind="stable")
-        coarse_ids = c_pdf["centroid_id"].to_numpy(np.int64)
-        C_coarse = (
-            np.array(c_pdf["__cv"].tolist(), dtype=np.int64)
-            if len(c_pdf)
-            else np.zeros((0, 1), dtype=np.int64)
-        )
-        if not len(C_coarse):
+        if not len(c_pdf):
             # no coarse lists -> no probes -> no candidates
-            return spark.createDataFrame(
-                [], "query_id long, neighbor_id long, rank int, adc long"
-            )
+            return _empty_topk(spark, "adc")
+        coarse_ids = c_pdf["centroid_id"].to_numpy(np.int64)
+        C_coarse = np.array(c_pdf["__cv"].tolist(), dtype=np.int64)
 
-    from .spread import scan_spread
-
-    corpus = _corpus if _corpus is not None else scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
+    def prepare(qids, Q):
+        mask = (
+            None if C_coarse is None else _probe_mask(Q, C_coarse, coarse_ids, nprobe)
         )
+        return _adc_lut(books, Q, sd), mask
+
+    def score(payload, cid, X):
+        lut, mask = payload
+        D = -sum(
+            lut[s][:, _sq_l2(X[:, s * sd:(s + 1) * sd], C).argmin(axis=1)]
+            for s, (_codes, C) in books.items()
+        )
+        if mask is not None:
+            # nearest coarse list per corpus vector (first-minimum over
+            # the centroid_id-sorted C == struct-min tie rule)
+            D[~mask[:, _sq_l2(X, C_coarse).argmin(axis=1)]] = NEG
+        return D
+
+    corpus = _corpus if _corpus is not None else _corpus_vecs(
+        emb, id_col, vec_col, spread=True
     )
-    qsrc = corpus.filter(F.col("__cid") % 50 == 0)
-    n_q = qsrc.count()
-    n_shards = max(1, math.ceil(n_q / shard_rows))
-    NEG = np.iinfo(np.int64).min
-    sc = spark.sparkContext
-
-    def make_run(bc):
-        def run(batches):
-            qids, lut, mask = bc.value
-            nq = len(qids)
-            for pdf in batches:
-                nb = len(pdf)
-                if nb == 0 or nq == 0:
-                    continue
-                cid = pdf["__cid"].to_numpy(np.int64)
-                X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
-                adc = np.zeros((nq, nb), dtype=np.int64)
-                for s, (_codes, C) in books.items():
-                    Xs = X[:, s * sd:(s + 1) * sd]
-                    ds = (
-                        (Xs * Xs).sum(axis=1)[:, None]
-                        - 2 * _guarded_matmul(Xs, C)
-                        + (C * C).sum(axis=1)[None, :]
-                    )
-                    adc += lut[s][:, ds.argmin(axis=1)]
-                D = -adc
-                if mask is not None:
-                    # nearest coarse list per corpus vector (first-minimum
-                    # over the centroid_id-sorted C == struct-min tie rule)
-                    G = _guarded_matmul(X, C_coarse)
-                    d2 = (
-                        (X * X).sum(axis=1)[:, None]
-                        - 2 * G
-                        + (C_coarse * C_coarse).sum(axis=1)[None, :]
-                    )
-                    D[~mask[:, d2.argmin(axis=1)]] = NEG
-                D[qids[:, None] == cid[None, :]] = NEG  # never match self
-                got = _np_partial_topk(D, qids, cid, k, NEG)
-                if got is None:
-                    continue
-                yield pd.DataFrame(
-                    {"query_id": got[0], "neighbor_id": got[1], "dot": got[2]}
-                )
-
-        return run
-
-    parts = []
-    for s in range(n_shards):
-        shard = qsrc if n_shards == 1 else qsrc.filter(
-            F.pmod(F.col("__cid"), F.lit(n_shards)) == s
-        )
-        q_pdf = shard.toPandas().sort_values("__cid", kind="stable")
-        qids = q_pdf["__cid"].to_numpy(np.int64)
-        Q = (
-            np.array(q_pdf["__xq"].tolist(), dtype=np.int64)
-            if len(q_pdf)
-            else np.zeros((0, dim), dtype=np.int64)
-        )
-        lut = (
-            _adc_lut(books, Q, sd)
-            if len(qids)
-            else {s: np.zeros((0, len(cs)), dtype=np.int64) for s, (cs, _C) in books.items()}
-        )
-        mask = None
-        if C_coarse is not None:
-            # probe mask: row_number over (l2 asc, centroid_id asc) <= nprobe
-            mask = np.zeros((len(qids), len(coarse_ids)), dtype=bool)
-            if len(qids):
-                Gq = _guarded_matmul(Q, C_coarse)
-                d2q = (
-                    (Q * Q).sum(axis=1)[:, None]
-                    - 2 * Gq
-                    + (C_coarse * C_coarse).sum(axis=1)[None, :]
-                )
-                npb = min(nprobe, len(coarse_ids))
-                for i in range(len(qids)):
-                    mask[i, np.lexsort((coarse_ids, d2q[i]))[:npb]] = True
-        bc = sc.broadcast((qids, lut, mask))
-        part = corpus.mapInPandas(
-            make_run(bc), schema="query_id long, neighbor_id long, dot long"
-        )
-        part = part.localCheckpoint(eager=True)
-        bc.destroy()
-        parts.append(part)
-    return _merge_topk_partials(parts, k, out_col="adc", negate=True)
+    return corpus_topk(
+        corpus,
+        corpus.filter(F.col("__cid") % 50 == 0),
+        k,
+        prepare,
+        score,
+        out_col="adc",
+        negate=True,
+        shard_rows=shard_rows,
+    )
 
 
 def _rescore_shortlist_kernel(
@@ -1617,82 +1104,43 @@ def _rescore_shortlist_kernel(
     out_col: str = "dot",
     _corpus: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact quantized-dot re-ranking of a per-query shortlist via ONE
-    corpus pass: the (query_id, neighbor_id) shortlist (|queries| x
-    shortlist rows — always bounded) and the query vectors ride a
-    broadcast; each batch computes the masked dot matrix and emits only
-    shortlist pairs into the global (dot desc, id asc) merge. Replaces
-    the two vector re-attach joins + per-pair zip_with aggregate of the
-    join formulation — same values, no corpus shuffle."""
+    """Exact quantized-dot re-ranking of a per-query shortlist as
+    ``corpus_topk`` passes: the (query_id, neighbor_id) shortlist is
+    collected once and each shard broadcasts only its own queries' pairs;
+    each batch scores just the shortlisted pairs. Replaces the two
+    vector re-attach joins + per-pair zip_with aggregate of the join
+    formulation — same values, no corpus shuffle."""
     import numpy as np
-    import pandas as pd
-
-    from .spread import scan_spread
 
     pairs = short.select("query_id", "neighbor_id").toPandas()
-    corpus = _corpus if _corpus is not None else scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
+    corpus = _corpus if _corpus is not None else _corpus_vecs(
+        emb, id_col, vec_col, spread=True
     )
-    q_pdf = (
-        corpus.filter(F.col("__cid").isin([int(q) for q in set(pairs["query_id"])]))
-        .toPandas()
-        .sort_values("__cid", kind="stable")
-        if len(pairs)
-        else None
-    )
-    if q_pdf is None or not len(q_pdf):
-        return _merge_topk_partials(
-            [
-                emb.sparkSession.createDataFrame(
-                    [], "query_id long, neighbor_id long, dot long"
-                )
-            ],
-            k,
-            out_col=out_col,
+
+    def prepare(qids, Q):
+        own = pairs[pairs["query_id"].isin(qids)]
+        return (
+            Q,
+            np.searchsorted(qids, own["query_id"].to_numpy(np.int64)),
+            own["neighbor_id"].to_numpy(np.int64),
         )
-    qids = q_pdf["__cid"].to_numpy(np.int64)
-    Q = np.array(q_pdf["__xq"].tolist(), dtype=np.int64)
-    qrow = {int(q): i for i, q in enumerate(qids)}
-    by_nbr: dict[int, list[int]] = {}
-    for q, n in zip(pairs["query_id"], pairs["neighbor_id"]):
-        by_nbr.setdefault(int(n), []).append(qrow[int(q)])
-    by_nbr_np = {n: np.asarray(rs, dtype=np.int64) for n, rs in by_nbr.items()}
-    sc = emb.sparkSession.sparkContext
-    bc = sc.broadcast((qids, Q, by_nbr_np))
 
-    def run(batches):
-        qids, Q, by_nbr = bc.value
-        for pdf in batches:
-            nb = len(pdf)
-            if nb == 0:
-                continue
-            cid = pdf["__cid"].to_numpy(np.int64)
-            hit = [j for j in range(nb) if int(cid[j]) in by_nbr]
-            if not hit:
-                continue
-            X = np.array(pdf["__xq"].to_numpy()[hit].tolist(), dtype=np.int64)
-            D = _guarded_matmul(Q, X)
-            out_q, out_n, out_d = [], [], []
-            for jj, j in enumerate(hit):
-                rows = by_nbr[int(cid[j])]
-                out_q.append(qids[rows])
-                out_n.append(np.full(len(rows), cid[j], dtype=np.int64))
-                out_d.append(D[rows, jj])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "dot": np.concatenate(out_d),
-                }
-            )
+    def score(payload, cid, X):
+        Q, pair_row, pair_nbr = payload
+        D = np.full((len(Q), len(cid)), NEG, dtype=np.int64)
+        hit = np.flatnonzero(np.isin(cid, pair_nbr))
+        if hit.size:
+            col = {int(c): j for j, c in enumerate(cid[hit])}
+            keep = np.isin(pair_nbr, cid[hit])
+            rows = pair_row[keep]
+            cols = np.array([col[int(n)] for n in pair_nbr[keep]], dtype=np.int64)
+            D[rows, hit[cols]] = _guarded_matmul(Q, X[hit])[rows, cols]
+        return D
 
-    part = corpus.mapInPandas(
-        run, schema="query_id long, neighbor_id long, dot long"
-    ).localCheckpoint(eager=True)
-    bc.destroy()
-    return _merge_topk_partials([part], k, out_col=out_col)
+    qsrc = corpus.filter(
+        F.col("__cid").isin([int(q) for q in set(pairs["query_id"])])
+    )
+    return corpus_topk(corpus, qsrc, k, prepare, score, out_col=out_col)
 
 
 def pq_encode(
@@ -1734,56 +1182,14 @@ def pq_ann_topk(
     partial — no full-dimension vectors move after encoding.
 
     Executes as the ``_pq_adc_topk_kernel`` corpus pass (r8): the join
-    formulation (kept as ``pq_ann_topk_join``, pytest-pinned
-    byte-identical) shipped |corpus| x m x |queries| joined rows into
-    the ADC aggregate — 64 M rows at sf1 for a 20k-vector corpus."""
+    formulation (kept as ``tests/reference/ann_join.py::pq_ann_topk_join``,
+    pytest-pinned byte-identical) shipped |corpus| x m x |queries| joined
+    rows into the ADC aggregate — 64 M rows at sf1 for a 20k-vector
+    corpus."""
     corpus, cents, _codes = _artifacts or _pq_artifacts(
         emb, m, k_codes, iters, id_col, vec_col, need_codes=False
     )
     return _pq_adc_topk_kernel(emb, cents, k, id_col, vec_col, _corpus=corpus)
-
-
-def pq_ann_topk_join(
-    emb: DataFrame,
-    k: int = 5,
-    m: int = 8,
-    k_codes: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    _artifacts: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """Broadcast-join formulation of ``pq_ann_topk`` — the oracle-shaped
-    reference the kernel is parity-tested against (not a query path)."""
-    sub, cents, codes = _artifacts or _pq_artifacts(
-        emb, m, k_codes, iters, id_col, vec_col
-    )
-
-    l2 = F.aggregate(
-        F.zip_with("__sv", "__cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    qd = (
-        sub.filter(F.col(id_col) % 50 == 0)
-        .select(F.col(id_col).alias("query_id"), "s", "__sv")
-        .join(F.broadcast(cents), "s")
-        .select("query_id", "s", "code", l2.alias("qd"))
-    )
-    adc = (
-        codes.join(F.broadcast(qd), ["s", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(F.sum("qd").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc")
-    )
 
 
 def pq_ann_rescored(
@@ -1807,7 +1213,7 @@ def pq_ann_rescored(
     recall while the corpus-sized pass still never moves a vector
     (measured in bench.py's ann family). Both stages execute as masked
     corpus-pass kernels (r8); the join formulation survives as
-    ``pq_ann_rescored_join`` for parity."""
+    ``tests/reference/ann_join.py::pq_ann_rescored_join`` for parity."""
     arts = _artifacts or _pq_artifacts(
         emb, m, k_codes, iters, id_col, vec_col, need_codes=False
     )
@@ -1817,43 +1223,6 @@ def pq_ann_rescored(
     ).select("query_id", "neighbor_id")
     return _rescore_shortlist_kernel(
         emb, short, k, id_col, vec_col, _corpus=arts[0]
-    )
-
-
-def pq_ann_rescored_join(
-    emb: DataFrame,
-    k: int = 5,
-    shortlist: int = 50,
-    m: int = 8,
-    k_codes: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    _artifacts: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """Join formulation of ``pq_ann_rescored`` — the oracle-shaped
-    reference the kernel pair is parity-tested against."""
-    short = pq_ann_topk_join(
-        emb, k=shortlist, m=m, k_codes=k_codes, iters=iters,
-        id_col=id_col, vec_col=vec_col, _artifacts=_artifacts,
-    ).select("query_id", "neighbor_id")
-    qv = emb.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qe"))
-    nv = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__ne"))
-    dot = F.aggregate(
-        F.zip_with("__qe", "__ne", lambda a, b: _quantize(a) * _quantize(b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        short.join(qv, "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("dot", dot)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dot")
     )
 
 
@@ -1914,144 +1283,44 @@ def sq8_ann_topk(
     Returns (query_id, neighbor_id, rank, adist) ranked by approximate
     distance ascending, neighbor id ascending.
 
-    Executes as ONE corpus pass per query shard (r8): the per-dim
-    (mn, span) stats are a 64-row aggregate collected to the driver, the
-    encode/decode round-trip and the exact integer L2 run as NumPy array
-    ops per batch, and only <= k x partitions partial winners shuffle
-    into the global merge. The per-dimension broadcast-join formulation
-    (kept as ``sq8_ann_topk_join``, pytest-pinned) materialized
-    |corpus| x |queries| x dim joined rows — 512 M at sf1. Integer
-    divisions are floor-exact in both paths: operands are non-negative
-    and quotients sit far from representable-double boundaries."""
-    import math
-
+    Executes as ``corpus_topk`` passes (r8): the per-dim (mn, span)
+    stats are a 64-row aggregate collected to the driver; each batch
+    runs the encode/decode round-trip and the exact integer L2. The
+    per-dimension broadcast-join formulation (kept as
+    ``tests/reference/ann_join.py::sq8_ann_topk_join``, pytest-pinned)
+    materialized |corpus| x |queries| x dim joined rows — 512 M at sf1.
+    Integer divisions are floor-exact in both paths: operands are
+    non-negative and quotients sit far from representable-double
+    boundaries."""
     import numpy as np
-    import pandas as pd
 
     flat = _sq8_flat(emb, id_col, vec_col)
     stats_pdf = _sq8_stats(flat).toPandas().sort_values("d", kind="stable")
-    spark = emb.sparkSession
     if not len(stats_pdf):
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, adist long"
-        )
+        return _empty_topk(emb.sparkSession, "adist")
     dim = int(stats_pdf["d"].max()) + 1
     mn = np.zeros(dim, dtype=np.int64)
     span = np.ones(dim, dtype=np.int64)
     mn[stats_pdf["d"].to_numpy(np.int64)] = stats_pdf["mn"].to_numpy(np.int64)
     span[stats_pdf["d"].to_numpy(np.int64)] = stats_pdf["span"].to_numpy(np.int64)
 
-    from .spread import scan_spread
+    def score(Q, cid, X):
+        # encode -> decode round-trip, exactly the join form's integer
+        # expressions (non-negative floor divisions)
+        code = ((X - mn[None, :]) * 255) // span[None, :]
+        dq = mn[None, :] + (code * span[None, :]) // 255
+        return -_sq_l2(Q, dq)
 
-    corpus = scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
-    )
-    qsrc = corpus.filter(F.col("__cid") % 50 == 0)
-    n_q = qsrc.count()
-    n_shards = max(1, math.ceil(n_q / shard_rows))
-    NEG = np.iinfo(np.int64).min
-    sc = spark.sparkContext
-
-    def make_run(bc):
-        def run(batches):
-            qids, Q = bc.value
-            nq = len(qids)
-            for pdf in batches:
-                nb = len(pdf)
-                if nb == 0 or nq == 0:
-                    continue
-                cid = pdf["__cid"].to_numpy(np.int64)
-                X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
-                # encode -> decode round-trip, exactly the join form's
-                # integer expressions (non-negative floor divisions)
-                code = ((X - mn[None, :]) * 255) // span[None, :]
-                dq = mn[None, :] + (code * span[None, :]) // 255
-                d2 = (
-                    (Q * Q).sum(axis=1)[:, None]
-                    - 2 * _guarded_matmul(Q, dq)
-                    + (dq * dq).sum(axis=1)[None, :]
-                )
-                D = -d2
-                D[qids[:, None] == cid[None, :]] = NEG  # never match self
-                got = _np_partial_topk(D, qids, cid, k, NEG)
-                if got is None:
-                    continue
-                yield pd.DataFrame(
-                    {"query_id": got[0], "neighbor_id": got[1], "dot": got[2]}
-                )
-
-        return run
-
-    parts = []
-    for s in range(n_shards):
-        shard = qsrc if n_shards == 1 else qsrc.filter(
-            F.pmod(F.col("__cid"), F.lit(n_shards)) == s
-        )
-        q_pdf = shard.toPandas().sort_values("__cid", kind="stable")
-        qids = q_pdf["__cid"].to_numpy(np.int64)
-        Q = (
-            np.array(q_pdf["__xq"].tolist(), dtype=np.int64)
-            if len(q_pdf)
-            else np.zeros((0, dim), dtype=np.int64)
-        )
-        bc = sc.broadcast((qids, Q))
-        part = corpus.mapInPandas(
-            make_run(bc), schema="query_id long, neighbor_id long, dot long"
-        )
-        part = part.localCheckpoint(eager=True)
-        bc.destroy()
-        parts.append(part)
-    return _merge_topk_partials(parts, k, out_col="adist", negate=True)
-
-
-def sq8_ann_topk_join(
-    emb: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-dimension broadcast-join formulation of ``sq8_ann_topk`` —
-    the oracle-shaped reference the kernel is parity-tested against."""
-    flat = _sq8_flat(emb, id_col, vec_col)
-    stats = _sq8_stats(flat)
-    deq = (
-        flat.join(F.broadcast(stats), "d")
-        .select(
-            F.col(id_col),
-            "d",
-            (
-                F.col("mn")
-                + (
-                    (((F.col("xq") - F.col("mn")) * 255) / F.col("span"))
-                    .cast("long")
-                    * F.col("span")
-                    / F.lit(255)
-                ).cast("long")
-            ).alias("dq"),
-        )
-    )
-    q = flat.filter(F.col(id_col) % 50 == 0).select(
-        F.col(id_col).alias("query_id"), "d", "xq"
-    )
-    dist = (
-        deq.join(F.broadcast(q), "d")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(
-            F.sum(
-                (F.col("xq") - F.col("dq")) * (F.col("xq") - F.col("dq"))
-            ).alias("adist")
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        dist.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adist")
+    corpus = _corpus_vecs(emb, id_col, vec_col, spread=True)
+    return corpus_topk(
+        corpus,
+        corpus.filter(F.col("__cid") % 50 == 0),
+        k,
+        lambda qids, Q: Q,
+        score,
+        out_col="adist",
+        negate=True,
+        shard_rows=shard_rows,
     )
 
 
@@ -2085,7 +1354,8 @@ def ivf_pq_ann_topk(
     Executes as the masked ``_pq_adc_topk_kernel`` corpus pass (r8):
     probe mask + in-task coarse assignment + ADC lookups, byte-identical
     to the candidate-join formulation (kept as
-    ``ivf_pq_ann_topk_join``, pytest-pinned)."""
+    ``tests/reference/ann_join.py::ivf_pq_ann_topk_join``,
+    pytest-pinned)."""
     corpus, cents, _codes = _artifacts or _pq_artifacts(
         emb, m, k_codes, iters, id_col, vec_col, need_codes=False
     )
@@ -2095,82 +1365,6 @@ def ivf_pq_ann_topk(
     return _pq_adc_topk_kernel(
         emb, cents, k, id_col, vec_col, coarse_cents=coarse, nprobe=nprobe,
         _corpus=corpus,
-    )
-
-
-def ivf_pq_ann_topk_join(
-    emb: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 8,
-    m: int = 8,
-    k_codes: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    _artifacts: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """Candidate-join formulation of ``ivf_pq_ann_topk`` — the
-    oracle-shaped reference the kernel is parity-tested against."""
-    assigned = ivf_assign(emb, n_centroids, id_col, vec_col)
-    cents = emb.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("__cv")
-    )
-    q = emb.filter(F.col(id_col) % 50 == 0).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-    )
-    l2q = F.aggregate(
-        F.zip_with(
-            "__qv", "__cv",
-            lambda a, b: (_quantize(a) - _quantize(b)) * (_quantize(a) - _quantize(b)),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("__d").asc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("__d", l2q)
-        .withColumn("__pr", F.row_number().over(wp))
-        .filter(F.col("__pr") <= nprobe)
-        .select("query_id", "centroid_id")
-    )
-    cand = (
-        probes.join(assigned.select(id_col, "centroid_id"), "centroid_id")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select("query_id", F.col(id_col).alias("neighbor_id"))
-    )
-
-    sub, pq_cents, codes_raw = _artifacts or _pq_artifacts(
-        emb, m, k_codes, iters, id_col, vec_col
-    )
-    codes = codes_raw.select(F.col(id_col).alias("neighbor_id"), "s", "code")
-    l2 = F.aggregate(
-        F.zip_with("__sv", "__cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    qd = (
-        sub.filter(F.col(id_col) % 50 == 0)
-        .select(F.col(id_col).alias("query_id"), "s", "__sv")
-        .join(F.broadcast(pq_cents), "s")
-        .select("query_id", "s", "code", l2.alias("qd"))
-    )
-    adc = (
-        cand.join(codes, "neighbor_id")
-        .join(F.broadcast(qd), ["query_id", "s", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("qd").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc")
     )
 
 
@@ -2200,7 +1394,8 @@ def ivf_pq_ann_rescored(
     integer procedures the standalone gates pin, so the composite stays
     oracle-exact end to end. Both stages execute as masked corpus-pass
     kernels (r8); the join formulation survives as
-    ``ivf_pq_ann_rescored_join`` for parity."""
+    ``tests/reference/ann_join.py::ivf_pq_ann_rescored_join`` for
+    parity."""
     arts = _pq_artifacts(emb, m, k_codes, iters, id_col, vec_col, need_codes=False)
     short = ivf_pq_ann_topk(
         emb, k=shortlist, n_centroids=n_centroids, nprobe=nprobe, m=m,
@@ -2209,46 +1404,6 @@ def ivf_pq_ann_rescored(
     ).select("query_id", "neighbor_id")
     return _rescore_shortlist_kernel(
         emb, short, k, id_col, vec_col, _corpus=arts[0]
-    )
-
-
-def ivf_pq_ann_rescored_join(
-    emb: DataFrame,
-    k: int = 5,
-    shortlist: int = 50,
-    n_centroids: int = 16,
-    nprobe: int = 8,
-    m: int = 8,
-    k_codes: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Join formulation of ``ivf_pq_ann_rescored`` — the oracle-shaped
-    reference the kernel pair is parity-tested against."""
-    arts = _pq_artifacts(emb, m, k_codes, iters, id_col, vec_col)
-    short = ivf_pq_ann_topk_join(
-        emb, k=shortlist, n_centroids=n_centroids, nprobe=nprobe, m=m,
-        k_codes=k_codes, iters=iters, id_col=id_col, vec_col=vec_col,
-        _artifacts=arts,
-    ).select("query_id", "neighbor_id")
-    qv = emb.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qe"))
-    nv = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__ne"))
-    dot = F.aggregate(
-        F.zip_with("__qe", "__ne", lambda a, b: _quantize(a) * _quantize(b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        short.join(qv, "query_id")
-        .join(nv, "neighbor_id")
-        .withColumn("dot", dot)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dot")
     )
 
 

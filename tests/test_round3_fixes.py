@@ -19,7 +19,8 @@ def test_topk_kernel_matches_explode_formulation(spark):
     """topk_dot_kernel (broadcast NumPy partial top-k) must be
     bit-identical to the dimension-explode formulation that mirrors the
     DuckDB oracle — same quantization, same (dot desc, id asc) order."""
-    from langtoolsosm_spark.operators.similarity import topk_dot, topk_dot_kernel
+    from langtoolsosm_spark.operators.similarity import topk_dot_kernel
+    from tests.reference.ann_join import topk_dot
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cols = ["query_id", "neighbor_id", "rank", "dot"]
@@ -32,7 +33,8 @@ def test_topk_kernel_boundary_ties_break_by_id(spark):
     """Equal-dot candidates straddling the k-th slot must resolve by
     smaller id — the partial top-k has to keep boundary ties, not let
     argpartition pick arbitrarily."""
-    from langtoolsosm_spark.operators.similarity import topk_dot, topk_dot_kernel
+    from langtoolsosm_spark.operators.similarity import topk_dot_kernel
+    from tests.reference.ann_join import topk_dot
 
     # all corpus vectors identical -> every dot ties; ids decide everything
     emb = spark.createDataFrame(

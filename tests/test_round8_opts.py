@@ -1,5 +1,7 @@
 """Round-8 optimization parity pins: every rewritten execution path must
-stay byte-identical to the (kept) reference formulation it replaced.
+stay byte-identical to the reference formulation it replaced (kept in
+``tests/reference/ann_join.py`` for the ANN families), plus the query
+gate and shard bound of the shared ``corpus_topk`` loop.
 
 The optimization round's contract is "same rows, faster plan" — these
 tests pin the "same rows" half on the deterministic sf0.01 fixtures so a
@@ -21,10 +23,8 @@ def emb(spark):
 
 def test_ivf_kernel_matches_join(spark, emb):
     """Masked-matmul IVF rescore == candidate-join formulation."""
-    from langtoolsosm_spark.operators.similarity import (
-        ivf_ann_topk,
-        ivf_ann_topk_join,
-    )
+    from langtoolsosm_spark.operators.similarity import ivf_ann_topk
+    from tests.reference.ann_join import ivf_ann_topk_join
 
     got = _sorted_pdf(ivf_ann_topk(emb))
     exp = _sorted_pdf(ivf_ann_topk_join(emb))
@@ -32,10 +32,8 @@ def test_ivf_kernel_matches_join(spark, emb):
 
 
 def test_ivf_lloyd_kernel_matches_join(spark, emb):
-    from langtoolsosm_spark.operators.similarity import (
-        ivf_lloyd_ann_topk,
-        ivf_lloyd_ann_topk_join,
-    )
+    from langtoolsosm_spark.operators.similarity import ivf_lloyd_ann_topk
+    from tests.reference.ann_join import ivf_lloyd_ann_topk_join
 
     got = _sorted_pdf(ivf_lloyd_ann_topk(emb))
     exp = _sorted_pdf(ivf_lloyd_ann_topk_join(emb))
@@ -43,10 +41,8 @@ def test_ivf_lloyd_kernel_matches_join(spark, emb):
 
 
 def test_lsh_kernel_matches_join(spark, emb):
-    from langtoolsosm_spark.operators.similarity import (
-        ann_lsh_topk,
-        ann_lsh_topk_join,
-    )
+    from langtoolsosm_spark.operators.similarity import ann_lsh_topk
+    from tests.reference.ann_join import ann_lsh_topk_join
 
     got = _sorted_pdf(ann_lsh_topk(emb))
     exp = _sorted_pdf(ann_lsh_topk_join(emb))
@@ -56,10 +52,8 @@ def test_lsh_kernel_matches_join(spark, emb):
 def test_lsh_kernel_nondefault_params(spark, emb):
     """Parity must hold off the default config too (different table/bit
     geometry exercises the probe-mask indexing)."""
-    from langtoolsosm_spark.operators.similarity import (
-        ann_lsh_topk,
-        ann_lsh_topk_join,
-    )
+    from langtoolsosm_spark.operators.similarity import ann_lsh_topk
+    from tests.reference.ann_join import ann_lsh_topk_join
 
     kw = dict(k=3, n_tables=2, n_bits=4, probe_radius=1)
     got = _sorted_pdf(ann_lsh_topk(emb, **kw))
@@ -83,6 +77,78 @@ def test_ivf_kernel_sharded_queries(spark, emb):
         _ivf_topk_kernel(emb, cents, 5, 8, "vec_id", "embedding", shard_rows=3)
     )
     exp = _sorted_pdf(ivf_ann_topk(emb))
+    assert got.equals(exp) and len(got) > 0
+
+
+def test_topk_shards_hold_at_most_shard_rows(spark, emb, monkeypatch):
+    """``corpus_topk`` shard bound: above ``shard_rows`` queries, every
+    broadcast holds at most ``shard_rows`` query rows, there are exactly
+    ceil(n_q / shard_rows) of them (no empty shard pays a corpus pass),
+    and the answer equals the single-shard one."""
+    import math
+
+    from langtoolsosm_spark.operators.similarity import topk_dot_kernel
+
+    exp = _sorted_pdf(topk_dot_kernel(emb, k=5))
+    n_q = emb.filter(F.col("vec_id") % 50 == 0).count()
+
+    sc = spark.sparkContext
+    real = sc.broadcast
+    shard_sizes = []
+
+    def spy(value):
+        shard_sizes.append(len(value[0]))
+        return real(value)
+
+    monkeypatch.setattr(sc, "broadcast", spy)
+    got = topk_dot_kernel(emb, k=5, shard_rows=3)
+    monkeypatch.undo()
+
+    assert n_q > 3
+    assert len(shard_sizes) == math.ceil(n_q / 3), shard_sizes
+    assert max(shard_sizes) <= 3 and sum(shard_sizes) == n_q, shard_sizes
+    got = _sorted_pdf(got)
+    assert got.equals(exp) and len(got) > 0
+
+
+@pytest.mark.parametrize("family", ["topk_dot_kernel", "ivf_ann_topk"])
+def test_single_shard_gate_runs_no_count(spark, emb, monkeypatch, family):
+    """Up to ``shard_rows`` queries the bounded ``limit`` collect is the
+    whole ``corpus_topk`` gate: no separate ``count()`` job."""
+    from langtoolsosm_spark.operators import similarity
+
+    def no_count(self):
+        raise AssertionError("corpus top-k ran a DataFrame.count()")
+
+    monkeypatch.setattr(type(emb), "count", no_count)
+    got = getattr(similarity, family)(emb).toPandas()
+    assert len(got) > 0
+
+
+def test_lsh_kernel_sharded_queries(spark, emb):
+    """Sharded LSH pass == single-shard answer, for the fixture query
+    sample and for an explicit queries frame."""
+    from langtoolsosm_spark.operators.similarity import (
+        _lsh_topk_kernel,
+        ann_lsh_topk,
+    )
+
+    args = (5, 4, 6, 2, 64, "vec_id", "embedding")
+    got = _sorted_pdf(_lsh_topk_kernel(emb, None, *args, shard_rows=3))
+    exp = _sorted_pdf(ann_lsh_topk(emb))
+    assert got.equals(exp) and len(got) > 0
+
+    queries = emb.filter(F.col("vec_id") % 40 == 3)
+    got2 = _sorted_pdf(_lsh_topk_kernel(emb, queries, *args, shard_rows=3))
+    exp2 = _sorted_pdf(ann_lsh_topk(emb, queries=queries))
+    assert got2.equals(exp2) and len(got2) > 0
+
+
+def test_sq8_kernel_sharded_queries(spark, emb):
+    from langtoolsosm_spark.operators.similarity import sq8_ann_topk
+
+    got = _sorted_pdf(sq8_ann_topk(emb, shard_rows=3))
+    exp = _sorted_pdf(sq8_ann_topk(emb))
     assert got.equals(exp) and len(got) > 0
 
 
@@ -174,10 +240,8 @@ def test_co_visitation_block_kernel_matches_join(spark):
 def test_ivf_kernel_explicit_small_k_ties(spark):
     """Masked partial top-k must keep boundary ties per partition: a
     fixture where many corpus vectors tie on the dot product."""
-    from langtoolsosm_spark.operators.similarity import (
-        ivf_ann_topk,
-        ivf_ann_topk_join,
-    )
+    from langtoolsosm_spark.operators.similarity import ivf_ann_topk
+    from tests.reference.ann_join import ivf_ann_topk_join
 
     rows = []
     for i in range(120):
@@ -193,10 +257,8 @@ def test_ivf_kernel_explicit_small_k_ties(spark):
 
 def test_pq_adc_kernel_matches_join(spark, emb):
     """Masked ADC corpus-pass PQ top-k == broadcast-join formulation."""
-    from langtoolsosm_spark.operators.similarity import (
-        pq_ann_topk,
-        pq_ann_topk_join,
-    )
+    from langtoolsosm_spark.operators.similarity import pq_ann_topk
+    from tests.reference.ann_join import pq_ann_topk_join
 
     got = _sorted_pdf(pq_ann_topk(emb))
     exp = _sorted_pdf(pq_ann_topk_join(emb))
@@ -204,10 +266,8 @@ def test_pq_adc_kernel_matches_join(spark, emb):
 
 
 def test_pq_rescored_kernel_matches_join(spark, emb):
-    from langtoolsosm_spark.operators.similarity import (
-        pq_ann_rescored,
-        pq_ann_rescored_join,
-    )
+    from langtoolsosm_spark.operators.similarity import pq_ann_rescored
+    from tests.reference.ann_join import pq_ann_rescored_join
 
     got = _sorted_pdf(pq_ann_rescored(emb))
     exp = _sorted_pdf(pq_ann_rescored_join(emb))
@@ -215,10 +275,8 @@ def test_pq_rescored_kernel_matches_join(spark, emb):
 
 
 def test_sq8_kernel_matches_join(spark, emb):
-    from langtoolsosm_spark.operators.similarity import (
-        sq8_ann_topk,
-        sq8_ann_topk_join,
-    )
+    from langtoolsosm_spark.operators.similarity import sq8_ann_topk
+    from tests.reference.ann_join import sq8_ann_topk_join
 
     got = _sorted_pdf(sq8_ann_topk(emb))
     exp = _sorted_pdf(sq8_ann_topk_join(emb))
@@ -226,10 +284,8 @@ def test_sq8_kernel_matches_join(spark, emb):
 
 
 def test_ivf_pq_kernel_matches_join(spark, emb):
-    from langtoolsosm_spark.operators.similarity import (
-        ivf_pq_ann_topk,
-        ivf_pq_ann_topk_join,
-    )
+    from langtoolsosm_spark.operators.similarity import ivf_pq_ann_topk
+    from tests.reference.ann_join import ivf_pq_ann_topk_join
 
     got = _sorted_pdf(ivf_pq_ann_topk(emb))
     exp = _sorted_pdf(ivf_pq_ann_topk_join(emb))
@@ -237,10 +293,8 @@ def test_ivf_pq_kernel_matches_join(spark, emb):
 
 
 def test_ivf_pq_rescored_kernel_matches_join(spark, emb):
-    from langtoolsosm_spark.operators.similarity import (
-        ivf_pq_ann_rescored,
-        ivf_pq_ann_rescored_join,
-    )
+    from langtoolsosm_spark.operators.similarity import ivf_pq_ann_rescored
+    from tests.reference.ann_join import ivf_pq_ann_rescored_join
 
     got = _sorted_pdf(ivf_pq_ann_rescored(emb))
     exp = _sorted_pdf(ivf_pq_ann_rescored_join(emb))
@@ -253,10 +307,9 @@ def test_pq_kernel_nondefault_geometry(spark, emb):
     the per-subspace book indexing and the probe mask off-path."""
     from langtoolsosm_spark.operators.similarity import (
         ivf_pq_ann_topk,
-        ivf_pq_ann_topk_join,
         pq_ann_topk,
-        pq_ann_topk_join,
     )
+    from tests.reference.ann_join import ivf_pq_ann_topk_join, pq_ann_topk_join
 
     kw = dict(m=4, k_codes=8, iters=1)
     got = _sorted_pdf(pq_ann_topk(emb, **kw))
@@ -292,7 +345,8 @@ def test_pq_train_kernel_matches_join(spark, emb):
     """Corpus-pass Lloyd training == the join/explode formulation, both
     at the default geometry and off it (odd k_codes exercises dropped
     codes / non-contiguous seed ids)."""
-    from langtoolsosm_spark.operators.similarity import pq_train, pq_train_join
+    from langtoolsosm_spark.operators.similarity import pq_train
+    from tests.reference.ann_join import pq_train_join
 
     def rows(df):
         return sorted(
@@ -311,10 +365,8 @@ def test_pq_train_kernel_matches_join(spark, emb):
 def test_ivf_train_lloyd_kernel_matches_join(spark, emb):
     """Corpus-pass IVF Lloyd training == the join/explode formulation
     (default and off-default geometry)."""
-    from langtoolsosm_spark.operators.similarity import (
-        ivf_train_lloyd,
-        ivf_train_lloyd_join,
-    )
+    from langtoolsosm_spark.operators.similarity import ivf_train_lloyd
+    from tests.reference.ann_join import ivf_train_lloyd_join
 
     def rows(df):
         return sorted((r["centroid_id"], list(r["__cv"])) for r in df.collect())
