@@ -451,15 +451,30 @@ def knn_broadcast(
     was measured 40% SLOWER than the cogroup path at 200k x 5k because
     candidate volume, not shuffle, dominates). Identical (dist, id)
     tie-breaks -> bit-identical to the cogroup path (parity-tested)."""
-    feats_pdf = (
-        features.select(
-            F.col(feature_id).alias("neighbor_id"),
-            F.col("lat").alias("__flat"),
-            F.col("lon").alias("__flon"),
-        )
-        .toPandas()
-        .sort_values("neighbor_id", kind="stable")
+    return _knn_grid_pass(
+        points, _feature_cols(features, feature_id).toPandas(), k, point_id, metric, res
     )
+
+
+def _feature_cols(features: DataFrame, feature_id: str) -> DataFrame:
+    return features.select(
+        F.col(feature_id).alias("neighbor_id"),
+        F.col("lat").alias("__flat"),
+        F.col("lon").alias("__flon"),
+    )
+
+
+def _knn_grid_pass(
+    points: DataFrame,
+    feats_pdf: pd.DataFrame,
+    k: int,
+    point_id: str,
+    metric: str,
+    res: int | None,
+) -> DataFrame:
+    """``knn_broadcast`` over an already-collected feature frame
+    (neighbor_id, __flat, __flon)."""
+    feats_pdf = feats_pdf.sort_values("neighbor_id", kind="stable")
     m = len(feats_pdf)
     flat = feats_pdf["__flat"].to_numpy(np.float64)
     flon = feats_pdf["__flon"].to_numpy(np.float64)
@@ -549,6 +564,11 @@ def knn_join(
     fast path (``knn_broadcast`` — identical results, no shuffle); the
     ring-expansion cogroup path below is the huge-dim scale path.
     """
+    # the broadcast gate is one bounded job: limit(threshold + 1) both
+    # counts the dim and collects it when it is small
+    small = _feature_cols(features, feature_id).limit(broadcast_threshold + 1).toPandas()
+    if len(small) <= broadcast_threshold:
+        return _knn_grid_pass(points, small, k, point_id, metric, res)
     stats = features.agg(
         F.count(F.lit(1)).alias("n"),
         (F.max("lat") - F.min("lat")).alias("lat_span"),
@@ -556,8 +576,6 @@ def knn_join(
         F.greatest(F.abs(F.max("lat")), F.abs(F.min("lat"))).alias("maxabs_lat"),
     ).collect()[0]
     n_feats = stats["n"]
-    if n_feats <= broadcast_threshold:
-        return knn_broadcast(points, features, k, point_id, feature_id, metric, res=res)
     if res is None:
         res = auto_res(
             n_feats, max(stats["lat_span"], 1e-6), max(stats["lon_span"], 1e-6), k

@@ -1,27 +1,38 @@
-"""Point-in-polygon join: cell-prefilter equi-join + exact vectorized
-ray-cast refinement.
+"""Point-in-polygon join: cell prefilter + exact vectorized ray-cast
+refinement.
 
 Replaces the reference's server-side area containment
 (/root/reference/lib/osm_utils.py:34-43 — ``area[...]->.searchArea``) with
-the engine's central design move (SURVEY.md §2.3, §4 item 1):
+the engine's central design move (SURVEY.md §2.3, §4 item 1): cover every
+polygon with grid cells, accept points in *interior* cells outright, and
+ray-cast only the points in *boundary* cells (NumPy, no per-row Python).
 
-1. cover every polygon with grid cells at resolution ``res``
-   (distributed: one ``applyInPandas`` group per polygon);
-2. equi-join points to cover cells — Catalyst picks broadcast vs
-   sort-merge; AQE handles residual skew;
-3. rows landing in *interior* cover cells are accepted without further
-   work; rows in *boundary* cells get exact ray-cast refinement inside a
-   ``mapInPandas`` batch kernel (NumPy, no per-row Python).
+Two physical paths, one answer:
 
-Scale notes: the cover table has O(polygons x cells-per-polygon) rows —
-small next to the fact table; it broadcasts when under the threshold and
-shuffles otherwise. Only boundary-cell rows (a thin band around each
+* **Narrow path** (polygon set at or under the 2000-row gate, both
+  broadcast flags on): the cover and the rings are built once on the
+  driver and broadcast, and one ``mapInArrow`` pass over the points does
+  the cell lookup, the refine and the ``unique`` min — no join, no
+  exchange, no aggregate, and the point columns pass through as Arrow
+  (``RecordBatch.take``), so every Spark type survives. This is the
+  replicate-the-small-side choice of adaptive spatial joins.
+* **Join path** (above the gate, or either broadcast flag off): the cover
+  is an equi-join table (broadcast or shuffled), boundary rows meet their
+  ring in a join (broadcast or shuffled on polygon_id) and the refine runs
+  as a ``mapInPandas`` batch kernel; ``unique`` is a map-side-combinable
+  min aggregate.
+
+Scale notes: the cover has O(polygons x cells-per-polygon) rows — small
+next to the fact table. Only boundary-cell rows (a thin band around each
 polygon) pay the refinement cost, and the refinement itself is
 O(points_in_batch x ring_vertices) vectorized.
 
 Tie-break contract: ray-cast half-open edge rule (functions/geo.py), plus
 ``unique=True`` resolves multi-polygon membership (nested polygons) to the
-lexicographically smallest polygon_id.
+lexicographically smallest polygon_id. A point with a null coordinate
+matches no polygon on either path; the narrow path also rejects NaN and
+infinite coordinates (the join path's clamped cell key can only place
+those in a grid-edge cell).
 """
 
 from __future__ import annotations
@@ -29,9 +40,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions import geo
-from ..functions.cells import tile_key_col
+from ..functions.cells import tile_key, tile_key_col
 
 
 def _ring_to_np(ring) -> np.ndarray:
@@ -195,6 +207,107 @@ def polygon_cover(
     )
 
 
+def _narrow_index(pdf: pd.DataFrame, res: int, cover_res: int) -> dict:
+    """Driver-side lookup tables for the narrow path. Polygons are
+    numbered in polygon_id order, so the smallest polygon number on a row
+    is its lexicographically smallest polygon_id. Cover cells are sorted
+    by tile key for ``searchsorted`` probes."""
+    pdf = pdf.assign(polygon_id=pdf["polygon_id"].astype(str)).sort_values(
+        "polygon_id", kind="stable", ignore_index=True
+    )
+    cover = _cover_pdf_hier(pdf.assign(polygon_id=pdf.index), res, cover_res)
+
+    def tier(t: pd.DataFrame):
+        order = np.argsort(t["tile"].to_numpy(np.int64), kind="stable")
+        return (
+            t["tile"].to_numpy(np.int64)[order],
+            t["polygon_id"].to_numpy(np.int64)[order],
+            t["full_inside"].to_numpy(bool)[order],
+        )
+
+    ctile, cpoly, _ = tier(cover[~cover["fine"].astype(bool)])
+    ftile, fpoly, ffull = tier(cover[cover["fine"].astype(bool)])
+    return dict(
+        pids=pdf["polygon_id"].tolist(),
+        rings=[_ring_to_np(r) for r in pdf["ring"]],
+        ctile=ctile, cpoly=cpoly, ftile=ftile, fpoly=fpoly, ffull=ffull,
+    )
+
+
+def _probe(keys: np.ndarray, tiles: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Every (i, j) with ``tiles[j] == keys[i]`` (``tiles`` sorted; a key
+    can hit several polygons' cells)."""
+    lo = np.searchsorted(tiles, keys, "left")
+    cnt = np.searchsorted(tiles, keys, "right") - lo
+    rows = np.repeat(np.arange(len(keys)), cnt)
+    first = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+    return rows, first + np.arange(len(rows))
+
+
+def _narrow_match(
+    lat: np.ndarray, lon: np.ndarray, idx: dict, res: int, cover_res: int, unique: bool
+) -> tuple[np.ndarray, np.ndarray]:
+    """(row, polygon number) matches of one batch, sorted by row then
+    polygon: coarse interior cells and fine ``full_inside`` cells accept
+    outright, fine boundary cells go through the ray cast grouped by
+    polygon. ``unique`` keeps each row's smallest polygon number."""
+    ok = np.flatnonzero(np.isfinite(lat) & np.isfinite(lon))
+    la, ln = lat[ok], lon[ok]
+    r_c, j_c = _probe(tile_key(la, ln, res), idx["ctile"])
+    r_f, j_f = _probe(tile_key(la, ln, cover_res), idx["ftile"])
+    p_c, p_f, full = idx["cpoly"][j_c], idx["fpoly"][j_f], idx["ffull"][j_f]
+    r_b, p_b = r_f[~full], p_f[~full]
+    keep = np.zeros(len(r_b), dtype=bool)
+    order = np.argsort(p_b, kind="stable")
+    polys, starts = np.unique(p_b[order], return_index=True)
+    for p, sel in zip(polys, np.split(order, starts[1:])):
+        r = r_b[sel]
+        keep[sel] = geo.points_in_polygon_chunked(la[r], ln[r], idx["rings"][p])
+    rows = np.concatenate([r_c, r_f[full], r_b[keep]])
+    poly = np.concatenate([p_c, p_f[full], p_b[keep]])
+    o = np.lexsort((poly, rows))
+    rows, poly = rows[o], poly[o]
+    if unique:
+        first = np.ones(len(rows), dtype=bool)
+        first[1:] = rows[1:] != rows[:-1]
+        rows, poly = rows[first], poly[first]
+    return ok[rows], poly
+
+
+def _pip_narrow(
+    points: DataFrame, pdf: pd.DataFrame, res: int, cover_res: int,
+    lat: str, lon: str, unique: bool,
+) -> DataFrame:
+    """The narrow path: one ``mapInArrow`` pass over ``points`` against a
+    broadcast cover + ring index; output rows are ``RecordBatch.take`` of
+    the input batch plus ``polygon_id``."""
+    bc = points.sparkSession.sparkContext.broadcast(_narrow_index(pdf, res, cover_res))
+    schema = StructType(points.schema.fields + [StructField("polygon_id", StringType())])
+
+    def run(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        idx = bc.value
+        pids = pa.array(idx["pids"], pa.string())
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            la, ln = (
+                pc.cast(b.column(c), pa.float64()).to_numpy(zero_copy_only=False)
+                for c in (lat, lon)
+            )
+            rows, poly = _narrow_match(la, ln, idx, res, cover_res, unique)
+            if len(rows):
+                out = b.take(pa.array(rows))
+                yield pa.RecordBatch.from_arrays(
+                    out.columns + [pids.take(pa.array(poly))],
+                    names=out.schema.names + ["polygon_id"],
+                )
+
+    return points.mapInArrow(run, schema)
+
+
 def pip_join(
     points: DataFrame,
     polygons: DataFrame,
@@ -231,10 +344,21 @@ def pip_join(
     polygon_id instead of broadcasting the ring dimension — rings of
     10^6 admin polygons don't fit an executor broadcast, but boundary rows
     hash-partition by polygon_id and meet their ring in the same task.
-    Both paths feed the identical refine kernel.
+    Both switches feed the identical refine kernel.
+
+    Path gate: with both switches on, one bounded job collects the
+    polygons iff there are at most 2000 of them (``_collect_small``); such
+    a set takes the narrow ``mapInArrow`` path (module docstring) — the
+    same cover, ring cast and tie-break as the join path, no exchange.
+    Above the gate, or with either switch off, the join path runs.
     """
     if cover_res is None:
         cover_res = res + 3
+    if cover_res < res:
+        raise ValueError(f"cover_res {cover_res} must be >= res {res}")
+    small = _collect_small(polygons, 2000) if broadcast_cover and broadcast_rings else None
+    if small is not None:
+        return _pip_narrow(points, small, res, cover_res, lat, lon, unique)
     # points carry BOTH grid keys (pure codegen); the hierarchical cover
     # keeps interior cells at the coarse res and subdivides only the
     # boundary band to cover_res, so the cover is O(area + perimeter*2^L)
@@ -244,9 +368,11 @@ def pip_join(
         "__ctile", tile_key_col(F.col(lat), F.col(lon), res)
     ).withColumn("__ftile", tile_key_col(F.col(lat), F.col(lon), cover_res))
     # broadcast_cover=False is the forced huge-polygon-set scale path:
-    # keep the cover build distributed there too
+    # keep the cover build distributed there too; with both switches on
+    # the gate above already found the set over the threshold
     cover = polygon_cover_hier(
-        polygons, res, cover_res, collect_threshold=2000 if broadcast_cover else 0
+        polygons, res, cover_res,
+        collect_threshold=2000 if broadcast_cover and not broadcast_rings else 0,
     )
     if broadcast_cover:
         cover = F.broadcast(cover)

@@ -82,21 +82,16 @@ def hot_cells(df: DataFrame, cell_col: str = "tile", threshold: int = 10_000) ->
     return cell_histogram(df, cell_col).filter(F.col("n_rows") > threshold)
 
 
-def salted_repartition(
-    df: DataFrame,
-    cell_col: str = "tile",
-    threshold: int = 10_000,
-    buckets: int = 16,
-    num_partitions: int | None = None,
+def add_salt(
+    df: DataFrame, cell_col: str = "tile", threshold: int = 10_000, buckets: int = 16
 ) -> DataFrame:
-    """Repartition by (cell, salt) where salt > 0 only for hot cells.
-
-    One broadcast join against the hot-cell list + one shuffle; downstream
-    per-tile work (applyInPandas transforms, snapshot writes) then sees
-    bounded partition sizes even when one urban cell holds 20% of rows.
-    """
+    """``df`` plus an int ``salt`` column: a row hash mod ``buckets`` in
+    cells holding more than ``threshold`` rows, 0 elsewhere. One broadcast
+    join against the hot-cell list, no shuffle of the rows — for callers
+    whose next step already hash-partitions on a key built from
+    (cell, salt), such as a snapshot write."""
     hot = hot_cells(df, cell_col, threshold).select(cell_col, F.lit(True).alias("__hot"))
-    salted = (
+    return (
         df.join(F.broadcast(hot), cell_col, "left")
         .withColumn(
             "salt",
@@ -107,6 +102,23 @@ def salted_repartition(
         )
         .drop("__hot")
     )
+
+
+def salted_repartition(
+    df: DataFrame,
+    cell_col: str = "tile",
+    threshold: int = 10_000,
+    buckets: int = 16,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Repartition by (cell, salt) where salt > 0 only for hot cells
+    (:func:`add_salt`).
+
+    One broadcast join against the hot-cell list + one shuffle; downstream
+    per-tile work (applyInPandas transforms, snapshot writes) then sees
+    bounded partition sizes even when one urban cell holds 20% of rows.
+    """
+    salted = add_salt(df, cell_col, threshold, buckets)
     if num_partitions:
         return salted.repartition(num_partitions, cell_col, "salt")
     return salted.repartition(cell_col, "salt")

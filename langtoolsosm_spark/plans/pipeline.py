@@ -131,7 +131,7 @@ def run_to_snapshot(
     replicate: int = 1,
     dry_run: bool = False,
 ) -> dict:
-    """Full benched job: flagship plan + salted repartition + snapshot
+    """Full benched job: flagship plan + hot-cell salt + snapshot
     commit with lineage; returns run metrics. Resumable: committed
     partitions are skipped on restart (BASELINE.json:north_rule).
 
@@ -166,7 +166,10 @@ def run_to_snapshot(
                 "skipped_partitions": 0,
                 "dry_run": True,
             }
-        salted = tiling.salted_repartition(df, "tile", threshold=salt_threshold, buckets=8)
+        # salt only: write_partitioned hash-partitions on the (tile, salt)
+        # part key itself, so a (tile, salt) repartition here would be a
+        # second shuffle of every row
+        salted = tiling.add_salt(df, "tile", threshold=salt_threshold, buckets=8)
         table = SnapshotTable(out_path)
         skip = table.committed_partitions() if resume else set()
         snaps = write_partitioned(
@@ -292,9 +295,7 @@ def run_ingest(
             "observed": dict(obs.get),
             "dry_run": True,
         }
-    salted = tiling.salted_repartition(
-        owned, "tile", threshold=salt_threshold, buckets=8
-    )
+    salted = tiling.add_salt(owned, "tile", threshold=salt_threshold, buckets=8)
     table = SnapshotTable(out_path)
     snaps = write_partitioned(
         salted.withColumn("__part", F.concat_ws("_", F.col("tile"), F.col("salt"))).drop(

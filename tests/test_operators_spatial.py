@@ -126,6 +126,37 @@ def test_knn_broadcast_and_cogroup_paths_identical(spark, tables):
     pd.testing.assert_frame_equal(fast, slow, check_dtype=False)
 
 
+def test_knn_gate_is_one_bounded_collect(spark, tables, monkeypatch):
+    """The broadcast gate is a single ``limit(threshold + 1)`` collect
+    handed to the grid pass: at ``broadcast_threshold`` = dim size no
+    aggregate or count runs; one row fewer takes the cogroup path (whose
+    ``agg`` still supplies the spans). Both give knn_broadcast's rows."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    images, _, features = tables
+    pts = images.select("image_id", "lat", "lon").limit(300)
+    n = features.count()
+    key = ["image_id", "rank"]
+    exp = knn_mod.knn_broadcast(pts, features, k=2).toPandas().sort_values(key)
+    calls = []
+    for name in ("agg", "count"):
+        def spy(self, *a, _orig=getattr(DataFrame, name), _name=name, **kw):
+            calls.append(_name)
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(DataFrame, name, spy)
+    # the cogroup path's round loop counts its unresolved rows after the agg
+    for threshold, first_call in ((n, None), (n - 1, "agg")):
+        calls.clear()
+        got = knn_mod.knn_join(pts, features, k=2, broadcast_threshold=threshold)
+        assert (calls[0] if calls else None) == first_call
+        pd.testing.assert_frame_equal(
+            got.toPandas().sort_values(key).reset_index(drop=True),
+            exp.reset_index(drop=True),
+            check_dtype=False,
+        )
+
+
 def test_tile_assignment_total_and_unique(spark, tables):
     images, _, _ = tables
     tiled = tiling.assign_tiles(images.select("image_id", "lat", "lon"), res=8)

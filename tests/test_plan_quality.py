@@ -304,10 +304,12 @@ def test_tile_pyramid_explodes_histogram_not_fact_rows(spark, synth_dir):
 
 
 def test_pip_join_broadcast_path_plan_shape(spark, synth_dir):
-    """Small polygon dims take the driver-side cover fast path (no
-    FlatMapGroupsInPandas stage — the cover is a local relation headed for
-    a broadcast) and unique ownership is a map-side-combinable min-struct
-    aggregate, not a sort-based row_number window."""
+    """Small polygon dims take the narrow path: the cover and rings are
+    broadcast and the whole join is ONE Python map node over the points —
+    no exchange, no join, no aggregate. The forced scale path keeps the
+    distributed cover build and makes unique ownership a
+    map-side-combinable min aggregate, not a sort-based row_number
+    window."""
     from langtoolsosm_spark.operators.pip_join import pip_join
 
     images = spark.read.parquet(f"{synth_dir}/images.parquet")
@@ -317,20 +319,25 @@ def test_pip_join_broadcast_path_plan_shape(spark, synth_dir):
         unique=True, id_col="image_id",
     )
     plan = _plan(df)
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
     assert "FlatMapGroupsInPandas" not in plan  # cover built driver-side
-    assert "MapInPandas" in plan  # the exact refine kernel stays
-    assert "Window" not in plan  # min-struct agg, not row_number
-    # struct-min plans as SortAggregate, but the partial_min below the
-    # exchange is the map-side combine the window formulation lacks: the
-    # shuffle ships at most one row per (partition, image_id)
-    assert "partial_min" in plan
-    # the forced scale path keeps the distributed cover build
+    assert "hashpartitioning" not in plan and "Exchange" not in plan
+    assert "SortAggregate" not in plan and "HashAggregate" not in plan
+    assert "Join" not in plan
+    # the forced scale path keeps the distributed cover build, the refine
+    # kernel, and a min aggregate: struct-min plans as SortAggregate, but
+    # the partial_min below the exchange is the map-side combine the
+    # window formulation lacks (at most one row per (partition, image_id))
     df_sh = pip_join(
         images.select("image_id", "lat", "lon"), polygons, res=8,
         unique=True, id_col="image_id",
         broadcast_cover=False, broadcast_rings=False,
     )
-    assert "FlatMapGroupsInPandas" in _plan(df_sh)
+    plan_sh = _plan(df_sh)
+    assert "FlatMapGroupsInPandas" in plan_sh
+    assert "MapInPandas" in plan_sh
+    assert "partial_min" in plan_sh
+    assert "Window" not in plan_sh
 
 
 def test_spatial_family_plan_shapes(spark):
@@ -661,3 +668,51 @@ def test_rank_rewrites_have_no_single_partition_exchange(spark):
         df = fn(spark, "/root/testdata/sf0.001")
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "SinglePartition" not in plan, f"{name}:\n{plan[:2000]}"
+
+
+def _row_path_hash_exchanges(df) -> list[str]:
+    """Hash exchanges the rows of ``df`` pass through: the planned
+    (pre-execution) physical tree, without broadcast subtrees (the
+    build side of a broadcast join is its own small query)."""
+    out = []
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name == "BroadcastExchangeExec":
+            return
+        if name == "ShuffleExchangeExec":
+            part = node.outputPartitioning().toString()
+            if part.startswith("hashpartitioning"):
+                out.append(part)
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_flagship_write_shuffles_rows_once(spark, synth_dir, tmp_path, monkeypatch):
+    """run_to_snapshot salts hot tiles without a (tile, salt) repartition:
+    the grouped snapshot write's own ``__pid`` exchange is the only hash
+    exchange on the row path of the write plan."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from langtoolsosm_spark.plans.pipeline import run_to_snapshot
+
+    write_plans = []
+    collect = DataFrame.collect
+
+    def spy(self):
+        if "FlatMapGroupsInArrow" in _plan(self):
+            write_plans.append(_row_path_hash_exchanges(self))
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    m = run_to_snapshot(spark, synth_dir, str(tmp_path / "t"), resume=False)
+    assert m["rows"] > 0
+    assert len(write_plans) == 1
+    (exchanges,) = write_plans
+    assert len(exchanges) == 1 and "__pid" in exchanges[0], exchanges
