@@ -53,6 +53,10 @@ from pyspark.sql import types as T
 from ..functions import geo
 from ..functions.cells import tile_key_col
 
+# feature dims at or under this many rows are collected once and broadcast
+# as a grid index (knn_join's broadcast path)
+BROADCAST_ROWS = 200_000
+
 
 def auto_res(
     n_feats: int, lat_span: float, lon_span: float, k: int,
@@ -464,16 +468,11 @@ def _feature_cols(features: DataFrame, feature_id: str) -> DataFrame:
     )
 
 
-def _knn_grid_pass(
-    points: DataFrame,
-    feats_pdf: pd.DataFrame,
-    k: int,
-    point_id: str,
-    metric: str,
-    res: int | None,
-) -> DataFrame:
-    """``knn_broadcast`` over an already-collected feature frame
-    (neighbor_id, __flat, __flon)."""
+def _knn_grid(feats_pdf: pd.DataFrame, k: int, metric: str, res: int | None) -> dict:
+    """The ``_grid_topk`` index of an already-collected feature frame
+    (neighbor_id, __flat, __flon): features sorted by id (``fid``) and
+    bucketed by cell at ``res`` (auto-sized from the dim when None), plus
+    the dim's haversine bound factor."""
     feats_pdf = feats_pdf.sort_values("neighbor_id", kind="stable")
     m = len(feats_pdf)
     flat = feats_pdf["__flat"].to_numpy(np.float64)
@@ -494,10 +493,23 @@ def _knn_grid_pass(
     if metric == "haversine" and m:
         maxabs = min(float(np.abs(flat).max()), 89.999)
         hav_factor = max(min(1.0, 2.0 * np.cos(np.radians(maxabs))) * 0.999, 1e-9)
-    grid = dict(
+    return dict(
         n=int(n), flat=flat, flon=flon, fid=fid,
-        cells=cells_uniq, starts=starts, ends=ends, order=order,
+        cells=cells_uniq, starts=starts, ends=ends, order=order, hav_factor=hav_factor,
     )
+
+
+def _knn_grid_pass(
+    points: DataFrame,
+    feats_pdf: pd.DataFrame,
+    k: int,
+    point_id: str,
+    metric: str,
+    res: int | None,
+) -> DataFrame:
+    """``knn_broadcast`` over an already-collected feature frame
+    (neighbor_id, __flat, __flon)."""
+    grid = _knn_grid(feats_pdf, k, metric, res)
     bc = points.sparkSession.sparkContext.broadcast(grid)
     pid_type = points.schema[point_id].dataType.simpleString()
     out_schema = (
@@ -526,7 +538,7 @@ def _knn_grid_pass(
             plat = pdf["__plat"].to_numpy(np.float64)
             plon = pdf["__plon"].to_numpy(np.float64)
             # per-batch point latitudes can exceed the dim's extent
-            hf = hav_factor
+            hf = g["hav_factor"]
             if metric == "haversine" and len(plat):
                 pmax = min(float(np.abs(plat).max()), 89.999)
                 hf = min(hf, max(min(1.0, 2.0 * np.cos(np.radians(pmax))) * 0.999, 1e-9))
@@ -553,7 +565,7 @@ def knn_join(
     metric: str = "euclid_deg",
     max_ring: int = 64,
     brute_max_pairs: int = 4_000_000_000,
-    broadcast_threshold: int = 200_000,
+    broadcast_threshold: int = BROADCAST_ROWS,
 ) -> DataFrame:
     """Exact k-nearest-features per point.
 

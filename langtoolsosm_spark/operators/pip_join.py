@@ -29,10 +29,11 @@ O(points_in_batch x ring_vertices) vectorized.
 
 Tie-break contract: ray-cast half-open edge rule (functions/geo.py), plus
 ``unique=True`` resolves multi-polygon membership (nested polygons) to the
-lexicographically smallest polygon_id. A point with a null coordinate
-matches no polygon on either path; the narrow path also rejects NaN and
-infinite coordinates (the join path's clamped cell key can only place
-those in a grid-edge cell).
+lexicographically smallest polygon_id; a null polygon_id loses to every
+real one and stays null. A point with a null coordinate matches no
+polygon on either path; the narrow path also rejects NaN and infinite
+coordinates (the join path's clamped cell key can only place those in a
+grid-edge cell).
 """
 
 from __future__ import annotations
@@ -44,6 +45,10 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions import geo
 from ..functions.cells import tile_key, tile_key_col
+
+# polygon sets at or under this many rows are broadcast-sized: their cover
+# is built on the driver and pip_join takes the narrow path
+NARROW_ROWS = 2000
 
 
 def _ring_to_np(ring) -> np.ndarray:
@@ -142,20 +147,22 @@ def _cover_pdf_hier(pdf: pd.DataFrame, res: int, cover_res: int) -> pd.DataFrame
 _HIER_SCHEMA = "polygon_id string, tile long, fine boolean, full_inside boolean"
 
 
-def _collect_small(polygons: DataFrame, collect_threshold: int) -> pd.DataFrame | None:
-    """The counted cover gate as one bounded job: the (polygon_id, ring)
-    rows iff there are at most ``collect_threshold`` of them, else None
-    (``collect_threshold=0`` is the forced distributed path and runs no
-    job). ``limit(threshold + 1)`` both counts and collects, so the gate
+def _collect_small(
+    polygons: DataFrame, collect_threshold: int, *extra
+) -> pd.DataFrame | None:
+    """The counted cover gate as one bounded job: the (polygon_id, ring,
+    *extra) rows iff there are at most ``collect_threshold`` of them, else
+    None (``collect_threshold=0`` is the forced distributed path and runs
+    no job). ``limit(threshold + 1)`` both counts and collects, so the gate
     costs one Spark job instead of a count plus a collect."""
     if not collect_threshold:
         return None
-    pdf = polygons.select("polygon_id", "ring").limit(collect_threshold + 1).toPandas()
+    pdf = polygons.select("polygon_id", "ring", *extra).limit(collect_threshold + 1).toPandas()
     return pdf if len(pdf) <= collect_threshold else None
 
 
 def polygon_cover_hier(
-    polygons: DataFrame, res: int, cover_res: int, collect_threshold: int = 2000
+    polygons: DataFrame, res: int, cover_res: int, collect_threshold: int = NARROW_ROWS
 ) -> DataFrame:
     """Hierarchical (polygon_id, tile, fine, full_inside) cover table —
     same counted driver-side gate as :func:`polygon_cover`."""
@@ -178,7 +185,7 @@ def polygon_cover_hier(
 
 
 def polygon_cover(
-    polygons: DataFrame, res: int, collect_threshold: int = 2000
+    polygons: DataFrame, res: int, collect_threshold: int = NARROW_ROWS
 ) -> DataFrame:
     """(polygon_id, tile, full_inside) cover table at resolution ``res``.
     Output tile uses the flat SQL-parity key (ix * 2^res + iy).
@@ -209,11 +216,15 @@ def polygon_cover(
 
 def _narrow_index(pdf: pd.DataFrame, res: int, cover_res: int) -> dict:
     """Driver-side lookup tables for the narrow path. Polygons are
-    numbered in polygon_id order, so the smallest polygon number on a row
-    is its lexicographically smallest polygon_id. Cover cells are sorted
-    by tile key for ``searchsorted`` probes."""
-    pdf = pdf.assign(polygon_id=pdf["polygon_id"].astype(str)).sort_values(
-        "polygon_id", kind="stable", ignore_index=True
+    numbered in polygon_id order with null ids last, so the smallest
+    polygon number on a row is its lexicographically smallest polygon_id,
+    and a null id only where every match is null (Spark's ``min`` skips
+    nulls the same way). Cover cells are sorted by tile key for
+    ``searchsorted`` probes. ``attrs`` holds the columns of ``pdf`` other
+    than polygon_id and ring, one row per polygon number."""
+    ids = pdf["polygon_id"]
+    pdf = pdf.assign(polygon_id=ids.astype(str).where(ids.notna(), None)).sort_values(
+        "polygon_id", kind="stable", na_position="last", ignore_index=True
     )
     cover = _cover_pdf_hier(pdf.assign(polygon_id=pdf.index), res, cover_res)
 
@@ -229,6 +240,7 @@ def _narrow_index(pdf: pd.DataFrame, res: int, cover_res: int) -> dict:
     ftile, fpoly, ffull = tier(cover[cover["fine"].astype(bool)])
     return dict(
         pids=pdf["polygon_id"].tolist(),
+        attrs=pdf.drop(columns=["polygon_id", "ring"]),
         rings=[_ring_to_np(r) for r in pdf["ring"]],
         ctile=ctile, cpoly=cpoly, ftile=ftile, fpoly=fpoly, ffull=ffull,
     )
@@ -356,7 +368,7 @@ def pip_join(
         cover_res = res + 3
     if cover_res < res:
         raise ValueError(f"cover_res {cover_res} must be >= res {res}")
-    small = _collect_small(polygons, 2000) if broadcast_cover and broadcast_rings else None
+    small = _collect_small(polygons, NARROW_ROWS) if broadcast_cover and broadcast_rings else None
     if small is not None:
         return _pip_narrow(points, small, res, cover_res, lat, lon, unique)
     # points carry BOTH grid keys (pure codegen); the hierarchical cover
@@ -372,7 +384,7 @@ def pip_join(
     # the gate above already found the set over the threshold
     cover = polygon_cover_hier(
         polygons, res, cover_res,
-        collect_threshold=2000 if broadcast_cover and not broadcast_rings else 0,
+        collect_threshold=NARROW_ROWS if broadcast_cover and not broadcast_rings else 0,
     )
     if broadcast_cover:
         cover = F.broadcast(cover)

@@ -8,10 +8,23 @@ with per-partition lineage.
 
 This is the query benched by bench.py (images/sec north-star metric,
 BASELINE.json) and smoke-run by __spark_entry__.entry().
+
+Two physical paths, one answer (``flagship``):
+
+* **Narrow path** (at most ``pip_join.NARROW_ROWS`` polygons and, with
+  kNN, at most ``knn.BROADCAST_ROWS`` named features, each side's ids
+  unique and non-null; one bounded collect per side decides): both small
+  sides are broadcast and one ``mapInArrow`` pass over the tiled points
+  does the PIP match, the polygon attributes and the nearest name — no
+  join, no exchange, no cache. The points stay where the scan put them;
+  the small sides are replicated, as adaptive spatial joins do.
+* **Join path** (any gate fails): ``pip_join`` -> broadcast join of the
+  polygon attributes -> cached owners -> ``knn_join`` -> joins back.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import knn as knn_mod
@@ -39,6 +52,13 @@ def flagship(
     """Enriched image table: (image_id, caption, lat, lon, tile, polygon_id,
     lang, nearest_name?, caption_enriched).
 
+    Two paths, one answer (module docstring): one bounded collect per
+    small side (polygons, and with ``with_knn`` the named features) gates
+    :func:`_enrich_narrow`, one ``mapInArrow`` pass; any failed gate runs
+    :func:`_enrich_joined`, where duplicated ids multiply rows as joins
+    do. Broadcasts and caches taken land in ``cleanup`` for the caller to
+    release after its last action (``run_to_snapshot`` does).
+
     Column pruning note: ``bytes`` is never selected here, so the parquet
     scan reads only the metadata columns (verified via .explain ReadSchema).
     """
@@ -48,55 +68,21 @@ def flagship(
         spark.read.parquet(f"{synth_dir}/{name}.parquet")
         for name in ("images", "polygons", "features")
     )
-    pts = images.select("image_id", "caption", "lat", "lon")
-    if replicate > 1:
-        # scale the measured workload without regenerating data: replicas
-        # get distinct ids (same coords — grid/PIP/kNN results replicate
-        # deterministically, so outputs stay parallelism-invariant)
-        parts = [
-            pts.select(
-                F.concat(F.lit(f"r{i}_"), F.col("image_id")).alias("image_id"),
-                "caption", "lat", "lon",
-            )
-            for i in range(replicate)
-        ]
-        pts = parts[0]
-        for p_ in parts[1:]:
-            pts = pts.unionByName(p_)
-
+    # replicas get distinct ids and the same coords, so every result
+    # replicates deterministically
+    pts = replicate_images(images.select("image_id", "caption", "lat", "lon"), replicate)
     tiled = tiling.assign_tiles(pts, res=res)
-
-    owned = pip_mod.pip_join(
-        tiled, polygons, res=res, unique=True, id_col="image_id"
-    )
-    # attach the polygon's language rule (which name:LANG applies per tile)
-    polys = polygons.select(
-        "polygon_id", F.element_at("tags", F.lit("lang")).alias("lang"),
-        F.col("name").alias("polygon_name"),
-    )
-    owned = owned.join(F.broadcast(polys), "polygon_id", "left")
-
-    if with_knn:
-        # the kNN loop fires several driver actions over this subtree;
-        # cache it once instead of re-running the PIP join per round.
-        # The handle lands in ``cleanup`` so the caller can unpersist
-        # after the final action (run_to_snapshot does).
-        owned = owned.persist()
-        if cleanup is not None:
-            cleanup.append(owned)
-        named = features.filter(F.map_contains_key("tags", F.lit("name"))).select(
+    named = (
+        features.filter(F.map_contains_key("tags", F.lit("name"))).select(
             "id", F.element_at("tags", F.lit("name")).alias("feature_name"), "lat", "lon"
         )
-        nn = knn_mod.knn_join(
-            owned.select("image_id", "lat", "lon"), named, k=k, res=None,
-            point_id="image_id", feature_id="id",
-        ).filter(F.col("rank") == 1)
-        nn = nn.join(
-            named.select(F.col("id").alias("neighbor_id"), "feature_name"),
-            "neighbor_id",
-        ).select("image_id", F.col("feature_name").alias("nearest_name"))
-        owned = owned.join(nn, "image_id", "left")
-    else:
+        if with_knn
+        else None
+    )
+    owned = _enrich_narrow(tiled, polygons, named, res, k, cleanup)
+    if owned is None:
+        owned = _enrich_joined(tiled, polygons, named, res, k, cleanup)
+    if not with_knn:
         owned = owned.withColumn("nearest_name", F.lit(None).cast("string"))
 
     return owned.select(
@@ -120,6 +106,146 @@ def flagship(
     )
 
 
+def _unique_ids(ids) -> bool:
+    return bool(ids.notna().all()) and ids.is_unique
+
+
+def _polygon_attrs():
+    """The polygon's language rule (which name:LANG applies per tile) and
+    its name, as the enrichment attaches them to each owner."""
+    return (
+        F.element_at("tags", F.lit("lang")).alias("lang"),
+        F.col("name").alias("polygon_name"),
+    )
+
+
+def _enrich_narrow(
+    tiled: DataFrame,
+    polygons: DataFrame,
+    named: DataFrame | None,
+    res: int,
+    k: int,
+    cleanup: list | None,
+) -> DataFrame | None:
+    """The whole enrichment as one ``mapInArrow`` pass over ``tiled``, or
+    None when a gate fails (polygons over ``pip_join.NARROW_ROWS``, named
+    features over ``knn.BROADCAST_ROWS``, or either id column with a null
+    or a duplicate).
+
+    Both small sides are collected once and broadcast together: the
+    ``pip_join`` narrow index (cover, rings, and the polygon attributes in
+    polygon-number order) and the ``knn_join`` grid index. Per batch,
+    ``_narrow_match`` finds each row's smallest containing polygon, the
+    matched rows pass through as ``RecordBatch.take``, the polygon columns
+    are taken by polygon number, and ``_grid_topk`` finds the rank-1
+    feature under the (dist, id) order of ``knn_join`` with the same ``k``
+    and grid. Image ids must be unique, as ``pip_join(unique=True)``
+    requires. The broadcast lands in ``cleanup``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    polys = pip_mod._collect_small(polygons, pip_mod.NARROW_ROWS, *_polygon_attrs())
+    if polys is None or not _unique_ids(polys["polygon_id"]):
+        return None
+    attr_fields = polygons.select(*_polygon_attrs()).schema.fields
+    fields = [StructField("polygon_id", StringType())] + attr_fields
+    feats = None
+    if named is not None:
+        feats = named.limit(knn_mod.BROADCAST_ROWS + 1).toPandas()
+        if len(feats) > knn_mod.BROADCAST_ROWS or not _unique_ids(feats["id"]):
+            return None
+        fields.append(StructField("nearest_name", named.schema["feature_name"].dataType))
+
+    cover_res = res + 3
+    idx = pip_mod._narrow_index(polys, res, cover_res)
+    attrs = idx.pop("attrs")
+    cols = [pa.array(idx["pids"], pa.string())] + [
+        pa.Array.from_pandas(attrs[f.name], type=to_arrow_type(f.dataType))
+        for f in attr_fields
+    ]
+    grid = names = None
+    if feats is not None:
+        # ids are unique: sorted by id, the names line up with the grid's fid
+        feats = feats.sort_values("id", kind="stable")
+        names = pa.Array.from_pandas(
+            feats["feature_name"], type=to_arrow_type(fields[-1].dataType)
+        )
+        if len(feats):
+            grid = knn_mod._knn_grid(
+                feats.rename(columns={"id": "neighbor_id", "lat": "__flat", "lon": "__flon"}),
+                k, "euclid_deg", None,
+            )
+    bc = tiled.sparkSession.sparkContext.broadcast(
+        dict(idx=idx, cols=cols, grid=grid, names=names)
+    )
+    if cleanup is not None:
+        cleanup.append(bc)
+    schema = StructType(tiled.schema.fields + fields)
+
+    def run(batches):
+        import pyarrow.compute as pc
+
+        v = bc.value
+        g = v["grid"]
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            la, ln = (
+                pc.cast(b.column(c), pa.float64()).to_numpy(zero_copy_only=False)
+                for c in ("lat", "lon")
+            )
+            rows, poly = pip_mod._narrow_match(la, ln, v["idx"], res, cover_res, True)
+            if not len(rows):
+                continue
+            out = b.take(pa.array(rows))
+            extra = [c.take(pa.array(poly)) for c in v["cols"]]
+            if g is not None:
+                nid, _, _ = knn_mod._grid_topk(la[rows], ln[rows], g, k, "euclid_deg", 1.0)
+                extra.append(v["names"].take(pa.array(np.searchsorted(g["fid"], nid[:, 0]))))
+            elif v["names"] is not None:  # no named feature at all
+                extra.append(pa.nulls(len(rows), v["names"].type))
+            yield pa.RecordBatch.from_arrays(
+                out.columns + extra, names=out.schema.names + [f.name for f in fields]
+            )
+
+    return tiled.mapInArrow(run, schema)
+
+
+def _enrich_joined(
+    tiled: DataFrame,
+    polygons: DataFrame,
+    named: DataFrame | None,
+    res: int,
+    k: int,
+    cleanup: list | None,
+) -> DataFrame:
+    """The enrichment as a chain of operators: ``pip_join``, a broadcast
+    join of the polygon attributes, then (with ``named``) ``knn_join`` and
+    the joins that bring the nearest name back to each owner."""
+    owned = pip_mod.pip_join(
+        tiled, polygons, res=res, unique=True, id_col="image_id"
+    )
+    polys = polygons.select("polygon_id", *_polygon_attrs())
+    owned = owned.join(F.broadcast(polys), "polygon_id", "left")
+    if named is None:
+        return owned
+    # the kNN loop fires several driver actions over this subtree;
+    # cache it once instead of re-running the PIP join per round
+    owned = owned.persist()
+    if cleanup is not None:
+        cleanup.append(owned)
+    nn = knn_mod.knn_join(
+        owned.select("image_id", "lat", "lon"), named, k=k, res=None,
+        point_id="image_id", feature_id="id",
+    ).filter(F.col("rank") == 1)
+    nn = nn.join(
+        named.select(F.col("id").alias("neighbor_id"), "feature_name"),
+        "neighbor_id",
+    ).select("image_id", F.col("feature_name").alias("nearest_name"))
+    return owned.join(nn, "image_id", "left")
+
+
 def run_to_snapshot(
     spark: SparkSession,
     synth_dir: str,
@@ -138,8 +264,8 @@ def run_to_snapshot(
     ``dry_run=True`` mirrors the reference's ``--dry-run`` flag on every
     command (src/fill_empty_name.py:14,80-81): the full plan is evaluated
     and metrics are returned, but nothing is written — no table directory,
-    no data files, no snapshot manifests. All caches taken by the run are
-    released either way.
+    no data files, no snapshot manifests. All caches and broadcasts taken
+    by the run are released either way.
     """
     import time
 
@@ -193,7 +319,7 @@ def run_to_snapshot(
         }
     finally:
         for d in cleanup:
-            d.unpersist()
+            d.unpersist() if isinstance(d, DataFrame) else d.destroy()
 
 
 def replicate_images(images: DataFrame, replicate: int) -> DataFrame:

@@ -161,3 +161,28 @@ def test_narrow_passes_binary_and_map_columns_through(spark):
             for r in _both(pts, polygons, res=6, unique=unique)[1].collect()
         }
         assert {k: (v["blob"], v["tags"]) for k, v in got.items()} == exp
+
+
+@pytest.mark.parametrize("unique", [True, False])
+def test_narrow_null_polygon_id_stays_null(spark, unique):
+    """A null polygon_id stays null and sorts after every real id, as
+    Spark's ``min`` does on the join path: a point inside both the
+    null-id square and ``P1`` is owned by ``P1``, a point only in the
+    null-id square keeps a null owner."""
+    polygons = spark.createDataFrame(
+        [(None, _square(20.0, -20.0, 60.0, 40.0)), ("P1", _square(35.0, 5.0, 45.0, 15.0))],
+        RING_SCHEMA,
+    )
+    pts = spark.createDataFrame(
+        [("both", 40.0, 10.0), ("only_null", 50.0, 30.0), ("edge", 20.05, 0.0),
+         ("none", 0.0, 0.0)],
+        POINT_SCHEMA,
+    )
+    narrow, joined = _both(pts, polygons, res=6, unique=unique)
+    got = sorted((tuple(r) for r in narrow.collect()), key=repr)
+    assert got == sorted((tuple(r) for r in joined.collect()), key=repr)
+    null_only = [("edge", 20.05, 0.0, None), ("only_null", 50.0, 30.0, None)]
+    if unique:
+        assert got == [("both", 40.0, 10.0, "P1")] + null_only
+    else:
+        assert got == [("both", 40.0, 10.0, "P1"), ("both", 40.0, 10.0, None)] + null_only

@@ -5,6 +5,7 @@ from pyspark.sql import functions as F
 
 from langtoolsosm_spark.operators.pip_join import bbox_filter
 from langtoolsosm_spark.operators.tiling import assign_tiles
+from langtoolsosm_spark.plans import pipeline
 from langtoolsosm_spark.plans.pipeline import flagship
 
 
@@ -44,11 +45,17 @@ def test_tile_assign_is_codegen_not_udf(spark, synth_dir):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_polygon_dim_joins_are_broadcast(spark, synth_dir):
-    df = flagship(spark, synth_dir, res=8, with_knn=False)
-    plan = _plan(df)
+def test_polygon_dim_joins_are_broadcast(spark, synth_dir, monkeypatch):
+    # small dims: the whole enrichment is one MapInArrow, no join at all
+    plan = _plan(flagship(spark, synth_dir, res=8, with_knn=False))
+    assert plan.count("MapInArrow") == 1
+    assert "Join" not in plan and "Exchange" not in plan  # SortMergeJoin too
+    # the join path (what a failed narrow gate runs) broadcasts the
+    # polygon dims, and the fact-side PIP candidate join must not
+    # sort-merge the small cover
+    monkeypatch.setattr(pipeline, "_enrich_narrow", lambda *a, **k: None)
+    plan = _plan(flagship(spark, synth_dir, res=8, with_knn=False))
     assert "BroadcastHashJoin" in plan
-    # the fact-side PIP candidate join must not sort-merge the small cover
     assert plan.count("SortMergeJoin") == 0
 
 

@@ -16,7 +16,8 @@ from langtoolsosm_spark.session import get_spark
 
 tier = sys.argv[1] if len(sys.argv) > 1 else "sf0.1"
 synth = ensure_dataset(tier)
-spark = get_spark("profile", cores=32)
+# default sizing: $SPARK_GRAFT_CPUS, else every CPU of the machine
+spark = get_spark("profile")
 
 t = time.time()
 def lap(msg):
