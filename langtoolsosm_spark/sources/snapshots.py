@@ -15,6 +15,16 @@ lineage + metrics").
 No Iceberg jars exist in the sandbox, so the manifest format is a trivial
 JSON chain — same semantics (immutable data files, named snapshots,
 time-travel by snapshot id, append/overwrite), engine-owned.
+
+Like an Iceberg table's metadata, a snapshot may carry the Spark schema of
+the data files its commit added (``"schema"``: a ``StructType.json()``
+string; ``write_partitioned`` and ``compact_table`` record it). Reads walk
+the chain once, and when every file they select was added by a commit that
+recorded the SAME schema, they hand it to ``spark.read.schema(...)``, so
+opening the table runs no schema-inference job. Otherwise (manifests
+without the key — older tables, direct ``commit`` calls — or files from
+commits with different schemas) they fall back to ``spark.read.parquet``'s
+inference, unchanged.
 """
 
 from __future__ import annotations
@@ -23,6 +33,15 @@ import json
 import os
 import time
 import uuid
+
+from pyspark.sql.types import StructType
+
+
+def _shared_schema(pairs) -> str | None:
+    """The schema recorded for every one of the (file, schema) pairs, or
+    None when some file's commit recorded none or two commits differ."""
+    schemas = {sch for _, sch in pairs}
+    return schemas.pop() if len(schemas) == 1 else None
 
 
 class SnapshotTable:
@@ -59,15 +78,28 @@ class SnapshotTable:
                 done.add(rec["partition_id"])
         return done
 
-    def live_files(self, snapshot_id: int | None = None) -> list[str]:
-        files: list[str] = []
+    def _walk(
+        self, snapshot_id: int | None = None
+    ) -> tuple[list[tuple[str, str | None]], dict[str, dict]]:
+        """One pass over the chain up to ``snapshot_id``: the live files in
+        commit order, each paired with the schema its commit recorded (None
+        when it recorded none), and the lineage record of every file."""
+        live: list[tuple[str, str | None]] = []
+        recs: dict[str, dict] = {}
         for s in self.snapshots():
             if snapshot_id is not None and s["snapshot_id"] > snapshot_id:
                 break
             if s.get("operation") == "overwrite":
-                files = []
-            files.extend(s["files"])
-        return [os.path.join(self.data_dir, f) for f in files]
+                live = []
+            live.extend((f, s.get("schema")) for f in s["files"])
+            for rec in s.get("lineage", []):
+                if rec.get("file"):
+                    recs[rec["file"]] = rec
+        return live, recs
+
+    def live_files(self, snapshot_id: int | None = None) -> list[str]:
+        live, _ = self._walk(snapshot_id)
+        return [os.path.join(self.data_dir, f) for f, _ in live]
 
     # -- commit -------------------------------------------------------------
 
@@ -77,12 +109,17 @@ class SnapshotTable:
         lineage: list[dict],
         summary: dict | None = None,
         operation: str = "append",
+        schema: str | None = None,
     ) -> dict:
         """Record a snapshot over data files already placed in data_dir.
 
         files: basenames inside data_dir. lineage: one dict per partition
         {partition_id, rows, duration_ms}. summary: changeset-style
-        metadata tags (comment / source / created_by ...).
+        metadata tags (comment / source / created_by ...). schema: the
+        ``StructType.json()`` of ``files``, stored as the snapshot's
+        ``"schema"`` key; reads over files whose commits all recorded the
+        same schema use it instead of inferring one. Omit it (the key is
+        then absent) when the files' schema is not known exactly.
         """
         prev = self.current()
         sid = (prev["snapshot_id"] + 1) if prev else 1
@@ -96,6 +133,8 @@ class SnapshotTable:
             "summary": dict(summary or {}),
             "total_rows": sum(r.get("rows", 0) for r in lineage),
         }
+        if schema is not None:
+            snap["schema"] = schema
         tmp = os.path.join(self.snap_dir, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
             json.dump(snap, f)
@@ -107,12 +146,23 @@ class SnapshotTable:
 
     # -- spark I/O ------------------------------------------------------------
 
+    def _scan(self, spark, selected: list[tuple[str, str | None]]):
+        """``spark.read`` over (file, schema) pairs from ``_walk``: with the
+        recorded schema when every file's commit recorded the same one (no
+        schema-inference job), else with Spark's inference."""
+        schema = _shared_schema(selected)
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(*(os.path.join(self.data_dir, f) for f, _ in selected))
+
     def read(self, spark, snapshot_id: int | None = None):
-        """Load the table state at a snapshot (default: current)."""
-        files = self.live_files(snapshot_id)
-        if not files:
+        """Load the table state at a snapshot (default: current), with the
+        manifest schema under the uniform-schema rule of ``_scan``."""
+        live, _ = self._walk(snapshot_id)
+        if not live:
             raise FileNotFoundError(f"snapshot table {self.path} is empty")
-        return spark.read.parquet(*files)
+        return self._scan(spark, live)
 
     # -- manifest-stats file pruning (Iceberg-style) --------------------------
 
@@ -124,24 +174,19 @@ class SnapshotTable:
         blind). This is the Iceberg manifest-pruning model: a range scan
         opens only matching data files — no footer reads, no list+filter
         over the whole table (SURVEY.md §4 cell-range pruning)."""
-        stats: dict[str, tuple] = {}
-        live: list[str] = []
-        for s in self.snapshots():
-            if snapshot_id is not None and s["snapshot_id"] > snapshot_id:
-                break
-            if s.get("operation") == "overwrite":
-                live = []
-            live.extend(s["files"])
-            for rec in s.get("lineage", []):
-                st = rec.get("stats", {}).get(col)
-                if rec.get("file") and st is not None:
-                    stats[rec["file"]] = (st[0], st[1])
-        out = []
-        for f in live:
-            st = stats.get(f)
+        _, selected = self._pruned(col, lo, hi, snapshot_id)
+        return [os.path.join(self.data_dir, f) for f, _ in selected]
+
+    def _pruned(self, col: str, lo: int, hi: int, snapshot_id: int | None):
+        """``_walk``'s live (file, schema) pairs, and those of them that
+        ``pruned_files`` keeps."""
+        live, recs = self._walk(snapshot_id)
+        selected = []
+        for f, sch in live:
+            st = recs.get(f, {}).get("stats", {}).get(col)
             if st is None or (st[0] <= hi and st[1] >= lo):
-                out.append(os.path.join(self.data_dir, f))
-        return out
+                selected.append((f, sch))
+        return live, selected
 
     def read_range(self, spark, col: str, lo: int, hi: int,
                    snapshot_id: int | None = None):
@@ -152,20 +197,22 @@ class SnapshotTable:
         values, or an overwrite shrank the key space): it returns an
         EMPTY DataFrame with the table schema, read from one live file
         under a false predicate. Only a table with no live files at all
-        raises — that is 'missing/corrupt', not 'no rows in range'."""
+        raises — that is 'missing/corrupt', not 'no rows in range'.
+
+        One chain walk gives both the pruned files and the schema each
+        one's commit recorded; when those schemas agree the scan uses it
+        and the call runs no Spark job (the empty-overlap read likewise,
+        from its one file's commit), else Spark infers the schema."""
         from pyspark.sql import functions as F
 
-        files = self.pruned_files(col, lo, hi, snapshot_id)
-        if not files:
-            live = self.pruned_files(
-                col, -(1 << 62), (1 << 62) - 1, snapshot_id
-            )
+        live, selected = self._pruned(col, lo, hi, snapshot_id)
+        if not selected:
             if not live:
                 raise FileNotFoundError(
                     f"snapshot table has no live files at {self.path}"
                 )
-            return spark.read.parquet(live[0]).filter(F.lit(False))
-        return spark.read.parquet(*files).filter(
+            return self._scan(spark, live[:1]).filter(F.lit(False))
+        return self._scan(spark, selected).filter(
             (F.col(col) >= lo) & (F.col(col) <= hi)
         )
 
@@ -184,8 +231,10 @@ class SnapshotTable:
         file keeps its ORIGINAL lineage record (partition id, rows,
         stats) gathered from the expired chain, so manifest-stats pruning
         and ``committed_partitions`` resume bookkeeping survive
-        expiration unchanged. Returns counts of removed manifests and
-        deleted files."""
+        expiration unchanged. The rewrite keeps a ``"schema"`` key only
+        when every commit whose files it carries recorded that same
+        schema (else reads of it infer one). Returns counts of removed
+        manifests and deleted files."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         snaps = self.snapshots()
@@ -193,13 +242,15 @@ class SnapshotTable:
             return {"removed_snapshots": 0, "deleted_files": 0}
         cutoff = snaps[-keep_last]
         cid = cutoff["snapshot_id"]
-        state = [os.path.basename(p) for p in self.live_files(cid)]
-        # original lineage record per file (each data file is written by
-        # exactly one commit), plus the committed-partition set as of the
-        # cutoff (respecting overwrite resets) — file-LESS lineage records
-        # (empty partitions) must survive the rewrite too, or
-        # committed_partitions() would shrink after expiration
-        filerec: dict[str, dict] = {}
+        # live files with the schema of the commit that added each, and
+        # the original lineage record per file (each data file is written
+        # by exactly one commit)
+        live, filerec = self._walk(cid)
+        state = [f for f, _ in live]
+        # the committed-partition set as of the cutoff (respecting
+        # overwrite resets) — file-LESS lineage records (empty partitions)
+        # must survive the rewrite too, or committed_partitions() would
+        # shrink after expiration
         expired_refs: set[str] = set()
         done_at_cutoff: set[int] = set()
         for s in snaps:
@@ -208,8 +259,6 @@ class SnapshotTable:
                     done_at_cutoff = set()
                 for rec in s.get("lineage", []):
                     done_at_cutoff.add(rec["partition_id"])
-                    if rec.get("file"):
-                        filerec[rec["file"]] = rec
             if s["snapshot_id"] < cid:
                 expired_refs.update(s["files"])
         retained: set[str] = set(state)
@@ -236,6 +285,12 @@ class SnapshotTable:
             "summary": {**cutoff.get("summary", {}), "expired-rewrite": True},
             "total_rows": sum(filerec.get(f, {}).get("rows", 0) for f in state),
         }
+        # the rewrite carries files from several commits: it may keep a
+        # schema only if every one of them recorded that same schema
+        rewritten.pop("schema", None)
+        schema = _shared_schema(live)
+        if schema is not None:
+            rewritten["schema"] = schema
         tmp = os.path.join(self.snap_dir, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
             json.dump(rewritten, f)
@@ -320,8 +375,11 @@ def compact_table(
     prune strictly more files (asserted in tests).
 
     Distributed: one executor-side parquet write per output partition
-    (accumulating the partition's Arrow batches into a single file);
-    only manifest bookkeeping is driver-side.
+    (``mapInArrow``: the partition's Arrow batches go into a single file
+    with no pandas round trip, so columns keep Spark's types — a nullable
+    long stays int64); only manifest bookkeeping is driver-side. The
+    replace commit records the rewritten frame's schema, so reads of the
+    compacted table run no schema-inference job.
 
     Like any overwrite, the replace commit resets ``committed_partitions``
     to the compaction's own (synthetic) partition ids — resume bookkeeping
@@ -357,38 +415,34 @@ def compact_table(
     data_dir = table.data_dir
 
     def _rewrite(batches):
-        import json as _json
-
-        import pandas as pd
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pqw
         import time as _t
         import uuid as _u
 
         t0 = _t.time()
-        chunks = [pdf for pdf in batches if len(pdf)]
+        chunks = [b for b in batches if b.num_rows]
         if not chunks:
             return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        if drop_cols:
-            pdf = pdf.drop(columns=drop_cols)
+        tbl = pa.Table.from_batches(chunks).drop_columns(drop_cols)
         fn = f"compact-{_u.uuid4().hex}.parquet"
-        pqw.write_table(
-            pa.Table.from_pandas(pdf, preserve_index=False),
-            os.path.join(data_dir, fn),
-            row_group_size=8192,
-        )
-        stats = {c: [int(pdf[c].min()), int(pdf[c].max())] for c in stats_cols}
-        yield pd.DataFrame(
+        pqw.write_table(tbl, os.path.join(data_dir, fn), row_group_size=8192)
+        stats = {}
+        for c in stats_cols:
+            mm = pc.min_max(tbl.column(c)).as_py()
+            if mm["min"] is not None:
+                stats[c] = [mm["min"], mm["max"]]
+        yield pa.RecordBatch.from_pydict(
             {
                 "file": [fn],
-                "rows": [len(pdf)],
+                "rows": [tbl.num_rows],
                 "duration_ms": [int((_t.time() - t0) * 1000)],
-                "stats_json": [_json.dumps(stats)],
+                "stats_json": [json.dumps(stats)],
             }
         )
 
-    manifest = part.mapInPandas(
+    manifest = part.mapInArrow(
         _rewrite, schema="file string, rows long, duration_ms long, stats_json string"
     )
     recs = [r.asDict() for r in manifest.collect()]
@@ -411,6 +465,7 @@ def compact_table(
         lineage=lineage,
         summary=s,
         operation="overwrite",
+        schema=df.schema.json(),
     )
 
 
@@ -436,7 +491,8 @@ def write_partitioned(
     The write itself is distributed (one pass, hash-partitioned by
     ``partition_col``); only manifest bookkeeping is driver-side. Each
     group's Arrow table goes straight to parquet (``applyInArrow``: no
-    pandas round trip), so file columns keep Spark's Arrow types.
+    pandas round trip), so file columns keep Spark's Arrow types, and
+    every commit records ``df.schema`` as its ``"schema"`` for reads.
 
     Width: the groups are hash-repartitioned to ``kernel_width`` (max of
     defaultParallelism and shuffle partitions) before the grouped write.
@@ -498,6 +554,7 @@ def write_partitioned(
     )
     recs = [r.asDict() for r in manifest_df.collect()]
 
+    schema = df.schema.json()
     snaps = []
     batch = batch_partitions or len(recs) or 1
     for i in range(0, len(recs), batch):
@@ -522,6 +579,7 @@ def write_partitioned(
                 files=[r["file"] for r in chunk],
                 lineage=[_lineage(r) for r in chunk],
                 summary=s,
+                schema=schema,
             )
         )
     return snaps

@@ -1,12 +1,17 @@
 """Snapshot writer: width of the grouped write and parity with the
-pandas-kernel writer it replaced.
+pandas-kernel writer it replaced; reads with the manifest's schema.
 
 ``_pandas_write`` is the reference: the earlier ``write_partitioned``
 write path (``groupBy("__pid").applyInPandas``, one
 ``pa.Table.from_pandas`` parquet file per group), committed with the
-same manifest bookkeeping.
+same manifest bookkeeping and no ``"schema"`` key.
+
+The read tests compare ``read`` / ``read_range`` with
+``spark.read.parquet`` on the same files, the schema-inferring path they
+skip when every selected file's commit recorded the same schema.
 """
 
+import datetime
 import os
 
 import numpy as np
@@ -15,6 +20,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from langtoolsosm_spark.operators.spread import kernel_width
 from langtoolsosm_spark.sources.snapshots import (
@@ -178,3 +184,181 @@ def test_mixed_writer_table_reads_resumes_and_compacts(spark, enriched, tmp_path
     compact_table(table, spark, target_files=3, stats_col="tile")
     assert len(table.live_files()) == 3
     pd.testing.assert_frame_equal(_content(table.read(spark)), want)
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    # repr: rows may hold maps and bytes, which do not sort
+    return sorted(repr(r) for r in df.collect())
+
+
+def _assert_same(got, want):
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+
+
+@pytest.mark.parametrize(
+    "op, want",
+    [
+        (lambda t, s: t.read_range(s, "tile", 7919 * 5, 7919 * 15), 0),
+        (lambda t, s: t.read_range(s, "tile", 7919 * 5, 7919 * 15).toPandas(), 1),
+        (lambda t, s: t.read_range(s, "tile", 1, 2).toPandas(), 1),
+        (lambda t, s: t.read(s).toPandas(), 1),
+    ],
+    ids=["read_range", "read_range_to_pandas", "empty_overlap", "read_to_pandas"],
+)
+def test_reads_run_no_schema_inference_job(spark, enriched, tmp_path, op, want):
+    table = SnapshotTable(str(tmp_path / "t"))
+    write_partitioned(enriched, table, "tile", stats_col="tile")
+    _, n = _jobs(spark, lambda: op(table, spark))
+    assert n == want
+    assert table.current()["schema"] == enriched.schema.json()
+
+
+def test_mixed_writer_table_reads_with_inferred_schema(spark, enriched, tmp_path):
+    """Files from a schema-less commit and a ``write_partitioned`` commit:
+    reads fall back to inference and match ``spark.read.parquet``."""
+    table = SnapshotTable(str(tmp_path / "mixed"))
+    _pandas_write(enriched.filter(F.col("tile") >= 7919 * 10), table, "tile", "tile")
+    write_partitioned(
+        enriched, table, "tile", stats_col="tile", skip_partitions=table.committed_partitions()
+    )
+    files = table.live_files()
+    df, n = _jobs(spark, lambda: table.read(spark))
+    assert n >= 1  # schema inference ran
+    _assert_same(df, spark.read.parquet(*files))
+    lo, hi = 7919 * 5, 7919 * 15
+    _assert_same(
+        table.read_range(spark, "tile", lo, hi),
+        spark.read.parquet(*table.pruned_files("tile", lo, hi)).filter(
+            (F.col("tile") >= lo) & (F.col("tile") <= hi)
+        ),
+    )
+
+
+@pytest.fixture(scope="module")
+def typed(spark):
+    """One column of each type the writer may meet, nulls included."""
+    rows = [
+        (
+            t, t - 3, t * 300, t * 70_000, None if t % 3 == 0 else t * 10**12,
+            t / 7, t % 2 == 0, None if t == 4 else f"s{t}", bytes([t, 255]),
+            datetime.date(2020, 1, 1 + t), datetime.datetime(2021, 5, 4, 3, 2, t),
+            [t, None, -t], {"k": f"v{t}"} if t % 4 else None, (t, f"n{t}"),
+        )
+        for t in range(16)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "tile long, b byte, sh short, i int, ln long, d double, bo boolean, s string, "
+        "bi binary, dt date, ts timestamp, arr array<bigint>, m map<string,string>, "
+        "st struct<x:int,y:string>",
+    ).withColumn("sq", F.sequence(F.lit(0), F.col("i") % 3))  # non-null elements
+
+
+@pytest.fixture(scope="module")
+def flagship_table(spark, synth_dir, tmp_path_factory):
+    from langtoolsosm_spark.plans.pipeline import run_to_snapshot
+
+    path = str(tmp_path_factory.mktemp("flagship") / "t")
+    run_to_snapshot(spark, synth_dir, path, res=8, resume=False)
+    return SnapshotTable(path)
+
+
+@pytest.mark.parametrize("which", ["flagship", "typed"])
+def test_reads_match_inferred_schema_and_rows(spark, typed, tmp_path, request, which):
+    if which == "flagship":
+        table = request.getfixturevalue("flagship_table")
+    else:
+        table = SnapshotTable(str(tmp_path / "typed"))
+        write_partitioned(typed.filter(F.col("tile") < 8), table, "tile", stats_col="tile")
+        write_partitioned(typed.filter(F.col("tile") >= 8), table, "tile", stats_col="tile")
+    assert all("schema" in s for s in table.snapshots())
+    sid = table.snapshots()[0]["snapshot_id"]
+    _assert_same(table.read(spark), spark.read.parquet(*table.live_files()))
+    _assert_same(table.read(spark, snapshot_id=sid), spark.read.parquet(*table.live_files(sid)))
+    tiles = sorted(r["tile"] for r in table.read(spark).select("tile").distinct().collect())
+    lo, hi = tiles[1], tiles[len(tiles) // 2]
+    _assert_same(
+        table.read_range(spark, "tile", lo, hi),
+        spark.read.parquet(*table.pruned_files("tile", lo, hi)).filter(
+            (F.col("tile") >= lo) & (F.col("tile") <= hi)
+        ),
+    )
+    empty = table.read_range(spark, "tile", tiles[-1] + 1, tiles[-1] + 2)
+    assert empty.schema == spark.read.parquet(table.live_files()[0]).schema
+    assert empty.count() == 0
+
+
+def test_time_travel_across_added_column(spark, typed, tmp_path):
+    """An append that adds a column: the old snapshot reads with its own
+    recorded schema, the whole table falls back to inference."""
+    table = SnapshotTable(str(tmp_path / "t"))
+    old = typed.select("tile", "ln", "s")
+    write_partitioned(old.filter(F.col("tile") < 8), table, "tile", stats_col="tile")
+    write_partitioned(
+        typed.select("tile", "ln", "s", "d").filter(F.col("tile") >= 8),
+        table, "tile", stats_col="tile",
+    )
+    first = table.snapshots()[0]["snapshot_id"]
+    df, n = _jobs(spark, lambda: table.read(spark, snapshot_id=first))
+    assert n == 0
+    assert df.columns == ["tile", "ln", "s"]
+    _assert_same(df, spark.read.parquet(*table.live_files(first)))
+    df, n = _jobs(spark, lambda: table.read(spark))
+    assert n >= 1
+    _assert_same(df, spark.read.parquet(*table.live_files()))
+
+
+def test_compact_keeps_long_with_nulls(spark, tmp_path):
+    """The rewrite is Arrow-native: a nullable long stays bigint (the
+    pandas rewrite made it double) and the rows are unchanged."""
+    df = spark.createDataFrame(
+        [(i, i % 6, None if i % 4 == 0 else i * 3, f"r{i}") for i in range(40)],
+        "id long, tile long, n long, s string",
+    )
+    table = SnapshotTable(str(tmp_path / "t"))
+    write_partitioned(df, table, "tile", stats_col="tile")
+    compact_table(table, spark, target_files=2, stats_col="tile")
+    assert len(table.live_files()) == 2
+    for f in table.live_files():
+        assert pq.read_schema(f).field("n").type == pa.int64()
+    inferred = spark.read.parquet(*table.live_files())
+    assert inferred.schema["n"].dataType == LongType()
+    _assert_same(table.read(spark), inferred)
+    assert _rows(table.read(spark)) == _rows(df)
+    assert table.current()["schema"] == table.read(spark).schema.json()
+
+
+def test_expire_keeps_schema_only_when_uniform(spark, enriched, tmp_path):
+    mixed = SnapshotTable(str(tmp_path / "mixed"))
+    _pandas_write(enriched.filter(F.col("tile") >= 7919 * 10), mixed, "tile", "tile")
+    write_partitioned(
+        enriched, mixed, "tile", stats_col="tile", skip_partitions=mixed.committed_partitions()
+    )
+    same = SnapshotTable(str(tmp_path / "same"))
+    write_partitioned(enriched.filter(F.col("tile") < 7919 * 10), same, "tile", stats_col="tile")
+    write_partitioned(enriched.filter(F.col("tile") >= 7919 * 10), same, "tile", stats_col="tile")
+    for table, keeps in ((mixed, False), (same, True)):
+        before = table.read(spark)
+        want_schema, want_rows = before.schema, _rows(before)
+        assert table.expire_snapshots(keep_last=1)["removed_snapshots"] == 1
+        (snap,) = table.snapshots()
+        assert ("schema" in snap) is keeps
+        if keeps:
+            assert snap["schema"] == enriched.schema.json()
+        after = table.read(spark)
+        assert after.schema == want_schema
+        assert _rows(after) == want_rows
