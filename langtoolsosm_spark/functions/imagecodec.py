@@ -11,8 +11,8 @@ libraries exist in the sandbox, so codecs are written from scratch:
   verified by tests per the per-row invariant in BASELINE.json)
 
 All functions operate on whole arrays / byte buffers; at the Spark
-boundary they run inside ``mapInPandas`` over Arrow batches (see
-operators/images.py), never per-row Python UDFs.
+boundary they run inside the ``per_image`` ``mapInArrow`` kernel over
+Arrow batches (see operators/images.py), never per-row Python UDFs.
 """
 
 from __future__ import annotations

@@ -1,11 +1,15 @@
 """Image-column operators: decode / verify / feature-extract / re-encode
 over Arrow batches (BASELINE.json:input_hint plumbing).
 
-All operators are ``mapInPandas`` batch kernels over the binary ``bytes``
-column — the Spark-side plumbing (schema, batch shape, partitioning) is
-real and tested; the pixel kernels come from functions/imagecodec.py
-(from-scratch codecs; heavier real-world codecs would slot in behind the
-same fmt dispatch).
+Every operator that reads pixels is a ``per_image`` caller: one
+``mapInArrow`` kernel selects the columns, decodes the binary ``bytes``
+column, computes the integer luminance for the operators that ask for it,
+and builds each output batch with the Arrow types of the declared schema.
+An operator supplies only its per-image function and that schema. The
+Spark-side plumbing (schema, batch shape, partitioning) is real and
+tested; the pixel kernels come from functions/imagecodec.py (from-scratch
+codecs; heavier real-world codecs would slot in behind the same fmt
+dispatch).
 
 Scale notes: ``bytes`` is only read by stages that decode (Parquet column
 pruning keeps it out of every other scan); decode work partitions evenly
@@ -16,11 +20,62 @@ outputs carry no pixel payloads unless explicitly re-encoded.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import imagecodec as ic
+
+
+def per_image(
+    images: DataFrame,
+    fn,
+    schema: str,
+    cols: tuple[str, ...] = ("image_id",),
+    luma: bool = False,
+) -> DataFrame:
+    """Decode every image and map it through ``fn`` in one ``mapInArrow``
+    pass — the one decode kernel behind every pixel operator here.
+
+    ``fn(px, *vals)`` gets the decoded ``(h, w, 3)`` uint8 pixels and the
+    image's values of ``cols`` in order; with ``luma`` it also gets
+    ``lum=``, the ``(h, w)`` int64 integer BT.709 luminance
+    ``(2126 R + 7152 G + 722 B) // 10000``. It returns the image's output
+    rows as an iterable of tuples in ``schema`` order: one row, many
+    (fan-out) or none. A column passes through when ``fn`` copies its
+    value from ``cols`` into its rows. Each output batch is built with the
+    Arrow types of ``schema``, so neither boundary converts to pandas."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    out = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(out)
+
+    def kernel(batches):
+        for b in batches:
+            bufs, fmts, *vals = (b.column(c).to_pylist() for c in ("bytes", "fmt", *cols))
+            rows = []
+            for buf, fmt, *v in zip(bufs, fmts, *vals):
+                px = ic.decode(buf, fmt)
+                if luma:
+                    p = px.astype(np.int64)
+                    lum = (2126 * p[..., 0] + 7152 * p[..., 1] + 722 * p[..., 2]) // 10000
+                    rows.extend(fn(px, *v, lum=lum))
+                else:
+                    rows.extend(fn(px, *v))
+            columns = zip(*rows) if rows else [[]] * len(arrow)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+            )
+
+    return images.select(*dict.fromkeys(("bytes", "fmt", *cols))).mapInArrow(kernel, out)
+
+
+def _verify(px, w, h, ph) -> tuple[bool, int]:
+    """The integrity checks of a decoded image: its geometry matches the
+    metadata (w, h), and the Hamming distance between the stored pHash
+    and the one recomputed from its pixels."""
+    return px.shape[:2] == (h, w), ic.phash_hamming(int(ph), ic.phash64(px))
 
 
 def decode_stats(images: DataFrame) -> DataFrame:
@@ -35,33 +90,15 @@ def decode_stats(images: DataFrame) -> DataFrame:
     stay within a small pHash distance here since the original pixels
     aren't stored alongside)."""
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt, w, h, ph in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"], pdf["phash"]
-            ):
-                px = ic.decode(buf, fmt)
-                ph2 = ic.phash64(px)
-                recs.append(
-                    (
-                        img_id,
-                        int(px.shape[1]),
-                        int(px.shape[0]),
-                        fmt,
-                        float(px.mean()),
-                        bool(px.shape[:2] == (h, w)),
-                        int(ic.phash_hamming(int(ph), ph2)),
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["image_id", "w_dec", "h_dec", "fmt", "mean_px", "shape_ok", "phash_dist"],
-            )
+    def fn(px, img_id, fmt, w, h, ph):
+        h_dec, w_dec = px.shape[:2]
+        return [(img_id, w_dec, h_dec, fmt, float(px.mean()), *_verify(px, w, h, ph))]
 
-    return images.select("image_id", "bytes", "fmt", "w", "h", "phash").mapInPandas(
-        kernel,
-        schema="image_id string, w_dec int, h_dec int, fmt string, mean_px double, shape_ok boolean, phash_dist int",
+    return per_image(
+        images, fn,
+        "image_id string, w_dec int, h_dec int, fmt string, mean_px double, "
+        "shape_ok boolean, phash_dist int",
+        cols=("image_id", "fmt", "w", "h", "phash"),
     )
 
 
@@ -70,28 +107,13 @@ def transcode(images: DataFrame, to_fmt: str) -> DataFrame:
     Lossless->lossless preserves pixels exactly; ->dctq preserves
     PSNR >= 40 dB (tested)."""
 
-    def kernel(batches):
-        for pdf in batches:
-            out_bytes, out_ph = [], []
-            for buf, fmt in zip(pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt)
-                out_bytes.append(ic.encode(px, to_fmt))
-                out_ph.append(ic.phash64(px))
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "bytes": out_bytes,
-                    "w": pdf["w"],
-                    "h": pdf["h"],
-                    "fmt": to_fmt,
-                    "caption": pdf["caption"],
-                    "phash": out_ph,
-                }
-            )
+    def fn(px, img_id, w, h, caption):
+        return [(img_id, ic.encode(px, to_fmt), w, h, to_fmt, caption, ic.phash64(px))]
 
-    return images.select("image_id", "bytes", "w", "h", "fmt", "caption", "phash").mapInPandas(
-        kernel,
-        schema="image_id string, bytes binary, w int, h int, fmt string, caption string, phash long",
+    return per_image(
+        images, fn,
+        "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long",
+        cols=("image_id", "w", "h", "caption"),
     )
 
 
@@ -99,21 +121,14 @@ def thumbnail_gray(images: DataFrame, size: int = 8) -> DataFrame:
     """Feature extraction: size x size grayscale thumbnail as array<double>
     (the embedding-ish path for visual near-dup / ANN)."""
 
-    def kernel(batches):
-        for pdf in batches:
-            vecs = []
-            for buf, fmt in zip(pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt)
-                gray = px.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-                h, w = gray.shape
-                ys = (np.arange(size) * h) // size
-                xs = (np.arange(size) * w) // size
-                vecs.append(gray[np.ix_(ys, xs)].ravel().tolist())
-            yield pd.DataFrame({"image_id": pdf["image_id"], "thumb": vecs})
+    def fn(px, img_id):
+        gray = px.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
+        h, w = gray.shape
+        ys = (np.arange(size) * h) // size
+        xs = (np.arange(size) * w) // size
+        return [(img_id, gray[np.ix_(ys, xs)].ravel().tolist())]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel, schema="image_id string, thumb array<double>"
-    )
+    return per_image(images, fn, "image_id string, thumb array<double>")
 
 
 def image_palette(images: DataFrame, bits: int = 2) -> DataFrame:
@@ -125,7 +140,7 @@ def image_palette(images: DataFrame, bits: int = 2) -> DataFrame:
     code (np.argmax's first-max rule — mirrored by the oracle's
     (count DESC, code ASC) ranking).
 
-    One mapInPandas Arrow kernel (decode + np.bincount per image, no
+    One ``per_image`` Arrow kernel (decode + np.bincount per image, no
     per-pixel Python), no shuffle: the aggregate is per-image, so it
     happens inside the kernel and the output is one row per image. The
     dominant-color output is the building block for palette-based image
@@ -135,32 +150,15 @@ def image_palette(images: DataFrame, bits: int = 2) -> DataFrame:
         raise ValueError(f"bits must be in [1, 8], got {bits}")
     shift = 8 - bits
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt)
-                q = (px >> shift).astype(np.int64)
-                code = (q[..., 0] << (2 * bits)) | (q[..., 1] << bits) | q[..., 2]
-                counts = np.bincount(code.ravel(), minlength=1 << (3 * bits))
-                top = int(np.argmax(counts))
-                recs.append(
-                    (
-                        img_id,
-                        int(code.size),
-                        int((counts > 0).sum()),
-                        top,
-                        int(counts[top]),
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["image_id", "n_px", "n_colors", "top_color", "top_count"],
-            )
+    def fn(px, img_id):
+        q = (px >> shift).astype(np.int64)
+        code = (q[..., 0] << (2 * bits)) | (q[..., 1] << bits) | q[..., 2]
+        counts = np.bincount(code.ravel(), minlength=1 << (3 * bits))
+        top = int(np.argmax(counts))
+        return [(img_id, code.size, int((counts > 0).sum()), top, int(counts[top]))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, n_px long, n_colors long, top_color long, top_count long",
+    return per_image(
+        images, fn, "image_id string, n_px long, n_colors long, top_color long, top_count long"
     )
 
 
@@ -177,66 +175,43 @@ def extract_patches(images: DataFrame, patch: int = 8) -> DataFrame:
 
     This is the patch-tokenization front of an image-training pipeline:
     downstream stages key on (image_id, patch_row, patch_col) for
-    patch-level dedup or masking. One mapInPandas Arrow kernel — the
+    patch-level dedup or masking. One ``per_image`` Arrow kernel — the
     block split is a single reshape/transpose and the sums/checksum are
     one tensordot per image, no per-pixel Python. Per-patch rows carry
     no pixel payloads, so the fan-out (<= (w//patch)*(h//patch) rows per
-    image) shuffles only small integers.
+    image, none for an image smaller than ``patch``) shuffles only small
+    integers.
     """
     if patch < 1:
         raise ValueError(f"patch must be >= 1, got {patch}")
+    wgt = (
+        3 * (np.arange(patch)[:, None] * patch + np.arange(patch)[None, :])[..., None]
+        + np.arange(3)[None, None, :] + 1
+    ).astype(np.int64)
 
-    def kernel(batches):
-        wgt = (
-            3 * (np.arange(patch)[:, None] * patch + np.arange(patch)[None, :])[..., None]
-            + np.arange(3)[None, None, :] + 1
-        ).astype(np.int64)
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt)
-                h, w, _ = px.shape
-                nr, nc = h // patch, w // patch
-                if nr == 0 or nc == 0:
-                    continue
-                blocks = (
-                    px[: nr * patch, : nc * patch]
-                    .reshape(nr, patch, nc, patch, 3)
-                    .transpose(0, 2, 1, 3, 4)
-                    .astype(np.int64)
-                )
-                sums = blocks.sum(axis=(2, 3))            # (nr, nc, 3)
-                chk = (blocks * wgt).sum(axis=(2, 3, 4))  # (nr, nc)
-                prs, pcs = np.divmod(np.arange(nr * nc, dtype=np.int64), nc)
-                recs.append(
-                    pd.DataFrame(
-                        {
-                            "image_id": np.repeat(img_id, nr * nc),
-                            "patch_row": prs,
-                            "patch_col": pcs,
-                            "sum_r": sums[..., 0].ravel(),
-                            "sum_g": sums[..., 1].ravel(),
-                            "sum_b": sums[..., 2].ravel(),
-                            "chk": chk.ravel(),
-                        }
-                    )
-                )
-            cols = [
-                "image_id", "patch_row", "patch_col",
-                "sum_r", "sum_g", "sum_b", "chk",
-            ]
-            yield (
-                pd.concat(recs, ignore_index=True)
-                if recs
-                else pd.DataFrame(columns=cols)
-            )
+    def fn(px, img_id):
+        h, w, _ = px.shape
+        nr, nc = h // patch, w // patch
+        if nr == 0 or nc == 0:
+            return []
+        blocks = (
+            px[: nr * patch, : nc * patch]
+            .reshape(nr, patch, nc, patch, 3)
+            .transpose(0, 2, 1, 3, 4)
+            .astype(np.int64)
+        )
+        sums = blocks.sum(axis=(2, 3)).reshape(-1, 3)  # (nr * nc, 3)
+        chk = (blocks * wgt).sum(axis=(2, 3, 4)).ravel()
+        prs, pcs = np.divmod(np.arange(nr * nc), nc)
+        return zip(
+            [img_id] * (nr * nc), prs.tolist(), pcs.tolist(),
+            *sums.T.tolist(), chk.tolist(),
+        )
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema=(
-            "image_id string, patch_row long, patch_col long, "
-            "sum_r long, sum_g long, sum_b long, chk long"
-        ),
+    return per_image(
+        images, fn,
+        "image_id string, patch_row long, patch_col long, "
+        "sum_r long, sum_g long, sum_b long, chk long",
     )
 
 
@@ -279,7 +254,7 @@ def duplicate_patch_pairs(
     )
     keys = ["patch_row", "patch_col", "qr", "qg", "qb"]
     # ONE pass, no self-join: a fingerprint self-join would re-run the
-    # decode kernel for the second scan (mapInPandas output has no
+    # decode kernel for the second scan (per_image output has no
     # parquet to re-read). Instead each fingerprint bucket collects its
     # (unique, sorted) image ids — bucket occupancy is quantization-
     # bounded — and the intra-bucket pairs unroll JVM-side with in-row
@@ -324,35 +299,12 @@ def hist_equalize_stats(images: DataFrame) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                counts = np.bincount(lum.ravel(), minlength=256)
-                lv = np.nonzero(counts)[0]
-                recs.append(
-                    pd.DataFrame(
-                        {
-                            "image_id": np.repeat(img_id, lv.size),
-                            "level": lv.astype(np.int64),
-                            "n_px": counts[lv].astype(np.int64),
-                        }
-                    )
-                )
-            cols = ["image_id", "level", "n_px"]
-            yield (
-                pd.concat(recs, ignore_index=True)
-                if recs
-                else pd.DataFrame(columns=cols)
-            )
+    def fn(px, img_id, lum):
+        counts = np.bincount(lum.ravel(), minlength=256)
+        lv = np.nonzero(counts)[0]
+        return zip([img_id] * lv.size, lv.tolist(), counts[lv].tolist())
 
-    hist = images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel, schema="image_id string, level long, n_px long"
-    )
+    hist = per_image(images, fn, "image_id string, level long, n_px long", luma=True)
     w = Window.partitionBy("image_id").orderBy("level")
     wall = Window.partitionBy("image_id")
     return (
@@ -386,47 +338,28 @@ def edge_stats(images: DataFrame, threshold: int = 160) -> DataFrame:
     and yield n_interior = 0 rows.
     """
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                h, w = lum.shape
-                if h < 3 or w < 3:
-                    recs.append((img_id, 0, 0, 0, 0))
-                    continue
-                gx = (
-                    (lum[:-2, 2:] + 2 * lum[1:-1, 2:] + lum[2:, 2:])
-                    - (lum[:-2, :-2] + 2 * lum[1:-1, :-2] + lum[2:, :-2])
-                )
-                gy = (
-                    (lum[2:, :-2] + 2 * lum[2:, 1:-1] + lum[2:, 2:])
-                    - (lum[:-2, :-2] + 2 * lum[:-2, 1:-1] + lum[:-2, 2:])
-                )
-                mag = np.abs(gx) + np.abs(gy)
-                recs.append(
-                    (
-                        img_id,
-                        int(gx.size),
-                        int(np.abs(gx).sum()),
-                        int(np.abs(gy).sum()),
-                        int((mag >= threshold).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["image_id", "n_interior", "sum_gx", "sum_gy", "edge_px"],
-            )
+    def fn(px, img_id, lum):
+        h, w = lum.shape
+        if h < 3 or w < 3:
+            return [(img_id, 0, 0, 0, 0)]
+        gx = (
+            (lum[:-2, 2:] + 2 * lum[1:-1, 2:] + lum[2:, 2:])
+            - (lum[:-2, :-2] + 2 * lum[1:-1, :-2] + lum[2:, :-2])
+        )
+        gy = (
+            (lum[2:, :-2] + 2 * lum[2:, 1:-1] + lum[2:, 2:])
+            - (lum[:-2, :-2] + 2 * lum[:-2, 1:-1] + lum[:-2, 2:])
+        )
+        mag = np.abs(gx) + np.abs(gy)
+        return [
+            (img_id, gx.size, int(np.abs(gx).sum()), int(np.abs(gy).sum()),
+             int((mag >= threshold).sum()))
+        ]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema=(
-            "image_id string, n_interior long, sum_gx long, "
-            "sum_gy long, edge_px long"
-        ),
+    return per_image(
+        images, fn,
+        "image_id string, n_interior long, sum_gx long, sum_gy long, edge_px long",
+        luma=True,
     )
 
 
@@ -453,57 +386,34 @@ def block_sums(images: DataFrame, queries_per_image: int = 4) -> DataFrame:
         raise ValueError(f"queries_per_image must be >= 1, got {queries_per_image}")
     Q = queries_per_image
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                h, w = lum.shape
-                sat = lum.cumsum(axis=0).cumsum(axis=1)
-                v = int(img_id[3:])  # imgNNNNNNNNN
-                qs = np.arange(Q, dtype=np.int64)
-                xa = (v * 40503 + qs * 2654435761) % w
-                xb = (v * 69069 + qs * 1013904223) % w
-                ya = (v * 40503 + qs * 2654435761) % h
-                yb = (v * 69069 + qs * 1013904223) % h
-                x0, x1 = np.minimum(xa, xb), np.maximum(xa, xb)
-                y0, y1 = np.minimum(ya, yb), np.maximum(ya, yb)
+    def fn(px, img_id, lum):
+        h, w = lum.shape
+        sat = lum.cumsum(axis=0).cumsum(axis=1)
+        v = int(img_id[3:])  # imgNNNNNNNNN
+        qs = np.arange(Q, dtype=np.int64)
+        xa = (v * 40503 + qs * 2654435761) % w
+        xb = (v * 69069 + qs * 1013904223) % w
+        ya = (v * 40503 + qs * 2654435761) % h
+        yb = (v * 69069 + qs * 1013904223) % h
+        x0, x1 = np.minimum(xa, xb), np.maximum(xa, xb)
+        y0, y1 = np.minimum(ya, yb), np.maximum(ya, yb)
 
-                def s(yy, xx):
-                    out = np.zeros(Q, dtype=np.int64)
-                    ok = (yy >= 0) & (xx >= 0)
-                    out[ok] = sat[yy[ok], xx[ok]]
-                    return out
+        def s(yy, xx):
+            out = np.zeros(Q, dtype=np.int64)
+            ok = (yy >= 0) & (xx >= 0)
+            out[ok] = sat[yy[ok], xx[ok]]
+            return out
 
-                tot = (
-                    s(y1, x1) - s(y0 - 1, x1) - s(y1, x0 - 1) + s(y0 - 1, x0 - 1)
-                )
-                recs.append(
-                    pd.DataFrame(
-                        {
-                            "image_id": np.repeat(img_id, Q),
-                            "q": qs,
-                            "x0": x0, "y0": y0, "x1": x1, "y1": y1,
-                            "px_sum": tot,
-                        }
-                    )
-                )
-            cols = ["image_id", "q", "x0", "y0", "x1", "y1", "px_sum"]
-            yield (
-                pd.concat(recs, ignore_index=True)
-                if recs
-                else pd.DataFrame(columns=cols)
-            )
+        tot = s(y1, x1) - s(y0 - 1, x1) - s(y1, x0 - 1) + s(y0 - 1, x0 - 1)
+        return zip(
+            [img_id] * Q, qs.tolist(),
+            x0.tolist(), y0.tolist(), x1.tolist(), y1.tolist(), tot.tolist(),
+        )
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema=(
-            "image_id string, q long, x0 long, y0 long, x1 long, y1 long, "
-            "px_sum long"
-        ),
+    return per_image(
+        images, fn,
+        "image_id string, q long, x0 long, y0 long, x1 long, y1 long, px_sum long",
+        luma=True,
     )
 
 
@@ -523,53 +433,36 @@ def blob_stats(images: DataFrame, threshold: int = 195) -> DataFrame:
     — a genuinely different algorithm shape.
     """
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                mask = lum >= threshold
-                n_fg = int(mask.sum())
-                if n_fg == 0:
-                    continue
-                h, w = mask.shape
-                big = h * w  # sentinel above any real label
-                lbl = np.where(
-                    mask, np.arange(big, dtype=np.int64).reshape(h, w), big
-                )
-                while True:
-                    # Jacobi sweep: every neighbor view is a shift of the
-                    # CURRENT labels with the sentinel padded in, so the
-                    # background (= sentinel) can never relay a label
-                    # between two blobs it separates
-                    up = np.full_like(lbl, big)
-                    up[1:, :] = lbl[:-1, :]
-                    dn = np.full_like(lbl, big)
-                    dn[:-1, :] = lbl[1:, :]
-                    lf = np.full_like(lbl, big)
-                    lf[:, 1:] = lbl[:, :-1]
-                    rt = np.full_like(lbl, big)
-                    rt[:, :-1] = lbl[:, 1:]
-                    nxt = np.where(
-                        mask, np.minimum.reduce([lbl, up, dn, lf, rt]), big
-                    )
-                    if (nxt == lbl).all():
-                        break
-                    lbl = nxt
-                _, counts = np.unique(lbl[mask], return_counts=True)
-                recs.append(
-                    (img_id, n_fg, int(counts.size), int(counts.max()))
-                )
-            yield pd.DataFrame(
-                recs, columns=["image_id", "n_fg", "n_blobs", "max_blob"]
-            )
+    def fn(px, img_id, lum):
+        mask = lum >= threshold
+        n_fg = int(mask.sum())
+        if n_fg == 0:
+            return []
+        h, w = mask.shape
+        big = h * w  # sentinel above any real label
+        lbl = np.where(mask, np.arange(big, dtype=np.int64).reshape(h, w), big)
+        while True:
+            # Jacobi sweep: every neighbor view is a shift of the CURRENT
+            # labels with the sentinel padded in, so the background
+            # (= sentinel) can never relay a label between two blobs it
+            # separates
+            up = np.full_like(lbl, big)
+            up[1:, :] = lbl[:-1, :]
+            dn = np.full_like(lbl, big)
+            dn[:-1, :] = lbl[1:, :]
+            lf = np.full_like(lbl, big)
+            lf[:, 1:] = lbl[:, :-1]
+            rt = np.full_like(lbl, big)
+            rt[:, :-1] = lbl[:, 1:]
+            nxt = np.where(mask, np.minimum.reduce([lbl, up, dn, lf, rt]), big)
+            if (nxt == lbl).all():
+                break
+            lbl = nxt
+        _, counts = np.unique(lbl[mask], return_counts=True)
+        return [(img_id, n_fg, counts.size, int(counts.max()))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, n_fg long, n_blobs long, max_blob long",
+    return per_image(
+        images, fn, "image_id string, n_fg long, n_blobs long, max_blob long", luma=True
     )
 
 
@@ -595,43 +488,32 @@ def augment_checksums(images: DataFrame) -> DataFrame:
 
     OPS = ("identity", "hflip", "vflip", "rot180", "crop")
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                h, w = px.shape[:2]
-                v = int(img_id[3:])
-                x0, x1 = sorted(((v * 40503) % w, (v * 69069) % w))
-                y0, y1 = sorted(((v * 40503) % h, (v * 69069) % h))
-                variants = {
-                    "identity": px,
-                    "hflip": px[:, ::-1],
-                    "vflip": px[::-1, :],
-                    "rot180": px[::-1, ::-1],
-                    "crop": px[y0 : y1 + 1, x0 : x1 + 1],
-                }
-                for op in OPS:
-                    a = variants[op]
-                    hh, ww = a.shape[:2]
-                    wgt = (
-                        3
-                        * (
-                            np.arange(hh)[:, None] * ww + np.arange(ww)[None, :]
-                        )[..., None]
-                        + np.arange(3)[None, None, :]
-                        + 1
-                    )
-                    recs.append(
-                        (img_id, op, hh * ww, int((a * wgt).sum()))
-                    )
-            yield pd.DataFrame(
-                recs, columns=["image_id", "op", "n_px", "chk"]
+    def fn(px, img_id):
+        px = px.astype(np.int64)
+        h, w = px.shape[:2]
+        v = int(img_id[3:])
+        x0, x1 = sorted(((v * 40503) % w, (v * 69069) % w))
+        y0, y1 = sorted(((v * 40503) % h, (v * 69069) % h))
+        variants = {
+            "identity": px,
+            "hflip": px[:, ::-1],
+            "vflip": px[::-1, :],
+            "rot180": px[::-1, ::-1],
+            "crop": px[y0 : y1 + 1, x0 : x1 + 1],
+        }
+        rows = []
+        for op in OPS:
+            a = variants[op]
+            hh, ww = a.shape[:2]
+            wgt = (
+                3 * (np.arange(hh)[:, None] * ww + np.arange(ww)[None, :])[..., None]
+                + np.arange(3)[None, None, :]
+                + 1
             )
+            rows.append((img_id, op, hh * ww, int((a * wgt).sum())))
+        return rows
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel, schema="image_id string, op string, n_px long, chk long"
-    )
+    return per_image(images, fn, "image_id string, op string, n_px long, chk long")
 
 
 def image_quality(
@@ -660,60 +542,42 @@ def image_quality(
     corpus filter stage.
     """
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                h, w = lum.shape
-                n = h * w
-                s1 = int(lum.sum())
-                s2 = int((lum * lum).sum())
-                lum_var = n * s2 - s1 * s1
-                spread = int(
-                    (np.abs(px[..., 0] - px[..., 1])
-                     + np.abs(px[..., 1] - px[..., 2])).sum()
-                )
-                color_milli = 1000 * spread // (2 * n)
-                if h >= 3 and w >= 3:
-                    gx = (
-                        (lum[:-2, 2:] + 2 * lum[1:-1, 2:] + lum[2:, 2:])
-                        - (lum[:-2, :-2] + 2 * lum[1:-1, :-2] + lum[2:, :-2])
-                    )
-                    gy = (
-                        (lum[2:, :-2] + 2 * lum[2:, 1:-1] + lum[2:, 2:])
-                        - (lum[:-2, :-2] + 2 * lum[:-2, 1:-1] + lum[:-2, 2:])
-                    )
-                    n_int = gx.size
-                    edges = int((np.abs(gx) + np.abs(gy) >= edge_threshold).sum())
-                    edge_milli = 1000 * edges // n_int
-                else:
-                    edge_milli = 0
-                keep = int(
-                    edge_milli >= min_edge_milli
-                    and lum_var >= min_var * n * n
-                    and color_milli >= min_color_milli
-                )
-                recs.append(
-                    (img_id, n, edge_milli, lum_var, color_milli, keep)
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=[
-                    "image_id", "n_px", "edge_milli", "lum_var",
-                    "color_milli", "keep",
-                ],
+    def fn(px, img_id, lum):
+        px = px.astype(np.int64)
+        h, w = lum.shape
+        n = h * w
+        s1 = int(lum.sum())
+        s2 = int((lum * lum).sum())
+        lum_var = n * s2 - s1 * s1
+        spread = int(
+            (np.abs(px[..., 0] - px[..., 1]) + np.abs(px[..., 1] - px[..., 2])).sum()
+        )
+        color_milli = 1000 * spread // (2 * n)
+        if h >= 3 and w >= 3:
+            gx = (
+                (lum[:-2, 2:] + 2 * lum[1:-1, 2:] + lum[2:, 2:])
+                - (lum[:-2, :-2] + 2 * lum[1:-1, :-2] + lum[2:, :-2])
             )
+            gy = (
+                (lum[2:, :-2] + 2 * lum[2:, 1:-1] + lum[2:, 2:])
+                - (lum[:-2, :-2] + 2 * lum[:-2, 1:-1] + lum[:-2, 2:])
+            )
+            edges = int((np.abs(gx) + np.abs(gy) >= edge_threshold).sum())
+            edge_milli = 1000 * edges // gx.size
+        else:
+            edge_milli = 0
+        keep = int(
+            edge_milli >= min_edge_milli
+            and lum_var >= min_var * n * n
+            and color_milli >= min_color_milli
+        )
+        return [(img_id, n, edge_milli, lum_var, color_milli, keep)]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema=(
-            "image_id string, n_px long, edge_milli long, lum_var long, "
-            "color_milli long, keep int"
-        ),
+    return per_image(
+        images, fn,
+        "image_id string, n_px long, edge_milli long, lum_var long, "
+        "color_milli long, keep int",
+        luma=True,
     )
 
 
@@ -736,29 +600,21 @@ def resize_nn(images: DataFrame, out_w: int = 16, out_h: int = 16) -> DataFrame:
     if out_w < 1 or out_h < 1:
         raise ValueError(f"output dims must be positive, got {out_w}x{out_h}")
 
-    def kernel(batches):
-        wts = (
-            3 * (np.arange(out_h)[:, None] * out_w + np.arange(out_w))[..., None]
-            + np.arange(3) + 1
-        ).astype(np.int64)
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                h, w = px.shape[:2]
-                idx_r = (np.arange(out_h) * h) // out_h
-                idx_c = (np.arange(out_w) * w) // out_w
-                rs = px[idx_r][:, idx_c]
-                chk = int((rs * wts).sum())
-                mean_milli = 1000 * int(rs.sum()) // (3 * out_w * out_h)
-                recs.append((img_id, out_w, out_h, chk, mean_milli))
-            yield pd.DataFrame(
-                recs, columns=["image_id", "out_w", "out_h", "chk", "mean_milli"]
-            )
+    wts = (
+        3 * (np.arange(out_h)[:, None] * out_w + np.arange(out_w))[..., None]
+        + np.arange(3) + 1
+    ).astype(np.int64)
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, out_w int, out_h int, chk long, mean_milli long",
+    def fn(px, img_id):
+        h, w = px.shape[:2]
+        idx_r = (np.arange(out_h) * h) // out_h
+        idx_c = (np.arange(out_w) * w) // out_w
+        rs = px[idx_r][:, idx_c].astype(np.int64)
+        mean_milli = 1000 * int(rs.sum()) // (3 * out_w * out_h)
+        return [(img_id, out_w, out_h, int((rs * wts).sum()), mean_milli)]
+
+    return per_image(
+        images, fn, "image_id string, out_w int, out_h int, chk long, mean_milli long"
     )
 
 
@@ -773,33 +629,16 @@ def image_exposure(
     image op uses. well_exposed = 1 iff both clip fractions are at most
     ``max_clip_milli``. One decode per image; 4 ints out per image."""
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                n = lum.size
-                under = int((lum < lo).sum())
-                over = int((lum > hi).sum())
-                um = 1000 * under // n
-                om = 1000 * over // n
-                recs.append(
-                    (img_id, n, um, om,
-                     int(um <= max_clip_milli and om <= max_clip_milli))
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["image_id", "n_px", "under_milli", "over_milli",
-                         "well_exposed"],
-            )
+    def fn(px, img_id, lum):
+        n = lum.size
+        um = 1000 * int((lum < lo).sum()) // n
+        om = 1000 * int((lum > hi).sum()) // n
+        return [(img_id, n, um, om, int(um <= max_clip_milli and om <= max_clip_milli))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, n_px long, under_milli long, over_milli long, "
-               "well_exposed int",
+    return per_image(
+        images, fn,
+        "image_id string, n_px long, under_milli long, over_milli long, well_exposed int",
+        luma=True,
     )
 
 
@@ -813,37 +652,26 @@ def letterbox_detect(images: DataFrame) -> DataFrame:
     boxed). A fully-flat frame counts h/h/w/w but is NOT boxed (it is the
     flat-image drop case, image_quality's job)."""
 
-    def kernel(batches):
-        def leading(uni):
-            nz = np.flatnonzero(~uni)
-            return int(nz[0]) if nz.size else int(uni.size), (
-                int(uni.size - 1 - nz[-1]) if nz.size else int(uni.size)
-            )
+    def leading(uni):
+        nz = np.flatnonzero(~uni)
+        return int(nz[0]) if nz.size else int(uni.size), (
+            int(uni.size - 1 - nz[-1]) if nz.size else int(uni.size)
+        )
 
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                h, w = px.shape[:2]
-                uni_r = (px == px[:, :1, :]).all(axis=(1, 2))
-                uni_c = (px == px[:1, :, :]).all(axis=(0, 2))
-                top, bottom = leading(uni_r)
-                left, right = leading(uni_c)
-                boxed = int(
-                    (0 < top and 0 < bottom and top + bottom < h)
-                    or (0 < left and 0 < right and left + right < w)
-                )
-                recs.append((img_id, top, bottom, left, right, boxed))
-            yield pd.DataFrame(
-                recs,
-                columns=["image_id", "top_rows", "bottom_rows", "left_cols",
-                         "right_cols", "boxed"],
-            )
+    def fn(px, img_id):
+        h, w = px.shape[:2]
+        top, bottom = leading((px == px[:, :1, :]).all(axis=(1, 2)))
+        left, right = leading((px == px[:1, :, :]).all(axis=(0, 2)))
+        boxed = int(
+            (0 < top and 0 < bottom and top + bottom < h)
+            or (0 < left and 0 < right and left + right < w)
+        )
+        return [(img_id, top, bottom, left, right, boxed)]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, top_rows long, bottom_rows long, "
-               "left_cols long, right_cols long, boxed int",
+    return per_image(
+        images, fn,
+        "image_id string, top_rows long, bottom_rows long, "
+        "left_cols long, right_cols long, boxed int",
     )
 
 
@@ -864,34 +692,22 @@ def mip_pyramid(images: DataFrame, levels: int = 2) -> DataFrame:
     if levels < 0:
         raise ValueError(f"levels must be >= 0, got {levels}")
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                cur = ic.decode(buf, fmt).astype(np.int64)
-                for lvl in range(levels + 1):
-                    h, w = cur.shape[:2]
-                    wts = (
-                        3 * (np.arange(h)[:, None] * w + np.arange(w))[..., None]
-                        + np.arange(3) + 1
-                    )
-                    recs.append(
-                        (img_id, lvl, w, h, int(cur.sum()), int((cur * wts).sum()))
-                    )
-                    if lvl == levels or h < 2 or w < 2:
-                        break
-                    he, we = (h // 2) * 2, (w // 2) * 2
-                    q = cur[:he, :we]
-                    cur = (
-                        q[0::2, 0::2] + q[0::2, 1::2] + q[1::2, 0::2] + q[1::2, 1::2]
-                    ) // 4
-            yield pd.DataFrame(
-                recs, columns=["image_id", "level", "w", "h", "px_sum", "chk"]
-            )
+    def fn(px, img_id):
+        cur = px.astype(np.int64)
+        rows = []
+        for lvl in range(levels + 1):
+            h, w = cur.shape[:2]
+            wts = 3 * (np.arange(h)[:, None] * w + np.arange(w))[..., None] + np.arange(3) + 1
+            rows.append((img_id, lvl, w, h, int(cur.sum()), int((cur * wts).sum())))
+            if lvl == levels or h < 2 or w < 2:
+                break
+            he, we = (h // 2) * 2, (w // 2) * 2
+            q = cur[:he, :we]
+            cur = (q[0::2, 0::2] + q[0::2, 1::2] + q[1::2, 0::2] + q[1::2, 1::2]) // 4
+        return rows
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, level int, w int, h int, px_sum long, chk long",
+    return per_image(
+        images, fn, "image_id string, level int, w int, h int, px_sum long, chk long"
     )
 
 
@@ -950,28 +766,16 @@ def mosaic_pack(
     )
 
     canvas = 2 * side
+    rr = np.arange(side)
 
-    def kernel(batches):
-        rr = np.arange(side)
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt, gid, quad in zip(
-                pdf[id_col], pdf["bytes"], pdf["fmt"], pdf["group_id"], pdf["quad"]
-            ):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                ih, iw = px.shape[:2]
-                rs = px[(rr * ih) // side][:, (rr * iw) // side]
-                dr, dc = side * (quad // 2), side * (quad % 2)
-                wts = (
-                    3 * ((rr[:, None] + dr) * canvas + rr + dc)[..., None]
-                    + np.arange(3) + 1
-                )
-                recs.append((int(gid), int((rs * wts).sum()), int(rs.sum())))
-            yield pd.DataFrame(recs, columns=["group_id", "chk", "px_sum"])
+    def fn(px, gid, quad):
+        ih, iw = px.shape[:2]
+        rs = px[(rr * ih) // side][:, (rr * iw) // side].astype(np.int64)
+        dr, dc = side * (quad // 2), side * (quad % 2)
+        wts = 3 * ((rr[:, None] + dr) * canvas + rr + dc)[..., None] + np.arange(3) + 1
+        return [(gid, int((rs * wts).sum()), int(rs.sum()))]
 
-    parts = ranked.mapInPandas(
-        kernel, schema="group_id long, chk long, px_sum long"
-    )
+    parts = per_image(ranked, fn, "group_id long, chk long, px_sum long", cols=("group_id", "quad"))
     return (
         parts.groupBy("group_id")
         .agg(
@@ -1257,36 +1061,22 @@ def orientation_hist(images: DataFrame) -> DataFrame:
     ever shuffles. Images without a 3x3 interior emit nothing.
     """
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                h, w = lum.shape
-                if h < 3 or w < 3:
-                    continue
-                gx = lum[1:-1, 2:] - lum[1:-1, :-2]
-                gy = lum[2:, 1:-1] - lum[:-2, 1:-1]
-                nz = (gx != 0) | (gy != 0)
-                if not nz.any():
-                    continue
-                b = (
-                    4 * (gy < 0).astype(np.int64)
-                    + 2 * (gx < 0).astype(np.int64)
-                    + (np.abs(gy) > np.abs(gx)).astype(np.int64)
-                )[nz]
-                bins, counts = np.unique(b, return_counts=True)
-                recs.extend(
-                    (img_id, int(bb), int(cc)) for bb, cc in zip(bins, counts)
-                )
-            yield pd.DataFrame(recs, columns=["image_id", "bin", "n_px"])
+    def fn(px, img_id, lum):
+        h, w = lum.shape
+        if h < 3 or w < 3:
+            return []
+        gx = lum[1:-1, 2:] - lum[1:-1, :-2]
+        gy = lum[2:, 1:-1] - lum[:-2, 1:-1]
+        nz = (gx != 0) | (gy != 0)
+        b = (
+            4 * (gy < 0).astype(np.int64)
+            + 2 * (gx < 0).astype(np.int64)
+            + (np.abs(gy) > np.abs(gx)).astype(np.int64)
+        )[nz]
+        bins, counts = np.unique(b, return_counts=True)
+        return zip([img_id] * bins.size, bins.tolist(), counts.tolist())
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel, schema="image_id string, bin long, n_px long"
-    )
+    return per_image(images, fn, "image_id string, bin long, n_px long", luma=True)
 
 
 def image_coverage_gap(
@@ -1539,47 +1329,32 @@ def blur_scores(images: DataFrame, min_var: int = 1000) -> DataFrame:
 
     Magnitudes: |L| <= 1020, L^2 <= ~1.04e6, so int64 holds to ~8.8e12
     interior pixels per image — every real frame. One decode per image;
-    5 ints out (mapInPandas, Arrow-batched)."""
+    5 ints out (one ``per_image`` Arrow pass)."""
     if min_var < 0:
         raise ValueError(f"min_var must be >= 0, got {min_var}")
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                h, w = lum.shape
-                if h < 3 or w < 3:
-                    recs.append((img_id, 0, 0, 0, 0, 0))
-                    continue
-                lap = (
-                    4 * lum[1:-1, 1:-1]
-                    - lum[:-2, 1:-1]
-                    - lum[2:, 1:-1]
-                    - lum[1:-1, :-2]
-                    - lum[1:-1, 2:]
-                )
-                n = int(lap.size)
-                s1 = int(lap.sum())
-                s2 = int((lap * lap).sum())
-                var_num = n * s2 - s1 * s1
-                recs.append(
-                    (img_id, n, s1, s2, var_num,
-                     int(var_num >= min_var * n * n))
-                )
-            yield pd.DataFrame(
-                recs,
-                columns=["image_id", "n_int", "sum_lap", "sum_lap2",
-                         "var_num", "is_sharp"],
-            )
+    def fn(px, img_id, lum):
+        h, w = lum.shape
+        if h < 3 or w < 3:
+            return [(img_id, 0, 0, 0, 0, 0)]
+        lap = (
+            4 * lum[1:-1, 1:-1]
+            - lum[:-2, 1:-1]
+            - lum[2:, 1:-1]
+            - lum[1:-1, :-2]
+            - lum[1:-1, 2:]
+        )
+        n = lap.size
+        s1 = int(lap.sum())
+        s2 = int((lap * lap).sum())
+        var_num = n * s2 - s1 * s1
+        return [(img_id, n, s1, s2, var_num, int(var_num >= min_var * n * n))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, n_int long, sum_lap long, sum_lap2 long, "
-               "var_num long, is_sharp int",
+    return per_image(
+        images, fn,
+        "image_id string, n_int long, sum_lap long, sum_lap2 long, "
+        "var_num long, is_sharp int",
+        luma=True,
     )
 
 
@@ -1600,41 +1375,32 @@ def banding_scores(images: DataFrame, lags: tuple = (1, 2, 3)) -> DataFrame:
     255, so every term stays int64 to h ~ 2e5 rows. Returns one row per
     (image_id, lag_k): (image_id, lag_k, n_terms, sum_prod, head_sum,
     tail_sum, cov_num); frames with h <= k emit n_terms = 0 rows. One
-    decode per image (mapInPandas, Arrow-batched)."""
+    decode per image (one ``per_image`` Arrow pass)."""
     for k in lags:
         if k < 1:
             raise ValueError(f"lags must be >= 1, got {k}")
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                h, w = lum.shape
-                rm = lum.sum(axis=1) // w
-                for k in lags:
-                    if h <= k:
-                        recs.append((img_id, k, 0, 0, 0, 0, 0))
-                        continue
-                    head, tail = rm[:-k], rm[k:]
-                    nt = h - k
-                    sp = int((head * tail).sum())
-                    hs = int(head.sum())
-                    ts = int(tail.sum())
-                    recs.append((img_id, k, nt, sp, hs, ts, nt * sp - hs * ts))
-            yield pd.DataFrame(
-                recs,
-                columns=["image_id", "lag_k", "n_terms", "sum_prod",
-                         "head_sum", "tail_sum", "cov_num"],
-            )
+    def fn(px, img_id, lum):
+        h, w = lum.shape
+        rm = lum.sum(axis=1) // w
+        rows = []
+        for k in lags:
+            if h <= k:
+                rows.append((img_id, k, 0, 0, 0, 0, 0))
+                continue
+            head, tail = rm[:-k], rm[k:]
+            nt = h - k
+            sp = int((head * tail).sum())
+            hs = int(head.sum())
+            ts = int(tail.sum())
+            rows.append((img_id, k, nt, sp, hs, ts, nt * sp - hs * ts))
+        return rows
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, lag_k int, n_terms long, sum_prod long, "
-               "head_sum long, tail_sum long, cov_num long",
+    return per_image(
+        images, fn,
+        "image_id string, lag_k int, n_terms long, sum_prod long, "
+        "head_sum long, tail_sum long, cov_num long",
+        luma=True,
     )
 
 
@@ -1653,46 +1419,31 @@ def vignette_scores(images: DataFrame, max_milli: int = 800) -> DataFrame:
     misses); ``is_vignetted`` = 1 iff vign_milli <= max_milli, decided
     in integers. A zero-luminance center (sum_center = 0) reports NULL
     ratio and is_vignetted = 0, as does an image too small to have a
-    border (h < 4 or w < 4). One decode per image (mapInPandas)."""
+    border (h < 4 or w < 4). One decode per image (``per_image``)."""
     if not 0 <= max_milli <= 1000:
         raise ValueError(f"max_milli must be in [0, 1000], got {max_milli}")
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                h, w = lum.shape
-                if h < 4 or w < 4:
-                    recs.append((img_id, 0, 0, 0, 0, None, 0))
-                    continue
-                r0, r1 = h // 4, h - h // 4
-                c0, c1 = w // 4, w - w // 4
-                center = lum[r0:r1, c0:c1]
-                nc = int(center.size)
-                sc = int(center.sum())
-                nb = int(lum.size - nc)
-                sb = int(lum.sum()) - sc
-                if sc == 0 or nb == 0:
-                    recs.append((img_id, nb, sb, nc, sc, None, 0))
-                    continue
-                vm = 1000 * sb * nc // (sc * nb)
-                recs.append((img_id, nb, sb, nc, sc, vm,
-                             int(vm <= max_milli)))
-            yield pd.DataFrame(
-                recs,
-                columns=["image_id", "n_border", "sum_border", "n_center",
-                         "sum_center", "vign_milli", "is_vignetted"],
-            )
+    def fn(px, img_id, lum):
+        h, w = lum.shape
+        if h < 4 or w < 4:
+            return [(img_id, 0, 0, 0, 0, None, 0)]
+        r0, r1 = h // 4, h - h // 4
+        c0, c1 = w // 4, w - w // 4
+        center = lum[r0:r1, c0:c1]
+        nc = center.size
+        sc = int(center.sum())
+        nb = lum.size - nc
+        sb = int(lum.sum()) - sc
+        if sc == 0 or nb == 0:
+            return [(img_id, nb, sb, nc, sc, None, 0)]
+        vm = 1000 * sb * nc // (sc * nb)
+        return [(img_id, nb, sb, nc, sc, vm, int(vm <= max_milli))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, n_border long, sum_border long, "
-               "n_center long, sum_center long, vign_milli long, "
-               "is_vignetted int",
+    return per_image(
+        images, fn,
+        "image_id string, n_border long, sum_border long, "
+        "n_center long, sum_center long, vign_milli long, is_vignetted int",
+        luma=True,
     )
 
 
@@ -1752,26 +1503,12 @@ def image_emd_outliers(images: DataFrame) -> DataFrame:
     rollup broadcast back; one final per-image rollup. Nothing scans
     pixels twice."""
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                cum = np.cumsum(np.bincount(lum.ravel(), minlength=256))
-                n = int(lum.size)
-                recs.extend(
-                    (img_id, b, int(cum[b]), n) for b in range(256)
-                )
-            yield pd.DataFrame(
-                recs, columns=["image_id", "bin", "cum_i", "n_px"]
-            )
+    def fn(px, img_id, lum):
+        cum = np.cumsum(np.bincount(lum.ravel(), minlength=256))
+        return zip([img_id] * 256, range(256), cum.tolist(), [lum.size] * 256)
 
-    cums = images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, bin int, cum_i long, n_px long",
+    cums = per_image(
+        images, fn, "image_id string, bin int, cum_i long, n_px long", luma=True
     ).localCheckpoint(eager=True)  # one decode feeds corpus AND per-image
     corpus = cums.groupBy("bin").agg(F.sum("cum_i").alias("ccum"))
     total = cums.filter(F.col("bin") == 255).agg(
@@ -1805,32 +1542,20 @@ def symmetry_scores(images: DataFrame, max_milli: int = 50) -> DataFrame:
     constant factor), normalized to exact milli of the maximum:
     asym_milli = (1000 * sum) div (255 * n_px). ``is_symmetric`` = 1
     iff asym_milli <= max_milli. Returns (image_id, n_px, sum_absdiff,
-    asym_milli, is_symmetric). One decode per image (mapInPandas)."""
+    asym_milli, is_symmetric). One decode per image (``per_image``)."""
     if not 0 <= max_milli <= 1000:
         raise ValueError(f"max_milli must be in [0, 1000], got {max_milli}")
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                n = int(lum.size)
-                sad = int(np.abs(lum - lum[:, ::-1]).sum())
-                am = 1000 * sad // (255 * n)
-                recs.append((img_id, n, sad, am, int(am <= max_milli)))
-            yield pd.DataFrame(
-                recs,
-                columns=["image_id", "n_px", "sum_absdiff", "asym_milli",
-                         "is_symmetric"],
-            )
+    def fn(px, img_id, lum):
+        n = lum.size
+        sad = int(np.abs(lum - lum[:, ::-1]).sum())
+        am = 1000 * sad // (255 * n)
+        return [(img_id, n, sad, am, int(am <= max_milli))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, n_px long, sum_absdiff long, "
-               "asym_milli long, is_symmetric int",
+    return per_image(
+        images, fn,
+        "image_id string, n_px long, sum_absdiff long, asym_milli long, is_symmetric int",
+        luma=True,
     )
 
 
@@ -1843,36 +1568,23 @@ def color_cast_scores(images: DataFrame, max_milli: int = 1200) -> DataFrame:
     ``is_neutral`` = 1 iff cast_milli <= max_milli; a zero-valued
     weakest channel (min_sum = 0) reports NULL ratio and is_neutral 0.
     Returns (image_id, n_px, sum_r, sum_g, sum_b, cast_milli,
-    is_neutral). One decode per image (mapInPandas)."""
+    is_neutral). One decode per image (``per_image``)."""
     if max_milli < 1000:
         raise ValueError(f"max_milli must be >= 1000, got {max_milli}")
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                n = int(px.shape[0] * px.shape[1])
-                sr = int(px[..., 0].sum())
-                sg = int(px[..., 1].sum())
-                sb = int(px[..., 2].sum())
-                mn, mx = min(sr, sg, sb), max(sr, sg, sb)
-                if mn == 0:
-                    recs.append((img_id, n, sr, sg, sb, None, 0))
-                    continue
-                cm = 1000 * mx // mn
-                recs.append((img_id, n, sr, sg, sb, cm,
-                             int(cm <= max_milli)))
-            yield pd.DataFrame(
-                recs,
-                columns=["image_id", "n_px", "sum_r", "sum_g", "sum_b",
-                         "cast_milli", "is_neutral"],
-            )
+    def fn(px, img_id):
+        n = px.shape[0] * px.shape[1]
+        sr, sg, sb = (int(s) for s in px.sum(axis=(0, 1), dtype=np.int64))
+        mn, mx = min(sr, sg, sb), max(sr, sg, sb)
+        if mn == 0:
+            return [(img_id, n, sr, sg, sb, None, 0)]
+        cm = 1000 * mx // mn
+        return [(img_id, n, sr, sg, sb, cm, int(cm <= max_milli))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, n_px long, sum_r long, sum_g long, "
-               "sum_b long, cast_milli long, is_neutral int",
+    return per_image(
+        images, fn,
+        "image_id string, n_px long, sum_r long, sum_g long, "
+        "sum_b long, cast_milli long, is_neutral int",
     )
 
 
@@ -1891,39 +1603,23 @@ def image_bimodality(images: DataFrame) -> DataFrame:
     with bc_milli NULL for a flat frame (M2 = 0). Arbitrary-precision
     Python ints in the kernel; the HUGEINT oracle holds to ~2000 px
     per frame at worst-case skew — the fixture's 32x32 sits far below.
-    One decode per image (mapInPandas)."""
+    One decode per image (``per_image``)."""
 
-    def kernel(batches):
-        for pdf in batches:
-            recs = []
-            for img_id, buf, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = ic.decode(buf, fmt).astype(np.int64)
-                lum = (
-                    2126 * px[..., 0] + 7152 * px[..., 1] + 722 * px[..., 2]
-                ) // 10000
-                y = lum.ravel()
-                n = int(y.size)
-                s1 = int(y.sum())
-                s2 = int((y * y).sum())
-                y3 = y * y * y
-                s3 = int(y3.sum())
-                s4 = int((y3 * y).sum())
-                m2 = n * s2 - s1 * s1
-                m3 = n * n * s3 - 3 * n * s1 * s2 + 2 * s1 ** 3
-                m4 = (
-                    n ** 3 * s4 - 4 * n * n * s1 * s3
-                    + 6 * n * s1 * s1 * s2 - 3 * s1 ** 4
-                )
-                if m2 == 0:
-                    recs.append((img_id, n, 0, None))
-                    continue
-                bc = 1000 * (m3 * m3 + m2 ** 3) // (m2 * m4)
-                recs.append((img_id, n, m2, int(bc)))
-            yield pd.DataFrame(
-                recs, columns=["image_id", "n_px", "m2n", "bc_milli"]
-            )
+    def fn(px, img_id, lum):
+        y = lum.ravel()
+        n = y.size
+        s1 = int(y.sum())
+        s2 = int((y * y).sum())
+        y3 = y * y * y
+        s3 = int(y3.sum())
+        s4 = int((y3 * y).sum())
+        m2 = n * s2 - s1 * s1
+        m3 = n * n * s3 - 3 * n * s1 * s2 + 2 * s1 ** 3
+        m4 = n ** 3 * s4 - 4 * n * n * s1 * s3 + 6 * n * s1 * s1 * s2 - 3 * s1 ** 4
+        if m2 == 0:
+            return [(img_id, n, 0, None)]
+        return [(img_id, n, m2, 1000 * (m3 * m3 + m2 ** 3) // (m2 * m4))]
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        kernel,
-        schema="image_id string, n_px long, m2n long, bc_milli long",
+    return per_image(
+        images, fn, "image_id string, n_px long, m2n long, bc_milli long", luma=True
     )

@@ -358,9 +358,7 @@ def run_ingest(
     N-vs-4N scaling measurement."""
     import time
 
-    import pandas as pd
-
-    from ..functions import imagecodec as ic
+    from ..operators.images import _verify, per_image
     from ..sources.snapshots import SnapshotTable, write_partitioned
 
     t0 = time.time()
@@ -368,31 +366,15 @@ def run_ingest(
     polygons = spark.read.parquet(f"{synth_dir}/polygons.parquet")
     images = replicate_images(images, replicate)
 
-    def decode_verify(batches):
-        for pdf in batches:
-            ok = []
-            phd = []
-            for buf, fmt, w, h, ph in zip(
-                pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"], pdf["phash"]
-            ):
-                px = ic.decode(buf, fmt)
-                ok.append(px.shape[0] == h and px.shape[1] == w)
-                phd.append(ic.phash_hamming(int(ph), ic.phash64(px)))
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "caption": pdf["caption"],
-                    "lat": pdf["lat"],
-                    "lon": pdf["lon"],
-                    "decode_ok": ok,
-                    "phash_dist": phd,
-                }
-            )
+    def decode_verify(px, img_id, caption, lat, lon, w, h, ph):
+        return [(img_id, caption, lat, lon, *_verify(px, w, h, ph))]
 
-    decoded = images.mapInPandas(
+    decoded = per_image(
+        images,
         decode_verify,
-        schema="image_id string, caption string, lat double, lon double, "
+        "image_id string, caption string, lat double, lon double, "
         "decode_ok boolean, phash_dist int",
+        cols=("image_id", "caption", "lat", "lon", "w", "h", "phash"),
     )
     # observable metrics: the engine's analogue of the reference's
     # n_edits/total_edits counters (src/fill_empty_name.py:54-57) — counted

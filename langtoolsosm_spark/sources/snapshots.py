@@ -18,13 +18,14 @@ time-travel by snapshot id, append/overwrite), engine-owned.
 
 Like an Iceberg table's metadata, a snapshot may carry the Spark schema of
 the data files its commit added (``"schema"``: a ``StructType.json()``
-string; ``write_partitioned`` and ``compact_table`` record it). Reads walk
-the chain once, and when every file they select was added by a commit that
-recorded the SAME schema, they hand it to ``spark.read.schema(...)``, so
-opening the table runs no schema-inference job. Otherwise (manifests
-without the key — older tables, direct ``commit`` calls — or files from
-commits with different schemas) they fall back to ``spark.read.parquet``'s
-inference, unchanged.
+string in the all-nullable form Spark reads parquet with, so a compaction
+and a later append of the same columns agree; ``write_partitioned`` and
+``compact_table`` record it). Reads walk the chain once, and when every
+file they select was added by a commit that recorded the SAME schema, they
+hand it to ``spark.read.schema(...)``, so opening the table runs no
+schema-inference job. Otherwise (manifests without the key — older
+tables, direct ``commit`` calls — or files from commits with different
+schemas) they fall back to ``spark.read.parquet``'s inference, unchanged.
 """
 
 from __future__ import annotations
@@ -44,6 +45,23 @@ def _shared_schema(pairs) -> str | None:
     return schemas.pop() if len(schemas) == 1 else None
 
 
+def _nullable(t):
+    """A ``DataType.jsonValue()`` with every struct field, array element
+    and map key/value made nullable, recursively (Spark's ``asNullable``)."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        return {**t, "fields": [
+            {**f, "nullable": True, "type": _nullable(f["type"])} for f in t["fields"]
+        ]}
+    if t["type"] == "array":
+        return {**t, "elementType": _nullable(t["elementType"]), "containsNull": True}
+    if t["type"] == "map":
+        return {**t, "keyType": _nullable(t["keyType"]),
+                "valueType": _nullable(t["valueType"]), "valueContainsNull": True}
+    return t
+
+
 class SnapshotTable:
     """A directory of immutable parquet files + snapshots/NNNNNN.json."""
 
@@ -56,17 +74,22 @@ class SnapshotTable:
 
     # -- snapshot chain -----------------------------------------------------
 
+    def _load(self, fn: str) -> dict:
+        with open(os.path.join(self.snap_dir, fn)) as f:
+            return json.load(f)
+
+    def _manifests(self) -> list[str]:
+        return sorted(fn for fn in os.listdir(self.snap_dir) if fn.endswith(".json"))
+
     def snapshots(self) -> list[dict]:
-        out = []
-        for fn in sorted(os.listdir(self.snap_dir)):
-            if fn.endswith(".json"):
-                with open(os.path.join(self.snap_dir, fn)) as f:
-                    out.append(json.load(f))
-        return out
+        return [self._load(fn) for fn in self._manifests()]
 
     def current(self) -> dict | None:
-        snaps = self.snapshots()
-        return snaps[-1] if snaps else None
+        """The newest snapshot. Manifest names are zero-padded snapshot
+        ids, so it is the last one in sorted order, and only that manifest
+        is parsed: a commit costs one read, not one per snapshot."""
+        names = self._manifests()
+        return self._load(names[-1]) if names else None
 
     def committed_partitions(self) -> set[int]:
         """Union of partition ids recorded across the live snapshot chain."""
@@ -117,9 +140,12 @@ class SnapshotTable:
         {partition_id, rows, duration_ms}. summary: changeset-style
         metadata tags (comment / source / created_by ...). schema: the
         ``StructType.json()`` of ``files``, stored as the snapshot's
-        ``"schema"`` key; reads over files whose commits all recorded the
-        same schema use it instead of inferring one. Omit it (the key is
-        then absent) when the files' schema is not known exactly.
+        ``"schema"`` key in its nullable form (``_nullable``: the form
+        Spark reads parquet files with, so two writers of the same columns
+        record the same string whatever their frames' nullability); reads
+        over files whose commits all recorded the same schema use it
+        instead of inferring one. Omit it (the key is then absent) when
+        the files' schema is not known exactly.
         """
         prev = self.current()
         sid = (prev["snapshot_id"] + 1) if prev else 1
@@ -134,7 +160,7 @@ class SnapshotTable:
             "total_rows": sum(r.get("rows", 0) for r in lineage),
         }
         if schema is not None:
-            snap["schema"] = schema
+            snap["schema"] = StructType.fromJson(_nullable(json.loads(schema))).json()
         tmp = os.path.join(self.snap_dir, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
             json.dump(snap, f)

@@ -8,9 +8,19 @@ as (a) deterministic batch-with-checkpoint commits (sources/snapshots.py)
 and (b) real Structured Streaming for continuous ingest: files ->
 transformations -> ``foreachBatch`` snapshot commits keyed by epoch id, so
 replayed epochs after a crash are idempotent (exactly-once sink).
+
+Every ``run_*_once`` driver is one ``drain_once`` call: the driver gives
+the streaming plan and the batch-side finish over the sink, and
+``drain_once`` opens the source (one file per trigger), runs the query to
+completion on a memory sink (or a parquet sink where the driver keeps
+state across runs), builds the result, and drops the memory sink's temp
+view. The sink's rows then live only as long as the returned frame, not
+until the session ends.
 """
 
 from __future__ import annotations
+
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -32,6 +42,48 @@ def stream_images(
     )
 
 
+def drain_once(
+    spark: SparkSession,
+    src_dir: str,
+    checkpoint: str,
+    build,
+    mode: str,
+    finish,
+    out_dir: str | None = None,
+) -> DataFrame:
+    """Run the streaming plan ``build(stream)`` over every file staged in
+    ``src_dir`` (``stream_images``, one file per trigger, availableNow) in
+    output ``mode``, wait for it, and return ``finish(sink)``.
+
+    Without ``out_dir`` the query writes to a memory sink under a fresh
+    name; ``finish`` gets that name, builds the result from the sink's
+    temp view, and the view is dropped when ``finish`` returns (or the
+    query fails). The returned frame keeps the rows it needs; nothing else
+    holds them. With ``out_dir`` the query writes a parquet sink there —
+    the memory sink cannot recover a checkpoint, the file sink can, so
+    repeated runs continue the same state — and ``finish`` gets
+    ``out_dir``."""
+    writer = (
+        build(stream_images(spark, src_dir, max_files_per_trigger=1))
+        .writeStream.outputMode(mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+    )
+    if out_dir is None:
+        sink = f"drain_{uuid.uuid4().hex}"
+        writer = writer.format("memory").queryName(sink)
+    else:
+        sink = out_dir
+        writer = writer.format("parquet").option("path", out_dir)
+    q = writer.start()
+    try:
+        q.awaitTermination()
+        return finish(sink)
+    finally:
+        if out_dir is None:
+            spark.catalog.dropTempView(sink)
+
+
 def stream_tile_counts(stream: DataFrame, res: int = 6) -> DataFrame:
     """Continuous per-tile counts (stateful aggregation, complete mode)."""
     return assign_tiles(stream, res=res).groupBy("tile").agg(
@@ -44,17 +96,11 @@ def run_tile_counts_once(
 ) -> DataFrame:
     """Drive the streaming agg to completion on available data (memory
     sink, availableNow trigger) and return the result table."""
-    q = (
-        stream_tile_counts(stream_images(spark, images_dir), res=res)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("tile_counts_stream")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return drain_once(
+        spark, images_dir, checkpoint,
+        lambda st: stream_tile_counts(st, res=res), "complete",
+        lambda v: spark.sql(f"SELECT tile, n_images FROM {v}"),
     )
-    q.awaitTermination()
-    return spark.sql("SELECT tile, n_images FROM tile_counts_stream")
 
 
 def stream_windowed_counts(
@@ -94,28 +140,18 @@ def run_windowed_counts_once(
     — the memory sink can't recover a checkpoint, the file sink can, so
     repeated runs continue the same watermark — and return all rows
     emitted so far."""
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(events_dir)
+    return drain_once(
+        spark, events_dir, checkpoint,
         # NTZ parquet timestamps are not a valid event-time column
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+        lambda st: stream_windowed_counts(
+            st.withColumn("ts", F.col("ts").cast("timestamp")), window_dur, watermark
+        ),
+        "append",
+        lambda d: spark.read.schema(
+            "win_start timestamp, win_end timestamp, event_type string, n long"
+        ).parquet(d),
+        out_dir=out_dir,
     )
-    q = (
-        stream_windowed_counts(stream, window_dur, watermark)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.schema(
-        "win_start timestamp, win_end timestamp, event_type string, n long"
-    ).parquet(out_dir)
 
 
 def stream_dedup_exact(
@@ -148,26 +184,14 @@ def run_dedup_exact_once(
     """Drive the streaming dedup over available files into a parquet sink
     (append mode; checkpoint-recoverable) and return everything emitted
     so far."""
-    schema = spark.read.parquet(events_dir).schema
     keys = key_cols or ["user_id", "event_type"]
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(events_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    return drain_once(
+        spark, events_dir, checkpoint,
+        lambda st: stream_dedup_exact(
+            st.withColumn("ts", F.col("ts").cast("timestamp")), keys, "ts", watermark
+        ),
+        "append", spark.read.parquet, out_dir=out_dir,
     )
-    q = (
-        stream_dedup_exact(stream, keys, "ts", watermark)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
 
 
 def stream_tile_distinct(stream: DataFrame, res: int = 6, id_col: str = "image_id") -> DataFrame:
@@ -234,28 +258,18 @@ def run_tile_distinct_once(
     """Drive the stateful distinct counter over available data (one file
     per trigger so state actually carries across micro-batches) and return
     the LATEST update per tile."""
-    q = (
-        stream_tile_distinct(
-            stream_images(spark, images_dir, max_files_per_trigger=1).select(
-                "image_id", "lat", "lon"
-            ),
-            res=res,
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("tile_distinct_stream")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        """
-        SELECT tile, total_rows, est_milli FROM (
-          SELECT *, row_number() OVER (PARTITION BY tile ORDER BY total_rows DESC) AS rn
-          FROM tile_distinct_stream
-        ) WHERE rn = 1
-        """
+    return drain_once(
+        spark, images_dir, checkpoint,
+        lambda st: stream_tile_distinct(st.select("image_id", "lat", "lon"), res=res),
+        "update",
+        lambda v: spark.sql(
+            f"""
+            SELECT tile, total_rows, est_milli FROM (
+              SELECT *, row_number() OVER (PARTITION BY tile ORDER BY total_rows DESC) AS rn
+              FROM {v}
+            ) WHERE rn = 1
+            """
+        ),
     )
 
 
@@ -418,26 +432,13 @@ def run_heatmap_stream_once(
     rollup runs batch-side over the memory sink — the streaming part is
     exactly the stateful histogram a live deployment would run; batch
     parity with ``heatmap_stats`` is the oracle contract."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    q = (
-        stream_pixel_histogram(st, res=res, tile_px=tile_px)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("heatmap_stream")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     from ..operators.heatmap import tile_rollup
 
-    return tile_rollup(spark.table("heatmap_stream"))
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_pixel_histogram(st, res=res, tile_px=tile_px), "complete",
+        lambda v: tile_rollup(spark.table(v)),
+    )
 
 
 def stream_od_transitions(
@@ -656,29 +657,18 @@ def run_od_late_stream_once(
     (availableNow, one file per trigger) and roll the emitted
     transitions up to the batch ``od_flows`` shape — same downstream
     rollup rationale as ``run_od_stream_once``."""
-    schema = spark.read.parquet(events_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(events_dir)
-    )
-    name = f"od_late_stream_{abs(hash(events_dir)) % 10**8}"
-    q = (
-        stream_od_transitions_late(st, res=res, lateness_s=lateness_s)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    t = spark.table(name)
-    ent = t.columns[0]  # the entity key column (not hard-coded 'user_id')
-    return t.groupBy("from_tile", "to_tile").agg(
-        F.count(F.lit(1)).alias("n_trips"),
-        F.countDistinct(ent).alias("n_entities"),
+    def finish(v):
+        t = spark.table(v)
+        ent = t.columns[0]  # the entity key column (not hard-coded 'user_id')
+        return t.groupBy("from_tile", "to_tile").agg(
+            F.count(F.lit(1)).alias("n_trips"),
+            F.countDistinct(ent).alias("n_entities"),
+        )
+
+    return drain_once(
+        spark, events_dir, checkpoint,
+        lambda st: stream_od_transitions_late(st, res=res, lateness_s=lateness_s),
+        "append", finish,
     )
 
 
@@ -692,31 +682,13 @@ def run_od_stream_once(
     aggregation after a stateful append source would need its own
     output-mode gymnastics and is not what a deployment does (transitions
     land in a log; flows are a downstream rollup)."""
-    schema = spark.read.parquet(events_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(events_dir)
-    )
-    name = f"od_stream_{abs(hash(events_dir)) % 10**8}"
-    q = (
-        stream_od_transitions(st, res=res)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.table(name)
-        .groupBy("from_tile", "to_tile")
-        .agg(
+    return drain_once(
+        spark, events_dir, checkpoint,
+        lambda st: stream_od_transitions(st, res=res), "append",
+        lambda v: spark.table(v).groupBy("from_tile", "to_tile").agg(
             F.count(F.lit(1)).alias("n_trips"),
             F.countDistinct("user_id").alias("n_entities"),
-        )
+        ),
     )
 
 
@@ -823,25 +795,10 @@ def run_geofence_stream_once(
     """Drive the streaming geofence detector over all staged files
     (availableNow, one file per trigger) and return the emitted
     transition log from the memory sink."""
-    schema = spark.read.parquet(events_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(events_dir)
+    return drain_once(
+        spark, events_dir, checkpoint,
+        lambda st: stream_geofence_transitions(st, rings), "append", spark.table,
     )
-    name = f"gf_stream_{abs(hash(events_dir)) % 10**8}"
-    q = (
-        stream_geofence_transitions(st, rings)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def stream_decayed_tiles(
@@ -870,26 +827,13 @@ def run_decayed_stream_once(
     """Drive the streaming decayed raster over all staged files
     (availableNow, complete mode, memory sink) and return the final
     state; batch parity with ``decayed_tiles`` is the oracle contract."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    q = (
-        stream_decayed_tiles(
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_decayed_tiles(
             st, res=res, anchor_epoch=anchor_epoch, halflife_s=halflife_s
-        )
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("decay_stream")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "complete", spark.table,
     )
-    q.awaitTermination()
-    return spark.table("decay_stream")
 
 
 def stream_tile_cap(
@@ -970,32 +914,19 @@ def run_tile_cap_stream_once(
     """Drive the streaming cap reservoir over all staged files (one per
     trigger) and flatten each tile's FINAL state to (point_id, tile,
     rk) — the exact schema and values of batch ``tile_cap_sample``."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    q = (
-        stream_tile_cap(st, res=res, cap=cap)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("tile_cap_stream")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        """
-        SELECT point_id, tile, CAST(pos + 1 AS INT) AS rk FROM (
-          SELECT *, row_number() OVER (PARTITION BY tile ORDER BY n_seen DESC) AS rn
-          FROM tile_cap_stream
-        ) latest
-        LATERAL VIEW posexplode(ids) t AS pos, point_id
-        WHERE rn = 1
-        """
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_tile_cap(st, res=res, cap=cap), "update",
+        lambda v: spark.sql(
+            f"""
+            SELECT point_id, tile, CAST(pos + 1 AS INT) AS rk FROM (
+              SELECT *, row_number() OVER (PARTITION BY tile ORDER BY n_seen DESC) AS rn
+              FROM {v}
+            ) latest
+            LATERAL VIEW posexplode(ids) t AS pos, point_id
+            WHERE rn = 1
+            """
+        ),
     )
 
 
@@ -1057,33 +988,19 @@ def run_tile_first_seen_stream_once(
     """Drive the streaming first-seen state over all staged files (one
     per trigger) and return each tile's FINAL state — the exact schema
     and values of batch ``tile_first_seen``."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"first_seen_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_tile_first_seen(st, res=res)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
-        SELECT tile, first_day, n_days, n_events FROM (
-          SELECT *, row_number() OVER (
-            PARTITION BY tile ORDER BY n_events DESC, n_days DESC
-          ) AS rn
-          FROM {name}
-        ) WHERE rn = 1
-        """
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_tile_first_seen(st, res=res), "update",
+        lambda v: spark.sql(
+            f"""
+            SELECT tile, first_day, n_days, n_events FROM (
+              SELECT *, row_number() OVER (
+                PARTITION BY tile ORDER BY n_events DESC, n_days DESC
+              ) AS rn
+              FROM {v}
+            ) WHERE rn = 1
+            """
+        ),
     )
 
 
@@ -1145,39 +1062,25 @@ def run_gyration_stream_once(
     entity's FINAL state with the same DECIMAL(38,0) rational-rg^2
     algebra as batch ``radius_of_gyration`` — byte-identical output
     schema and values."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"gyr_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_gyration_moments(st)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
-        SELECT entity, CAST(n AS BIGINT) AS n_events,
-               CAST(CAST(n AS decimal(38,0))
-                    * (CAST(sxx AS decimal(38,0)) + CAST(syy AS decimal(38,0)))
-                    - CAST(sx AS decimal(38,0)) * CAST(sx AS decimal(38,0))
-                    - CAST(sy AS decimal(38,0)) * CAST(sy AS decimal(38,0))
-                 AS decimal(38,0)) AS rg2_num,
-               CAST(CAST(n AS decimal(38,0)) * CAST(n AS decimal(38,0))
-                 AS decimal(38,0)) AS rg2_den
-        FROM (
-          SELECT *, row_number() OVER (PARTITION BY entity ORDER BY n DESC) AS rn
-          FROM {name}
-        ) WHERE rn = 1
-        """
+    return drain_once(
+        spark, points_dir, checkpoint,
+        stream_gyration_moments, "update",
+        lambda v: spark.sql(
+            f"""
+            SELECT entity, CAST(n AS BIGINT) AS n_events,
+                   CAST(CAST(n AS decimal(38,0))
+                        * (CAST(sxx AS decimal(38,0)) + CAST(syy AS decimal(38,0)))
+                        - CAST(sx AS decimal(38,0)) * CAST(sx AS decimal(38,0))
+                        - CAST(sy AS decimal(38,0)) * CAST(sy AS decimal(38,0))
+                     AS decimal(38,0)) AS rg2_num,
+                   CAST(CAST(n AS decimal(38,0)) * CAST(n AS decimal(38,0))
+                     AS decimal(38,0)) AS rg2_den
+            FROM (
+              SELECT *, row_number() OVER (PARTITION BY entity ORDER BY n DESC) AS rn
+              FROM {v}
+            ) WHERE rn = 1
+            """
+        ),
     )
 
 
@@ -1309,36 +1212,22 @@ def run_staypoints_stream_once(
     ``seen``) qualifies iff it lasted ``min_stay_s``. Closed rows pass
     through untouched — the union is byte-equal to batch
     ``staypoints``."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"stay_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_staypoints(st, dist_micro, min_stay_s)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
-        SELECT entity, start_rn, end_rn, n_pts, start_ep, end_ep, ax, ay
-        FROM {name} WHERE closed = 1
-        UNION ALL
-        SELECT entity, start_rn, end_rn, n_pts, start_ep, end_ep, ax, ay
-        FROM (
-          SELECT *, row_number() OVER (PARTITION BY entity
-                                       ORDER BY seen DESC) AS rn2
-          FROM {name} WHERE closed = 0
-        ) WHERE rn2 = 1 AND end_ep - start_ep >= {min_stay_s}
-        """
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_staypoints(st, dist_micro, min_stay_s), "append",
+        lambda v: spark.sql(
+            f"""
+            SELECT entity, start_rn, end_rn, n_pts, start_ep, end_ep, ax, ay
+            FROM {v} WHERE closed = 1
+            UNION ALL
+            SELECT entity, start_rn, end_rn, n_pts, start_ep, end_ep, ax, ay
+            FROM (
+              SELECT *, row_number() OVER (PARTITION BY entity
+                                           ORDER BY seen DESC) AS rn2
+              FROM {v} WHERE closed = 0
+            ) WHERE rn2 = 1 AND end_ep - start_ep >= {min_stay_s}
+            """
+        ),
     )
 
 
@@ -1431,31 +1320,17 @@ def run_dwell_stream_once(
     ``dwell_time`` shape: (tile, total_dwell_s, n_segments,
     n_entities). Every segment is emitted exactly once (when the next
     event closes it), so the rollup is byte-equal to batch."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"dwell_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_dwell(st, res)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
-        SELECT tile, sum(gap) AS total_dwell_s,
-               count(*) AS n_segments,
-               count(DISTINCT entity) AS n_entities
-        FROM {name} GROUP BY tile
-        """
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_dwell(st, res), "append",
+        lambda v: spark.sql(
+            f"""
+            SELECT tile, sum(gap) AS total_dwell_s,
+                   count(*) AS n_segments,
+                   count(DISTINCT entity) AS n_entities
+            FROM {v} GROUP BY tile
+            """
+        ),
     )
 
 
@@ -1541,32 +1416,18 @@ def run_wait_time_stream_once(
     roll the emitted gaps into exactly the batch ``wait_time_hist``
     shape: (bucket, n_gaps, total_gap_s, max_gap_s) with the same
     length(bin(gap)) integer bucketing."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"wait_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_wait_time(st, res)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
-        SELECT CAST(length(bin(gap)) AS INT) AS bucket,
-               count(*) AS n_gaps,
-               sum(gap) AS total_gap_s,
-               max(gap) AS max_gap_s
-        FROM {name} GROUP BY 1
-        """
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_wait_time(st, res), "append",
+        lambda v: spark.sql(
+            f"""
+            SELECT CAST(length(bin(gap)) AS INT) AS bucket,
+                   count(*) AS n_gaps,
+                   sum(gap) AS total_gap_s,
+                   max(gap) AS max_gap_s
+            FROM {v} GROUP BY 1
+            """
+        ),
     )
 
 
@@ -1663,26 +1524,10 @@ def run_speed_stream_once(
     """Drive the streaming teleport detector over all staged files; the
     emitted rows ARE the batch ``speed_outliers`` output (no rollup
     needed — flagged segments emit exactly once)."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"speed_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_speed_outliers(st, vmax_micro)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"SELECT entity, start_ep, end_ep, dt_s, dist2 FROM {name}"
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_speed_outliers(st, vmax_micro), "append",
+        lambda v: spark.sql(f"SELECT entity, start_ep, end_ep, dt_s, dist2 FROM {v}"),
     )
 
 
@@ -1766,30 +1611,16 @@ def run_cohorts_stream_once(
     """Drive the streaming cohort tracker over all staged files and
     roll the (entity, cohort, period) emissions into exactly the batch
     ``user_cohorts`` shape: (cohort_period, periods_since, n_active)."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"cohort_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_cohorts(st, period_s)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
-        SELECT cohort AS cohort_period, period - cohort AS periods_since,
-               count(DISTINCT entity) AS n_active
-        FROM {name} GROUP BY 1, 2
-        """
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_cohorts(st, period_s), "append",
+        lambda v: spark.sql(
+            f"""
+            SELECT cohort AS cohort_period, period - cohort AS periods_since,
+                   count(DISTINCT entity) AS n_active
+            FROM {v} GROUP BY 1, 2
+            """
+        ),
     )
 
 
@@ -1888,39 +1719,25 @@ def run_trip_od_stream_once(
     each entity's final OPEN trip (max ``seen`` snapshot), and roll the
     endpoints into exactly the batch ``trip_od`` shape — stationary
     trips excluded."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"tripod_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_trip_od(st, max_gap_s, res)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
-        WITH trips AS (
-          SELECT entity, from_tile, to_tile FROM {name} WHERE closed = 1
-          UNION ALL
-          SELECT entity, from_tile, to_tile FROM (
-            SELECT *, row_number() OVER (PARTITION BY entity
-                                         ORDER BY seen DESC) AS rn2
-            FROM {name} WHERE closed = 0
-          ) WHERE rn2 = 1
-        )
-        SELECT from_tile, to_tile, count(*) AS n_trips,
-               count(DISTINCT entity) AS n_entities
-        FROM trips WHERE from_tile <> to_tile GROUP BY 1, 2
-        """
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_trip_od(st, max_gap_s, res), "append",
+        lambda v: spark.sql(
+            f"""
+            WITH trips AS (
+              SELECT entity, from_tile, to_tile FROM {v} WHERE closed = 1
+              UNION ALL
+              SELECT entity, from_tile, to_tile FROM (
+                SELECT *, row_number() OVER (PARTITION BY entity
+                                             ORDER BY seen DESC) AS rn2
+                FROM {v} WHERE closed = 0
+              ) WHERE rn2 = 1
+            )
+            SELECT from_tile, to_tile, count(*) AS n_trips,
+                   count(DISTINCT entity) AS n_entities
+            FROM trips WHERE from_tile <> to_tile GROUP BY 1, 2
+            """
+        ),
     )
 
 
@@ -1992,42 +1809,30 @@ def run_cms_stream_once(
     values of batch ``cms_heavy_hitters``."""
     from ..operators.sketches import CMS_DEPTH, cms_score
 
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
+    def finish(v):
+        fin = spark.sql(
+            f"""
+            SELECT kind, id, n FROM (
+              SELECT *, row_number() OVER (
+                PARTITION BY kind, id ORDER BY n DESC
+              ) AS rn FROM {v}
+            ) WHERE rn = 1
+            """
+        ).localCheckpoint(eager=True)
+        exact = fin.filter(F.col("kind") == CMS_DEPTH).select(
+            F.col("id").alias("key"), F.col("n").alias("exact_n")
+        )
+        counters = fin.filter(F.col("kind") < CMS_DEPTH).select(
+            F.col("kind").cast("int").alias("row"),
+            F.col("id").alias("bucket"),
+            F.col("n").alias("c"),
+        )
+        return cms_score(exact, counters, mass_denom)
+
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_cms_hitters(st, res=res), "update", finish,
     )
-    name = f"cms_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_cms_hitters(st, res=res)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    fin = spark.sql(
-        f"""
-        SELECT kind, id, n FROM (
-          SELECT *, row_number() OVER (
-            PARTITION BY kind, id ORDER BY n DESC
-          ) AS rn FROM {name}
-        ) WHERE rn = 1
-        """
-    ).localCheckpoint(eager=True)
-    exact = fin.filter(F.col("kind") == CMS_DEPTH).select(
-        F.col("id").alias("key"), F.col("n").alias("exact_n")
-    )
-    counters = fin.filter(F.col("kind") < CMS_DEPTH).select(
-        F.col("kind").cast("int").alias("row"),
-        F.col("id").alias("bucket"),
-        F.col("n").alias("c"),
-    )
-    return cms_score(exact, counters, mass_denom)
 
 
 def stream_line_density(
@@ -2117,30 +1922,16 @@ def run_line_density_stream_once(
     """Drive the streaming segment rasterizer over all staged files and
     roll the emitted (segment, cell) rows into exactly the batch
     ``line_density`` shape."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"linedens_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_line_density(st, res=res)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
-        SELECT tile, CAST(count(*) AS BIGINT) AS n_segments,
-               CAST(count(DISTINCT entity) AS BIGINT) AS n_entities
-        FROM {name} GROUP BY 1
-        """
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_line_density(st, res=res), "append",
+        lambda v: spark.sql(
+            f"""
+            SELECT tile, CAST(count(*) AS BIGINT) AS n_segments,
+                   CAST(count(DISTINCT entity) AS BIGINT) AS n_entities
+            FROM {v} GROUP BY 1
+            """
+        ),
     )
 
 
@@ -2209,39 +2000,25 @@ def run_tile_trend_stream_once(
     """Drive the streaming trend moments over all staged files and finish
     each tile's FINAL state with the same rational-slope algebra as batch
     ``tile_trend`` — byte-identical output schema and values."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"trend_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_tile_trend(st, res=res)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # update-mode memory sink keeps every trigger's row; the per-tile
     # final state is the one with the largest n (sums only grow)
-    return spark.sql(
-        f"""
-        WITH fin AS (
-          SELECT tile, n, st, sy, sty, stt,
-                 row_number() OVER (PARTITION BY tile ORDER BY n DESC) AS rk
-          FROM {name}
-        )
-        SELECT tile, CAST(n AS BIGINT) AS n_events, CAST(st AS BIGINT) AS sum_t,
-               CAST(sy AS BIGINT) AS sum_y,
-               CAST(n * sty - st * sy AS BIGINT) AS slope_num,
-               CAST(n * stt - st * st AS BIGINT) AS slope_den
-        FROM fin WHERE rk = 1
-        """
+    return drain_once(
+        spark, points_dir, checkpoint,
+        lambda st: stream_tile_trend(st, res=res), "update",
+        lambda v: spark.sql(
+            f"""
+            WITH fin AS (
+              SELECT tile, n, st, sy, sty, stt,
+                     row_number() OVER (PARTITION BY tile ORDER BY n DESC) AS rk
+              FROM {v}
+            )
+            SELECT tile, CAST(n AS BIGINT) AS n_events, CAST(st AS BIGINT) AS sum_t,
+                   CAST(sy AS BIGINT) AS sum_y,
+                   CAST(n * sty - st * sy AS BIGINT) AS slope_num,
+                   CAST(n * stt - st * st AS BIGINT) AS slope_den
+            FROM fin WHERE rk = 1
+            """
+        ),
     )
 
 
@@ -2292,46 +2069,32 @@ def run_centroid_drift_stream_once(
     """Drive the streaming daily moments over all staged files and
     finish with the batch ``centroid_drift`` lag algebra — byte-identical
     output schema and values."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"cdrift_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_centroid_moments(st)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
-        WITH fin AS (
-          SELECT day, n, sx, sy,
-                 row_number() OVER (PARTITION BY day ORDER BY n DESC) AS rk
-          FROM {name}
+    return drain_once(
+        spark, points_dir, checkpoint,
+        stream_centroid_moments, "update",
+        lambda v: spark.sql(
+            f"""
+            WITH fin AS (
+              SELECT day, n, sx, sy,
+                     row_number() OVER (PARTITION BY day ORDER BY n DESC) AS rk
+              FROM {v}
+            ),
+            daily AS (SELECT day, n, sx, sy FROM fin WHERE rk = 1),
+            lagged AS (
+              SELECT day, n, sx, sy,
+                     lag(n) OVER (ORDER BY day) AS pn,
+                     lag(sx) OVER (ORDER BY day) AS px,
+                     lag(sy) OVER (ORDER BY day) AS py
+              FROM daily
+            )
+            SELECT day, CAST(n AS BIGINT) AS n_events,
+                   CAST(sx AS BIGINT) AS sum_x, CAST(sy AS BIGINT) AS sum_y,
+                   CAST(sx * pn - px * n AS BIGINT) AS dx_num,
+                   CAST(sy * pn - py * n AS BIGINT) AS dy_num,
+                   CAST(n * pn AS BIGINT) AS drift_den
+            FROM lagged
+            """
         ),
-        daily AS (SELECT day, n, sx, sy FROM fin WHERE rk = 1),
-        lagged AS (
-          SELECT day, n, sx, sy,
-                 lag(n) OVER (ORDER BY day) AS pn,
-                 lag(sx) OVER (ORDER BY day) AS px,
-                 lag(sy) OVER (ORDER BY day) AS py
-          FROM daily
-        )
-        SELECT day, CAST(n AS BIGINT) AS n_events,
-               CAST(sx AS BIGINT) AS sum_x, CAST(sy AS BIGINT) AS sum_y,
-               CAST(sx * pn - px * n AS BIGINT) AS dx_num,
-               CAST(sy * pn - py * n AS BIGINT) AS dy_num,
-               CAST(n * pn AS BIGINT) AS drift_den
-        FROM lagged
-        """
     )
 
 
@@ -2377,45 +2140,31 @@ def run_hour_type_stream_once(
     """Drive the streaming contingency over all staged files and finish
     with the batch ``hour_type_mix`` marginal/residual algebra —
     byte-identical output schema and values."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"htmix_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_hour_type_counts(st)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
-        WITH fin AS (
-          SELECT hour, etype, obs,
-                 row_number() OVER (PARTITION BY hour, etype
-                                    ORDER BY obs DESC) AS rk
-          FROM {name}
+    return drain_once(
+        spark, points_dir, checkpoint,
+        stream_hour_type_counts, "update",
+        lambda v: spark.sql(
+            f"""
+            WITH fin AS (
+              SELECT hour, etype, obs,
+                     row_number() OVER (PARTITION BY hour, etype
+                                        ORDER BY obs DESC) AS rk
+              FROM {v}
+            ),
+            obs AS (SELECT hour, etype, obs FROM fin WHERE rk = 1),
+            mh AS (SELECT hour, sum(obs) AS n_hour FROM obs GROUP BY 1),
+            mt AS (SELECT etype, sum(obs) AS n_type FROM obs GROUP BY 1),
+            tot AS (SELECT sum(obs) AS n_total FROM obs)
+            SELECT o.hour, o.etype, CAST(o.obs AS BIGINT) AS obs,
+                   CAST(mh.n_hour AS BIGINT) AS n_hour,
+                   CAST(mt.n_type AS BIGINT) AS n_type,
+                   CAST(o.obs * t.n_total - mh.n_hour * mt.n_type AS BIGINT)
+                     AS res_num,
+                   CAST(t.n_total AS BIGINT) AS res_den
+            FROM obs o
+            JOIN mh ON mh.hour = o.hour
+            JOIN mt ON mt.etype = o.etype
+            CROSS JOIN tot t
+            """
         ),
-        obs AS (SELECT hour, etype, obs FROM fin WHERE rk = 1),
-        mh AS (SELECT hour, sum(obs) AS n_hour FROM obs GROUP BY 1),
-        mt AS (SELECT etype, sum(obs) AS n_type FROM obs GROUP BY 1),
-        tot AS (SELECT sum(obs) AS n_total FROM obs)
-        SELECT o.hour, o.etype, CAST(o.obs AS BIGINT) AS obs,
-               CAST(mh.n_hour AS BIGINT) AS n_hour,
-               CAST(mt.n_type AS BIGINT) AS n_type,
-               CAST(o.obs * t.n_total - mh.n_hour * mt.n_type AS BIGINT)
-                 AS res_num,
-               CAST(t.n_total AS BIGINT) AS res_den
-        FROM obs o
-        JOIN mh ON mh.hour = o.hour
-        JOIN mt ON mt.etype = o.etype
-        CROSS JOIN tot t
-        """
     )

@@ -10,7 +10,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from langtoolsosm_spark.session import get_spark
 
-    s = get_spark("tests", cores=8, shuffle_partitions=8)
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -362,3 +362,41 @@ def test_expire_keeps_schema_only_when_uniform(spark, enriched, tmp_path):
         after = table.read(spark)
         assert after.schema == want_schema
         assert _rows(after) == want_rows
+
+
+def test_compact_then_append_reads_with_recorded_schema(spark, tmp_path):
+    """``spark.range``'s ``id`` is non-nullable in the frame but nullable
+    as Spark reads the files back; both the compaction commit and the
+    later append record the nullable form, so the range read over the
+    compacted and the appended files still runs no inference job."""
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).withColumn("tile", F.col("id") % 6)
+
+    table = SnapshotTable(str(tmp_path / "t"))
+    write_partitioned(frame(0, 40), table, "tile", stats_col="tile")
+    compact_table(table, spark, target_files=2)
+    write_partitioned(frame(40, 60), table, "tile", stats_col="tile")
+    df, n = _jobs(spark, lambda: table.read_range(spark, "tile", 0, 5))
+    assert n == 0
+    assert len({s["schema"] for s in table.snapshots()}) == 1
+    _assert_same(df, spark.read.parquet(*table.live_files()))
+    assert _rows(df) == _rows(frame(0, 60).select("id", "tile"))
+
+
+def test_commit_parses_only_newest_manifest(tmp_path, monkeypatch):
+    """A commit reads its parent from the newest manifest alone: on a
+    50-snapshot table it parses one manifest, not all 50."""
+    import json
+
+    table = SnapshotTable(str(tmp_path / "t"))
+    for i in range(50):
+        table.commit([], [{"partition_id": i, "rows": 1}])
+    loads = []
+    real_load = json.load
+    monkeypatch.setattr(json, "load", lambda f: loads.append(f.name) or real_load(f))
+    snap = table.commit([], [{"partition_id": 50, "rows": 1}])
+    assert len(loads) == 1 and loads[0].endswith("000050.json")
+    assert (snap["snapshot_id"], snap["parent_id"]) == (51, 50)
+    monkeypatch.undo()
+    assert [s["snapshot_id"] for s in table.snapshots()] == list(range(1, 52))
