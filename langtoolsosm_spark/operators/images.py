@@ -3,9 +3,9 @@ over Arrow batches (BASELINE.json:input_hint plumbing).
 
 Every operator that reads pixels is a ``per_image`` caller: one
 ``mapInArrow`` kernel selects the columns, decodes the binary ``bytes``
-column, computes the integer luminance for the operators that ask for it,
-and builds each output batch with the Arrow types of the declared schema.
-An operator supplies only its per-image function and that schema. The
+column and builds each output batch with the Arrow types of the declared
+schema. An operator supplies only its per-image function and that
+schema; the ones that work on integer luminance call ``_luma``. The
 Spark-side plumbing (schema, batch shape, partitioning) is real and
 tested; the pixel kernels come from functions/imagecodec.py (from-scratch
 codecs; heavier real-world codecs would slot in behind the same fmt
@@ -31,15 +31,12 @@ def per_image(
     fn,
     schema: str,
     cols: tuple[str, ...] = ("image_id",),
-    luma: bool = False,
 ) -> DataFrame:
     """Decode every image and map it through ``fn`` in one ``mapInArrow``
     pass — the one decode kernel behind every pixel operator here.
 
     ``fn(px, *vals)`` gets the decoded ``(h, w, 3)`` uint8 pixels and the
-    image's values of ``cols`` in order; with ``luma`` it also gets
-    ``lum=``, the ``(h, w)`` int64 integer BT.709 luminance
-    ``(2126 R + 7152 G + 722 B) // 10000``. It returns the image's output
+    image's values of ``cols`` in order. It returns the image's output
     rows as an iterable of tuples in ``schema`` order: one row, many
     (fan-out) or none. A column passes through when ``fn`` copies its
     value from ``cols`` into its rows. Each output batch is built with the
@@ -56,19 +53,20 @@ def per_image(
             bufs, fmts, *vals = (b.column(c).to_pylist() for c in ("bytes", "fmt", *cols))
             rows = []
             for buf, fmt, *v in zip(bufs, fmts, *vals):
-                px = ic.decode(buf, fmt)
-                if luma:
-                    p = px.astype(np.int64)
-                    lum = (2126 * p[..., 0] + 7152 * p[..., 1] + 722 * p[..., 2]) // 10000
-                    rows.extend(fn(px, *v, lum=lum))
-                else:
-                    rows.extend(fn(px, *v))
+                rows.extend(fn(ic.decode(buf, fmt), *v))
             columns = zip(*rows) if rows else [[]] * len(arrow)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
             )
 
     return images.select(*dict.fromkeys(("bytes", "fmt", *cols))).mapInArrow(kernel, out)
+
+
+def _luma(px: np.ndarray) -> np.ndarray:
+    """The ``(h, w)`` int64 integer BT.709 luminance of decoded pixels,
+    ``(2126 R + 7152 G + 722 B) // 10000``."""
+    p = px.astype(np.int64)
+    return (2126 * p[..., 0] + 7152 * p[..., 1] + 722 * p[..., 2]) // 10000
 
 
 def _verify(px, w, h, ph) -> tuple[bool, int]:
@@ -299,12 +297,13 @@ def hist_equalize_stats(images: DataFrame) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         counts = np.bincount(lum.ravel(), minlength=256)
         lv = np.nonzero(counts)[0]
         return zip([img_id] * lv.size, lv.tolist(), counts[lv].tolist())
 
-    hist = per_image(images, fn, "image_id string, level long, n_px long", luma=True)
+    hist = per_image(images, fn, "image_id string, level long, n_px long")
     w = Window.partitionBy("image_id").orderBy("level")
     wall = Window.partitionBy("image_id")
     return (
@@ -338,7 +337,8 @@ def edge_stats(images: DataFrame, threshold: int = 160) -> DataFrame:
     and yield n_interior = 0 rows.
     """
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         h, w = lum.shape
         if h < 3 or w < 3:
             return [(img_id, 0, 0, 0, 0)]
@@ -359,7 +359,6 @@ def edge_stats(images: DataFrame, threshold: int = 160) -> DataFrame:
     return per_image(
         images, fn,
         "image_id string, n_interior long, sum_gx long, sum_gy long, edge_px long",
-        luma=True,
     )
 
 
@@ -386,7 +385,8 @@ def block_sums(images: DataFrame, queries_per_image: int = 4) -> DataFrame:
         raise ValueError(f"queries_per_image must be >= 1, got {queries_per_image}")
     Q = queries_per_image
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         h, w = lum.shape
         sat = lum.cumsum(axis=0).cumsum(axis=1)
         v = int(img_id[3:])  # imgNNNNNNNNN
@@ -413,7 +413,6 @@ def block_sums(images: DataFrame, queries_per_image: int = 4) -> DataFrame:
     return per_image(
         images, fn,
         "image_id string, q long, x0 long, y0 long, x1 long, y1 long, px_sum long",
-        luma=True,
     )
 
 
@@ -433,7 +432,8 @@ def blob_stats(images: DataFrame, threshold: int = 195) -> DataFrame:
     — a genuinely different algorithm shape.
     """
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         mask = lum >= threshold
         n_fg = int(mask.sum())
         if n_fg == 0:
@@ -462,7 +462,7 @@ def blob_stats(images: DataFrame, threshold: int = 195) -> DataFrame:
         return [(img_id, n_fg, counts.size, int(counts.max()))]
 
     return per_image(
-        images, fn, "image_id string, n_fg long, n_blobs long, max_blob long", luma=True
+        images, fn, "image_id string, n_fg long, n_blobs long, max_blob long"
     )
 
 
@@ -542,7 +542,8 @@ def image_quality(
     corpus filter stage.
     """
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         px = px.astype(np.int64)
         h, w = lum.shape
         n = h * w
@@ -577,7 +578,6 @@ def image_quality(
         images, fn,
         "image_id string, n_px long, edge_milli long, lum_var long, "
         "color_milli long, keep int",
-        luma=True,
     )
 
 
@@ -629,7 +629,8 @@ def image_exposure(
     image op uses. well_exposed = 1 iff both clip fractions are at most
     ``max_clip_milli``. One decode per image; 4 ints out per image."""
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         n = lum.size
         um = 1000 * int((lum < lo).sum()) // n
         om = 1000 * int((lum > hi).sum()) // n
@@ -638,7 +639,6 @@ def image_exposure(
     return per_image(
         images, fn,
         "image_id string, n_px long, under_milli long, over_milli long, well_exposed int",
-        luma=True,
     )
 
 
@@ -1061,7 +1061,8 @@ def orientation_hist(images: DataFrame) -> DataFrame:
     ever shuffles. Images without a 3x3 interior emit nothing.
     """
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         h, w = lum.shape
         if h < 3 or w < 3:
             return []
@@ -1076,7 +1077,7 @@ def orientation_hist(images: DataFrame) -> DataFrame:
         bins, counts = np.unique(b, return_counts=True)
         return zip([img_id] * bins.size, bins.tolist(), counts.tolist())
 
-    return per_image(images, fn, "image_id string, bin long, n_px long", luma=True)
+    return per_image(images, fn, "image_id string, bin long, n_px long")
 
 
 def image_coverage_gap(
@@ -1333,7 +1334,8 @@ def blur_scores(images: DataFrame, min_var: int = 1000) -> DataFrame:
     if min_var < 0:
         raise ValueError(f"min_var must be >= 0, got {min_var}")
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         h, w = lum.shape
         if h < 3 or w < 3:
             return [(img_id, 0, 0, 0, 0, 0)]
@@ -1354,7 +1356,6 @@ def blur_scores(images: DataFrame, min_var: int = 1000) -> DataFrame:
         images, fn,
         "image_id string, n_int long, sum_lap long, sum_lap2 long, "
         "var_num long, is_sharp int",
-        luma=True,
     )
 
 
@@ -1380,7 +1381,8 @@ def banding_scores(images: DataFrame, lags: tuple = (1, 2, 3)) -> DataFrame:
         if k < 1:
             raise ValueError(f"lags must be >= 1, got {k}")
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         h, w = lum.shape
         rm = lum.sum(axis=1) // w
         rows = []
@@ -1400,7 +1402,6 @@ def banding_scores(images: DataFrame, lags: tuple = (1, 2, 3)) -> DataFrame:
         images, fn,
         "image_id string, lag_k int, n_terms long, sum_prod long, "
         "head_sum long, tail_sum long, cov_num long",
-        luma=True,
     )
 
 
@@ -1423,7 +1424,8 @@ def vignette_scores(images: DataFrame, max_milli: int = 800) -> DataFrame:
     if not 0 <= max_milli <= 1000:
         raise ValueError(f"max_milli must be in [0, 1000], got {max_milli}")
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         h, w = lum.shape
         if h < 4 or w < 4:
             return [(img_id, 0, 0, 0, 0, None, 0)]
@@ -1443,7 +1445,6 @@ def vignette_scores(images: DataFrame, max_milli: int = 800) -> DataFrame:
         images, fn,
         "image_id string, n_border long, sum_border long, "
         "n_center long, sum_center long, vign_milli long, is_vignetted int",
-        luma=True,
     )
 
 
@@ -1503,12 +1504,13 @@ def image_emd_outliers(images: DataFrame) -> DataFrame:
     rollup broadcast back; one final per-image rollup. Nothing scans
     pixels twice."""
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         cum = np.cumsum(np.bincount(lum.ravel(), minlength=256))
         return zip([img_id] * 256, range(256), cum.tolist(), [lum.size] * 256)
 
     cums = per_image(
-        images, fn, "image_id string, bin int, cum_i long, n_px long", luma=True
+        images, fn, "image_id string, bin int, cum_i long, n_px long"
     ).localCheckpoint(eager=True)  # one decode feeds corpus AND per-image
     corpus = cums.groupBy("bin").agg(F.sum("cum_i").alias("ccum"))
     total = cums.filter(F.col("bin") == 255).agg(
@@ -1546,7 +1548,8 @@ def symmetry_scores(images: DataFrame, max_milli: int = 50) -> DataFrame:
     if not 0 <= max_milli <= 1000:
         raise ValueError(f"max_milli must be in [0, 1000], got {max_milli}")
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         n = lum.size
         sad = int(np.abs(lum - lum[:, ::-1]).sum())
         am = 1000 * sad // (255 * n)
@@ -1555,7 +1558,6 @@ def symmetry_scores(images: DataFrame, max_milli: int = 50) -> DataFrame:
     return per_image(
         images, fn,
         "image_id string, n_px long, sum_absdiff long, asym_milli long, is_symmetric int",
-        luma=True,
     )
 
 
@@ -1605,7 +1607,8 @@ def image_bimodality(images: DataFrame) -> DataFrame:
     per frame at worst-case skew — the fixture's 32x32 sits far below.
     One decode per image (``per_image``)."""
 
-    def fn(px, img_id, lum):
+    def fn(px, img_id):
+        lum = _luma(px)
         y = lum.ravel()
         n = y.size
         s1 = int(y.sum())
@@ -1621,5 +1624,5 @@ def image_bimodality(images: DataFrame) -> DataFrame:
         return [(img_id, n, m2, 1000 * (m3 * m3 + m2 ** 3) // (m2 * m4))]
 
     return per_image(
-        images, fn, "image_id string, n_px long, m2n long, bc_milli long", luma=True
+        images, fn, "image_id string, n_px long, m2n long, bc_milli long"
     )

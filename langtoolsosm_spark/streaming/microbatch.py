@@ -11,11 +11,11 @@ replayed epochs after a crash are idempotent (exactly-once sink).
 
 Every ``run_*_once`` driver is one ``drain_once`` call: the driver gives
 the streaming plan and the batch-side finish over the sink, and
-``drain_once`` opens the source (one file per trigger), runs the query to
-completion on a memory sink (or a parquet sink where the driver keeps
-state across runs), builds the result, and drops the memory sink's temp
-view. The sink's rows then live only as long as the returned frame, not
-until the session ends.
+``drain_once`` opens the source (one file per trigger unless the driver
+asks for more), runs the query to completion on a memory sink (or a
+parquet sink where the driver keeps state across runs), builds the
+result, and drops the memory sink's temp view. The sink's rows then live
+only as long as the returned frame, not until the session ends.
 """
 
 from __future__ import annotations
@@ -29,14 +29,13 @@ from ..sources.snapshots import SnapshotTable
 
 
 def stream_images(
-    spark: SparkSession, images_dir: str, schema=None, max_files_per_trigger: int = 4
+    spark: SparkSession, images_dir: str, max_files_per_trigger: int = 4
 ) -> DataFrame:
-    """File-source stream over an images directory (parquet)."""
-    if schema is None:
-        schema = spark.read.parquet(images_dir).schema
+    """File-source stream over a parquet directory, with the schema the
+    batch reader infers from its files."""
     return (
         spark.readStream.format("parquet")
-        .schema(schema)
+        .schema(spark.read.parquet(images_dir).schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(images_dir)
     )
@@ -50,10 +49,12 @@ def drain_once(
     mode: str,
     finish,
     out_dir: str | None = None,
+    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Run the streaming plan ``build(stream)`` over every file staged in
-    ``src_dir`` (``stream_images``, one file per trigger, availableNow) in
-    output ``mode``, wait for it, and return ``finish(sink)``.
+    ``src_dir`` (``stream_images``, availableNow, one file per trigger
+    unless ``max_files_per_trigger`` says otherwise) in output ``mode``,
+    wait for it, and return ``finish(sink)``.
 
     Without ``out_dir`` the query writes to a memory sink under a fresh
     name; ``finish`` gets that name, builds the result from the sink's
@@ -64,7 +65,7 @@ def drain_once(
     repeated runs continue the same state — and ``finish`` gets
     ``out_dir``."""
     writer = (
-        build(stream_images(spark, src_dir, max_files_per_trigger=1))
+        build(stream_images(spark, src_dir, max_files_per_trigger))
         .writeStream.outputMode(mode)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
@@ -95,11 +96,16 @@ def run_tile_counts_once(
     spark: SparkSession, images_dir: str, checkpoint: str, res: int = 6
 ) -> DataFrame:
     """Drive the streaming agg to completion on available data (memory
-    sink, availableNow trigger) and return the result table."""
+    sink, availableNow trigger) and return the result table. Complete
+    mode re-emits the whole state every trigger, so the source takes 4
+    files per trigger: one file per trigger gives the same rows but took
+    7.2-8.1 s against 2.2-2.7 s on a 12-file sf0.01 directory (local[4],
+    4-CPU host)."""
     return drain_once(
         spark, images_dir, checkpoint,
         lambda st: stream_tile_counts(st, res=res), "complete",
         lambda v: spark.sql(f"SELECT tile, n_images FROM {v}"),
+        max_files_per_trigger=4,
     )
 
 
