@@ -16,15 +16,40 @@ osm_utils.py:24-48) with an explicit quadtree cell grid over (lat, lon):
 
 All kernels are NumPy-vectorized array->array functions wrapped as
 ``pandas_udf`` at the Spark boundary (no per-row Python).
+
+Grid format. This module is the one place the grid rule lives; every
+operator builds its cell expressions from the helpers below instead of
+re-deriving them. At res r the grid has n = 2^r cells per axis, and
+
+* ``ix = clamp(floor((lon + 180) / 360 * n), 0, n - 1)``, ``iy`` likewise
+  with ``(lat + 90) / 180`` (:func:`gidx` per axis, :func:`grid_ixy` for
+  the pair; NumPy twin :func:`_norm_ixy`);
+* the flat tile key is ``ix * n + iy`` (:func:`tile_key_col`), decoded by
+  :func:`tile_ixy`; a neighbour (x, y) is kept iff :func:`in_grid`;
+* neighbour fan-outs explode a literal offset table (:func:`stencil`,
+  with the :data:`QUEEN` 3x3 and :data:`ROOK` 4-offset tables);
+* integer geometry quantizes degrees with :func:`micro_deg`
+  (``floor(x * 1e6)``), and every ``res`` argument passes :func:`check_res`.
+
+The DuckDB oracles replay the same arithmetic bit for bit, so these
+helpers build exactly the expressions the operators built inline before.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import functions as F
 
 MAX_RES = 26
 _RES_SHIFT = 58
 _IX_SHIFT = 29
+
+
+def check_res(res: int) -> None:
+    """Raise ``ValueError`` unless ``res`` is a grid resolution in
+    [0, MAX_RES]."""
+    if not 0 <= res <= MAX_RES:
+        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
 
 
 def _norm_ixy(lat: np.ndarray, lon: np.ndarray, res: int):
@@ -41,8 +66,7 @@ def _norm_ixy(lat: np.ndarray, lon: np.ndarray, res: int):
 
 def cell_encode(lat, lon, res: int) -> np.ndarray:
     """Vectorized (lat, lon) -> packed int64 cell id at resolution res."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     ix, iy = _norm_ixy(lat, lon, res)
     return (np.int64(res) << _RES_SHIFT) | (ix << _IX_SHIFT) | iy
 
@@ -184,14 +208,13 @@ def morton_key(lat, lon, res: int = MAX_RES) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Spark boundary: pandas UDF factories (imported lazily so the NumPy kernels
-# stay usable without a JVM, e.g. in oracles and property tests).
+# Spark boundary: pandas UDF factories and the column-expression twins of
+# the kernels above (building a Column needs no JVM until it is used).
 # ---------------------------------------------------------------------------
 
 def spark_udfs():
     """Return dict of pandas_udf-wrapped kernels for DataFrame use."""
     import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     def _cell_encode(res: int):
@@ -227,6 +250,25 @@ def spark_udfs():
     }
 
 
+def _col(c):
+    return F.col(c) if isinstance(c, str) else c
+
+
+def gidx(col, offset: float, span: float, n: int):
+    """Clamped cell index of ``col`` on one axis of an n-cell grid:
+    ``floor((col + offset) / span * n)`` clipped to [0, n - 1], a long.
+    ``offset``/``span`` are 180/360 for longitude and 90/180 for
+    latitude."""
+    g = F.floor((_col(col) + F.lit(offset)) / F.lit(span) * F.lit(float(n)))
+    return F.least(F.greatest(g, F.lit(0)), F.lit(n - 1)).cast("long")
+
+
+def grid_ixy(lat_col, lon_col, res: int):
+    """(ix, iy) long columns of the cell holding (lat, lon) at ``res``."""
+    n = 1 << res
+    return gidx(lon_col, 180.0, 360.0, n), gidx(lat_col, 90.0, 180.0, n)
+
+
 def tile_key_col(lat_col, lon_col, res: int):
     """Pure-column-expression tile key (JVM-side, codegen'd — preferred on
     the hot path over the pandas UDF; bit-identical to :func:`tile_key`).
@@ -234,14 +276,44 @@ def tile_key_col(lat_col, lon_col, res: int):
     floor/clamp arithmetic only, so Catalyst keeps it inside
     WholeStageCodegen and the same formula is the DuckDB oracle.
     """
-    from pyspark.sql import functions as F
+    ix, iy = grid_ixy(lat_col, lon_col, res)
+    return (ix * F.lit(1 << res) + iy).cast("long")
 
-    n = 1 << res
-    ix = F.floor((lon_col + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    iy = F.floor((lat_col + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    ix = F.least(F.greatest(ix, F.lit(0)), F.lit(n - 1))
-    iy = F.least(F.greatest(iy, F.lit(0)), F.lit(n - 1))
-    return (ix * F.lit(n) + iy).cast("long")
+
+def tile_ixy(tile, n: int):
+    """Flat tile key ``ix * n + iy`` -> its (ix, iy) long columns."""
+    t = _col(tile)
+    return (t / F.lit(n)).cast("long"), t % F.lit(n)
+
+
+def in_grid(x, y, n: int):
+    """True where cell (x, y) lies inside the n x n grid (no wrap)."""
+    x, y = _col(x), _col(y)
+    return (x >= 0) & (x < n) & (y >= 0) & (y < n)
+
+
+QUEEN = tuple((dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1))
+ROOK = ((-1, 0), (1, 0), (0, -1), (0, 1))
+
+
+def stencil(rows, fields=("dx", "dy")):
+    """Explode a literal offset table: one struct of ``fields`` per row of
+    ``rows`` (e.g. :data:`QUEEN`, or (dx, dy, weight) triples with
+    ``fields=("dx", "dy", "wt")``). A value may be a Column, e.g.
+    ``F.lit(w).cast("long")`` to fix its type. Callers alias the result
+    and read ``o.dx``/``o.dy``."""
+    return F.explode(
+        F.array(
+            *[F.struct(*[F.lit(v).alias(f) for f, v in zip(fields, row)]) for row in rows]
+        )
+    )
+
+
+def micro_deg(col):
+    """Degrees -> integer micro-degrees: ``floor(col * 1e6)`` as a long,
+    the quantization of the integer-geometry operators (DuckDB
+    ``floor(x * 1e6)``)."""
+    return F.floor(_col(col) * F.lit(1_000_000.0)).cast("long")
 
 
 # ---------------------------------------------------------------------------
@@ -309,13 +381,7 @@ def quadkey_col(lat_col, lon_col, res: int):
     services, prefix-match = ancestor containment, lexicographic sort =
     Z-order locality). Pure concat/bit expressions, codegen'd; the
     DuckDB oracle spells the identical digit arithmetic."""
-    from pyspark.sql import functions as F
-
-    n = 1 << res
-    ix = F.floor((lon_col + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    iy = F.floor((lat_col + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    ix = F.least(F.greatest(ix, F.lit(0)), F.lit(n - 1)).cast("long")
-    iy = F.least(F.greatest(iy, F.lit(0)), F.lit(n - 1)).cast("long")
+    ix, iy = grid_ixy(lat_col, lon_col, res)
     digits = [
         (
             F.shiftright(ix, res - 1 - k).bitwiseAND(F.lit(1))

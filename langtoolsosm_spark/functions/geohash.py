@@ -125,13 +125,11 @@ def geohash_col(lat_col, lon_col, precision: int = 7):
     """
     from pyspark.sql import functions as F
 
+    from .cells import gidx
+
     total, lon_bits, lat_bits = _bit_splits(precision)
-    nlon = 1 << lon_bits
-    nlat = 1 << lat_bits
-    ix = F.floor((lon_col + F.lit(180.0)) / F.lit(360.0) * F.lit(float(nlon)))
-    iy = F.floor((lat_col + F.lit(90.0)) / F.lit(180.0) * F.lit(float(nlat)))
-    ix = F.least(F.greatest(ix, F.lit(0)), F.lit(nlon - 1))
-    iy = F.least(F.greatest(iy, F.lit(0)), F.lit(nlat - 1))
+    ix = gidx(lon_col, 180.0, 360.0, 1 << lon_bits)
+    iy = gidx(lat_col, 90.0, 180.0, 1 << lat_bits)
     g = F.lit(0).cast("long")
     for i in range(lon_bits):
         g = g + F.shiftleft(

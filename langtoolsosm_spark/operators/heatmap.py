@@ -30,7 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.cells import MAX_RES
+from ..functions.cells import check_res, gidx, tile_key_col
 
 
 def _grid_cols(lat_col, lon_col, res: int, tile_px: int):
@@ -40,15 +40,11 @@ def _grid_cols(lat_col, lon_col, res: int, tile_px: int):
     exactly inside the tile grid)."""
     if tile_px < 1 or tile_px & (tile_px - 1):
         raise ValueError(f"tile_px must be a power of two, got {tile_px}")
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     shift = tile_px.bit_length() - 1
     n = 1 << res
     nn = n * tile_px
-    gx = F.floor((lon_col + F.lit(180.0)) / F.lit(360.0) * F.lit(float(nn)))
-    gy = F.floor((lat_col + F.lit(90.0)) / F.lit(180.0) * F.lit(float(nn)))
-    gx = F.least(F.greatest(gx, F.lit(0)), F.lit(nn - 1)).cast("long")
-    gy = F.least(F.greatest(gy, F.lit(0)), F.lit(nn - 1)).cast("long")
+    gx, gy = gidx(lon_col, 180.0, 360.0, nn), gidx(lat_col, 90.0, 180.0, nn)
     tile = (F.shiftright(gx, shift) * F.lit(n) + F.shiftright(gy, shift)).cast("long")
     px = gx.bitwiseAND(F.lit(tile_px - 1))
     py = gy.bitwiseAND(F.lit(tile_px - 1))
@@ -238,13 +234,7 @@ def decayed_tiles(
         raise ValueError(f"halflife_s must be >= 1, got {halflife_s}")
     if not 0 <= max_halvings <= 62:
         raise ValueError(f"max_halvings must be in [0, 62], got {max_halvings}")
-    n = 1 << res
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    tile = (
-        F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long") * n
-        + F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long")
-    )
+    tile = tile_key_col(F.col(lat), F.col(lon), res)
     age = F.greatest(
         F.lit(anchor_epoch).cast("long") - F.unix_timestamp(F.col(ts)), F.lit(0)
     )

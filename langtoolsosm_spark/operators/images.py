@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import imagecodec as ic
+from ..functions.cells import ROOK, grid_ixy, in_grid, stencil, tile_ixy
 
 
 def per_image(
@@ -865,14 +866,13 @@ def patch_tile_map(
         raise ValueError(f"patch must be >= 1, got {patch}")
     n = 1 << res
     m = 1 << sub_levels
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
+    gx, gy = grid_ixy(lat, lon, res)
     base = images.select(
         "image_id",
         (F.col("h") / F.lit(patch)).cast("long").alias("__nr"),
         (F.col("w") / F.lit(patch)).cast("long").alias("__nc"),
-        F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long").alias("__ix"),
-        F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long").alias("__iy"),
+        gx.alias("__ix"),
+        gy.alias("__iy"),
     ).filter((F.col("__nr") >= 1) & (F.col("__nc") >= 1))
     grid = base.select(
         "image_id", "__nr", "__nc", "__ix", "__iy",
@@ -1117,16 +1117,8 @@ def image_coverage_gap(
         .agg(F.count(F.lit(1)).alias("n_images"))
     )
     gaps = ev_hist.join(img_hist, "tile", "left_anti")
-    ix = (F.col("tile") / F.lit(n)).cast("long")
-    iy = F.col("tile") % F.lit(n)
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx, dy in ((-1, 0), (1, 0), (0, -1), (0, 1))
-            ]
-        )
-    ).alias("o")
+    ix, iy = tile_ixy("tile", n)
+    off = stencil(ROOK).alias("o")
     fan = gaps.select("tile", "n_events", off).select(
         "tile",
         "n_events",
@@ -1134,10 +1126,7 @@ def image_coverage_gap(
         (ix + F.col("o.dx")).alias("nx"),
         (iy + F.col("o.dy")).alias("ny"),
     )
-    valid = (
-        (F.col("nx") >= 0) & (F.col("nx") < n)
-        & (F.col("ny") >= 0) & (F.col("ny") < n)
-    )
+    valid = in_grid("nx", "ny", n)
     joined = (
         fan.withColumn("__ok", valid.cast("long"))
         .join(

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.cells import gidx
+
 _SCALE = 1 << 32
 
 
@@ -277,10 +279,6 @@ def image_shard_pack(
 
     n = 1 << res
 
-    def gidx(col, off, span):
-        g = F.floor((F.col(col) + F.lit(off)) / F.lit(span) * F.lit(float(n)))
-        return F.least(F.greatest(g, F.lit(0)), F.lit(n - 1)).cast("long")
-
     # size_col: precomputed byte sizes (metadata-only packing — avoids
     # touching the blob column at all); default measures the blob
     size = (
@@ -289,8 +287,8 @@ def image_shard_pack(
     d = images.select(
         F.col(id_col),
         size.alias("size_bytes"),
-        gidx(lon, 180.0, 360.0).alias("ix"),
-        gidx(lat, 90.0, 180.0).alias("iy"),
+        gidx(lon, 180.0, 360.0, n).alias("ix"),
+        gidx(lat, 90.0, 180.0, n).alias("iy"),
     )
     keyed = with_hilbert(d, res).select(
         id_col, "size_bytes", "hkey",

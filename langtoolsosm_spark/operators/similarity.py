@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions.cells import in_grid, stencil, tile_ixy
+
 # int64 min: the score of a (query, corpus) pair that is not a candidate
 NEG = -(1 << 63)
 
@@ -1450,16 +1452,8 @@ def semantic_drift(
         .agg(F.sum("xq").alias("s"), F.count(F.lit(1)).alias("nv"))
         .localCheckpoint(eager=True)
     )
-    ix = (F.col("tile") / F.lit(res_n)).cast("long")
-    iy = F.col("tile") % F.lit(res_n)
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx, dy in ((1, 0), (0, 1))
-            ]
-        )
-    ).alias("o")
+    ix, iy = tile_ixy("tile", res_n)
+    off = stencil(((1, 0), (0, 1))).alias("o")
     fan = sums.select("tile", "dim", "s", "nv", off).select(
         ((ix + F.col("o.dx")) * F.lit(res_n) + (iy + F.col("o.dy"))).alias("ntile"),
         (ix + F.col("o.dx")).alias("nx"),
@@ -1468,10 +1462,7 @@ def semantic_drift(
         "dim",
         F.col("s").alias("s1"),
         F.col("nv").alias("n1"),
-    ).filter(
-        (F.col("nx") >= 0) & (F.col("nx") < res_n)
-        & (F.col("ny") >= 0) & (F.col("ny") < res_n)
-    )
+    ).filter(in_grid("nx", "ny", res_n))
     nbr = sums.select(
         F.col("tile").alias("ntile"),
         "dim",

@@ -48,7 +48,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import geo
-from ..functions.cells import MAX_RES, cell_center, tile_key_col
+from ..functions.cells import (
+    QUEEN, ROOK, _norm_ixy, cell_center, check_res, gidx, grid_ixy, in_grid, micro_deg,
+    stencil, tile_ixy, tile_key_col,
+)
+from .pip_join import _collect_small
 
 # quantization scale for order-independent integer sums of squared-degree
 # distances (~1e-9 deg^2 resolution; lattice-derived fixtures never land
@@ -252,21 +256,19 @@ def rasterize_polygons(
     ix * 2^res + iy; center-inside is the standard raster burn rule and
     inherits the ray-cast's half-open tie-break).
 
-    Same counted gate as ``polygon_cover`` (operators/pip_join.py): a
-    metadata-scale polygon dim rasterizes driver-side with the identical
-    NumPy kernel (no applyInPandas stage); above the threshold each
-    polygon rasterizes in its own task. A single continent-scale polygon
+    Same gate as ``polygon_cover`` (``pip_join._collect_small``, one
+    bounded ``limit(threshold + 1)`` job; ``collect_threshold=0`` runs
+    none): a metadata-scale polygon dim rasterizes driver-side with the
+    identical NumPy kernel (no applyInPandas stage); above the threshold
+    each polygon rasterizes in its own task. A single continent-scale polygon
     at a fine resolution should be pre-split (adaptive_split's cell
     quadtree) before rasterizing — noted, not silently handled.
     """
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     spark = polygons.sparkSession
     schema = "polygon_id string, tile long"
-    # skip the count job entirely when the gate is disabled (forced
-    # scale path) — same short-circuit polygon_cover uses
-    if collect_threshold and polygons.count() <= collect_threshold:
-        pdf = polygons.select("polygon_id", "ring").toPandas()
+    pdf = _collect_small(polygons, collect_threshold)
+    if pdf is not None:
         out = _rasterize_pdf(pdf, res)
         if len(out) == 0:
             return spark.createDataFrame([], schema)
@@ -349,10 +351,6 @@ def _bbox_cells(df: DataFrame, res: int, prefix: str):
     no Python. Columns out: {prefix}id/s/w/n/e/ix0/iy0 plus __cx/__cy."""
     n = 1 << res
 
-    def gidx(col, offset, span):
-        g = F.floor((col + F.lit(offset)) / F.lit(span) * F.lit(float(n)))
-        return F.least(F.greatest(g, F.lit(0)), F.lit(n - 1)).cast("long")
-
     p = prefix
     return (
         df.select(
@@ -361,10 +359,10 @@ def _bbox_cells(df: DataFrame, res: int, prefix: str):
             F.col("west").alias(f"{p}w"),
             F.col("north").alias(f"{p}n"),
             F.col("east").alias(f"{p}e"),
-            gidx(F.col("west"), 180.0, 360.0).alias(f"{p}ix0"),
-            gidx(F.col("east"), 180.0, 360.0).alias(f"{p}ix1"),
-            gidx(F.col("south"), 90.0, 180.0).alias(f"{p}iy0"),
-            gidx(F.col("north"), 90.0, 180.0).alias(f"{p}iy1"),
+            gidx(F.col("west"), 180.0, 360.0, n).alias(f"{p}ix0"),
+            gidx(F.col("east"), 180.0, 360.0, n).alias(f"{p}ix1"),
+            gidx(F.col("south"), 90.0, 180.0, n).alias(f"{p}iy0"),
+            gidx(F.col("north"), 90.0, 180.0, n).alias(f"{p}iy1"),
         )
         .withColumn("__cx", F.explode(F.sequence(F.col(f"{p}ix0"), F.col(f"{p}ix1"))))
         .withColumn("__cy", F.explode(F.sequence(F.col(f"{p}iy0"), F.col(f"{p}iy1"))))
@@ -393,10 +391,7 @@ def bbox_join(
     rect size (fan-out stays O(1) per rect); a counted gate broadcasts
     the smaller exploded side below ``broadcast_threshold`` rows.
     """
-    from ..functions.cells import MAX_RES
-
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     l = _bbox_cells(left, res, "l")
     r = _bbox_cells(right, res, "r")
     # exact exploded-row counts (narrow scan+explode jobs, no shuffle) —
@@ -604,10 +599,6 @@ def snap_to_segments(
     r = radius_res(radius) if res is None else res
     n = 1 << r
 
-    def gidx(col, offset, span):
-        g = F.floor((col + F.lit(offset)) / F.lit(span) * F.lit(float(n)))
-        return F.least(F.greatest(g, F.lit(0)), F.lit(n - 1)).cast("long")
-
     rad = F.lit(float(radius))
     segs = (
         segments.select(
@@ -618,8 +609,8 @@ def snap_to_segments(
             "__cx",
             F.explode(
                 F.sequence(
-                    gidx(F.least("lon1", "lon2") - rad, 180.0, 360.0),
-                    gidx(F.greatest("lon1", "lon2") + rad, 180.0, 360.0),
+                    gidx(F.least("lon1", "lon2") - rad, 180.0, 360.0, n),
+                    gidx(F.greatest("lon1", "lon2") + rad, 180.0, 360.0, n),
                 )
             ),
         )
@@ -627,8 +618,8 @@ def snap_to_segments(
             "__cy",
             F.explode(
                 F.sequence(
-                    gidx(F.least("lat1", "lat2") - rad, 90.0, 180.0),
-                    gidx(F.greatest("lat1", "lat2") + rad, 90.0, 180.0),
+                    gidx(F.least("lat1", "lat2") - rad, 90.0, 180.0, n),
+                    gidx(F.greatest("lat1", "lat2") + rad, 90.0, 180.0, n),
                 )
             ),
         )
@@ -640,8 +631,8 @@ def snap_to_segments(
         F.col(point_id).alias("point_id"),
         F.col("lat").alias("__plat"),
         F.col("lon").alias("__plon"),
-        gidx(F.col("lon"), 180.0, 360.0).alias("__cx"),
-        gidx(F.col("lat"), 90.0, 180.0).alias("__cy"),
+        gidx(F.col("lon"), 180.0, 360.0, n).alias("__cx"),
+        gidx(F.col("lat"), 90.0, 180.0, n).alias("__cy"),
     )
 
     ex = F.col("lon2") - F.col("lon1")
@@ -712,14 +703,9 @@ def clip_segments_to_tiles(
     tile corner/edge) emit a zero-length clip — deterministic on both
     engines because every comparison sees bit-identical doubles.
     """
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     n = 1 << res
     HUGE = 1e308
-
-    def gidx(col, offset, span):
-        g = F.floor((col + F.lit(offset)) / F.lit(span) * F.lit(float(n)))
-        return F.least(F.greatest(g, F.lit(0)), F.lit(n - 1)).cast("long")
 
     segs = (
         segments.select(
@@ -730,8 +716,8 @@ def clip_segments_to_tiles(
             "__cx",
             F.explode(
                 F.sequence(
-                    gidx(F.least("lon1", "lon2"), 180.0, 360.0),
-                    gidx(F.greatest("lon1", "lon2"), 180.0, 360.0),
+                    gidx(F.least("lon1", "lon2"), 180.0, 360.0, n),
+                    gidx(F.greatest("lon1", "lon2"), 180.0, 360.0, n),
                 )
             ),
         )
@@ -739,8 +725,8 @@ def clip_segments_to_tiles(
             "__cy",
             F.explode(
                 F.sequence(
-                    gidx(F.least("lat1", "lat2"), 90.0, 180.0),
-                    gidx(F.greatest("lat1", "lat2"), 90.0, 180.0),
+                    gidx(F.least("lat1", "lat2"), 90.0, 180.0, n),
+                    gidx(F.greatest("lat1", "lat2"), 90.0, 180.0, n),
                 )
             ),
         )
@@ -809,8 +795,7 @@ def focal_stats(
     the 9x fan-out touches only histogram rows. Grid edges clip (no
     wrap): out-of-range centers are dropped before the shuffle.
     """
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     n = 1 << res
     from .tiling import assign_tiles
 
@@ -819,17 +804,8 @@ def focal_stats(
         .groupBy("tile")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx in (-1, 0, 1)
-                for dy in (-1, 0, 1)
-            ]
-        )
-    ).alias("o")
-    cx = (F.col("tile") / F.lit(n)).cast("long")
-    cy = F.col("tile") % F.lit(n)
+    off = stencil(QUEEN).alias("o")
+    cx, cy = tile_ixy("tile", n)
     fan = (
         hist.select("tile", "n", off)
         .select(
@@ -838,10 +814,7 @@ def focal_stats(
             "n",
             ((F.col("o.dx") == 0) & (F.col("o.dy") == 0)).alias("is_self"),
         )
-        .filter(
-            (F.col("mx") >= 0) & (F.col("mx") < n)
-            & (F.col("my") >= 0) & (F.col("my") < n)
-        )
+        .filter(in_grid("mx", "my", n))
     )
     return (
         fan.groupBy((F.col("mx") * F.lit(n) + F.col("my")).alias("tile"))
@@ -891,8 +864,7 @@ def moran_i(
     histogram for P, and two single-row aggregates — nothing scales
     with 4^res except the histogram itself.
     """
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     n = 1 << res
     n_cells = n * n
     w_sum = 4 * n * (n - 1)
@@ -903,8 +875,7 @@ def moran_i(
         .groupBy("tile")
         .agg(F.count(F.lit(1)).alias("x"))
     )
-    cx = (F.col("tile") / F.lit(n)).cast("long")
-    cy = F.col("tile") % F.lit(n)
+    cx, cy = tile_ixy("tile", n)
     deg = (
         (cx > 0).cast("long") + (cx < n - 1).cast("long")
         + (cy > 0).cast("long") + (cy < n - 1).cast("long")
@@ -916,14 +887,7 @@ def moran_i(
         F.sum((deg * F.col("x")).cast(dec)).alias("d"),
         F.count(F.lit(1)).alias("occ"),
     )
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx, dy in ((-1, 0), (1, 0), (0, -1), (0, 1))
-            ]
-        )
-    ).alias("o")
+    off = stencil(ROOK).alias("o")
     nbr = (
         hist.select("tile", "x", off)
         .select(
@@ -932,10 +896,7 @@ def moran_i(
             (cy + F.col("o.dy")).alias("ny"),
             F.col("x").alias("xi"),
         )
-        .filter(
-            (F.col("nx") >= 0) & (F.col("nx") < n)
-            & (F.col("ny") >= 0) & (F.col("ny") < n)
-        )
+        .filter(in_grid("nx", "ny", n))
     )
     pairs = nbr.join(hist, nbr["ntile"] == hist["tile"], "inner").agg(
         F.coalesce(
@@ -1456,8 +1417,7 @@ def gearys_c(
     self-join of the (tiny) histogram for P, two single-row aggregates —
     nothing scales with 4^res except the histogram.
     """
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     n = 1 << res
     n_cells = n * n
     w_sum = 4 * n * (n - 1)
@@ -1468,8 +1428,7 @@ def gearys_c(
         .groupBy("tile")
         .agg(F.count(F.lit(1)).alias("x"))
     )
-    cx = (F.col("tile") / F.lit(n)).cast("long")
-    cy = F.col("tile") % F.lit(n)
+    cx, cy = tile_ixy("tile", n)
     deg = (
         (cx > 0).cast("long") + (cx < n - 1).cast("long")
         + (cy > 0).cast("long") + (cy < n - 1).cast("long")
@@ -1481,14 +1440,7 @@ def gearys_c(
         F.sum((deg * F.col("x") * F.col("x")).cast(dec)).alias("dq"),
         F.count(F.lit(1)).alias("occ"),
     )
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx, dy in ((-1, 0), (1, 0), (0, -1), (0, 1))
-            ]
-        )
-    ).alias("o")
+    off = stencil(ROOK).alias("o")
     nbr = (
         hist.select("tile", "x", off)
         .select(
@@ -1497,10 +1449,7 @@ def gearys_c(
             (cy + F.col("o.dy")).alias("ny"),
             F.col("x").alias("xi"),
         )
-        .filter(
-            (F.col("nx") >= 0) & (F.col("nx") < n)
-            & (F.col("ny") >= 0) & (F.col("ny") < n)
-        )
+        .filter(in_grid("nx", "ny", n))
     )
     pairs = nbr.join(hist, nbr["ntile"] == hist["tile"], "inner").agg(
         F.coalesce(
@@ -1624,28 +1573,19 @@ def marching_cases(
     if threshold < 1:
         raise ValueError(f"threshold must be >= 1, got {threshold}")
     n = 1 << res
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
+    gx, gy = grid_ixy(lat, lon, res)
     occ = (
         points.select(
-            F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long").alias("ix"),
-            F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long").alias("iy"),
+            gx.alias("ix"),
+            gy.alias("iy"),
         )
         .groupBy("ix", "iy")
         .agg(F.count(F.lit(1)).alias("__n"))
         .filter(F.col("__n") >= threshold)
         .select("ix", "iy")
     )
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                    F.lit(bit).alias("bit"),
-                )
-                for dx, dy, bit in ((0, 0, 1), (-1, 0, 2), (0, -1, 4), (-1, -1, 8))
-            ]
-        )
+    off = stencil(
+        ((0, 0, 1), (-1, 0, 2), (0, -1, 4), (-1, -1, 8)), ("dx", "dy", "bit")
     ).alias("o")
     fan = (
         occ.select("ix", "iy", off)
@@ -1766,8 +1706,7 @@ def getis_gi(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     n = 1 << res
     n_cells = n * n
     from .tiling import kring_smooth
@@ -1778,12 +1717,11 @@ def getis_gi(
     # exchange reuse scans the fact table once (it used to scan twice —
     # once for a tile-keyed copy of this histogram, once inside
     # kring_smooth)
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
+    gx, gy = grid_ixy(lat, lon, res)
     hist = (
         points.select(
-            F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long").alias("ix"),
-            F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long").alias("iy"),
+            gx.alias("ix"),
+            gy.alias("iy"),
         )
         .groupBy("ix", "iy")
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -1793,8 +1731,7 @@ def getis_gi(
         F.sum((F.col("__n") * F.col("__n")).cast(dec)).alias("q"),
     )
     ring = kring_smooth(points, res, k=k, lat=lat, lon=lon, hist=hist)
-    ix = (F.col("tile") / F.lit(n)).cast("long")
-    iy = F.col("tile") % F.lit(n)
+    ix, iy = tile_ixy("tile", n)
     n_ring = (
         (F.least(ix + k, F.lit(n - 1)) - F.greatest(ix - k, F.lit(0)) + 1)
         * (F.least(iy + k, F.lit(n - 1)) - F.greatest(iy - k, F.lit(0)) + 1)
@@ -1987,20 +1924,18 @@ def lisa_quadrants(
     Plan: ONE histogram + the (2k+1)^2 fan-out (shared ``kring_smooth``
     subtree), then an inner join of the two histogram-sized frames —
     nothing scales with 4^res but the histogram."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     n = 1 << res
     n_cells = n * n
     from .tiling import kring_smooth
 
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
+    gx, gy = grid_ixy(lat, lon, res)
     hist = (
         points.select(
-            F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long").alias("ix"),
-            F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long").alias("iy"),
+            gx.alias("ix"),
+            gy.alias("iy"),
         )
         .groupBy("ix", "iy")
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -2012,8 +1947,7 @@ def lisa_quadrants(
         F.col("__n").alias("x"),
     )
     j = own.join(ring, "tile", "inner").crossJoin(F.broadcast(base))
-    ix = (F.col("tile") / F.lit(n)).cast("long")
-    iy = F.col("tile") % F.lit(n)
+    ix, iy = tile_ixy("tile", n)
     n_ring = (
         (F.least(ix + k, F.lit(n - 1)) - F.greatest(ix - k, F.lit(0)) + 1)
         * (F.least(iy + k, F.lit(n - 1)) - F.greatest(iy - k, F.lit(0)) + 1)
@@ -2054,19 +1988,17 @@ def ripley_k(
     the shared ``kring_smooth`` subtree, N self-pairs removed). Cost is
     len(radii) fan-outs of the ONE histogram; nothing is quadratic in
     points."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     if not radii or any(r < 1 for r in radii):
         raise ValueError(f"radii must be >= 1, got {radii}")
     n = 1 << res
     from .tiling import kring_smooth
 
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
+    gx, gy = grid_ixy(lat, lon, res)
     hist = (
         points.select(
-            F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long").alias("ix"),
-            F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long").alias("iy"),
+            gx.alias("ix"),
+            gy.alias("iy"),
         )
         .groupBy("ix", "iy")
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -2130,10 +2062,8 @@ def od_gravity_residual(
     in_m = flows.groupBy("to_tile").agg(F.sum("n_trips").alias("in_to"))
     tot = flows.agg(F.sum("n_trips").alias("t_total"))
     n = 1 << res
-    fx = (F.col("from_tile") / F.lit(n)).cast("long")
-    fy = F.col("from_tile") % F.lit(n)
-    tx = (F.col("to_tile") / F.lit(n)).cast("long")
-    ty = F.col("to_tile") % F.lit(n)
+    fx, fy = tile_ixy("from_tile", n)
+    tx, ty = tile_ixy("to_tile", n)
     d2 = (fx - tx) * (fx - tx) + (fy - ty) * (fy - ty)
     j = (
         flows.join(out_m, "from_tile")
@@ -2192,10 +2122,10 @@ def snap_to_boundary(
         ).alias("seg_idx", "__s"),
     ).select(
         "polygon_id", "seg_idx",
-        F.floor(F.col("__s.x1") * 1e6).cast("long").alias("x1"),
-        F.floor(F.col("__s.y1") * 1e6).cast("long").alias("y1"),
-        F.floor(F.col("__s.x2") * 1e6).cast("long").alias("x2"),
-        F.floor(F.col("__s.y2") * 1e6).cast("long").alias("y2"),
+        micro_deg("__s.x1").alias("x1"),
+        micro_deg("__s.y1").alias("y1"),
+        micro_deg("__s.x2").alias("x2"),
+        micro_deg("__s.y2").alias("y2"),
     )
     n_segs = segs_raw.count()
     if n_segs > broadcast_threshold:
@@ -2206,8 +2136,8 @@ def snap_to_boundary(
         )
     pts = points.select(
         F.col(id_col),
-        F.floor(F.col(lon) * 1e6).cast("long").alias("x0"),
-        F.floor(F.col(lat) * 1e6).cast("long").alias("y0"),
+        micro_deg(lon).alias("x0"),
+        micro_deg(lat).alias("y0"),
     )
     j = pts.crossJoin(F.broadcast(segs_raw))
     dx = F.col("x2") - F.col("x1")
@@ -2271,14 +2201,12 @@ def cell_hausdorff(
     explode)."""
     if max_cells is not None and max_cells < 1:
         raise ValueError(f"max_cells must be >= 1, got {max_cells}")
-    n = 1 << res
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
+    gx, gy = grid_ixy(lat, lon, res)
     cells = (
         events.select(
             F.col(entity_col).alias("entity"),
-            F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long").alias("ix"),
-            F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long").alias("iy"),
+            gx.alias("ix"),
+            gy.alias("iy"),
         )
         .distinct()
     )
@@ -2402,11 +2330,7 @@ def trip_length_hist(
     if order_tiebreak:
         order.append(F.col(order_tiebreak).asc())
     w = Window.partitionBy(entity_col).orderBy(*order)
-    n = 1 << res
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    ix = F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long")
-    iy = F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long")
+    ix, iy = grid_ixy(lat, lon, res)
     df = (
         events.withColumn("__ix", ix)
         .withColumn("__iy", iy)
@@ -2647,22 +2571,17 @@ def semivariogram(
     events only the histogram grows; the join stays histogram x
     constant.
     """
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     if max_lag < 1:
         raise ValueError(f"max_lag must be >= 1, got {max_lag}")
-    n = 1 << res
     from .tiling import assign_tiles
 
+    ix, iy = tile_ixy("tile", 1 << res)
     hist = (
         assign_tiles(points, res, lat=lat, lon=lon)
         .groupBy("tile")
         .agg(F.count(F.lit(1)).alias("x"))
-        .select(
-            (F.col("tile") / F.lit(n)).cast("long").alias("ix"),
-            (F.col("tile") % F.lit(n)).alias("iy"),
-            "x",
-        )
+        .select(ix.alias("ix"), iy.alias("iy"), "x")
     )
     offsets = [
         (dx, dy)
@@ -2671,14 +2590,7 @@ def semivariogram(
         if 0 < dx * dx + dy * dy <= max_lag * max_lag
         and (dx > 0 or dy > 0)
     ]
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx, dy in offsets
-            ]
-        )
-    ).alias("o")
+    off = stencil(offsets).alias("o")
     fan = hist.select("ix", "iy", "x", off).select(
         (F.col("ix") + F.col("o.dx")).alias("jx"),
         (F.col("iy") + F.col("o.dy")).alias("jy"),
@@ -2718,20 +2630,9 @@ def dissolve_perimeter(cells: DataFrame, res: int) -> DataFrame:
     and the polygon rollup is a second map-side-combined groupBy. No
     stage scales with anything but occupied raster cells.
     """
-    n = 1 << res
-    c = cells.select(
-        "polygon_id",
-        (F.col("tile") / F.lit(n)).cast("long").alias("ix"),
-        (F.col("tile") % F.lit(n)).alias("iy"),
-    ).distinct()
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1))
-            ]
-        )
-    ).alias("o")
+    ix, iy = tile_ixy("tile", 1 << res)
+    c = cells.select("polygon_id", ix.alias("ix"), iy.alias("iy")).distinct()
+    off = stencil(((1, 0), (-1, 0), (0, 1), (0, -1))).alias("o")
     fan = c.select("polygon_id", "ix", "iy", off).select(
         "polygon_id", "ix", "iy",
         (F.col("ix") + F.col("o.dx")).alias("jx"),
@@ -2833,8 +2734,7 @@ def quadrat_chi2(
     Plan: one map-side-combined histogram, then ONE single-row
     aggregate over it (bbox bounds + moments together — no second scan
     of the fact table, no lattice materialization)."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     n = 1 << res
     from .tiling import assign_tiles
 
@@ -2843,8 +2743,7 @@ def quadrat_chi2(
         .groupBy("tile")
         .agg(F.count(F.lit(1)).alias("x"))
     )
-    ix = (F.col("tile") / F.lit(n)).cast("long")
-    iy = F.col("tile") % F.lit(n)
+    ix, iy = tile_ixy("tile", n)
     dec = "decimal(38,0)"
     base = hist.agg(
         F.sum(F.col("x").cast(dec)).alias("s"),
@@ -2894,8 +2793,7 @@ def join_counts(
     sides) whose pruned subtrees defeat Spark's exchange reuse, and
     without the checkpoint each reference re-scans the fact table
     (plan-audited: 6 scans -> 1)."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     n = 1 << res
     from .tiling import assign_tiles
 
@@ -2916,16 +2814,8 @@ def join_counts(
         F.sum("black").alias("n_black"),
         F.sum(F.lit(1) - F.col("black")).alias("n_white"),
     )
-    ix = (F.col("tile") / F.lit(n)).cast("long")
-    iy = F.col("tile") % F.lit(n)
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx, dy in ((1, 0), (0, 1))
-            ]
-        )
-    ).alias("o")
+    ix, iy = tile_ixy("tile", n)
+    off = stencil(((1, 0), (0, 1))).alias("o")
     fan = (
         marked.select("tile", "black", off)
         .select(
@@ -2934,10 +2824,7 @@ def join_counts(
             (iy + F.col("o.dy")).alias("ny"),
             F.col("black").alias("b1"),
         )
-        .filter(
-            (F.col("nx") >= 0) & (F.col("nx") < n)
-            & (F.col("ny") >= 0) & (F.col("ny") < n)
-        )
+        .filter(in_grid("nx", "ny", n))
     )
     pairs = fan.join(marked, fan["ntile"] == marked["tile"], "inner").agg(
         F.count(F.lit(1)).alias("n_pairs"),
@@ -2983,8 +2870,7 @@ def bilinear_interp(
     on the cell key against the tiny histogram (left, missing -> 0) and
     a groupBy on the query id. At 100x both sides shuffle on the same
     cell key; the histogram side is broadcastable below threshold."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     if not 1 <= s_bits <= 20:
         raise ValueError(f"s_bits must be in [1, 20], got {s_bits}")
     n = 1 << res
@@ -3010,15 +2896,7 @@ def bilinear_interp(
         F.expr(f"tv div {s} - 1").alias("iy0"),
         (F.col("tv") % s).alias("fy"),
     )
-    corner = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx in (0, 1)
-                for dy in (0, 1)
-            ]
-        )
-    ).alias("c")
+    corner = stencil(((0, 0), (0, 1), (1, 0), (1, 1))).alias("c")
     wx = F.when(F.col("c.dx") == 0, F.lit(s) - F.col("fx")).otherwise(F.col("fx"))
     wy = F.when(F.col("c.dy") == 0, F.lit(s) - F.col("fy")).otherwise(F.col("fy"))
     fan = base.select("id", "ix0", "iy0", "fx", "fy", corner).select(
@@ -3029,10 +2907,7 @@ def bilinear_interp(
         (F.col("iy0") + F.col("c.dy")).alias("cy"),
         (wx * wy).alias("w"),
     )
-    valid = (
-        (F.col("cx") >= 0) & (F.col("cx") < n)
-        & (F.col("cy") >= 0) & (F.col("cy") < n)
-    )
+    valid = in_grid("cx", "cy", n)
     joined = (
         fan.withColumn("__ok", valid.cast("long"))
         .join(hist, fan["ctile"] == hist["tile"], "left")
@@ -3363,14 +3238,10 @@ def curve_locality(
         raise ValueError(f"res must be in [1, 13], got {res}")
     n = 1 << res
 
-    def gidx(col, off, span):
-        g = F.floor((F.col(col) + F.lit(off)) / F.lit(span) * F.lit(float(n)))
-        return F.least(F.greatest(g, F.lit(0)), F.lit(n - 1)).cast("long")
-
     cells = with_hilbert(
         points.select(
-            gidx(lon, 180.0, 360.0).alias("ix"),
-            gidx(lat, 90.0, 180.0).alias("iy"),
+            gidx(lon, 180.0, 360.0, n).alias("ix"),
+            gidx(lat, 90.0, 180.0, n).alias("iy"),
         ).distinct(),
         res,
     ).select(
@@ -3378,14 +3249,7 @@ def curve_locality(
         (F.col("ix") * F.lit(n) + F.col("iy")).alias("rkey"),
         "hkey",
     ).localCheckpoint(eager=True)
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx, dy in ((1, 0), (0, 1))
-            ]
-        )
-    ).alias("o")
+    off = stencil(((1, 0), (0, 1))).alias("o")
     fan = cells.select("ix", "iy", "rkey", "hkey", off).select(
         (F.col("ix") + F.col("o.dx")).alias("nx"),
         (F.col("iy") + F.col("o.dy")).alias("ny"),
@@ -3556,8 +3420,7 @@ def _footprint_and_ring(
     """Shared buffer machinery: the rasterized footprint (pinned — it
     feeds the offset fan AND the anti-join probe) and its Chebyshev-k
     dilation ring, both as (polygon_id, tile) frames."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     n = 1 << res
@@ -3566,17 +3429,9 @@ def _footprint_and_ring(
         .select("polygon_id", "tile")
         .localCheckpoint(eager=True)
     )
-    ix = (F.col("tile") / F.lit(n)).cast("long")
-    iy = F.col("tile") % F.lit(n)
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx in range(-k, k + 1)
-                for dy in range(-k, k + 1)
-            ]
-        )
-    ).alias("o")
+    ix, iy = tile_ixy("tile", n)
+    ds = range(-k, k + 1)
+    off = stencil([(dx, dy) for dx in ds for dy in ds]).alias("o")
     dil = (
         fp.select("polygon_id", "tile", off)
         .select(
@@ -3584,10 +3439,7 @@ def _footprint_and_ring(
             (ix + F.col("o.dx")).alias("nx"),
             (iy + F.col("o.dy")).alias("ny"),
         )
-        .filter(
-            (F.col("nx") >= 0) & (F.col("nx") < n)
-            & (F.col("ny") >= 0) & (F.col("ny") < n)
-        )
+        .filter(in_grid("nx", "ny", n))
         .select(
             "polygon_id",
             (F.col("nx") * F.lit(n) + F.col("ny")).alias("tile"),
@@ -3696,21 +3548,15 @@ def bbox_hilbert_ranges(
     (codegen, no shuffle), then one gaps-and-islands pass: a global
     key-order window over the BBOX-SIZED key set (the sketch-window
     justification of tile_coverage_curve) and a range rollup."""
-    import math
-
     if lat0 > lat1 or lon0 > lon1:
         raise ValueError(
             f"bbox_hilbert_ranges: inverted bbox ({lat0},{lat1},{lon0},{lon1})"
         )
     if not 1 <= res <= 13:
         raise ValueError(f"res must be in [1, 13], got {res}")
-    n = 1 << res
-
-    def cell(v: float, off: float, span: float) -> int:
-        return max(0, min(n - 1, math.floor((v + off) / span * n)))
-
-    ix0, ix1 = cell(lon0, 180.0, 360.0), cell(lon1, 180.0, 360.0)
-    iy0, iy1 = cell(lat0, 90.0, 180.0), cell(lat1, 90.0, 180.0)
+    (ix0, ix1), (iy0, iy1) = (
+        v.tolist() for v in _norm_ixy([lat0, lat1], [lon0, lon1], res)
+    )
     nx, ny = ix1 - ix0 + 1, iy1 - iy0 + 1
     lattice = spark.range(nx * ny).select(
         (F.lit(ix0) + F.col("id") % nx).alias("ix"),
@@ -4120,13 +3966,12 @@ def line_density(
     seg_key = [F.col(ts_col)] + (
         [F.col(order_tiebreak)] if order_tiebreak else []
     )
+    x1, y1 = tile_ixy("tile", n)
+    x0, y0 = tile_ixy(F.lag("tile").over(w), n)
     g = t.select(
         F.col(entity_col).alias("__e"),
         F.struct(*seg_key).alias("__seg"),
-        (F.col("tile") / n).cast("long").alias("x1"),
-        (F.col("tile") % n).alias("y1"),
-        (F.lag("tile").over(w) / n).cast("long").alias("x0"),
-        (F.lag("tile").over(w) % n).alias("y0"),
+        x1.alias("x1"), y1.alias("y1"), x0.alias("x0"), y0.alias("y0"),
     ).filter(F.col("x0").isNotNull())
     seg = g.withColumn(
         "s",
@@ -4287,8 +4132,8 @@ def knox_stat(
         )
     from .spread import scan_spread
 
-    x = F.floor(F.col(lat) * F.lit(1_000_000.0)).cast("long")
-    y = F.floor(F.col(lon) * F.lit(1_000_000.0)).cast("long")
+    x = micro_deg(lat)
+    y = micro_deg(lon)
     pts = events.select(
         F.col(id_col).alias("id"),
         x.alias("x"),
@@ -4319,15 +4164,7 @@ def knox_stat(
                 "resolution or pre-thin (tile_cap_sample), or raise "
                 "max_cell deliberately (None disables the gate)"
             )
-    offs = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx in (-1, 0, 1)
-                for dy in (-1, 0, 1)
-            ]
-        )
-    ).alias("o")
+    offs = stencil(QUEEN).alias("o")
     fan = pts.select(
         F.col("id").alias("a_id"), F.col("x").alias("a_x"),
         F.col("y").alias("a_y"), F.col("t").alias("a_t"), "cx", "cy", offs
@@ -4472,8 +4309,8 @@ def frechet_dist(
         raise ValueError(f"max_len must be >= 2, got {max_len}")
     if mode not in ("frechet", "dtw"):
         raise ValueError(f"mode must be 'frechet' or 'dtw', got {mode!r}")
-    x = F.floor(F.col(lat) * F.lit(1_000_000.0)).cast("long")
-    y = F.floor(F.col(lon) * F.lit(1_000_000.0)).cast("long")
+    x = micro_deg(lat)
+    y = micro_deg(lon)
     seqs = (
         events.select(
             F.col(entity_col).alias("entity"),
@@ -4620,17 +4457,14 @@ def variogram_anisotropy(
     Plan: one map-side-combined histogram, one self-equi-join per axis
     offset (each unordered pair exactly once — positive offsets only),
     two single-row aggregates cross-joined. Histogram-scale everywhere."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     if lag < 1:
         raise ValueError(f"lag must be >= 1, got {lag}")
-    n = 1 << res
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
+    gx, gy = grid_ixy(lat, lon, res)
     hist = (
         points.select(
-            F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long").alias("ix"),
-            F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long").alias("iy"),
+            gx.alias("ix"),
+            gy.alias("iy"),
         )
         .groupBy("ix", "iy")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -4706,8 +4540,8 @@ def simplify_dp(
         raise ValueError(f"eps_micro must be >= 0, got {eps_micro}")
     if max_len is not None and max_len < 2:
         raise ValueError(f"max_len must be >= 2, got {max_len}")
-    x = F.floor(F.col(lat) * F.lit(1_000_000.0)).cast("long")
-    y = F.floor(F.col(lon) * F.lit(1_000_000.0)).cast("long")
+    x = micro_deg(lat)
+    y = micro_deg(lon)
     seqs = (
         events.select(
             F.col(entity_col).alias("entity"),
@@ -4809,8 +4643,8 @@ def path_crossings(
     identical predicate."""
     from pyspark.sql import Window
 
-    x = F.floor(F.col(lat) * F.lit(1_000_000.0)).cast("long")
-    y = F.floor(F.col(lon) * F.lit(1_000_000.0)).cast("long")
+    x = micro_deg(lat)
+    y = micro_deg(lon)
     w = Window.partitionBy("entity").orderBy("ts", "eid")
     segs = (
         events.select(
@@ -4921,10 +4755,10 @@ def map_match_viterbi(
         ).alias("seg_idx", "__s"),
     ).select(
         "polygon_id", "seg_idx",
-        F.floor(F.col("__s.x1") * 1e6).cast("long").alias("x1"),
-        F.floor(F.col("__s.y1") * 1e6).cast("long").alias("y1"),
-        F.floor(F.col("__s.x2") * 1e6).cast("long").alias("x2"),
-        F.floor(F.col("__s.y2") * 1e6).cast("long").alias("y2"),
+        micro_deg("__s.x1").alias("x1"),
+        micro_deg("__s.y1").alias("y1"),
+        micro_deg("__s.x2").alias("x2"),
+        micro_deg("__s.y2").alias("y2"),
     )
     n_segs = segs_raw.count()
     if n_segs > broadcast_threshold:
@@ -4937,8 +4771,8 @@ def map_match_viterbi(
         F.col(entity_col).alias("entity"),
         F.col(ts_col).alias("ts"),
         F.col(id_col).alias("eid"),
-        F.floor(F.col(lon) * 1e6).cast("long").alias("x0"),
-        F.floor(F.col(lat) * 1e6).cast("long").alias("y0"),
+        micro_deg(lon).alias("x0"),
+        micro_deg(lat).alias("y0"),
     )
     if max_len is not None:
         worst = (
@@ -5088,8 +4922,8 @@ def heading_persistence(
     ~1e6 steps at city scale; the fixture sits far below both."""
     from pyspark.sql import Window
 
-    x = F.floor(F.col(lat) * F.lit(1_000_000.0)).cast("long")
-    y = F.floor(F.col(lon) * F.lit(1_000_000.0)).cast("long")
+    x = micro_deg(lat)
+    y = micro_deg(lon)
     w = Window.partitionBy("entity").orderBy("ts", "eid")
     pts = events.select(
         F.col(entity_col).alias("entity"),

@@ -22,7 +22,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.cells import tile_key_col
+from ..functions.cells import (
+    _norm_ixy, check_res, grid_ixy, in_grid, micro_deg, stencil, tile_ixy, tile_key_col,
+)
 
 
 def assign_tiles(
@@ -53,11 +55,7 @@ def tile_pyramid(
     assign_tiles + groupBy per level (max_res + 1 scans) or exploding
     every fact row over the levels (scan-side CPU x (max_res + 1)) — both
     lose at scale. Returns (res, tile, n_rows)."""
-    n = 1 << max_res
-    ix = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    iy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    ix = F.least(F.greatest(ix, F.lit(0)), F.lit(n - 1)).cast("long")
-    iy = F.least(F.greatest(iy, F.lit(0)), F.lit(n - 1)).cast("long")
+    ix, iy = grid_ixy(lat, lon, max_res)
     hist = (
         df.select(ix.alias("__ix"), iy.alias("__iy"))
         .groupBy("__ix", "__iy")
@@ -262,8 +260,6 @@ def coverage_gaps(
     double products — replayed bit-identically by the DuckDB oracle);
     ``tile = ix << res | iy``.
     """
-    import math
-
     if lat0 > lat1 or lon0 > lon1:
         # loud-guard convention (hex_bin, with_hilbert): an inverted bbox
         # would yield an empty lattice and silently report "no gaps"
@@ -273,13 +269,9 @@ def coverage_gaps(
             else f"coverage_gaps: inverted bbox (lon0={lon0} > lon1={lon1}"
         )
 
-    n = 1 << res
-
-    def cell(v: float, off: float, span: float) -> int:
-        return max(0, min(n - 1, math.floor((v + off) / span * n)))
-
-    ix0, ix1 = cell(lon0, 180.0, 360.0), cell(lon1, 180.0, 360.0)
-    iy0, iy1 = cell(lat0, 90.0, 180.0), cell(lat1, 90.0, 180.0)
+    (ix0, ix1), (iy0, iy1) = (
+        v.tolist() for v in _norm_ixy([lat0, lat1], [lon0, lon1], res)
+    )
     nx, ny = ix1 - ix0 + 1, iy1 - iy0 + 1
 
     spark = df.sparkSession
@@ -287,12 +279,11 @@ def coverage_gaps(
         (F.lit(ix0) + F.col("id") % nx).alias("ix"),
         (F.lit(iy0) + (F.col("id") / nx).cast("long")).alias("iy"),
     )
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
+    gx, gy = grid_ixy(lat, lon, res)
     occupied = (
         df.select(
-            F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long").alias("ix"),
-            F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long").alias("iy"),
+            gx.alias("ix"),
+            gy.alias("iy"),
         )
         .groupBy("ix", "iy")
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -333,12 +324,11 @@ def kring_smooth(
         raise ValueError(f"k must be >= 1, got {k}")
     n = 1 << res
     if hist is None:
-        fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-        fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
+        gx, gy = grid_ixy(lat, lon, res)
         hist = (
             df.select(
-                F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long").alias("ix"),
-                F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long").alias("iy"),
+                gx.alias("ix"),
+                gy.alias("iy"),
             )
             .groupBy("ix", "iy")
             .agg(F.count(F.lit(1)).alias("__n"))
@@ -357,10 +347,7 @@ def kring_smooth(
             (F.col("iy") + F.col("dy")).alias("ty"),
             "__n",
         )
-        .filter(
-            (F.col("tx") >= 0) & (F.col("tx") < n)
-            & (F.col("ty") >= 0) & (F.col("ty") < n)
-        )
+        .filter(in_grid("tx", "ty", n))
     )
     return fan.groupBy(
         (F.col("tx") * F.lit(n) + F.col("ty")).alias("tile")
@@ -385,13 +372,7 @@ def st_cube(
     Spark's dayofweek() is 1-based and DuckDB's 0-based, so arithmetic
     is the only dialect-safe spelling. Returns (tile, dow, hour, n).
     """
-    n = 1 << res
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    tile = (
-        F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long") * n
-        + F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long")
-    )
+    tile = tile_key_col(F.col(lat), F.col(lon), res)
     ep = F.unix_timestamp(F.col(ts))
     dow = ((ep / F.lit(86400)).cast("long") + 4) % 7
     hour = (F.pmod(ep, F.lit(86400)) / F.lit(3600)).cast("long")
@@ -423,13 +404,7 @@ def tile_retention(
     presence set is |tiles x active users| — the natural cohort-table
     size every retention system materializes anyway.
     """
-    n = 1 << res
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    tile = (
-        F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long") * n
-        + F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long")
-    )
+    tile = tile_key_col(F.col(lat), F.col(lon), res)
     day = (F.unix_timestamp(F.col(ts_col)) / F.lit(86400)).cast("long")
     pres = events.select(
         tile.alias("tile"), day.alias("day"), F.col(entity_col).alias("entity")
@@ -477,13 +452,7 @@ def tile_anomaly(
     Trailing window is ROWS over observed days, the standard sparse
     formulation (quiet days don't dilute the trend).
     """
-    n = 1 << res
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    tile = (
-        F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long") * n
-        + F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long")
-    )
+    tile = tile_key_col(F.col(lat), F.col(lon), res)
     day = (F.unix_timestamp(F.col(ts_col)) / F.lit(86400)).cast("long")
     hist = (
         events.select(tile.alias("tile"), day.alias("day"))
@@ -530,13 +499,7 @@ def user_home_tile(
     map-side-combined pass that counts totals; no window, no second
     shuffle on the raw facts.
     """
-    n = 1 << res
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    tile = (
-        F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long") * n
-        + F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long")
-    )
+    tile = tile_key_col(F.col(lat), F.col(lon), res)
     hist = (
         events.select(F.col(entity_col).alias("entity"), tile.alias("tile"))
         .groupBy("entity", "tile")
@@ -589,13 +552,7 @@ def co_visitation(
     pre-thin hot cell-days with ``tile_cap_sample`` and re-run, or
     raise the cap deliberately.
     """
-    n = 1 << res
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
-    tile = (
-        F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long") * n
-        + F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long")
-    )
+    tile = tile_key_col(F.col(lat), F.col(lon), res)
     day = (F.unix_timestamp(F.col(ts_col)) / F.lit(86400)).cast("long")
     pres = events.select(
         tile.alias("tile"), day.alias("day"), F.col(entity_col).alias("entity")
@@ -747,8 +704,8 @@ def radius_of_gyration(
     One map-side-combined groupBy; the per-entity moment algebra is
     five sums — linear scan, shuffle keyed by entity."""
     dec = "decimal(38,0)"
-    x = F.floor(F.col(lat) * F.lit(1_000_000.0)).cast("long")
-    y = F.floor(F.col(lon) * F.lit(1_000_000.0)).cast("long")
+    x = micro_deg(lat)
+    y = micro_deg(lon)
     g = (
         events.select(F.col(entity_col).alias("entity"), x.alias("x"), y.alias("y"))
         .groupBy("entity")
@@ -904,43 +861,28 @@ def binomial_smooth(
         raise ValueError(f"k must be >= 1, got {k}")
     n = 1 << res
     if hist is None:
-        fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-        fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
+        gx, gy = grid_ixy(lat, lon, res)
         hist = (
             df.select(
-                F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long").alias("ix"),
-                F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long").alias("iy"),
+                gx.alias("ix"),
+                gy.alias("iy"),
             )
             .groupBy("ix", "iy")
             .agg(F.count(F.lit(1)).alias("__n"))
         )
     w = [math.comb(2 * k, k + d) for d in range(-k, k + 1)]
     offs = [
-        (dx, dy, w[dx + k] * w[dy + k])
+        (dx, dy, F.lit(w[dx + k] * w[dy + k]).cast("long"))
         for dx in range(-k, k + 1)
         for dy in range(-k, k + 1)
     ]
     fan = hist.select(
-        "ix", "iy", "__n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                        F.lit(wt).cast("long").alias("wt"),
-                    )
-                    for dx, dy, wt in offs
-                ]
-            )
-        ).alias("o"),
+        "ix", "iy", "__n", stencil(offs, ("dx", "dy", "wt")).alias("o")
     ).select(
         (F.col("ix") + F.col("o.dx")).alias("tx"),
         (F.col("iy") + F.col("o.dy")).alias("ty"),
         (F.col("__n") * F.col("o.wt")).alias("__w"),
-    ).filter(
-        (F.col("tx") >= 0) & (F.col("tx") < n)
-        & (F.col("ty") >= 0) & (F.col("ty") < n)
-    )
+    ).filter(in_grid("tx", "ty", n))
     return fan.groupBy(
         (F.col("tx") * F.lit(n) + F.col("ty")).alias("tile")
     ).agg(F.sum("__w").alias("smooth_sum"))
@@ -1276,19 +1218,13 @@ def compact_cells(
     shortest_paths idiom) so lineage stays flat. Round count is fixed
     by the resolution gap, never by data size.
     """
-    from ..functions.cells import MAX_RES
-
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}], got {res}")
+    check_res(res)
     if not 0 <= res_min <= res:
         raise ValueError(f"res_min must be in [0, res], got {res_min}")
-    n = 1 << res
+    ix, iy = tile_ixy("tile", 1 << res)
     cur = (
         assign_tiles(df, res, lat=lat, lon=lon)
-        .select(
-            (F.col("tile") / F.lit(n)).cast("long").alias("ix"),
-            (F.col("tile") % F.lit(n)).alias("iy"),
-        )
+        .select(ix.alias("ix"), iy.alias("iy"))
         .distinct()
     )
     outs = []
@@ -1929,29 +1865,16 @@ def dist_transform(
         .agg(F.count(F.lit(1)).alias("__n"))
         .select("tile")
     )
-    ix = (F.col("tile") / F.lit(n)).cast("long")
-    iy = F.col("tile") % F.lit(n)
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(dx).alias("dx"),
-                    F.lit(dy).alias("dy"),
-                    F.lit(max(abs(dx), abs(dy))).alias("d"),
-                )
-                for dx in range(-max_d, max_d + 1)
-                for dy in range(-max_d, max_d + 1)
-            ]
-        )
+    ix, iy = tile_ixy("tile", n)
+    ds = range(-max_d, max_d + 1)
+    off = stencil(
+        [(dx, dy, max(abs(dx), abs(dy))) for dx in ds for dy in ds], ("dx", "dy", "d")
     ).alias("o")
     fan = occ.select("tile", off).select(
         (ix + F.col("o.dx")).alias("nx"),
         (iy + F.col("o.dy")).alias("ny"),
         F.col("o.d").alias("d"),
-    ).filter(
-        (F.col("nx") >= 0) & (F.col("nx") < n)
-        & (F.col("ny") >= 0) & (F.col("ny") < n)
-    )
+    ).filter(in_grid("nx", "ny", n))
     counted = (
         fan.select(
             (F.col("nx") * F.lit(n) + F.col("ny")).alias("tile"), "d"
@@ -2018,20 +1941,10 @@ def voronoi_assign(
         .groupBy("tile")
         .agg(F.count(F.lit(1)).alias("n_points"))
     )
-    ix = (F.col("seed_tile") / F.lit(n)).cast("long")
-    iy = F.col("seed_tile") % F.lit(n)
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(dx).alias("dx"),
-                    F.lit(dy).alias("dy"),
-                    F.lit(max(abs(dx), abs(dy))).alias("d"),
-                )
-                for dx in range(-max_d, max_d + 1)
-                for dy in range(-max_d, max_d + 1)
-            ]
-        )
+    ix, iy = tile_ixy("seed_tile", n)
+    ds = range(-max_d, max_d + 1)
+    off = stencil(
+        [(dx, dy, max(abs(dx), abs(dy))) for dx in ds for dy in ds], ("dx", "dy", "d")
     ).alias("o")
     fan = (
         seed_cells.select("seed_tile", off)
@@ -2041,10 +1954,7 @@ def voronoi_assign(
             F.col("o.d").alias("d"),
             "seed_tile",
         )
-        .filter(
-            (F.col("nx") >= 0) & (F.col("nx") < n)
-            & (F.col("ny") >= 0) & (F.col("ny") < n)
-        )
+        .filter(in_grid("nx", "ny", n))
     )
     best = (
         fan.select(
@@ -2117,10 +2027,8 @@ def majority_pyramid(
     cur = _mode(base, 1 << res_hi)
     for r in range(res_hi, res_lo, -1):
         n, m = 1 << r, 1 << (r - 1)
-        parent = (
-            ((F.col("tile") / n).cast("long") / 2).cast("long") * m
-            + ((F.col("tile") % n) / 2).cast("long")
-        )
+        ix, iy = tile_ixy("tile", n)
+        parent = (ix / 2).cast("long") * m + (iy / 2).cast("long")
         votes = cur.select(parent.alias("tile"), "mode").groupBy(
             "tile", "mode"
         ).agg(F.count(F.lit(1)).alias("votes"))
@@ -2355,16 +2263,9 @@ def grid_histogram(
     output is bounded by occupied cells, never facts. Shared by
     lacunarity_curve / raster_slope_aspect / hotspot_profile /
     tile_isolation (and mirrored verbatim by their oracles)."""
-    n = 1 << res
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
+    gx, gy = grid_ixy(lat, lon, res)
     return (
-        df.select(
-            F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1))
-            .cast("long").alias("ix"),
-            F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1))
-            .cast("long").alias("iy"),
-        )
+        df.select(gx.alias("ix"), gy.alias("iy"))
         .groupBy("ix", "iy")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -2500,17 +2401,7 @@ def raster_slope_aspect(
     occupied cells. The octant is a shared SQL literal (GRAD_OCTANT_SQL)
     evaluated identically by Spark and the oracle."""
     hist = grid_histogram(df, res, lat=lat, lon=lon)
-    coefs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(rx).alias("rx"), F.lit(ry).alias("ry"),
-                    F.lit(cx).alias("cx"), F.lit(cy).alias("cy"),
-                )
-                for rx, ry, cx, cy in _HORN_COEFS
-            ]
-        )
-    ).alias("c")
+    coefs = stencil(_HORN_COEFS, ("rx", "ry", "cx", "cy")).alias("c")
     grad = (
         hist.select("ix", "iy", "cnt", coefs)
         .select(
@@ -2579,15 +2470,8 @@ def hotspot_profile(
             F.col("cnt").alias("hot_cnt"),
         )
     )
-    offs = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx in range(-max_ring, max_ring + 1)
-                for dy in range(-max_ring, max_ring + 1)
-            ]
-        )
-    ).alias("o")
+    ds = range(-max_ring, max_ring + 1)
+    offs = stencil([(dx, dy) for dx in ds for dy in ds]).alias("o")
     fan = hot.select("hot_ix", "hot_iy", "hot_cnt", offs).select(
         "hot_ix", "hot_iy", "hot_cnt",
         (F.col("hot_ix") + F.col("o.dx")).alias("nx"),
@@ -2639,8 +2523,8 @@ def centroid_drift(
         F.expr(
             f"div(unix_timestamp({ts_col}), 86400)"
         ).alias("day"),
-        F.floor(F.col(lat) * F.lit(1_000_000.0)).cast("long").alias("x"),
-        F.floor(F.col(lon) * F.lit(1_000_000.0)).cast("long").alias("y"),
+        micro_deg(lat).alias("x"),
+        micro_deg(lon).alias("y"),
     )
     daily = base.groupBy("day").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -2695,16 +2579,8 @@ def tile_isolation(
     hist = grid_histogram(df, res, lat=lat, lon=lon).localCheckpoint(
         eager=True
     )  # fan side and probe side share it
-    offs = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx in range(-max_r, max_r + 1)
-                for dy in range(-max_r, max_r + 1)
-                if not (dx == 0 and dy == 0)
-            ]
-        )
-    ).alias("o")
+    ds = range(-max_r, max_r + 1)
+    offs = stencil([(dx, dy) for dx in ds for dy in ds if dx or dy]).alias("o")
     fan = hist.select("ix", "iy", offs).select(
         (F.col("ix") + F.col("o.dx")).alias("nx"),
         (F.col("iy") + F.col("o.dy")).alias("ny"),
@@ -2754,13 +2630,11 @@ def temporal_drift(
     join sides (pinned), two hour-aligned equi-joins over the +1
     offsets, one rollup per edge — histogram-scale; missing hours
     contribute zero to every sum, so the inner join on hour is exact."""
-    n = 1 << res
-    fx = F.floor((F.col(lon) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    fy = F.floor((F.col(lat) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))
+    gx, gy = grid_ixy(lat, lon, res)
     hist = (
         df.select(
-            F.least(F.greatest(fx, F.lit(0)), F.lit(n - 1)).cast("long").alias("ix"),
-            F.least(F.greatest(fy, F.lit(0)), F.lit(n - 1)).cast("long").alias("iy"),
+            gx.alias("ix"),
+            gy.alias("iy"),
             F.expr(f"(unix_timestamp({ts_col}) % 86400) div 3600").alias("h"),
         )
         .groupBy("ix", "iy", "h")

@@ -24,6 +24,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.cells import micro_deg
 from ..operators.tiling import assign_tiles
 from ..sources.snapshots import SnapshotTable
 
@@ -1026,8 +1027,8 @@ def stream_gyration_moments(
     variant. Emits one update row per (entity, trigger)."""
     import pandas as pd
 
-    x = F.floor(F.col(lat) * F.lit(1_000_000.0)).cast("long")
-    y = F.floor(F.col(lon) * F.lit(1_000_000.0)).cast("long")
+    x = micro_deg(lat)
+    y = micro_deg(lon)
     keyed = stream.select(
         F.col(entity_col).alias("entity"), x.alias("__x"), y.alias("__y")
     )
@@ -2043,8 +2044,8 @@ def stream_centroid_moments(
 
     keyed = stream.select(
         F.expr(f"div(unix_timestamp({ts_col}), 86400)").alias("day"),
-        F.floor(F.col(lat) * F.lit(1_000_000.0)).cast("long").alias("__x"),
-        F.floor(F.col(lon) * F.lit(1_000_000.0)).cast("long").alias("__y"),
+        micro_deg(lat).alias("__x"),
+        micro_deg(lon).alias("__y"),
     )
 
     def kernel(key, pdf_iter, state):

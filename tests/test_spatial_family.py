@@ -202,6 +202,31 @@ def test_rasterize_paths_agree(spark, polygons):
     )
 
 
+def test_rasterize_gate_is_one_bounded_job(spark, polygons):
+    """Below the threshold the polygon gate is one bounded
+    ``limit(threshold + 1)`` collect (the old count-then-collect gate ran
+    two jobs); the rows equal the distributed path's."""
+    import os
+
+    df, _ = polygons
+    sc = spark.sparkContext
+    group = f"test-raster-gate-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "rasterize gate")
+    try:
+        small = spatial.rasterize_polygons(df, 8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    key = ["polygon_id", "tile"]
+    for threshold in (0, 1):  # 0: gate off; 1: two polygons exceed it
+        big = spatial.rasterize_polygons(df, 8, collect_threshold=threshold)
+        pd.testing.assert_frame_equal(
+            small.toPandas().sort_values(key).reset_index(drop=True),
+            big.toPandas().sort_values(key).reset_index(drop=True),
+        )
+
+
 def test_rasterize_rejects_bad_res(spark, polygons):
     df, _ = polygons
     with pytest.raises(ValueError):

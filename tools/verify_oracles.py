@@ -169,7 +169,7 @@ def main():
         sys.stderr.flush()
         return os.path.getsize(hint_log.name)
 
-    spark = get_spark("verify_oracles", cores=16, shuffle_partitions=16)
+    spark = get_spark("verify_oracles")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
