@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..functions import geo
-from ..functions.cells import tile_key_col
+from ..functions.cells import _norm_ixy, tile_key_col
 
 # feature dims at or under this many rows are collected once and broadcast
 # as a grid index (knn_join's broadcast path)
@@ -107,10 +107,7 @@ def _explode_feature_disk(
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def disk(lat: pd.Series, lon: pd.Series) -> pd.Series:
         n = np.int64(1) << res
-        fx = (lon.to_numpy(dtype=np.float64) + 180.0) / 360.0
-        fy = (lat.to_numpy(dtype=np.float64) + 90.0) / 180.0
-        ix = np.clip(np.floor(fx * n).astype(np.int64), 0, n - 1)
-        iy = np.clip(np.floor(fy * n).astype(np.int64), 0, n - 1)
+        ix, iy = _norm_ixy(lat, lon, res)
         offs = np.arange(-radius, radius + 1, dtype=np.int64)
         dx, dy = np.meshgrid(offs, offs, indexing="ij")
         dx, dy = dx.ravel(), dy.ravel()
@@ -370,8 +367,7 @@ def _grid_topk(
     N = len(plat)
     out_ids = np.empty((N, kk), dtype=fid.dtype)
     out_d = np.empty((N, kk), dtype=np.float64)
-    px = np.clip(np.floor((plon + 180.0) / 360.0 * n).astype(np.int64), 0, n - 1)
-    py = np.clip(np.floor((plat + 90.0) / 180.0 * n).astype(np.int64), 0, n - 1)
+    px, py = _norm_ixy(plat, plon, grid["res"])
     pcell = px * n + py
     sort_idx = np.argsort(pcell, kind="stable")
     cells_sorted = pcell[sort_idx]
@@ -460,12 +456,20 @@ def knn_broadcast(
     )
 
 
-def _feature_cols(features: DataFrame, feature_id: str) -> DataFrame:
+def _feature_cols(features: DataFrame, feature_id: str, *extra) -> DataFrame:
     return features.select(
         F.col(feature_id).alias("neighbor_id"),
         F.col("lat").alias("__flat"),
         F.col("lon").alias("__flon"),
+        *extra,
     )
+
+
+def _collect_features(features: DataFrame, feature_id: str, threshold: int, *extra):
+    """The broadcast gate as one bounded job: up to ``threshold + 1``
+    (neighbor_id, __flat, __flon, *extra) rows; more than ``threshold``
+    means the dim is over the gate."""
+    return _feature_cols(features, feature_id, *extra).limit(threshold + 1).toPandas()
 
 
 def _knn_grid(feats_pdf: pd.DataFrame, k: int, metric: str, res: int | None) -> dict:
@@ -483,8 +487,7 @@ def _knn_grid(feats_pdf: pd.DataFrame, k: int, metric: str, res: int | None) -> 
         lon_span = max(float(flon.max() - flon.min()) if m else 1e-6, 1e-6)
         res = auto_res(m, lat_span, lon_span, k, min_per_disk=max(3 * k + 2, 128))
     n = np.int64(1) << res
-    fx = np.clip(np.floor((flon + 180.0) / 360.0 * n).astype(np.int64), 0, n - 1)
-    fy = np.clip(np.floor((flat + 90.0) / 180.0 * n).astype(np.int64), 0, n - 1)
+    fx, fy = _norm_ixy(flat, flon, res)
     fcell = fx * n + fy
     order = np.argsort(fcell, kind="stable")  # stable: id order kept per cell
     cells_uniq, starts = np.unique(fcell[order], return_index=True)
@@ -494,7 +497,7 @@ def _knn_grid(feats_pdf: pd.DataFrame, k: int, metric: str, res: int | None) -> 
         maxabs = min(float(np.abs(flat).max()), 89.999)
         hav_factor = max(min(1.0, 2.0 * np.cos(np.radians(maxabs))) * 0.999, 1e-9)
     return dict(
-        n=int(n), flat=flat, flon=flon, fid=fid,
+        res=res, n=int(n), flat=flat, flon=flon, fid=fid,
         cells=cells_uniq, starts=starts, ends=ends, order=order, hav_factor=hav_factor,
     )
 
@@ -566,6 +569,7 @@ def knn_join(
     max_ring: int = 64,
     brute_max_pairs: int = 4_000_000_000,
     broadcast_threshold: int = BROADCAST_ROWS,
+    _feats: pd.DataFrame | None = None,
 ) -> DataFrame:
     """Exact k-nearest-features per point.
 
@@ -575,10 +579,11 @@ def knn_join(
     dims at or under ``broadcast_threshold`` rows take the broadcast
     fast path (``knn_broadcast`` — identical results, no shuffle); the
     ring-expansion cogroup path below is the huge-dim scale path.
+    ``_feats`` is the gate's collect when the caller already ran it.
     """
-    # the broadcast gate is one bounded job: limit(threshold + 1) both
-    # counts the dim and collects it when it is small
-    small = _feature_cols(features, feature_id).limit(broadcast_threshold + 1).toPandas()
+    small = _feats if _feats is not None else _collect_features(
+        features, feature_id, broadcast_threshold
+    )
     if len(small) <= broadcast_threshold:
         return _knn_grid_pass(points, small, k, point_id, metric, res)
     stats = features.agg(
@@ -614,11 +619,7 @@ def knn_join(
         "__cids array<long>, __cds array<double>"
     )
 
-    feats = features.select(
-        F.col(feature_id).alias("neighbor_id"),
-        F.col("lat").alias("__flat"),
-        F.col("lon").alias("__flon"),
-    ).persist()
+    feats = _feature_cols(features, feature_id).persist()
 
     unresolved = points.select(
         F.col(point_id).alias("__pid"),

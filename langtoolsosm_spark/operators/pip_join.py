@@ -331,6 +331,7 @@ def pip_join(
     broadcast_cover: bool = True,
     broadcast_rings: bool = True,
     cover_res: int | None = None,
+    _small: pd.DataFrame | None | bool = False,
 ) -> DataFrame:
     """Join each point to every polygon containing it.
 
@@ -363,12 +364,16 @@ def pip_join(
     a set takes the narrow ``mapInArrow`` path (module docstring) — the
     same cover, ring cast and tie-break as the join path, no exchange.
     Above the gate, or with either switch off, the join path runs.
+    ``_small`` is that gate's answer when the caller already collected it
+    (the frame, or None over the gate); False collects here.
     """
     if cover_res is None:
         cover_res = res + 3
     if cover_res < res:
         raise ValueError(f"cover_res {cover_res} must be >= res {res}")
-    small = _collect_small(polygons, NARROW_ROWS) if broadcast_cover and broadcast_rings else None
+    small = _small
+    if small is False:
+        small = _collect_small(polygons, NARROW_ROWS) if broadcast_cover and broadcast_rings else None
     if small is not None:
         return _pip_narrow(points, small, res, cover_res, lat, lon, unique)
     # points carry BOTH grid keys (pure codegen); the hierarchical cover

@@ -81,13 +81,25 @@ def hot_cells(df: DataFrame, cell_col: str = "tile", threshold: int = 10_000) ->
 
 
 def add_salt(
-    df: DataFrame, cell_col: str = "tile", threshold: int = 10_000, buckets: int = 16
+    df: DataFrame,
+    cell_col: str = "tile",
+    threshold: int = 10_000,
+    buckets: int = 16,
+    max_rows: int | None = None,
 ) -> DataFrame:
     """``df`` plus an int ``salt`` column: a row hash mod ``buckets`` in
     cells holding more than ``threshold`` rows, 0 elsewhere. One broadcast
     join against the hot-cell list, no shuffle of the rows — for callers
     whose next step already hash-partitions on a key built from
-    (cell, salt), such as a snapshot write."""
+    (cell, salt), such as a snapshot write.
+
+    A cell holds more than ``threshold`` rows only if the whole frame
+    does: given ``max_rows``, an upper bound on ``df``'s rows, at or under
+    ``threshold``, every salt is 0 and no histogram job or broadcast runs
+    (columns in the join's order, the cell first)."""
+    if max_rows is not None and max_rows <= threshold:
+        rest = [c for c in df.columns if c != cell_col]
+        return df.select(cell_col, *rest).withColumn("salt", F.lit(0))
     hot = hot_cells(df, cell_col, threshold).select(cell_col, F.lit(True).alias("__hot"))
     return (
         df.join(F.broadcast(hot), cell_col, "left")

@@ -24,20 +24,23 @@ Two physical paths, one answer (``flagship``):
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import knn as knn_mod
 from ..operators import pip_join as pip_mod
 from ..operators import tiling
+from ..sources.footers import read_parquet
 
 
 def load_synth(spark: SparkSession, synth_dir: str):
-    images = spark.read.parquet(f"{synth_dir}/images.parquet")
-    polygons = spark.read.parquet(f"{synth_dir}/polygons.parquet")
-    features = spark.read.parquet(f"{synth_dir}/features.parquet")
-    wikidata = spark.read.parquet(f"{synth_dir}/wikidata.parquet")
-    return images, polygons, features, wikidata
+    """(images, polygons, features, wikidata), schemas from the footers."""
+    return tuple(
+        read_parquet(spark, f"{synth_dir}/{name}.parquet")[0]
+        for name in ("images", "polygons", "features", "wikidata")
+    )
 
 
 def flagship(
@@ -62,38 +65,43 @@ def flagship(
     Column pruning note: ``bytes`` is never selected here, so the parquet
     scan reads only the metadata columns (verified via .explain ReadSchema).
     """
-    # only the three tables used here: load_synth's wikidata read would
-    # cost a schema-inference job per pass for nothing
-    images, polygons, features = (
-        spark.read.parquet(f"{synth_dir}/{name}.parquet")
+    return _flagship(spark, synth_dir, res, k, with_knn, replicate, cleanup)[0]
+
+
+def _flagship(
+    spark, synth_dir, res, k, with_knn, replicate, cleanup
+) -> tuple[DataFrame, int | None]:
+    """:func:`flagship` and an upper bound on its rows for ``add_salt``:
+    the images' footer row count times the replicas when the narrow pass
+    ran (it only drops rows), else None (the join path multiplies rows on
+    duplicated ids)."""
+    # only the three tables used here, schemas from their footers
+    (images, n_images), (polygons, _), (features, _) = (
+        read_parquet(spark, f"{synth_dir}/{name}.parquet")
         for name in ("images", "polygons", "features")
     )
     # replicas get distinct ids and the same coords, so every result
     # replicates deterministically
     pts = replicate_images(images.select("image_id", "caption", "lat", "lon"), replicate)
     tiled = tiling.assign_tiles(pts, res=res)
-    named = (
-        features.filter(F.map_contains_key("tags", F.lit("name"))).select(
+    # each small side is collected once (polys None: over the gate), and
+    # whichever path runs uses those rows
+    polys = pip_mod._collect_small(polygons, pip_mod.NARROW_ROWS, *_polygon_attrs())
+    named = feats = None
+    if with_knn:
+        named = features.filter(F.map_contains_key("tags", F.lit("name"))).select(
             "id", F.element_at("tags", F.lit("name")).alias("feature_name"), "lat", "lon"
         )
-        if with_knn
-        else None
-    )
-    owned = _enrich_narrow(tiled, polygons, named, res, k, cleanup)
+        feats = knn_mod._collect_features(named, "id", knn_mod.BROADCAST_ROWS, "feature_name")
+    owned = _enrich_narrow(tiled, polygons, named, polys, feats, res, k, cleanup)
+    bound = None if owned is None or n_images is None else n_images * max(replicate, 1)
     if owned is None:
-        owned = _enrich_joined(tiled, polygons, named, res, k, cleanup)
+        owned = _enrich_joined(tiled, polygons, named, polys, feats, res, k, cleanup)
     if not with_knn:
         owned = owned.withColumn("nearest_name", F.lit(None).cast("string"))
 
     return owned.select(
-        "image_id",
-        "caption",
-        "lat",
-        "lon",
-        "tile",
-        "polygon_id",
-        "polygon_name",
-        "lang",
+        "image_id", "caption", "lat", "lon", "tile", "polygon_id", "polygon_name", "lang",
         "nearest_name",
         F.concat_ws(
             " — ",
@@ -103,7 +111,7 @@ def flagship(
                 F.concat(F.lit("prop de "), F.col("nearest_name")),
             ),
         ).alias("caption_enriched"),
-    )
+    ), bound
 
 
 def _unique_ids(ids) -> bool:
@@ -123,6 +131,8 @@ def _enrich_narrow(
     tiled: DataFrame,
     polygons: DataFrame,
     named: DataFrame | None,
+    polys,
+    feats,
     res: int,
     k: int,
     cleanup: list | None,
@@ -130,11 +140,12 @@ def _enrich_narrow(
     """The whole enrichment as one ``mapInArrow`` pass over ``tiled``, or
     None when a gate fails (polygons over ``pip_join.NARROW_ROWS``, named
     features over ``knn.BROADCAST_ROWS``, or either id column with a null
-    or a duplicate).
+    or a duplicate). ``polys`` and ``feats`` are the sides ``flagship``
+    collected (``pip_join._collect_small``, ``knn._collect_features``).
 
-    Both small sides are collected once and broadcast together: the
-    ``pip_join`` narrow index (cover, rings, and the polygon attributes in
-    polygon-number order) and the ``knn_join`` grid index. Per batch,
+    Both small sides are broadcast together: the ``pip_join`` narrow
+    index (cover, rings, and the polygon attributes in polygon-number
+    order) and the ``knn_join`` grid index. Per batch,
     ``_narrow_match`` finds each row's smallest containing polygon, the
     matched rows pass through as ``RecordBatch.take``, the polygon columns
     are taken by polygon number, and ``_grid_topk`` finds the rank-1
@@ -145,15 +156,12 @@ def _enrich_narrow(
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StringType, StructField, StructType
 
-    polys = pip_mod._collect_small(polygons, pip_mod.NARROW_ROWS, *_polygon_attrs())
     if polys is None or not _unique_ids(polys["polygon_id"]):
         return None
     attr_fields = polygons.select(*_polygon_attrs()).schema.fields
     fields = [StructField("polygon_id", StringType())] + attr_fields
-    feats = None
-    if named is not None:
-        feats = named.limit(knn_mod.BROADCAST_ROWS + 1).toPandas()
-        if len(feats) > knn_mod.BROADCAST_ROWS or not _unique_ids(feats["id"]):
+    if feats is not None:
+        if len(feats) > knn_mod.BROADCAST_ROWS or not _unique_ids(feats["neighbor_id"]):
             return None
         fields.append(StructField("nearest_name", named.schema["feature_name"].dataType))
 
@@ -167,15 +175,12 @@ def _enrich_narrow(
     grid = names = None
     if feats is not None:
         # ids are unique: sorted by id, the names line up with the grid's fid
-        feats = feats.sort_values("id", kind="stable")
+        feats = feats.sort_values("neighbor_id", kind="stable")
         names = pa.Array.from_pandas(
             feats["feature_name"], type=to_arrow_type(fields[-1].dataType)
         )
         if len(feats):
-            grid = knn_mod._knn_grid(
-                feats.rename(columns={"id": "neighbor_id", "lat": "__flat", "lon": "__flon"}),
-                k, "euclid_deg", None,
-            )
+            grid = knn_mod._knn_grid(feats, k, "euclid_deg", None)
     bc = tiled.sparkSession.sparkContext.broadcast(
         dict(idx=idx, cols=cols, grid=grid, names=names)
     )
@@ -216,18 +221,21 @@ def _enrich_joined(
     tiled: DataFrame,
     polygons: DataFrame,
     named: DataFrame | None,
+    polys,
+    feats,
     res: int,
     k: int,
     cleanup: list | None,
 ) -> DataFrame:
     """The enrichment as a chain of operators: ``pip_join``, a broadcast
     join of the polygon attributes, then (with ``named``) ``knn_join`` and
-    the joins that bring the nearest name back to each owner."""
+    the joins that bring the nearest name back to each owner. Both
+    operators gate on the sides ``flagship`` collected, not a new collect."""
     owned = pip_mod.pip_join(
-        tiled, polygons, res=res, unique=True, id_col="image_id"
+        tiled, polygons, res=res, unique=True, id_col="image_id", _small=polys
     )
-    polys = polygons.select("polygon_id", *_polygon_attrs())
-    owned = owned.join(F.broadcast(polys), "polygon_id", "left")
+    attrs = polygons.select("polygon_id", *_polygon_attrs())
+    owned = owned.join(F.broadcast(attrs), "polygon_id", "left")
     if named is None:
         return owned
     # the kNN loop fires several driver actions over this subtree;
@@ -237,7 +245,7 @@ def _enrich_joined(
         cleanup.append(owned)
     nn = knn_mod.knn_join(
         owned.select("image_id", "lat", "lon"), named, k=k, res=None,
-        point_id="image_id", feature_id="id",
+        point_id="image_id", feature_id="id", _feats=feats,
     ).filter(F.col("rank") == 1)
     nn = nn.join(
         named.select(F.col("id").alias("neighbor_id"), "feature_name"),
@@ -267,59 +275,63 @@ def run_to_snapshot(
     no data files, no snapshot manifests. All caches and broadcasts taken
     by the run are released either way.
     """
-    import time
-
-    from ..sources.snapshots import SnapshotTable, write_partitioned
-
     t0 = time.time()
     cleanup: list = []
-    # persist: the salting histogram and the write job would otherwise each
-    # re-evaluate the full enrichment DAG
-    df = flagship(
-        spark, synth_dir, res=res, with_knn=with_knn, replicate=replicate,
-        cleanup=cleanup,
-    ).persist()
-    cleanup.append(df)
+    df, max_rows = _flagship(spark, synth_dir, res, 1, with_knn, replicate, cleanup)
     try:
         if dry_run:
-            rows = df.count()
-            wall = time.time() - t0
-            return {
-                "rows": rows,
-                "wall_sec": wall,
-                "rows_per_sec": rows / wall if wall > 0 else 0.0,
-                "snapshots": [],
-                "skipped_partitions": 0,
-                "dry_run": True,
-            }
-        # salt only: write_partitioned hash-partitions on the (tile, salt)
-        # part key itself, so a (tile, salt) repartition here would be a
-        # second shuffle of every row
-        salted = tiling.add_salt(df, "tile", threshold=salt_threshold, buckets=8)
-        table = SnapshotTable(out_path)
-        skip = table.committed_partitions() if resume else set()
-        snaps = write_partitioned(
-            salted.withColumn(
-                "__part", F.concat_ws("_", F.col("tile"), F.col("salt"))
-            ).drop("salt"),
-            table,
-            "__part",
-            summary={"comment": "flagship tile enrichment", "created_by": "langtoolsosm_spark"},
-            skip_partitions=skip,
-            stats_col="tile",
+            return _metrics(t0, df.count(), [], skipped_partitions=0, dry_run=True)
+        # cached only when add_salt's histogram reads the frame before the
+        # write does: not under a row bound at or below the threshold (no
+        # histogram), nor for dry_run's single count
+        if max_rows is None or max_rows > salt_threshold:
+            df = df.persist()
+            cleanup.append(df)
+        snaps, skipped = _salted_write(
+            df, out_path, salt_threshold, max_rows, "flagship tile enrichment", resume
         )
-        wall = time.time() - t0
-        rows = sum(s["total_rows"] for s in snaps)
-        return {
-            "rows": rows,
-            "wall_sec": wall,
-            "rows_per_sec": rows / wall if wall > 0 else 0.0,
-            "snapshots": [s["snapshot_id"] for s in snaps],
-            "skipped_partitions": len(skip),
-        }
+        return _metrics(t0, None, snaps, skipped_partitions=skipped)
     finally:
         for d in cleanup:
             d.unpersist() if isinstance(d, DataFrame) else d.destroy()
+
+
+def _salted_write(df, out_path, salt_threshold, max_rows, comment, resume=False):
+    """``df`` salted by tile (``add_salt``: 8 buckets, ``max_rows`` its row
+    bound) and committed to the snapshot table at ``out_path``, one file
+    set per (tile, salt); returns the snapshots and how many committed
+    partitions ``resume`` skipped."""
+    from ..sources.snapshots import SnapshotTable, write_partitioned
+
+    # salt only: write_partitioned hash-partitions on the (tile, salt)
+    # part key itself, so a (tile, salt) repartition here would be a
+    # second shuffle of every row
+    salted = tiling.add_salt(df, "tile", salt_threshold, 8, max_rows=max_rows)
+    table = SnapshotTable(out_path)
+    skip = table.committed_partitions() if resume else set()
+    snaps = write_partitioned(
+        salted.withColumn("__part", F.concat_ws("_", F.col("tile"), F.col("salt"))).drop("salt"),
+        table,
+        "__part",
+        summary={"comment": comment, "created_by": "langtoolsosm_spark"},
+        skip_partitions=skip,
+        stats_col="tile",
+    )
+    return snaps, len(skip)
+
+
+def _metrics(t0: float, rows: int | None, snaps: list, **extra) -> dict:
+    """A run's metrics; ``rows`` None counts the snapshots' rows."""
+    wall = time.time() - t0
+    if rows is None:
+        rows = sum(s["total_rows"] for s in snaps)
+    return {
+        "rows": rows,
+        "wall_sec": wall,
+        "rows_per_sec": rows / wall if wall > 0 else 0.0,
+        "snapshots": [s["snapshot_id"] for s in snaps],
+        **extra,
+    }
 
 
 def replicate_images(images: DataFrame, replicate: int) -> DataFrame:
@@ -356,14 +368,12 @@ def run_ingest(
     Unlike ``run_to_snapshot`` (the richer flagship with kNN caption
     enrichment), this is the compute-dominated ingest path used for the
     N-vs-4N scaling measurement."""
-    import time
-
     from ..operators.images import _verify, per_image
-    from ..sources.snapshots import SnapshotTable, write_partitioned
 
     t0 = time.time()
-    images = spark.read.parquet(f"{synth_dir}/images.parquet")
-    polygons = spark.read.parquet(f"{synth_dir}/polygons.parquet")
+    (images, n_images), (polygons, _) = (
+        read_parquet(spark, f"{synth_dir}/{name}.parquet") for name in ("images", "polygons")
+    )
     images = replicate_images(images, replicate)
 
     def decode_verify(px, img_id, caption, lat, lon, w, h, ph):
@@ -393,33 +403,8 @@ def run_ingest(
     if dry_run:
         # --dry-run parity: evaluate the full plan (decode/verify metrics
         # included via the observation) but write nothing
-        rows = owned.count()
-        wall = time.time() - t0
-        return {
-            "rows": rows,
-            "wall_sec": wall,
-            "rows_per_sec": rows / wall if wall > 0 else 0.0,
-            "snapshots": [],
-            "observed": dict(obs.get),
-            "dry_run": True,
-        }
-    salted = tiling.add_salt(owned, "tile", threshold=salt_threshold, buckets=8)
-    table = SnapshotTable(out_path)
-    snaps = write_partitioned(
-        salted.withColumn("__part", F.concat_ws("_", F.col("tile"), F.col("salt"))).drop(
-            "salt"
-        ),
-        table,
-        "__part",
-        summary={"comment": "ingest", "created_by": "langtoolsosm_spark"},
-        stats_col="tile",
-    )
-    wall = time.time() - t0
-    rows = sum(s["total_rows"] for s in snaps)
-    return {
-        "rows": rows,
-        "wall_sec": wall,
-        "rows_per_sec": rows / wall if wall > 0 else 0.0,
-        "snapshots": [s["snapshot_id"] for s in snaps],
-        "observed": dict(obs.get),
-    }
+        return _metrics(t0, owned.count(), [], observed=dict(obs.get), dry_run=True)
+    # one row per decoded image at most: pip_join(unique=True) keeps one owner each
+    max_rows = None if n_images is None else n_images * max(replicate, 1)
+    snaps, _ = _salted_write(owned, out_path, salt_threshold, max_rows, "ingest")
+    return _metrics(t0, None, snaps, observed=dict(obs.get))

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.cells import micro_deg
 from ..operators.tiling import assign_tiles
+from ..sources.footers import read_parquet
 from ..sources.snapshots import SnapshotTable
 
 
@@ -33,10 +34,10 @@ def stream_images(
     spark: SparkSession, images_dir: str, max_files_per_trigger: int = 4
 ) -> DataFrame:
     """File-source stream over a parquet directory, with the schema the
-    batch reader infers from its files."""
+    batch reader would infer, read from the footers (``read_parquet``)."""
     return (
         spark.readStream.format("parquet")
-        .schema(spark.read.parquet(images_dir).schema)
+        .schema(read_parquet(spark, images_dir)[0].schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(images_dir)
     )

@@ -230,3 +230,86 @@ def test_run_to_snapshot_destroys_its_broadcasts(spark, synth_dir, tmp_path, mon
     )
     assert m["rows"] == 2000
     assert made and not any(os.path.exists(b._path) for b in made)
+
+
+def _counting(monkeypatch, module, name):
+    """Spy on ``module.name``; returns the list of its results."""
+    calls = []
+    real = getattr(module, name)
+
+    def spy(*a, **k):
+        calls.append(real(*a, **k))
+        return calls[-1]
+
+    monkeypatch.setattr(module, name, spy)
+    return calls
+
+
+@pytest.mark.parametrize("dup", ["polygon", "feature"])
+def test_join_path_collects_each_small_side_once(spark, tmp_path, monkeypatch, dup):
+    """On the join path ``pip_join`` and ``knn_join`` gate on the rows
+    ``flagship`` collected: one polygon collect, one feature collect."""
+    from langtoolsosm_spark.operators import knn as knn_mod
+    from langtoolsosm_spark.operators import pip_join as pip_mod
+
+    if dup == "polygon":
+        d = _write(spark, tmp_path, polys=POLYS + [
+            ("B", "Beta2", {"lang": "it"}, _square(35.0, 5.0, 45.0, 15.0))])
+        want = [("i_a", "A", "f2"), ("i_ab", "A", "f1"), ("i_c", "C", "f4")]
+    else:
+        d = _write(spark, tmp_path, feats=FEATS + [(1, {"name": "f1_again"}, 60.0, 60.0)])
+        want = [("i_a", "A", "f2"), ("i_ab", "A", "f1"), ("i_ab", "A", "f1_again"),
+                ("i_c", "C", "f4")]
+    with monkeypatch.context() as m:
+        polys = _counting(m, pip_mod, "_collect_small")
+        feats = _counting(m, knn_mod, "_collect_features")
+        narrow = _counting(m, pipeline, "_enrich_narrow")
+        _, _, got = _run(spark, d, res=6)
+    assert narrow == [None]
+    assert len(polys) == 1 and len(polys[0]) == len(POLYS) + (dup == "polygon")
+    assert len(feats) == 1 and len(feats[0]) == 3 + (dup == "feature")
+    assert [(r[0], r[5], r[8]) for r in got] == want
+
+
+def _table(path):
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from langtoolsosm_spark.sources.snapshots import SnapshotTable
+
+    files = SnapshotTable(path).live_files()
+    pdf = pd.concat([pq.read_table(f).to_pandas() for f in files], ignore_index=True)
+    return pdf.sort_values("image_id", ignore_index=True), len(files)
+
+
+def test_run_to_snapshot_jobs_at_default_threshold(
+    spark, synth_dir, tmp_path, monkeypatch, count_jobs
+):
+    """2,000 images cannot fill a tile past the 50,000-row threshold: the
+    pass runs the two small-side collects and the write, with no schema
+    inference, salt histogram or cache."""
+    persists = _counting(monkeypatch, DataFrame, "persist")
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    m, n = count_jobs(lambda: pipeline.run_to_snapshot(
+        spark, synth_dir, str(tmp_path / "t"), res=8, resume=False))
+    assert m["rows"] == 2000
+    assert n <= 4
+    assert persists == [] and sc._jsc.getPersistentRDDs().size() == before
+
+
+def test_salt_threshold_below_rows_still_splits_hot_tiles(spark, synth_dir, tmp_path):
+    """Above the bound the histogram runs: a tile over the threshold is
+    split over several ``__part`` file sets, and every other column is
+    the same as in the unsalted default run."""
+    pipeline.run_to_snapshot(spark, synth_dir, str(tmp_path / "low"), res=8, resume=False,
+                             salt_threshold=100)
+    pipeline.run_to_snapshot(spark, synth_dir, str(tmp_path / "dflt"), res=8, resume=False)
+    low, low_files = _table(str(tmp_path / "low"))
+    dflt, dflt_files = _table(str(tmp_path / "dflt"))
+    assert dflt["__part"].str.endswith("_0").all()
+    per_tile = low.groupby("tile")
+    hot = per_tile.size()[lambda s: s > 100].index
+    assert len(hot) and (per_tile["__part"].nunique()[hot] > 1).all()
+    assert low_files > dflt_files
+    assert low.drop(columns="__part").equals(dflt.drop(columns="__part"))

@@ -182,6 +182,23 @@ def test_skew_hot_cell_detected_and_salted(spark, tables):
     assert salted.count() == images.count()
 
 
+def test_add_salt_row_bound_at_threshold_plans_no_histogram(spark, tables):
+    """A row bound at or under the threshold gives the unbounded answer
+    (columns in the same order, the same rows) with no hot-cell join; a
+    bound above it plans the join as before."""
+    images, _, _ = tables
+    tiled = tiling.assign_tiles(images.select("image_id", "lat", "lon"), res=6)
+    n = images.count()
+    want = tiling.add_salt(tiled, threshold=n, buckets=8)
+    for bound, joins in ((n, False), (n + 1, True)):
+        got = tiling.add_salt(tiled, threshold=n, buckets=8, max_rows=bound)
+        assert ("Join" in got._jdf.queryExecution().optimizedPlan().toString()) is joins
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ]
+        assert sorted(got.collect()) == sorted(want.collect())
+
+
 def test_adaptive_split_balances(spark, tables):
     images, _, _ = tables
     cap = 150
