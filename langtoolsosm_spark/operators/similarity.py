@@ -8,11 +8,19 @@ At 100 TB the exact path is the per-bucket kernel of the LSH/IVF variant,
 not a global cross join: candidates are bounded by bucket occupancy and
 the shuffle key is the bucket id.
 
-Every corpus top-k family (exact, IVF, LSH, PQ-ADC, SQ8, shortlist
-rescore) runs through ``corpus_topk``: the families supply only a
-driver-side ``prepare`` and a per-batch ``score``. Their DataFrame
-join formulations live in ``tests/reference/ann_join.py`` as parity
-references.
+Every corpus top-k family (exact, IVF, LSH, PQ-ADC, SQ8) runs through
+``corpus_topk``: the families supply only a driver-side ``prepare`` and
+a per-batch ``score``. The two-stage PQ families (``pq_ann_rescored``,
+``ivf_pq_ann_rescored``) are the same single pass with a ``shortlist``:
+each batch keeps its ADC shortlist and scores the exact quantized dot
+of just those candidates from the vectors already in the task, and the
+merge cuts the global shortlist before ranking by that dot. Every
+corpus pass (top-k, Lloyd rounds, PQ encoding, LSH buckets) is a
+``mapInArrow`` kernel that rebuilds its batch's (n, dim) matrix from
+the Arrow list column (``_batch_matrix``); trained artifacts (seeds,
+codebooks, centroids) stay on the driver as NumPy arrays between
+stages. Their DataFrame join formulations live in
+``tests/reference/ann_join.py`` as parity references.
 """
 
 from __future__ import annotations
@@ -42,15 +50,13 @@ def topk_dot_kernel(
     factored cross product that dies at 100x. Quantization runs JVM-side
     (``_quantized_vecs``) for byte-exact rounding parity; the kernel only
     does integer arithmetic (``_guarded_matmul``). ``queries=None``
-    means every % 50 == 0 id (the driver fixture)."""
-    corpus = _corpus_vecs(emb, id_col, vec_col, spread=True)
-    qsrc = (
-        corpus.filter(F.col("__cid") % 50 == 0)
-        if queries is None
-        else _corpus_vecs(queries, id_col, vec_col)
-    )
+    means every % 50 == 0 id (the driver fixture), taken from the
+    unspread frame so the query collect is one job."""
+    qsrc = _corpus_vecs(emb if queries is None else queries, id_col, vec_col)
     return corpus_topk(
-        corpus, qsrc, k, lambda qids, Q: Q,
+        _corpus_vecs(emb, id_col, vec_col, spread=True),
+        _fixture_queries(qsrc) if queries is None else qsrc,
+        k, lambda qids, Q: Q,
         lambda Q, cid, X: _guarded_matmul(Q, X), shard_rows=shard_rows,
     )
 
@@ -123,60 +129,64 @@ def sign_lsh_buckets_kernel(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, table, bucket): bit-identical buckets to ``sign_lsh_buckets``
-    computed by a broadcast sign matrix + ``mapInPandas`` NumPy kernel
-    instead of column expressions.
+    computed by a NumPy ``mapInArrow`` kernel instead of column
+    expressions.
 
     The expression form embeds n_tables x n_bits x dim sign literals into
     the plan — 1,536 nodes at dim=64 (fine), ~150k at real embedding dims
     (768-1536), where Catalyst planning of the literal trees, not
     execution, becomes the bottleneck. Here the plan carries ONE
-    mapInPandas node regardless of dim; the (T*B, dim) ±1 matrix ships as
-    a broadcast. Quantization stays JVM-side (``F.transform`` +
+    mapInArrow node regardless of dim; the (T*B, dim) ±1 matrix rides in
+    the kernel's closure as int8 (37 KB at dim 1536), so there is no
+    broadcast to release. Quantization stays JVM-side (``F.transform`` +
     ``_quantize``) for byte-exact oracle parity; the matmul is exact
     float64 BLAS while magnitudes stay under 2^53, else int64 — the
     ``topk_dot_kernel`` discipline. The expression form remains the
     DuckDB oracle spec; parity at dim=64 is regression-tested."""
     import numpy as np
-    import pandas as pd
 
-    S = np.array(
+    S = _sign_matrix(n_tables, n_bits, dim)
+    tables = np.arange(n_tables, dtype=np.int32)
+
+    def buckets(cid, X):
+        return (
+            np.repeat(cid, n_tables),
+            np.tile(tables, len(cid)),
+            _lsh_codes(X, S, n_bits).reshape(-1),
+        )
+
+    return _arrow_map(
+        _corpus_vecs(emb, id_col, vec_col),
+        buckets,
+        f"{id_col} long, table int, bucket int",
+        dim,
+    )
+
+
+def _sign_matrix(n_tables: int, n_bits: int, dim: int):
+    """The (n_tables * n_bits, dim) int8 ±1 ``lsh_sign`` projection
+    matrix, row ``t * n_bits + b`` for bit b of table t."""
+    import numpy as np
+
+    return np.array(
         [
             [lsh_sign(t, b, d) for d in range(dim)]
             for t in range(n_tables)
             for b in range(n_bits)
         ],
-        dtype=np.int64,
+        dtype=np.int8,
     )
-    pw = 1 << np.arange(n_bits, dtype=np.int64)
-    qv = emb.select(
-        F.col(id_col).alias("__id"),
-        F.transform(F.col(vec_col), lambda x: _quantize(x)).alias("__xq"),
-    )
-    bc = emb.sparkSession.sparkContext.broadcast(S)
 
-    def run(batches):
-        S = bc.value
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
-            xmax = int(np.abs(X).max()) if X.size else 0
-            if xmax * dim < (1 << 53):
-                D = (X.astype(np.float64) @ S.T.astype(np.float64)).astype(np.int64)
-            else:
-                D = X @ S.T
-            bits = (D > 0).astype(np.int64).reshape(n, n_tables, n_bits)
-            buckets = (bits * pw[None, None, :]).sum(axis=2).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf["__id"].to_numpy(np.int64), n_tables),
-                    "table": np.tile(np.arange(n_tables, dtype=np.int32), n),
-                    "bucket": buckets.reshape(-1),
-                }
-            )
 
-    return qv.mapInPandas(run, schema=f"{id_col} long, table int, bucket int")
+def _lsh_codes(X, S, n_bits: int):
+    """(n, n_tables) int64 bucket ids of quantized vectors: bit b of table
+    t = [<x_q, r_tb> > 0] — the ``sign_lsh_buckets`` contract,
+    byte-identical (test_round4_fixes parity)."""
+    import numpy as np
+
+    bits = (_guarded_matmul(X, S) > 0).astype(np.int64)
+    bits = bits.reshape(len(X), len(S) // n_bits, n_bits)
+    return (bits << np.arange(n_bits, dtype=np.int64)).sum(axis=2)
 
 
 def _buckets_keyed(
@@ -188,7 +198,7 @@ def _buckets_keyed(
     vec_col: str,
     kernel: bool | None,
 ) -> DataFrame:
-    """(id, table, bucket) via the expression form or the broadcast
+    """(id, table, bucket) via the expression form or the Arrow
     kernel. ``kernel=None`` auto-selects: expressions under dim<=128
     (whole-stage codegen, zero Python), the kernel above (where the
     literal trees would dominate planning)."""
@@ -202,7 +212,7 @@ def _buckets_keyed(
 
 
 def _guarded_matmul(A, B):
-    """Exact integer A @ B.T for (n, dim) int64 operands: float64 BLAS
+    """Exact integer A @ B.T for (n, dim) integer operands: float64 BLAS
     while every product times the inner dim stays under 2^53 (exact in
     IEEE double), else int64."""
     import numpy as np
@@ -240,19 +250,16 @@ def _probe_mask(Q, C, ids, nprobe: int):
     return mask
 
 
-def _np_partial_topk(D, qids, cid, k):
-    """Per-query partial top-k under (score desc, id asc) over a masked
-    score matrix (invalid pairs already set to ``NEG``). NEG entries can
-    dominate a row, so they are dropped BEFORE the threshold partition
-    (a NEG threshold would let NEG entries crowd real candidates out of
-    the truncation). Returns (query_id, neighbor_id, dot) arrays or
-    None."""
+def _np_partial_topk(D, cid, k):
+    """(rows, cols): per query row of a masked score matrix (invalid
+    pairs already set to ``NEG``), the positions of its partial top-k
+    under (score desc, id asc). NEG entries can dominate a row, so they
+    are dropped BEFORE the threshold partition (a NEG threshold would
+    let NEG entries crowd real candidates out of the truncation)."""
     import numpy as np
 
-    out_q, out_n, out_d = [], [], []
-    nq = D.shape[0]
-    for qi in range(nq):
-        row = D[qi]
+    rows, cols = [np.zeros(0, dtype=np.int64)], [np.zeros(0, dtype=np.int64)]
+    for qi, row in enumerate(D):
         valid = np.flatnonzero(row != NEG)
         if valid.size == 0:
             continue
@@ -261,32 +268,38 @@ def _np_partial_topk(D, qids, cid, k):
         thresh = np.partition(vr, valid.size - kk)[valid.size - kk]
         keep = valid[vr >= thresh]
         keep = keep[np.lexsort((cid[keep], -row[keep]))][:kk]
-        out_q.append(np.full(keep.size, qids[qi], dtype=np.int64))
-        out_n.append(cid[keep])
-        out_d.append(row[keep])
-    if not out_q:
-        return None
-    return (
-        np.concatenate(out_q),
-        np.concatenate(out_n),
-        np.concatenate(out_d),
-    )
+        rows.append(np.full(keep.size, qi, dtype=np.int64))
+        cols.append(keep)
+    return np.concatenate(rows), np.concatenate(cols)
 
 
 def _merge_topk_partials(
-    parts: list[DataFrame], k: int, out_col: str = "dot", negate: bool = False
+    parts: list[DataFrame],
+    k: int,
+    out_col: str = "dot",
+    negate: bool = False,
+    shortlist: int | None = None,
 ) -> DataFrame:
     """Global (dot desc, id asc) row_number merge over the per-partition
     partial winners. The ascending-metric families (ADC / SQ8 distances)
     ride the same merge by negating the metric in their kernels;
     ``negate=True`` flips it back on output (dot desc == distance asc,
-    ties id asc either way)."""
+    ties id asc either way). With ``shortlist`` the partials carry an
+    ``exact`` column: the first window keeps each query's global top
+    ``shortlist`` by score, and the exact dot takes the score's place
+    for the top-k rank."""
     merged = parts[0]
     for p in parts[1:]:
         merged = merged.unionByName(p)
     w = Window.partitionBy("query_id").orderBy(
         F.col("dot").desc(), F.col("neighbor_id").asc()
     )
+    if shortlist:
+        merged = (
+            merged.withColumn("__s", F.row_number().over(w))
+            .filter(F.col("__s") <= shortlist)
+            .select("query_id", "neighbor_id", F.col("exact").alias("dot"))
+        )
     out_val = (-F.col("dot")).cast("long") if negate else F.col("dot")
     return (
         merged.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -302,6 +315,52 @@ def _empty_topk(spark, out_col: str = "dot") -> DataFrame:
     )
 
 
+def _batch_matrix(batch, dim: int):
+    """(ids, X) of a (``__cid``, ``__xq``) Arrow batch: the int64 ids and
+    the (n, dim) int64 matrix reshaped from the list column's flat
+    values, with no per-row Python objects. Raises on a null vector or
+    one whose length is not ``dim``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    xq = batch.column("__xq")
+    flat = xq.flatten()
+    n = batch.num_rows
+    # n * dim values with no list longer than dim: every list is dim long
+    if xq.null_count or flat.null_count or len(flat) != n * dim or (
+        n and pc.max(pc.list_value_length(xq)).as_py() != dim
+    ):
+        raise ValueError(f"embedding vectors must all have {dim} non-null values")
+    return (
+        batch.column("__cid").to_numpy().astype(np.int64, copy=False),
+        flat.to_numpy().astype(np.int64, copy=False).reshape(n, dim),
+    )
+
+
+def _arrow_map(vecs: DataFrame, fn, schema: str, dim: int) -> DataFrame:
+    """One ``mapInArrow`` pass over a (``__cid``, ``__xq``) frame:
+    ``fn(cid, X)`` gets each non-empty batch as ``_batch_matrix`` arrays
+    and returns its output columns in ``schema`` (DDL) order; each
+    output batch is built with that schema's Arrow types."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    out = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(out)
+
+    def kernel(batches):
+        for b in batches:
+            if b.num_rows:
+                cols = fn(*_batch_matrix(b, dim))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+                    schema=arrow,
+                )
+
+    return vecs.mapInArrow(kernel, out)
+
+
 def corpus_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -311,25 +370,35 @@ def corpus_topk(
     out_col: str = "dot",
     negate: bool = False,
     shard_rows: int = 65_536,
+    shortlist: int | None = None,
 ) -> DataFrame:
     """Per-query top-k over ``corpus`` as broadcast-query corpus passes —
     the one driver loop behind every corpus top-k family. ``corpus`` and
     ``queries`` are (``__cid`` long, ``__xq`` array<long>) frames.
 
     Per query shard, ``prepare(qids, Q)`` builds the family's payload on
-    the driver (probe mask, bucket mask, ADC tables, shortlist pairs)
-    from the id-sorted query ids and quantized matrix, and
-    ``(qids, payload)`` is broadcast. One ``mapInPandas`` pass over the
-    corpus calls ``score(payload, cid, X)`` per batch for an (nq, nb)
-    int64 matrix: higher is better and ``NEG`` marks a pair that is not
-    a candidate. Self pairs are masked, each batch keeps its exact
-    partial top-k under (score desc, id asc), the shard's partial
-    winners are materialized (eager localCheckpoint) and only then is
-    its broadcast destroyed — driver and executors never hold more than
-    one shard's payload. One window merge ranks the union of all
-    shards; shards partition the query set, so the result is the union
-    of exact per-shard answers. Ascending metrics (distances) score
-    ``-d`` and pass ``negate=True`` to get ``d`` back in ``out_col``.
+    the driver (probe mask, bucket mask, ADC tables) from the id-sorted
+    query ids and quantized matrix, and ``(qids, payload, Q or None)``
+    is broadcast. One ``mapInArrow`` pass over the corpus calls
+    ``score(payload, cid, X)`` per batch for an (nq, nb) int64 matrix:
+    higher is better and ``NEG`` marks a pair that is not a candidate.
+    Self pairs are masked, each batch keeps its exact partial top-k
+    under (score desc, id asc), the shard's partial winners are
+    materialized (eager localCheckpoint) and only then is its broadcast
+    destroyed — driver and executors never hold more than one shard's
+    payload. One window merge ranks the union of all shards; shards
+    partition the query set, so the result is the union of exact
+    per-shard answers. Ascending metrics (distances) score ``-d`` and
+    pass ``negate=True`` to get ``d`` back in ``out_col``.
+
+    Two-stage retrieval (``shortlist``): the broadcast also ships ``Q``,
+    each batch keeps its partial top-``shortlist`` by score and adds the
+    exact quantized dot of just those pairs (the vectors are already in
+    the task), and the merge takes each query's global top-``shortlist``
+    by score, then its top-k by (dot desc, id asc) into ``out_col``.
+    That is exactly the two-pass answer: every member of the global
+    shortlist is in its own batch's partial shortlist, since (score,
+    id) is a total order.
 
     Gate and cost model: the queries are collected by ONE bounded job,
     ``limit(shard_rows + 1)``; up to ``shard_rows`` rows that collect is
@@ -343,7 +412,6 @@ def corpus_topk(
     import math
 
     import numpy as np
-    import pandas as pd
 
     def shard_pdfs():
         first = queries.limit(shard_rows + 1).toPandas()
@@ -357,23 +425,21 @@ def corpus_topk(
             ).toPandas()
 
     def run_with(bc):
-        def run(batches):
-            qids, payload = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                cid = pdf["__cid"].to_numpy(np.int64)
-                X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
-                D = score(payload, cid, X)
-                D[qids[:, None] == cid[None, :]] = NEG  # never match self
-                got = _np_partial_topk(D, qids, cid, k)
-                if got is not None:
-                    yield pd.DataFrame(
-                        {"query_id": got[0], "neighbor_id": got[1], "dot": got[2]}
-                    )
+        def run(cid, X):
+            qids, payload, Q = bc.value
+            D = score(payload, cid, X)
+            D[qids[:, None] == cid[None, :]] = NEG  # never match self
+            rows, cols = _np_partial_topk(D, cid, shortlist or k)
+            out = [qids[rows], cid[cols], D[rows, cols]]
+            if shortlist:
+                out.append((Q[rows] * X[cols]).sum(axis=1))
+            return out
 
         return run
 
+    schema = "query_id long, neighbor_id long, dot long"
+    if shortlist:
+        schema += ", exact long"
     sc = corpus.sparkSession.sparkContext
     parts = []
     for q_pdf in shard_pdfs():
@@ -382,34 +448,52 @@ def corpus_topk(
         q_pdf = q_pdf.sort_values("__cid", kind="stable")
         qids = q_pdf["__cid"].to_numpy(np.int64)
         Q = np.array(q_pdf["__xq"].tolist(), dtype=np.int64)
-        bc = sc.broadcast((qids, prepare(qids, Q)))
+        bc = sc.broadcast((qids, prepare(qids, Q), Q if shortlist else None))
         parts.append(
-            corpus.mapInPandas(
-                run_with(bc), schema="query_id long, neighbor_id long, dot long"
-            ).localCheckpoint(eager=True)
+            _arrow_map(corpus, run_with(bc), schema, Q.shape[1]).localCheckpoint(
+                eager=True
+            )
         )
         bc.destroy()
     if not parts:
         return _empty_topk(corpus.sparkSession, out_col)
-    return _merge_topk_partials(parts, k, out_col, negate)
+    return _merge_topk_partials(parts, k, out_col, negate, shortlist)
+
+
+def _fixture_queries(vecs: DataFrame) -> DataFrame:
+    """The % 50 == 0 rows of a (``__cid``, ``__xq``) frame: the driver
+    fixture's query sample."""
+    return vecs.filter(F.col("__cid") % 50 == 0)
+
+
+def _seed_vecs(vecs: DataFrame, n: int):
+    """(ids, S): the rows of a (``__cid``, ``__xq``) frame with
+    ``__cid < n`` — the deterministic smallest-id seeds — as id-sorted
+    int64 ids and an (n_seeds, dim) int64 matrix (None without rows),
+    in one collect. Id-ascending rows make NumPy's first-minimum
+    ``argmin`` the join form's (distance, id) struct-min tie rule."""
+    import numpy as np
+
+    pdf = vecs.filter(F.col("__cid") < n).toPandas().sort_values("__cid", kind="stable")
+    ids = pdf["__cid"].to_numpy(np.int64)
+    return ids, np.array(pdf["__xq"].tolist(), dtype=np.int64) if len(ids) else None
 
 
 def _ivf_topk_kernel(
-    emb: DataFrame,
-    cents: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    cent_ids,
+    C,
     k: int,
     nprobe: int,
-    id_col: str,
-    vec_col: str,
     shard_rows: int = 65_536,
-    _corpus: DataFrame | None = None,
 ) -> DataFrame:
     """The IVF rescore shared by both IVF families, as ``corpus_topk``
-    passes over the % 50 == 0 fixture queries: the shard's probe mask is
-    the payload; each batch assigns its vectors to their nearest coarse
-    list (argmin quantized L2, ties to the smaller centroid id) and
-    scores the exact quantized dot of the probed pairs. ``cents``:
-    (centroid_id, __cv array<long>), already quantized.
+    passes: the shard's probe mask is the payload; each batch assigns
+    its vectors to their nearest coarse list (argmin quantized L2, ties
+    to the smaller centroid id) and scores the exact quantized dot of
+    the probed pairs. ``cent_ids`` (ascending) and ``C`` are the coarse
+    centroids as the driver already holds them, quantized.
 
     Byte-identical to ``tests/reference/ann_join.py::ivf_ann_topk_join``
     (same quantization, same (l2 asc, centroid_id asc) probe order, same
@@ -417,17 +501,9 @@ def _ivf_topk_kernel(
     the registry entries), which shipped every (query, candidate) pair
     through two vector re-attach joins — with nprobe/n_centroids = 1/2 a
     half cross join (218 s at sf1); here it is one matmul per batch."""
-    import numpy as np
-
-    c_pdf = cents.toPandas().sort_values("centroid_id", kind="stable")
-    if not len(c_pdf):
+    if not len(cent_ids):
         # no coarse lists -> no probes -> no candidates
-        return _empty_topk(emb.sparkSession)
-    cent_ids = c_pdf["centroid_id"].to_numpy(np.int64)
-    C = np.array(c_pdf["__cv"].tolist(), dtype=np.int64)
-    corpus = _corpus if _corpus is not None else _corpus_vecs(
-        emb, id_col, vec_col, spread=True
-    )
+        return _empty_topk(corpus.sparkSession)
 
     def score(payload, cid, X):
         Q, mask = payload
@@ -440,7 +516,7 @@ def _ivf_topk_kernel(
 
     return corpus_topk(
         corpus,
-        corpus.filter(F.col("__cid") % 50 == 0),
+        queries,
         k,
         lambda qids, Q: (Q, _probe_mask(Q, C, cent_ids, nprobe)),
         score,
@@ -465,11 +541,16 @@ def ivf_ann_topk(
     candidate-join formulation, kept as
     ``tests/reference/ann_join.py::ivf_ann_topk_join`` and pinned
     byte-identical in pytest, shipped every (query, candidate) pair
-    through two vector joins — quadratic in probed-list occupancy)."""
-    cents = _quantized_vecs(
-        emb.filter(F.col(id_col) < n_centroids), id_col, vec_col, "__cv"
-    ).withColumnRenamed(id_col, "centroid_id")
-    return _ivf_topk_kernel(emb, cents, k, nprobe, id_col, vec_col)
+    through two vector joins — quadratic in probed-list occupancy). The
+    seed centroids and the queries are collected from the unspread
+    quantized frame, one job each."""
+    vecs = _corpus_vecs(emb, id_col, vec_col)
+    cent_ids, C = _seed_vecs(vecs, n_centroids)
+    return _ivf_topk_kernel(
+        _corpus_vecs(emb, id_col, vec_col, spread=True),
+        _fixture_queries(vecs),
+        cent_ids, C, k, nprobe,
+    )
 
 
 def _quantized_vecs(emb: DataFrame, id_col: str, vec_col: str, out: str) -> DataFrame:
@@ -496,13 +577,22 @@ def _corpus_vecs(
     return df.localCheckpoint(eager=True) if pin else df
 
 
+def _lloyd_centroids(corpus: DataFrame, n_centroids: int, iters: int):
+    """(ids, C): the IVF Lloyd centroids, id-ascending, as the driver
+    holds them after the last round (C None when no id is below
+    ``n_centroids``)."""
+    ids, S0 = _seed_vecs(corpus, n_centroids)
+    if S0 is None:
+        return ids, None
+    return _lloyd_rounds(corpus, {0: (ids, S0)}, iters, S0.shape[1])[0]
+
+
 def ivf_train_lloyd(
     emb: DataFrame,
     n_centroids: int = 16,
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    _corpus: DataFrame | None = None,
 ) -> DataFrame:
     """IVF coarse 'training': ``iters`` Lloyd rounds in pure integer
     arithmetic from the deterministic smallest-id seeds. Each round
@@ -521,30 +611,13 @@ def ivf_train_lloyd(
     (~10 shuffle stages per round); the join formulation survives as
     ``tests/reference/ann_join.py::ivf_train_lloyd_join``, pytest-pinned
     byte-identical."""
-    import numpy as np
-
-    spark = emb.sparkSession
-    corpus = _corpus if _corpus is not None else _corpus_vecs(
-        emb, id_col, vec_col, spread=True, pin=True
+    ids, C = _lloyd_centroids(
+        _corpus_vecs(emb, id_col, vec_col, spread=True, pin=True), n_centroids, iters
     )
-    seeds_pdf = (
-        corpus.filter(F.col("__cid") < n_centroids)
-        .toPandas()
-        .sort_values("__cid", kind="stable")
-    )
-    codes0 = seeds_pdf["__cid"].to_numpy(np.int64)
-    if not len(codes0):
-        return spark.createDataFrame([], "centroid_id long, __cv array<long>")
-    S0 = np.array(seeds_pdf["__xq"].tolist(), dtype=np.int64)
-    dim = S0.shape[1]
-    books = _lloyd_rounds(corpus, {0: (codes0, S0)}, iters, dim)
-    rows = [
-        (int(code), [int(v) for v in C[j]])
-        for s in sorted(books)
-        for j, code in enumerate(books[s][0])
-        for C in [books[s][1]]
+    rows = [] if C is None else [
+        (int(i), [int(v) for v in c]) for i, c in zip(ids, C)
     ]
-    return spark.createDataFrame(rows, "centroid_id long, __cv array<long>")
+    return emb.sparkSession.createDataFrame(rows, "centroid_id long, __cv array<long>")
 
 
 def ivf_lloyd_ann_topk(
@@ -560,16 +633,15 @@ def ivf_lloyd_ann_topk(
     actually track the data, the same nprobe buys more recall per scanned
     candidate than seed-vector lists (the VERDICT-flagged weakness of the
     seed-only variant). Probing, assignment and the exact quantized-dot
-    rescore run in the shared masked ``_ivf_topk_kernel`` (r8; the join
-    formulation survives as
+    rescore run in the shared masked ``_ivf_topk_kernel`` over the same
+    pinned corpus the training scanned, with the trained centroids
+    passed straight from the driver (the join formulation survives as
     ``tests/reference/ann_join.py::ivf_lloyd_ann_topk_join`` for
     parity)."""
     corpus = _corpus_vecs(emb, id_col, vec_col, spread=True, pin=True)
-    cents = ivf_train_lloyd(
-        emb, n_centroids, iters, id_col, vec_col, _corpus=corpus
-    )
+    cent_ids, C = _lloyd_centroids(corpus, n_centroids, iters)
     return _ivf_topk_kernel(
-        emb, cents, k, nprobe, id_col, vec_col, _corpus=corpus
+        corpus, _fixture_queries(corpus), cent_ids, C, k, nprobe
     )
 
 
@@ -643,27 +715,12 @@ def _lsh_topk_kernel(
     at BLAS speed."""
     import numpy as np
 
-    S = np.array(
-        [
-            [lsh_sign(t, b, d) for d in range(dim)]
-            for t in range(n_tables)
-            for b in range(n_bits)
-        ],
-        dtype=np.int64,
-    )
-    pw = 1 << np.arange(n_bits, dtype=np.int64)
+    S = _sign_matrix(n_tables, n_bits, dim)
     pmasks = np.array(probe_masks(n_bits, probe_radius), dtype=np.int64)
     n_buckets = 1 << n_bits
 
-    def buckets(M):
-        # bit b of table t = [<x_q, r_tb> > 0] — the sign_lsh_buckets
-        # contract, byte-identical (test_round4_fixes parity)
-        G = _guarded_matmul(M, S)
-        bits = (G > 0).astype(np.int64).reshape(len(M), n_tables, n_bits)
-        return (bits * pw[None, None, :]).sum(axis=2)
-
     def prepare(qids, Q):
-        qb = buckets(Q)
+        qb = _lsh_codes(Q, S, n_bits)
         mask = np.zeros((len(qids), n_tables, n_buckets), dtype=bool)
         rows = np.arange(len(qids))
         for m in pmasks:
@@ -673,7 +730,7 @@ def _lsh_topk_kernel(
 
     def score(payload, cid, X):
         Q, mask = payload  # mask: (nq, T, n_buckets) bool
-        code = buckets(X)  # (nb, T)
+        code = _lsh_codes(X, S, n_bits)  # (nb, T)
         valid = np.zeros((len(Q), len(X)), dtype=bool)
         for t in range(n_tables):
             valid |= mask[:, t, code[:, t]]
@@ -683,7 +740,7 @@ def _lsh_topk_kernel(
 
     corpus = _corpus_vecs(emb, id_col, vec_col)
     qsrc = (
-        corpus.filter(F.col("__cid") % 50 == 0)
+        _fixture_queries(corpus)
         if queries is None
         else _corpus_vecs(queries, id_col, vec_col)
     )
@@ -775,118 +832,121 @@ def embedding_contamination(
     )
 
 
-def _subvectors(
-    emb: DataFrame, m: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """(id, s, __sv array<long>): the vector scalar-quantized and split
-    into ``m`` contiguous subspaces (one row per subspace). The dimension
-    is read from one row (metadata-scale driver action, same counted
-    pattern as the kNN stats); slicing happens JVM-side."""
-    first = emb.select(vec_col).first()
-    if first is None:
-        raise ValueError("pq: empty embedding table")
-    dim = len(first[0])
-    if m < 1 or dim % m:
-        raise ValueError(f"pq: m={m} must divide dim={dim}")
-    sd = dim // m
-    q = _quantized_vecs(emb, id_col, vec_col, "__xq")
-    return q.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(*[F.slice("__xq", s * sd + 1, sd) for s in range(m)])
-        ).alias("s", "__sv"),
-    )
+def _pq_codes(books: dict, X, sd: int) -> dict:
+    """``{s: (n,) row of each vector's nearest entry in books[s]}``: the
+    per-subspace argmin quantized L2 that PQ training, encoding and the
+    ADC scan share. Code-ascending book rows make NumPy's first-minimum
+    ``argmin`` the join form's (distance, code) struct-min tie rule."""
+    return {
+        s: _sq_l2(X[:, s * sd:(s + 1) * sd], C).argmin(axis=1)
+        for s, (_codes, C) in books.items()
+    }
 
 
-def _pq_assign(sub: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
-    """(id, s, code): per-subspace argmin quantized L2 against the
-    broadcast codebook (ties to the smaller code — struct-min order)."""
-    l2 = F.aggregate(
-        F.zip_with("__sv", "__cv", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return (
-        sub.join(F.broadcast(cents), "s")
-        .withColumn("__d", l2)
-        .groupBy(id_col, "s")
-        .agg(F.min(F.struct(F.col("__d"), F.col("code"))).alias("__m"))
-        .select(id_col, "s", F.col("__m.code").alias("code"))
-    )
-
-
-def _lloyd_rounds(corpus, books: dict, iters: int, sd: int) -> dict:
+def _lloyd_rounds(corpus, books: dict, iters: int, dim: int) -> dict:
     """Shared integer Lloyd refinement over per-subspace codebooks
-    (``{s: (codes sorted asc, C (ks, sd) int64)}``): each round is ONE
-    corpus pass — in-task NumPy argmin assignment against the broadcast
-    books plus map-side partial (s, code, ds) sums — and only
-    partitions x m x k x sd partial rows (metadata-scale) reach the
-    driver, where the exact truncated integer means are combined.
-    IVF coarse training is the m=1 case (sd = full dim)."""
+    (``{s: (codes sorted asc, C (ks, sd) int64)}`` for s in range(m),
+    sd = dim / m): each round is ONE corpus pass — in-task NumPy argmin
+    assignment (``_pq_codes``) against the broadcast books plus per-batch
+    partial (s, code) sums — and only batches x m x k partial rows
+    (metadata-scale) reach the driver, where the exact truncated integer
+    means are combined. IVF coarse training is the m=1 case (sd = dim)."""
     import numpy as np
-    import pandas as pd
 
     sc = corpus.sparkSession.sparkContext
 
-    def make_run(bc):
-        def run(batches):
+    def sums_with(bc):
+        def sums(cid, X):
             bks = bc.value
-            acc = {
-                s: (
-                    np.zeros((len(cs), C.shape[1]), dtype=np.int64),
-                    np.zeros(len(cs), dtype=np.int64),
-                )
-                for s, (cs, C) in bks.items()
-            }
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
-                for s, (cs, C) in bks.items():
-                    Xs = X[:, s * sd:(s + 1) * sd]
-                    idx = _sq_l2(Xs, C).argmin(axis=1)
-                    t, c = acc[s]
-                    np.add.at(t, idx, Xs)
-                    np.add.at(c, idx, 1)
-            rows = []
-            for s, (cs, _C) in bks.items():
-                t, c = acc[s]
-                for j in np.flatnonzero(c):
-                    for ds_i in range(t.shape[1]):
-                        rows.append((s, int(cs[j]), ds_i, int(t[j, ds_i]), int(c[j])))
-            yield pd.DataFrame(
-                rows, columns=["s", "code", "ds", "t", "c"]
-            ) if rows else pd.DataFrame(
-                {"s": [], "code": [], "ds": [], "t": [], "c": []}
-            ).astype({"s": "int32", "code": "int64", "ds": "int32",
-                      "t": "int64", "c": "int64"})
+            sd = dim // len(bks)
+            s_col, code_col, c_col, t_col = [], [], [], []
+            for s, idx in _pq_codes(bks, X, sd).items():
+                codes = bks[s][0]
+                c = np.bincount(idx, minlength=len(codes))
+                t = np.zeros((len(codes), sd), dtype=np.int64)
+                np.add.at(t, idx, X[:, s * sd:(s + 1) * sd])
+                live = np.flatnonzero(c)
+                s_col.append(np.full(live.size, s, dtype=np.int32))
+                code_col.append(codes[live])
+                c_col.append(c[live])
+                t_col.extend(t[live])
+            return (
+                np.concatenate(s_col), np.concatenate(code_col),
+                np.concatenate(c_col), t_col,
+            )
 
-        return run
+        return sums
 
     for _ in range(iters):
         if not books:
             break
         bc = sc.broadcast(books)
-        partial = corpus.mapInPandas(
-            make_run(bc), schema="s int, code long, ds int, t long, c long"
+        partial = _arrow_map(
+            corpus, sums_with(bc), "s int, code long, c long, t array<long>", dim
         ).toPandas()
         bc.destroy()
-        agg = partial.groupby(["s", "code", "ds"], sort=True)[["t", "c"]].sum()
         new_books: dict = {}
-        for s in sorted({ix[0] for ix in agg.index}):
-            g = agg.loc[s]
-            codes_s = np.array(sorted({ix[0] for ix in g.index}), dtype=np.int64)
-            C_s = np.zeros((len(codes_s), sd), dtype=np.int64)
-            for j, code in enumerate(codes_s):
-                gc = g.loc[code]
-                t = gc["t"].to_numpy(np.int64)
-                c = gc["c"].to_numpy(np.int64)
-                # Spark/DuckDB div truncates toward zero; numpy // floors
-                q = np.abs(t) // c
-                C_s[j] = np.where(t < 0, -q, q)
-            new_books[int(s)] = (codes_s, C_s)
+        for s, (codes, C) in books.items():
+            g = partial[partial["s"] == s]
+            if not len(g):
+                continue
+            pos = np.searchsorted(codes, g["code"].to_numpy(np.int64))
+            t = np.zeros(C.shape, dtype=np.int64)
+            c = np.zeros(len(codes), dtype=np.int64)
+            np.add.at(t, pos, np.stack(g["t"].to_numpy()).astype(np.int64))
+            np.add.at(c, pos, g["c"].to_numpy(np.int64))
+            live = np.flatnonzero(c)
+            # Spark/DuckDB div truncates toward zero; numpy // floors
+            q = np.abs(t[live]) // c[live, None]
+            new_books[s] = (codes[live], np.where(t[live] < 0, -q, q))
         books = new_books
     return books
+
+
+def _pq_artifacts(
+    emb: DataFrame,
+    m: int,
+    k_codes: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    n_centroids: int = 0,
+):
+    """(corpus, books, sd, coarse): the PQ training every PQ entry point
+    shares, computed once. ``corpus`` is the spread + pinned quantized
+    corpus (``__cid``, ``__xq``) that training scans and the ADC pass
+    and encoder reuse; ``books`` are the Lloyd codebooks
+    ``{s: (codes asc, C (ks, sd))}`` as ``_lloyd_rounds`` leaves them on
+    the driver; ``sd`` is the subspace width. One seed collect takes the
+    ids below ``max(k_codes, n_centroids)``: those below ``k_codes`` seed
+    the codebooks, and ``coarse`` = (ids, C) of those below
+    ``n_centroids`` are IVF-PQ's coarse centroids. The dimension is read
+    from the seeds; only without one does a row of ``emb`` supply it
+    (an empty table raises)."""
+    import numpy as np
+
+    corpus = _corpus_vecs(emb, id_col, vec_col, spread=True, pin=True)
+    ids, S = _seed_vecs(corpus, max(k_codes, n_centroids))
+    if S is None:
+        first = emb.select(vec_col).first()
+        if first is None:
+            raise ValueError("pq: empty embedding table")
+        S = np.zeros((0, len(first[0])), dtype=np.int64)
+    dim = S.shape[1]
+    if m < 1 or dim % m:
+        raise ValueError(f"pq: m={m} must divide dim={dim}")
+    sd = dim // m
+    seed = ids < k_codes
+    # code == seed id, so the code-ascending row order encodes the
+    # (distance, code) tie rule
+    books = (
+        {s: (ids[seed], S[seed, s * sd:(s + 1) * sd]) for s in range(m)}
+        if seed.any()
+        else {}
+    )
+    books = _lloyd_rounds(corpus, books, iters, dim)
+    coarse = ids < n_centroids
+    return corpus, books, sd, (ids[coarse], S[coarse])
 
 
 def pq_train(
@@ -896,7 +956,6 @@ def pq_train(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    _corpus: DataFrame | None = None,
 ) -> DataFrame:
     """Product-quantization codebooks: per subspace ``s``, ``k_codes``
     centroids refined by ``iters`` integer Lloyd rounds from the
@@ -907,113 +966,22 @@ def pq_train(
 
     Scale shape (r8): each round is ONE corpus pass — in-task NumPy
     assignment against the broadcast codebook plus map-side partial
-    (s, code, ds) sums, so only partitions x m x k_codes x (dim/m)
-    partial rows (metadata-scale) ever reach the driver, where the exact
-    integer means are combined. The join formulation (broadcast assign
-    join -> re-attach join -> posexplode aggregate, ~10 shuffle stages
-    per round on what is always a tiny aggregate) survives as
+    (s, code) sums, so only batches x m x k_codes partial rows
+    (metadata-scale) ever reach the driver, where the exact integer
+    means are combined. The join formulation (broadcast assign join ->
+    re-attach join -> posexplode aggregate, ~10 shuffle stages per round
+    on what is always a tiny aggregate) survives as
     ``tests/reference/ann_join.py::pq_train_join``, pytest-pinned
     byte-identical."""
-    import numpy as np
-    import pandas as pd
-
-    first = emb.select(vec_col).first()
-    if first is None:
-        raise ValueError("pq: empty embedding table")
-    dim = len(first[0])
-    if m < 1 or dim % m:
-        raise ValueError(f"pq: m={m} must divide dim={dim}")
-    sd = dim // m
-    spark = emb.sparkSession
-    corpus = _corpus if _corpus is not None else _corpus_vecs(
-        emb, id_col, vec_col, spread=True, pin=True
+    _corpus, books, _sd, _coarse = _pq_artifacts(
+        emb, m, k_codes, iters, id_col, vec_col
     )
-    seeds_pdf = (
-        corpus.filter(F.col("__cid") < k_codes)
-        .toPandas()
-        .sort_values("__cid", kind="stable")
-    )
-    codes0 = seeds_pdf["__cid"].to_numpy(np.int64)
-    S0 = (
-        np.array(seeds_pdf["__xq"].tolist(), dtype=np.int64)
-        if len(seeds_pdf)
-        else np.zeros((0, dim), dtype=np.int64)
-    )
-    # {s: (codes sorted asc, C (ks, sd))} — code == seed id, so the
-    # code-ascending row order encodes the (distance, code) tie rule
-    books = (
-        {s: (codes0, S0[:, s * sd:(s + 1) * sd]) for s in range(m)}
-        if len(codes0)
-        else {}
-    )
-    books = _lloyd_rounds(corpus, books, iters, sd)
-
     rows = [
-        (int(s), int(code), [int(v) for v in C[j]])
-        for s in sorted(books)
-        for j, code in enumerate(books[s][0])
-        for C in [books[s][1]]
+        (s, int(code), [int(v) for v in C[j]])
+        for s, (codes, C) in sorted(books.items())
+        for j, code in enumerate(codes)
     ]
-    return spark.createDataFrame(rows, "s int, code long, __cv array<long>")
-
-
-def _pq_artifacts(
-    emb: DataFrame,
-    m: int,
-    k_codes: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    need_codes: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame | None]:
-    """(sub, codebook, codes) computed ONCE and threaded through every PQ
-    entry point. Each public fn used to re-derive _subvectors (a
-    driver-side .first() per call) and re-run pq_train from scratch, so
-    the training lineage was recomputed several times per query.
-
-    ``need_codes=False`` skips materializing the subvector frame and the
-    corpus code table entirely and instead returns
-    ``(corpus, cents, None)`` — the spread + checkpointed quantized
-    corpus (``__cid``, ``__xq``) that training just scanned, so the ADC
-    kernels and the rescore pass reuse ONE materialization instead of
-    re-deriving (and re-spreading) the corpus per stage. The ADC kernels
-    re-derive each batch's codes in-task from those quantized vectors
-    (byte-identical argmin); only ``pq_encode`` and the join reference
-    formulations still pay the subvector explode + assignment pass."""
-    from .spread import scan_spread
-
-    corpus = _corpus_vecs(emb, id_col, vec_col, spread=True, pin=True)
-    # the codebook lands driver-side from pq_train's corpus-pass rounds
-    # (m x k rows, already materialized as a local-data frame)
-    cents = pq_train(emb, m, k_codes, iters, id_col, vec_col, _corpus=corpus)
-    if not need_codes:
-        return corpus, cents, None
-    # the sub frame is re-read by the code assignment; spread the
-    # single-row-group fixture scan to the session parallelism and pin
-    # it (n x m narrow rows)
-    sub = scan_spread(_subvectors(emb, m, id_col, vec_col)).localCheckpoint(
-        eager=True
-    )
-    codes = _pq_assign(sub, cents, id_col).localCheckpoint(eager=True)
-    return sub, cents, codes
-
-
-def _pq_books(cents: DataFrame) -> dict:
-    """Driver-side per-subspace codebooks from a (s, code, __cv) frame:
-    ``{s: (codes sorted asc (ks,), C (ks, sd) int64)}`` — m x k_codes
-    rows, always metadata-scale. Code-ascending row order makes NumPy's
-    first-minimum ``argmin`` the exact ``_pq_assign`` (distance, code)
-    struct-min tie rule."""
-    import numpy as np
-
-    pdf = cents.toPandas().sort_values(["s", "code"], kind="stable")
-    books = {}
-    for s, g in pdf.groupby("s", sort=True):
-        books[int(s)] = (
-            g["code"].to_numpy(np.int64),
-            np.array(g["__cv"].tolist(), dtype=np.int64),
-        )
-    return books
+    return emb.sparkSession.createDataFrame(rows, "s int, code long, __cv array<long>")
 
 
 def _adc_lut(books: dict, Q, sd: int) -> dict:
@@ -1027,122 +995,56 @@ def _adc_lut(books: dict, Q, sd: int) -> dict:
 
 
 def _pq_adc_topk_kernel(
-    emb: DataFrame,
-    pq_cents: DataFrame,
+    corpus: DataFrame,
+    books: dict,
+    sd: int,
     k: int,
-    id_col: str,
-    vec_col: str,
-    coarse_cents: DataFrame | None = None,
+    coarse: tuple | None = None,
     nprobe: int | None = None,
     shard_rows: int = 65_536,
-    _corpus: DataFrame | None = None,
+    shortlist: int | None = None,
 ) -> DataFrame:
-    """The PQ ADC scan shared by ``pq_ann_topk`` and, with
-    ``coarse_cents``/``nprobe``, ``ivf_pq_ann_topk``, as ``corpus_topk``
-    passes ranked (adc asc, neighbor asc): the shard's ADC tables (and
-    IVF probe mask) are the payload; each batch re-derives its PQ codes
-    (per-subspace argmin — byte-identical to ``_pq_assign``) and sums
-    ``m`` table lookups. The join formulation (parity-pinned in
-    ``tests/reference/ann_join.py``) joined |corpus| x m x |queries|
-    rows — 64 M at sf1 before the aggregate."""
-    import numpy as np
-
-    books = _pq_books(pq_cents)
-    spark = emb.sparkSession
-    if not books:
-        # empty codebook (no seed ids below k_codes): the join form's qd
-        # frame is empty, so the ADC result is too
-        return _empty_topk(spark, "adc")
-    sd = next(iter(books.values()))[1].shape[1]
-
-    coarse_ids = C_coarse = None
-    if coarse_cents is not None:
-        c_pdf = coarse_cents.toPandas().sort_values("centroid_id", kind="stable")
-        if not len(c_pdf):
-            # no coarse lists -> no probes -> no candidates
-            return _empty_topk(spark, "adc")
-        coarse_ids = c_pdf["centroid_id"].to_numpy(np.int64)
-        C_coarse = np.array(c_pdf["__cv"].tolist(), dtype=np.int64)
+    """The PQ ADC scan behind all four PQ top-k families, as
+    ``corpus_topk`` passes ranked (adc asc, neighbor asc) over the %
+    50 == 0 queries of the pinned ``corpus``: the shard's ADC tables
+    (and, with ``coarse`` = (ids, C) and ``nprobe``, the IVF probe mask)
+    are the payload; each batch re-derives its PQ codes (``_pq_codes``)
+    and sums ``m`` table lookups. ``books`` are the codebooks as the
+    driver holds them after training. With ``shortlist`` the same pass
+    also rescores: it returns the top-k of each query's ADC shortlist
+    by exact quantized dot, in ``dot``. The join formulation
+    (parity-pinned in ``tests/reference/ann_join.py``) joined |corpus| x
+    m x |queries| rows — 64 M at sf1 before the aggregate."""
+    out_col = "dot" if shortlist else "adc"
+    if not books or (coarse is not None and not len(coarse[0])):
+        # an empty codebook (no seed id below k_codes) or no coarse lists:
+        # the join form's qd frame or probe set is empty, so is the result
+        return _empty_topk(corpus.sparkSession, out_col)
 
     def prepare(qids, Q):
-        mask = (
-            None if C_coarse is None else _probe_mask(Q, C_coarse, coarse_ids, nprobe)
-        )
+        mask = None if coarse is None else _probe_mask(Q, coarse[1], coarse[0], nprobe)
         return _adc_lut(books, Q, sd), mask
 
     def score(payload, cid, X):
         lut, mask = payload
-        D = -sum(
-            lut[s][:, _sq_l2(X[:, s * sd:(s + 1) * sd], C).argmin(axis=1)]
-            for s, (_codes, C) in books.items()
-        )
+        D = -sum(lut[s][:, idx] for s, idx in _pq_codes(books, X, sd).items())
         if mask is not None:
             # nearest coarse list per corpus vector (first-minimum over
             # the centroid_id-sorted C == struct-min tie rule)
-            D[~mask[:, _sq_l2(X, C_coarse).argmin(axis=1)]] = NEG
+            D[~mask[:, _sq_l2(X, coarse[1]).argmin(axis=1)]] = NEG
         return D
 
-    corpus = _corpus if _corpus is not None else _corpus_vecs(
-        emb, id_col, vec_col, spread=True
-    )
     return corpus_topk(
         corpus,
-        corpus.filter(F.col("__cid") % 50 == 0),
+        _fixture_queries(corpus),
         k,
         prepare,
         score,
-        out_col="adc",
-        negate=True,
+        out_col=out_col,
+        negate=not shortlist,
         shard_rows=shard_rows,
+        shortlist=shortlist,
     )
-
-
-def _rescore_shortlist_kernel(
-    emb: DataFrame,
-    short: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    out_col: str = "dot",
-    _corpus: DataFrame | None = None,
-) -> DataFrame:
-    """Exact quantized-dot re-ranking of a per-query shortlist as
-    ``corpus_topk`` passes: the (query_id, neighbor_id) shortlist is
-    collected once and each shard broadcasts only its own queries' pairs;
-    each batch scores just the shortlisted pairs. Replaces the two
-    vector re-attach joins + per-pair zip_with aggregate of the join
-    formulation — same values, no corpus shuffle."""
-    import numpy as np
-
-    pairs = short.select("query_id", "neighbor_id").toPandas()
-    corpus = _corpus if _corpus is not None else _corpus_vecs(
-        emb, id_col, vec_col, spread=True
-    )
-
-    def prepare(qids, Q):
-        own = pairs[pairs["query_id"].isin(qids)]
-        return (
-            Q,
-            np.searchsorted(qids, own["query_id"].to_numpy(np.int64)),
-            own["neighbor_id"].to_numpy(np.int64),
-        )
-
-    def score(payload, cid, X):
-        Q, pair_row, pair_nbr = payload
-        D = np.full((len(Q), len(cid)), NEG, dtype=np.int64)
-        hit = np.flatnonzero(np.isin(cid, pair_nbr))
-        if hit.size:
-            col = {int(c): j for j, c in enumerate(cid[hit])}
-            keep = np.isin(pair_nbr, cid[hit])
-            rows = pair_row[keep]
-            cols = np.array([col[int(n)] for n in pair_nbr[keep]], dtype=np.int64)
-            D[rows, hit[cols]] = _guarded_matmul(Q, X[hit])[rows, cols]
-        return D
-
-    qsrc = corpus.filter(
-        F.col("__cid").isin([int(q) for q in set(pairs["query_id"])])
-    )
-    return corpus_topk(corpus, qsrc, k, prepare, score, out_col=out_col)
 
 
 def pq_encode(
@@ -1157,8 +1059,30 @@ def pq_encode(
     (vec_id, s, code), m rows per vector. With m=8, k=16 a 64-float
     embedding becomes 8 nibbles: the 64x memory cut that makes
     billion-scale ANN fit executor memory. Codes are what downstream ADC
-    scans shuffle — never the vectors."""
-    return _pq_artifacts(emb, m, k_codes, iters, id_col, vec_col)[2]
+    scans shuffle — never the vectors.
+
+    One ``mapInArrow`` pass over the pinned training corpus emits each
+    batch's ``_pq_codes`` argmin — the in-task assignment the training
+    rounds and the ADC scan run — with the codebooks in the kernel's
+    closure (m x k_codes x dim/m ints). The subvector-explode +
+    broadcast-join + struct-min formulation it replaced is kept in
+    ``tests/reference/ann_join.py`` (``_subvectors``, ``_pq_assign``)."""
+    import numpy as np
+
+    corpus, books, sd, _coarse = _pq_artifacts(emb, m, k_codes, iters, id_col, vec_col)
+    schema = f"{id_col} long, s int, code long"
+    if not books:
+        return emb.sparkSession.createDataFrame([], schema)
+
+    def encode(cid, X):
+        codes = _pq_codes(books, X, sd)
+        return (
+            np.tile(cid, len(codes)),
+            np.repeat(np.array(list(codes), dtype=np.int32), len(cid)),
+            np.concatenate([books[s][0][idx] for s, idx in codes.items()]),
+        )
+
+    return _arrow_map(corpus, encode, schema, m * sd)
 
 
 def pq_ann_topk(
@@ -1169,7 +1093,6 @@ def pq_ann_topk(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    _artifacts: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) PQ top-k: queries (the % 50 == 0 fixture
     sample) precompute one exact L2 table against every codebook entry
@@ -1188,10 +1111,8 @@ def pq_ann_topk(
     pytest-pinned byte-identical) shipped |corpus| x m x |queries| joined
     rows into the ADC aggregate — 64 M rows at sf1 for a 20k-vector
     corpus."""
-    corpus, cents, _codes = _artifacts or _pq_artifacts(
-        emb, m, k_codes, iters, id_col, vec_col, need_codes=False
-    )
-    return _pq_adc_topk_kernel(emb, cents, k, id_col, vec_col, _corpus=corpus)
+    corpus, books, sd, _coarse = _pq_artifacts(emb, m, k_codes, iters, id_col, vec_col)
+    return _pq_adc_topk_kernel(corpus, books, sd, k)
 
 
 def pq_ann_rescored(
@@ -1203,29 +1124,24 @@ def pq_ann_rescored(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    _artifacts: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Two-stage PQ retrieval — the shape PQ is actually deployed in: the
-    ADC scan produces a ``shortlist`` per query (cheap, codes-only), then
-    ONLY the shortlist is rescored with the exact quantized dot product
-    (full vectors touched for shortlist x queries rows, not the corpus).
-    Returns (query_id, neighbor_id, rank, dot) — top-``k`` by exact dot.
+    ADC scan picks a ``shortlist`` per query (cheap, codes-only), and
+    ONLY the shortlist is ranked by the exact quantized dot product.
+    Returns (query_id, neighbor_id, rank, dot) — top-``k`` by exact dot,
+    ties to the smaller neighbor id.
 
     At 32 bits/vector pure ADC is deliberately lossy; rescoring restores
-    recall while the corpus-sized pass still never moves a vector
-    (measured in bench.py's ann family). Both stages execute as masked
-    corpus-pass kernels (r8); the join formulation survives as
+    recall (measured in bench.py's ann family). Both stages run in ONE
+    ``corpus_topk`` pass over the pinned training corpus: each batch
+    keeps its local ADC shortlist and computes the exact dots of just
+    those candidates from the vectors already in the task, and the
+    window merge cuts the global shortlist by ADC before ranking by dot
+    — exactly the two-pass answer, with no shortlist collect and no
+    second corpus scan. The two-pass join formulation survives as
     ``tests/reference/ann_join.py::pq_ann_rescored_join`` for parity."""
-    arts = _artifacts or _pq_artifacts(
-        emb, m, k_codes, iters, id_col, vec_col, need_codes=False
-    )
-    short = pq_ann_topk(
-        emb, k=shortlist, m=m, k_codes=k_codes, iters=iters,
-        id_col=id_col, vec_col=vec_col, _artifacts=arts,
-    ).select("query_id", "neighbor_id")
-    return _rescore_shortlist_kernel(
-        emb, short, k, id_col, vec_col, _corpus=arts[0]
-    )
+    corpus, books, sd, _coarse = _pq_artifacts(emb, m, k_codes, iters, id_col, vec_col)
+    return _pq_adc_topk_kernel(corpus, books, sd, k, shortlist=shortlist)
 
 
 def _sq8_flat(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -1313,10 +1229,9 @@ def sq8_ann_topk(
         dq = mn[None, :] + (code * span[None, :]) // 255
         return -_sq_l2(Q, dq)
 
-    corpus = _corpus_vecs(emb, id_col, vec_col, spread=True)
     return corpus_topk(
-        corpus,
-        corpus.filter(F.col("__cid") % 50 == 0),
+        _corpus_vecs(emb, id_col, vec_col, spread=True),
+        _fixture_queries(_corpus_vecs(emb, id_col, vec_col)),
         k,
         lambda qids, Q: Q,
         score,
@@ -1336,7 +1251,6 @@ def ivf_pq_ann_topk(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    _artifacts: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """IVF-PQ — the billion-scale composite (Jégou et al., the faiss
     ``IVFxPQy`` default): queries probe their ``nprobe`` nearest coarse
@@ -1357,17 +1271,11 @@ def ivf_pq_ann_topk(
     probe mask + in-task coarse assignment + ADC lookups, byte-identical
     to the candidate-join formulation (kept as
     ``tests/reference/ann_join.py::ivf_pq_ann_topk_join``,
-    pytest-pinned)."""
-    corpus, cents, _codes = _artifacts or _pq_artifacts(
-        emb, m, k_codes, iters, id_col, vec_col, need_codes=False
+    pytest-pinned). The coarse centroids come from the PQ seed collect."""
+    corpus, books, sd, coarse = _pq_artifacts(
+        emb, m, k_codes, iters, id_col, vec_col, n_centroids
     )
-    coarse = corpus.filter(F.col("__cid") < n_centroids).select(
-        F.col("__cid").alias("centroid_id"), F.col("__xq").alias("__cv")
-    )
-    return _pq_adc_topk_kernel(
-        emb, cents, k, id_col, vec_col, coarse_cents=coarse, nprobe=nprobe,
-        _corpus=corpus,
-    )
+    return _pq_adc_topk_kernel(corpus, books, sd, k, coarse, nprobe)
 
 
 def ivf_pq_ann_rescored(
@@ -1384,28 +1292,26 @@ def ivf_pq_ann_rescored(
 ) -> DataFrame:
     """IVF-PQ with exact re-ranking — the full deployment composite
     (faiss ``IVFPQR``): the IVF probe bounds WHERE to look, the ADC scan
-    produces a cheap ``shortlist`` per query from codes alone, and only
-    the shortlist is rescored with the exact quantized dot product.
-    Returns (query_id, neighbor_id, rank, dot) — top-``k`` by exact dot,
-    ties to the smaller neighbor id.
+    picks a cheap ``shortlist`` per query from codes alone, and only the
+    shortlist is ranked by the exact quantized dot product. Returns
+    (query_id, neighbor_id, rank, dot) — top-``k`` by exact dot, ties to
+    the smaller neighbor id.
 
     Raw ADC recall is ceiling-bound by the 32-bit code budget (0.38@5 on
-    the clustered fixture); rescoring restores it to near-exact while the
-    corpus-sized pass still touches only codes — full vectors move for
-    shortlist x queries rows. All three trainings are the deterministic
-    integer procedures the standalone gates pin, so the composite stays
-    oracle-exact end to end. Both stages execute as masked corpus-pass
-    kernels (r8); the join formulation survives as
+    the clustered fixture); rescoring restores it to near-exact. All
+    three trainings are the deterministic integer procedures the
+    standalone gates pin, so the composite stays oracle-exact end to
+    end. Probe, ADC shortlist and exact rescore run in ONE
+    ``corpus_topk`` pass (see ``pq_ann_rescored``; a query whose probed
+    lists hold fewer than ``shortlist`` candidates ranks all of them);
+    the two-pass join formulation survives as
     ``tests/reference/ann_join.py::ivf_pq_ann_rescored_join`` for
     parity."""
-    arts = _pq_artifacts(emb, m, k_codes, iters, id_col, vec_col, need_codes=False)
-    short = ivf_pq_ann_topk(
-        emb, k=shortlist, n_centroids=n_centroids, nprobe=nprobe, m=m,
-        k_codes=k_codes, iters=iters, id_col=id_col, vec_col=vec_col,
-        _artifacts=arts,
-    ).select("query_id", "neighbor_id")
-    return _rescore_shortlist_kernel(
-        emb, short, k, id_col, vec_col, _corpus=arts[0]
+    corpus, books, sd, coarse = _pq_artifacts(
+        emb, m, k_codes, iters, id_col, vec_col, n_centroids
+    )
+    return _pq_adc_topk_kernel(
+        corpus, books, sd, k, coarse, nprobe, shortlist=shortlist
     )
 
 

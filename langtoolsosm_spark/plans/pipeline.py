@@ -406,5 +406,14 @@ def run_ingest(
         return _metrics(t0, owned.count(), [], observed=dict(obs.get), dry_run=True)
     # one row per decoded image at most: pip_join(unique=True) keeps one owner each
     max_rows = None if n_images is None else n_images * max(replicate, 1)
-    snaps, _ = _salted_write(owned, out_path, salt_threshold, max_rows, "ingest")
+    # cached when add_salt's histogram reads the frame before the write
+    # does, as in run_to_snapshot: the decode and PIP join then run once
+    cached = max_rows is None or max_rows > salt_threshold
+    if cached:
+        owned = owned.persist()
+    try:
+        snaps, _ = _salted_write(owned, out_path, salt_threshold, max_rows, "ingest")
+    finally:
+        if cached:
+            owned.unpersist()
     return _metrics(t0, None, snaps, observed=dict(obs.get))

@@ -13,15 +13,14 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from langtoolsosm_spark.operators.similarity import (
     _buckets_keyed,
-    _pq_artifacts,
-    _pq_assign,
     _quantize,
     _quantized_vecs,
     _sq8_flat,
     _sq8_stats,
-    _subvectors,
+    pq_train,
     probe_masks,
 )
+from langtoolsosm_spark.operators.spread import scan_spread
 
 
 def _quantized_flat(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -332,6 +331,60 @@ def ann_lsh_topk_join(
     )
 
 
+def _subvectors(
+    emb: DataFrame, m: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, s, __sv array<long>): the vector scalar-quantized and split
+    into ``m`` contiguous subspaces (one row per subspace). The dimension
+    is read from one row; slicing happens JVM-side."""
+    first = emb.select(vec_col).first()
+    if first is None:
+        raise ValueError("pq: empty embedding table")
+    dim = len(first[0])
+    if m < 1 or dim % m:
+        raise ValueError(f"pq: m={m} must divide dim={dim}")
+    sd = dim // m
+    q = _quantized_vecs(emb, id_col, vec_col, "__xq")
+    return q.select(
+        F.col(id_col),
+        F.posexplode(
+            F.array(*[F.slice("__xq", s * sd + 1, sd) for s in range(m)])
+        ).alias("s", "__sv"),
+    )
+
+
+def _pq_assign(sub: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
+    """(id, s, code): per-subspace argmin quantized L2 against the
+    broadcast codebook (ties to the smaller code — struct-min order).
+    The join formulation of ``pq_encode``."""
+    l2 = F.aggregate(
+        F.zip_with("__sv", "__cv", lambda a, b: (a - b) * (a - b)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    return (
+        sub.join(F.broadcast(cents), "s")
+        .withColumn("__d", l2)
+        .groupBy(id_col, "s")
+        .agg(F.min(F.struct(F.col("__d"), F.col("code"))).alias("__m"))
+        .select(id_col, "s", F.col("__m.code").alias("code"))
+    )
+
+
+def _pq_join_artifacts(
+    emb: DataFrame, m: int, k_codes: int, iters: int, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(sub, codebook, codes) of the PQ join formulations: the pinned
+    subvector frame, ``pq_train``'s codebook and the corpus codes from
+    ``_pq_assign``."""
+    cents = pq_train(emb, m, k_codes, iters, id_col, vec_col)
+    sub = scan_spread(_subvectors(emb, m, id_col, vec_col)).localCheckpoint(
+        eager=True
+    )
+    codes = _pq_assign(sub, cents, id_col).localCheckpoint(eager=True)
+    return sub, cents, codes
+
+
 def pq_train_join(
     emb: DataFrame,
     m: int = 8,
@@ -376,7 +429,7 @@ def pq_ann_topk_join(
 ) -> DataFrame:
     """Broadcast-join formulation of ``pq_ann_topk`` — the oracle-shaped
     reference the kernel is parity-tested against (not a query path)."""
-    sub, cents, codes = _artifacts or _pq_artifacts(
+    sub, cents, codes = _artifacts or _pq_join_artifacts(
         emb, m, k_codes, iters, id_col, vec_col
     )
 
@@ -538,7 +591,7 @@ def ivf_pq_ann_topk_join(
         .select("query_id", F.col(id_col).alias("neighbor_id"))
     )
 
-    sub, pq_cents, codes_raw = _artifacts or _pq_artifacts(
+    sub, pq_cents, codes_raw = _artifacts or _pq_join_artifacts(
         emb, m, k_codes, iters, id_col, vec_col
     )
     codes = codes_raw.select(F.col(id_col).alias("neighbor_id"), "s", "code")
@@ -583,7 +636,7 @@ def ivf_pq_ann_rescored_join(
 ) -> DataFrame:
     """Join formulation of ``ivf_pq_ann_rescored`` — the oracle-shaped
     reference the kernel pair is parity-tested against."""
-    arts = _pq_artifacts(emb, m, k_codes, iters, id_col, vec_col)
+    arts = _pq_join_artifacts(emb, m, k_codes, iters, id_col, vec_col)
     short = ivf_pq_ann_topk_join(
         emb, k=shortlist, n_centroids=n_centroids, nprobe=nprobe, m=m,
         k_codes=k_codes, iters=iters, id_col=id_col, vec_col=vec_col,

@@ -313,3 +313,31 @@ def test_salt_threshold_below_rows_still_splits_hot_tiles(spark, synth_dir, tmp_
     assert len(hot) and (per_tile["__part"].nunique()[hot] > 1).all()
     assert low_files > dflt_files
     assert low.drop(columns="__part").equals(dflt.drop(columns="__part"))
+
+
+@pytest.mark.parametrize("threshold", [100, 100_000])
+def test_run_ingest_decodes_once_above_salt_bound(spark, synth_dir, tmp_path, monkeypatch, threshold):
+    """Above the salt bound ``run_ingest`` caches the PIP-joined frame, so
+    ``add_salt``'s histogram and the write share one decode: the salted
+    frame's plan holds one images scan and the two ``mapInArrow`` passes
+    (decode, narrow PIP) once each, as under the bound. A cached subtree
+    prints once per scan of the cache with the same expression ids, so
+    the plan's distinct node lines are counted."""
+    import re
+
+    from langtoolsosm_spark.sources import snapshots
+
+    plans = []
+    real = snapshots.write_partitioned
+
+    def spy(df, *a, **k):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *a, **k)
+
+    monkeypatch.setattr(snapshots, "write_partitioned", spy)
+    m = pipeline.run_ingest(spark, synth_dir, str(tmp_path / "t"), res=8, salt_threshold=threshold)
+    assert m["rows"] == 2000
+    assert m["observed"] == {"n_images": 2000, "n_decode_ok": 2000, "n_phash_ok": 2000}
+    nodes = {re.sub(r"^[\s:+\-]*", "", line) for line in plans[0].splitlines()}
+    assert sum("MapInArrow" in n for n in nodes) == 2
+    assert sum(n.startswith("FileScan parquet") and "images.parquet" in n for n in nodes) == 1

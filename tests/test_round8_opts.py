@@ -65,16 +65,19 @@ def test_ivf_kernel_sharded_queries(spark, emb):
     """Tiny shard_rows forces the multi-broadcast sharded query path —
     must be byte-identical to the single-shard answer."""
     from langtoolsosm_spark.operators.similarity import (
+        _corpus_vecs,
+        _fixture_queries,
         _ivf_topk_kernel,
-        _quantized_vecs,
+        _seed_vecs,
         ivf_ann_topk,
     )
 
-    cents = _quantized_vecs(
-        emb.filter(F.col("vec_id") < 16), "vec_id", "embedding", "__cv"
-    ).withColumnRenamed("vec_id", "centroid_id")
+    vecs = _corpus_vecs(emb, "vec_id", "embedding")
+    cent_ids, C = _seed_vecs(vecs, 16)
     got = _sorted_pdf(
-        _ivf_topk_kernel(emb, cents, 5, 8, "vec_id", "embedding", shard_rows=3)
+        _ivf_topk_kernel(
+            vecs, _fixture_queries(vecs), cent_ids, C, 5, 8, shard_rows=3
+        )
     )
     exp = _sorted_pdf(ivf_ann_topk(emb))
     assert got.equals(exp) and len(got) > 0
@@ -331,12 +334,8 @@ def test_pq_adc_kernel_sharded_queries(spark, emb):
         pq_ann_topk,
     )
 
-    _sub, cents, _codes = _pq_artifacts(
-        emb, 8, 16, 2, "vec_id", "embedding", need_codes=False
-    )
-    got = _sorted_pdf(
-        _pq_adc_topk_kernel(emb, cents, 5, "vec_id", "embedding", shard_rows=3)
-    )
+    corpus, books, sd, _coarse = _pq_artifacts(emb, 8, 16, 2, "vec_id", "embedding")
+    got = _sorted_pdf(_pq_adc_topk_kernel(corpus, books, sd, 5, shard_rows=3))
     exp = _sorted_pdf(pq_ann_topk(emb))
     assert got.equals(exp) and len(got) > 0
 
