@@ -14,8 +14,8 @@ osm_utils.py:24-48) with an explicit quadtree cell grid over (lat, lon):
   the engine's analogue of Overpass quadtile ordering
   (/root/reference/lib/osm_utils.py:46-48).
 
-All kernels are NumPy-vectorized array->array functions wrapped as
-``pandas_udf`` at the Spark boundary (no per-row Python).
+All kernels are NumPy-vectorized array->array functions; their Spark
+twins below are column expressions (no per-row Python).
 
 Grid format. This module is the one place the grid rule lives; every
 operator builds its cell expressions from the helpers below instead of
@@ -78,10 +78,6 @@ def cell_decode(cid) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     ix = (cid >> _IX_SHIFT) & ((np.int64(1) << _RES_SHIFT - _IX_SHIFT) - 1)
     iy = cid & ((np.int64(1) << _IX_SHIFT) - 1)
     return res, ix, iy
-
-
-def cell_resolution(cid) -> np.ndarray:
-    return np.asarray(cid, dtype=np.int64) >> _RES_SHIFT
 
 
 def tile_key(lat, lon, res: int) -> np.ndarray:
@@ -208,47 +204,9 @@ def morton_key(lat, lon, res: int = MAX_RES) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Spark boundary: pandas UDF factories and the column-expression twins of
-# the kernels above (building a Column needs no JVM until it is used).
+# Spark boundary: the column-expression twins of the kernels above
+# (building a Column needs no JVM until it is used).
 # ---------------------------------------------------------------------------
-
-def spark_udfs():
-    """Return dict of pandas_udf-wrapped kernels for DataFrame use."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    def _cell_encode(res: int):
-        @F.pandas_udf(T.LongType())
-        def f(lat: pd.Series, lon: pd.Series) -> pd.Series:
-            return pd.Series(cell_encode(lat.to_numpy(), lon.to_numpy(), res))
-
-        return f
-
-    def _tile_key(res: int):
-        @F.pandas_udf(T.LongType())
-        def f(lat: pd.Series, lon: pd.Series) -> pd.Series:
-            return pd.Series(tile_key(lat.to_numpy(), lon.to_numpy(), res))
-
-        return f
-
-    def _morton(res: int = MAX_RES):
-        @F.pandas_udf(T.LongType())
-        def f(lat: pd.Series, lon: pd.Series) -> pd.Series:
-            return pd.Series(morton_key(lat.to_numpy(), lon.to_numpy(), res))
-
-        return f
-
-    @F.pandas_udf(T.LongType())
-    def cell_parent_udf(cid: pd.Series) -> pd.Series:
-        return pd.Series(cell_parent(cid.to_numpy()))
-
-    return {
-        "cell_encode": _cell_encode,
-        "tile_key": _tile_key,
-        "morton_key": _morton,
-        "cell_parent": cell_parent_udf,
-    }
-
 
 def _col(c):
     return F.col(c) if isinstance(c, str) else c

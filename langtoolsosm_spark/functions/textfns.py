@@ -41,9 +41,3 @@ def re_sub(s: pd.Series, find: str, replace: str) -> pd.Series:
     pat = re.compile(find)
     return s.map(lambda v: pat.sub(replace, v) if isinstance(v, str) else v)
 
-
-def split_wikipedia(s: pd.Series) -> pd.DataFrame:
-    """Split ``lang:title`` wikipedia tags (reference lib/wikimedia.py:74-82)."""
-    lang = s.str.extract(r"^([a-z]+):.+", expand=False)
-    title = s.str.extract(r"^[a-z]+:(.+)", expand=False)
-    return pd.DataFrame({"wiki_lang": lang, "wiki_title": title})

@@ -4112,7 +4112,9 @@ def knox_stat(
       hands each cell its fan candidates (the fanned copy hits the
       partner's cell at one offset; id_a < id_b kills the mirror), where
       the exact Chebyshev/time predicates run as chunked NumPy
-      broadcasts emitting one partial (ns, nst) row per cell. Per-cell
+      broadcasts over Arrow columns, emitting one partial (ns, nst) row
+      per cell. Both cogroup sides are hash-partitioned to
+      ``kernel_width`` so the cells spread over every core. Per-cell
       occupancy is gated at ``max_cell`` (counted, loud) because the
       pair work is sum of occupancy^2 over cells.
     * TIME: a distinct-timestamp histogram plus one single-partition
@@ -4130,7 +4132,7 @@ def knox_stat(
             f"knox_stat: ds_micro and dt_sec must be >= 1, got "
             f"({ds_micro}, {dt_sec})"
         )
-    from .spread import scan_spread
+    from .spread import kernel_width, scan_spread
 
     x = micro_deg(lat)
     y = micro_deg(lon)
@@ -4183,40 +4185,43 @@ def knox_stat(
     # exact integer counts; the only shuffle is the 9x fan of narrow
     # rows into the cogroup.
     def _cell_counts(left, right):
-        import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({"ns": [0], "nst": [0]})
-        a_id = left["a_id"].to_numpy(np.int64)
-        a_x = left["a_x"].to_numpy(np.int64)
-        a_y = left["a_y"].to_numpy(np.int64)
-        a_t = left["a_t"].to_numpy(np.int64)
-        b_id = right["id"].to_numpy(np.int64)
-        b_x = right["x"].to_numpy(np.int64)
-        b_y = right["y"].to_numpy(np.int64)
-        b_t = right["t"].to_numpy(np.int64)
         ns = nst = 0
-        # chunk the fan side so the pair matrix stays ~10^7 cells even
-        # at the max_cell gate limit
-        step = max(1, 10_000_000 // max(len(b_id), 1))
-        for i in range(0, len(a_id), step):
-            sl = slice(i, i + step)
-            near_s = (
-                (a_id[sl, None] < b_id[None, :])
-                & (np.abs(a_x[sl, None] - b_x[None, :]) <= ds_micro)
-                & (np.abs(a_y[sl, None] - b_y[None, :]) <= ds_micro)
+        if left.num_rows and right.num_rows:
+            a_id, a_x, a_y, a_t = (
+                left.column(c).to_numpy().astype(np.int64, copy=False)
+                for c in ("a_id", "a_x", "a_y", "a_t")
             )
-            ns += int(near_s.sum())
-            nst += int(
-                (near_s & (np.abs(a_t[sl, None] - b_t[None, :]) <= dt_sec)).sum()
+            b_id, b_x, b_y, b_t = (
+                right.column(c).to_numpy().astype(np.int64, copy=False)
+                for c in ("id", "x", "y", "t")
             )
-        return pd.DataFrame({"ns": [ns], "nst": [nst]})
+            # chunk the fan side so the pair matrix stays ~10^7 cells even
+            # at the max_cell gate limit
+            step = max(1, 10_000_000 // len(b_id))
+            for i in range(0, len(a_id), step):
+                sl = slice(i, i + step)
+                near_s = (
+                    (a_id[sl, None] < b_id[None, :])
+                    & (np.abs(a_x[sl, None] - b_x[None, :]) <= ds_micro)
+                    & (np.abs(a_y[sl, None] - b_y[None, :]) <= ds_micro)
+                )
+                ns += int(near_s.sum())
+                nst += int(
+                    (near_s & (np.abs(a_t[sl, None] - b_t[None, :]) <= dt_sec)).sum()
+                )
+        return pa.table({"ns": [ns], "nst": [nst]})
 
+    # both sides pinned to kernel_width on the cogroup key: AQE would
+    # coalesce this few-KB exchange to ONE task, and the per-cell NumPy
+    # work then runs on one core; the two hash partitionings match, so
+    # the cogroup adds no exchange of its own
+    kw = kernel_width(events.sparkSession)
     sp = (
-        fan.groupBy("fx", "fy")
-        .cogroup(pts.groupBy("cx", "cy"))
-        .applyInPandas(_cell_counts, schema="ns long, nst long")
+        fan.repartition(kw, "fx", "fy").groupBy("fx", "fy")
+        .cogroup(pts.repartition(kw, "cx", "cy").groupBy("cx", "cy"))
+        .applyInArrow(_cell_counts, schema="ns long, nst long")
         .agg(
             # coalesce: zero candidate pairs must report 0 like the
             # oracle's count(*) FILTER, not NULL (round-7 ADVICE)
@@ -4233,31 +4238,28 @@ def knox_stat(
     hist = pts.groupBy("t").agg(F.count(F.lit(1)).alias("cnt"))
 
     def _nt_kernel(batches):
-        import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
         ts, cs = [], []
-        for pdf in batches:
-            if len(pdf):
-                ts.append(pdf["t"].to_numpy(np.int64))
-                cs.append(pdf["cnt"].to_numpy(np.int64))
-        if not ts:
-            yield pd.DataFrame({"nt": [0]})
-            return
-        t = np.concatenate(ts)
-        c = np.concatenate(cs)
-        o = np.argsort(t, kind="stable")
-        t, c = t[o], c[o]
-        cum = np.cumsum(c)
-        # later_i = # events with t in (t_i, t_i + dt_sec]
-        hi = np.searchsorted(t, t + dt_sec, side="right") - 1
-        later = cum[hi] - cum
-        nt = int((c * later).sum() + (c * (c - 1) // 2).sum())
-        yield pd.DataFrame({"nt": [nt]})
+        for b in batches:
+            ts.append(b.column("t").to_numpy(zero_copy_only=False).astype(np.int64))
+            cs.append(b.column("cnt").to_numpy(zero_copy_only=False).astype(np.int64))
+        nt = 0
+        if ts:
+            t = np.concatenate(ts)
+            c = np.concatenate(cs)
+            o = np.argsort(t, kind="stable")
+            t, c = t[o], c[o]
+            cum = np.cumsum(c)
+            # later_i = # events with t in (t_i, t_i + dt_sec]
+            hi = np.searchsorted(t, t + dt_sec, side="right") - 1
+            later = cum[hi] - cum
+            nt = int((c * later).sum() + (c * (c - 1) // 2).sum())
+        yield pa.RecordBatch.from_pydict({"nt": [nt]})
 
     tm = (
         hist.repartition(1)
-        .mapInPandas(_nt_kernel, schema="nt long")
+        .mapInArrow(_nt_kernel, schema="nt long")
         .agg(F.coalesce(F.sum("nt"), F.lit(0)).cast("long").alias("nt"))
     )
     tot = pts.agg(F.count(F.lit(1)).alias("n"))

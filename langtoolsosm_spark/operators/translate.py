@@ -49,15 +49,6 @@ def value_regex(col: str, key: str, find: str) -> F.Column:
     return F.element_at(F.col(col), key).rlike(find)
 
 
-def key_prefix_tags(col: str, prefix: str, extra_keys: tuple[str, ...] = ()) -> F.Column:
-    """``map_filter`` keeping keys with prefix or in a whitelist
-    (lib/osm_utils.py:95-97; src/write_osm_objects_report.py:100-103)."""
-    keys = F.array(*[F.lit(k) for k in extra_keys]) if extra_keys else F.array()
-    return F.map_filter(
-        F.col(col), lambda k, v: k.startswith(prefix) | F.array_contains(keys, k)
-    )
-
-
 # ---------------------------------------------------------------------------
 # fill_empty_name / fill_empty_name_lang / regex_name_lang
 # ---------------------------------------------------------------------------
@@ -218,24 +209,6 @@ def translate_with_wikidata(features: DataFrame, wikidata: DataFrame, lang: str)
             F.lit(dst).alias("key"),
             F.col("best").alias("value"),
         )
-    )
-
-
-def translation_report(features: DataFrame, wikidata: DataFrame, lang: str) -> DataFrame:
-    """Answer/report DB (src/translate_with_wikidata.py:107,138-144):
-    per Q-id, the decision + collected objects {name,type,id}."""
-    edits = translate_with_wikidata(features, wikidata, lang)
-    probe = features.withColumn("wikidata", F.element_at("tags", F.lit("wikidata")))
-    objs = edits.join(
-        probe.select("wikidata", F.element_at("tags", F.lit("name")).alias("name"), "osm_type", "id"),
-        ["wikidata", "osm_type", "id"],
-    )
-    return objs.groupBy("wikidata").agg(
-        F.first("value").alias("answer"),
-        F.sort_array(
-            F.collect_list(F.struct(F.col("osm_type"), F.col("id"), F.col("name")))
-        ).alias("objects"),
-        F.count(F.lit(1)).alias("n_objects"),
     )
 
 

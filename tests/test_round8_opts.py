@@ -8,6 +8,7 @@ tests pin the "same rows" half on the deterministic sf0.01 fixtures so a
 kernel regression is caught before the oracle gate."""
 
 import pytest
+from pyspark import SparkContext
 from pyspark.sql import functions as F
 
 
@@ -95,15 +96,15 @@ def test_topk_shards_hold_at_most_shard_rows(spark, emb, monkeypatch):
     exp = _sorted_pdf(topk_dot_kernel(emb, k=5))
     n_q = emb.filter(F.col("vec_id") % 50 == 0).count()
 
-    sc = spark.sparkContext
-    real = sc.broadcast
+    real = SparkContext.broadcast
     shard_sizes = []
 
-    def spy(value):
+    def spy(self, value):
         shard_sizes.append(len(value[0]))
-        return real(value)
+        return real(self, value)
 
-    monkeypatch.setattr(sc, "broadcast", spy)
+    # patched on the class: an instance attribute would outlive undo()
+    monkeypatch.setattr(SparkContext, "broadcast", spy)
     got = topk_dot_kernel(emb, k=5, shard_rows=3)
     monkeypatch.undo()
 
