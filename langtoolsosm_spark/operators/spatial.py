@@ -4244,7 +4244,7 @@ def knox_stat(
         for b in batches:
             ts.append(b.column("t").to_numpy(zero_copy_only=False).astype(np.int64))
             cs.append(b.column("cnt").to_numpy(zero_copy_only=False).astype(np.int64))
-        nt = 0
+        n = nt = 0
         if ts:
             t = np.concatenate(ts)
             c = np.concatenate(cs)
@@ -4255,16 +4255,20 @@ def knox_stat(
             hi = np.searchsorted(t, t + dt_sec, side="right") - 1
             later = cum[hi] - cum
             nt = int((c * later).sum() + (c * (c - 1) // 2).sum())
-        yield pa.RecordBatch.from_pydict({"nt": [nt]})
+            # the histogram holds every event once: its total is count(*)
+            n = int(c.sum())
+        yield pa.RecordBatch.from_pydict({"n": [n], "nt": [nt]})
 
     tm = (
         hist.repartition(1)
-        .mapInArrow(_nt_kernel, schema="nt long")
-        .agg(F.coalesce(F.sum("nt"), F.lit(0)).cast("long").alias("nt"))
+        .mapInArrow(_nt_kernel, schema="n long, nt long")
+        .agg(
+            F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n"),
+            F.coalesce(F.sum("nt"), F.lit(0)).cast("long").alias("nt"),
+        )
     )
-    tot = pts.agg(F.count(F.lit(1)).alias("n"))
     return (
-        tot.crossJoin(sp).crossJoin(tm)
+        tm.crossJoin(sp)
         .select(
             F.col("n").alias("n_events"),
             F.col("ns").alias("ns_pairs"),

@@ -6,6 +6,9 @@
 import path before pyspark loads. Each cached ``zipimporter`` re-reads its
 whole archive directory on the ``importlib.invalidate_caches()`` that
 precedes every task, so a worker that still holds them pays that per task.
+
+The local-mode JVM runs the parallel collector, set through
+``spark.driver.defaultJavaOptions`` unless the caller names a collector.
 """
 
 import os
@@ -68,6 +71,52 @@ def test_daemon_module_local_mode_only(monkeypatch, tmp_path):
     assert "spark.python.daemon.module" not in _builder_options(monkeypatch)
     monkeypatch.setenv("PYTHONPATH", session._PACKAGE_ROOT)
     assert "spark.python.daemon.module" in _builder_options(monkeypatch)
+
+
+_JAVA_ENV = ("JAVA_TOOL_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS")
+
+
+def test_local_session_runs_parallel_collector(spark):
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    names = {bean.getName() for bean in mf.getGarbageCollectorMXBeans()}
+    assert names == {"PS Scavenge", "PS MarkSweep"}
+
+
+def test_parallel_collector_local_mode_only(monkeypatch):
+    for var in _JAVA_ENV:
+        monkeypatch.delenv(var, raising=False)
+    opts = _builder_options(monkeypatch)
+    assert opts["spark.driver.defaultJavaOptions"] == "-XX:+UseParallelGC"
+    # spark-submit owns the JVMs on a cluster
+    assert "spark.driver.defaultJavaOptions" not in _builder_options(
+        monkeypatch, cluster=True
+    )
+    # a caller's own JVM options still go through extraJavaOptions
+    opts = _builder_options(
+        monkeypatch, extra_conf={"spark.driver.extraJavaOptions": "-Xms1g"}
+    )
+    assert opts["spark.driver.defaultJavaOptions"] == "-XX:+UseParallelGC"
+    assert opts["spark.driver.extraJavaOptions"] == "-Xms1g"
+
+
+def test_no_collector_flag_when_the_caller_names_one(monkeypatch):
+    for var in _JAVA_ENV:
+        monkeypatch.delenv(var, raising=False)
+    # two collector flags stop the JVM at start
+    extra = {"spark.driver.extraJavaOptions": "-Xms1g -XX:+UseG1GC"}
+    opts = _builder_options(monkeypatch, extra_conf=extra)
+    assert "spark.driver.defaultJavaOptions" not in opts
+    for var in _JAVA_ENV:
+        monkeypatch.setenv(var, "-Dfoo=1 -XX:+UseSerialGC")
+        assert "spark.driver.defaultJavaOptions" not in _builder_options(monkeypatch)
+        monkeypatch.delenv(var)
+    # not collector flags
+    monkeypatch.setenv("JAVA_TOOL_OPTIONS", "-XX:+UseGCOverheadLimit -Xss4m")
+    assert "spark.driver.defaultJavaOptions" in _builder_options(monkeypatch)
+    # the caller's own defaultJavaOptions reach the builder unchanged
+    own = {"spark.driver.defaultJavaOptions": "-XX:+UseZGC -Xss4m"}
+    opts = _builder_options(monkeypatch, extra_conf=own)
+    assert opts["spark.driver.defaultJavaOptions"] == "-XX:+UseZGC -Xss4m"
 
 
 def _package(root, *names):
