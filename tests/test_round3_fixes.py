@@ -121,7 +121,7 @@ def test_footprint_centroid_empty_ring_yields_nan(spark):
     assert np.isnan(got.loc[2, "latitude"]) and np.isnan(got.loc[2, "longitude"])
 
 
-def test_snapshot_read_range_prunes_files_by_manifest_stats(spark, tmp_path):
+def test_snapshot_read_range_prunes_files_by_manifest_stats(spark, tmp_path, monkeypatch):
     """SURVEY §4: a cell-range read of a written snapshot must open only
     the files whose manifest [min, max] tile stats overlap the range —
     Iceberg-style pruning, no footer reads of non-matching files."""
@@ -138,11 +138,27 @@ def test_snapshot_read_range_prunes_files_by_manifest_stats(spark, tmp_path):
     pruned = table.pruned_files("tile", 3, 5)
     assert len(pruned) == 3  # tiles 3, 4, 5 only
 
+    want = df.filter(F.col("tile").between(3, 5)).count()
+    # small and local: the driver reads exactly the pruned files with pyarrow
+    import pyarrow.parquet as pq
+
+    opened = []
+    real = pq.ParquetFile
+    monkeypatch.setattr(pq, "ParquetFile", lambda p, *a, **k: opened.append(p) or real(p, *a, **k))
     got = table.read_range(spark, "tile", 3, 5)
+    monkeypatch.undo()
+    assert sorted(opened) == sorted(pruned)
+    assert got.count() == want
+    # over Spark's local-relation bound: a file scan of exactly those files
+    spark.conf.set("spark.sql.execution.arrow.localRelationThreshold", "0")
+    try:
+        got = table.read_range(spark, "tile", 3, 5)
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.localRelationThreshold")
     assert set(got.inputFiles()) == {f"file://{p}" for p in pruned} or set(
         got.inputFiles()
     ) == set(pruned)
-    assert got.count() == df.filter(F.col("tile").between(3, 5)).count()
+    assert got.count() == want
 
 
 def test_stream_sessionize_holds_sessions_until_watermark(spark, tmp_path):

@@ -8,7 +8,11 @@ same manifest bookkeeping and no ``"schema"`` key.
 
 The read tests compare ``read`` / ``read_range`` with
 ``spark.read.parquet`` on the same files, the schema-inferring path they
-skip when every selected file's commit recorded the same schema.
+skip when every selected file's commit recorded the same schema. In this
+local session a small read with a recorded schema takes the driver-side
+Arrow path (a ``LocalTableScan``); a test forces the ``spark.read`` path
+by setting ``spark.sql.execution.arrow.localRelationThreshold`` under the
+files' bytes, or by monkeypatching ``SparkContext.master`` off ``local``.
 """
 
 import datetime
@@ -268,6 +272,14 @@ def typed(spark):
     ).withColumn("sq", F.sequence(F.lit(0), F.col("i") % 3))  # non-null elements
 
 
+def _typed_table(typed, path):
+    """``typed`` in two ``write_partitioned`` commits (tiles < 8, then the rest)."""
+    table = SnapshotTable(path)
+    write_partitioned(typed.filter(F.col("tile") < 8), table, "tile", stats_col="tile")
+    write_partitioned(typed.filter(F.col("tile") >= 8), table, "tile", stats_col="tile")
+    return table
+
+
 @pytest.fixture(scope="module")
 def flagship_table(spark, synth_dir, tmp_path_factory):
     from langtoolsosm_spark.plans.pipeline import run_to_snapshot
@@ -282,9 +294,7 @@ def test_reads_match_inferred_schema_and_rows(spark, typed, tmp_path, request, w
     if which == "flagship":
         table = request.getfixturevalue("flagship_table")
     else:
-        table = SnapshotTable(str(tmp_path / "typed"))
-        write_partitioned(typed.filter(F.col("tile") < 8), table, "tile", stats_col="tile")
-        write_partitioned(typed.filter(F.col("tile") >= 8), table, "tile", stats_col="tile")
+        table = _typed_table(typed, str(tmp_path / "typed"))
     assert all("schema" in s for s in table.snapshots())
     sid = table.snapshots()[0]["snapshot_id"]
     _assert_same(table.read(spark), spark.read.parquet(*table.live_files()))
@@ -400,3 +410,172 @@ def test_commit_parses_only_newest_manifest(tmp_path, monkeypatch):
     assert (snap["snapshot_id"], snap["parent_id"]) == (51, 50)
     monkeypatch.undo()
     assert [s["snapshot_id"] for s in table.snapshots()] == list(range(1, 52))
+
+
+# -- driver-side Arrow reads --------------------------------------------------
+
+THRESHOLD = "spark.sql.execution.arrow.localRelationThreshold"
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _spark_path(plan):
+    return "FileScan parquet" in plan and "LocalTableScan" not in plan
+
+
+def _arrow_path(plan):
+    return "LocalTableScan" in plan and "FileScan" not in plan
+
+
+def _reference(spark, files, where=None):
+    """``spark.read.parquet`` over ``files`` (inferred schema) plus the
+    range filter ``read_range`` applies."""
+    df = spark.read.parquet(*files)
+    if where is not None:
+        col, lo, hi = where
+        df = df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
+    return df
+
+
+def _assert_parity(got, want):
+    """Schema (names, types, nullability), sorted rows and pandas dtypes."""
+    _assert_same(got, want)
+    assert got.toPandas().dtypes.to_dict() == want.toPandas().dtypes.to_dict()
+
+
+@pytest.fixture
+def threshold(spark):
+    """Set Spark's local-relation threshold for one test."""
+    def set_(v):
+        spark.conf.set(THRESHOLD, str(v))
+
+    yield set_
+    spark.conf.unset(THRESHOLD)
+
+
+@pytest.mark.parametrize(
+    "case", ["flagship", "typed_null_range_col", "time_travel", "compact_then_append"]
+)
+def test_arrow_read_matches_spark_read(spark, typed, tmp_path, request, case):
+    """The driver-side Arrow path returns what ``spark.read.parquet`` of
+    the same files plus the same filter returns."""
+    if case == "flagship":
+        table = request.getfixturevalue("flagship_table")
+        tiles = sorted(r["tile"] for r in table.read(spark).select("tile").distinct().collect())
+        col, lo, hi = "tile", tiles[2], tiles[6]
+        got, files = table.read_range(spark, col, lo, hi), table.pruned_files(col, lo, hi)
+        want = _reference(spark, files, (col, lo, hi))
+    elif case == "typed_null_range_col":
+        # ``ln`` is null in every third row and has no stats: no file is
+        # pruned, and the residual filter drops the nulls
+        table = _typed_table(typed, str(tmp_path / "typed"))
+        col, lo, hi = "ln", 2 * 10**12, 11 * 10**12
+        got = table.read_range(spark, col, lo, hi)
+        want = _reference(spark, table.live_files(), (col, lo, hi))
+        assert 0 < got.count() < table.read(spark).filter(F.col(col).isNotNull()).count()
+    elif case == "time_travel":
+        table = _typed_table(typed, str(tmp_path / "typed"))
+        sid = table.snapshots()[0]["snapshot_id"]
+        got, want = table.read(spark, snapshot_id=sid), _reference(spark, table.live_files(sid))
+        assert got.count() == 8
+    else:
+        table = SnapshotTable(str(tmp_path / "t"))
+        frame = spark.range(0, 60).withColumn("tile", F.col("id") % 6)
+        write_partitioned(frame.filter("id < 40"), table, "tile", stats_col="tile")
+        compact_table(table, spark, target_files=2)
+        write_partitioned(frame.filter("id >= 40"), table, "tile", stats_col="tile")
+        got = table.read_range(spark, "tile", 1, 3)
+        want = _reference(spark, table.pruned_files("tile", 1, 3), ("tile", 1, 3))
+    assert _arrow_path(_plan(got))
+    _assert_parity(got, want)
+
+
+def test_empty_overlap_opens_no_file(spark, typed, tmp_path, monkeypatch):
+    """No overlapping file: an empty local relation of the manifest schema,
+    built without opening a data file."""
+    table = _typed_table(typed, str(tmp_path / "typed"))
+    opened = []
+    monkeypatch.setattr(pq, "ParquetFile", lambda *a, **k: opened.append(a) or 1 / 0)
+    got = table.read_range(spark, "tile", 100, 200)
+    monkeypatch.undo()
+    assert opened == [] and _arrow_path(_plan(got))
+    want = spark.read.parquet(table.live_files()[0]).filter(F.lit(False))
+    _assert_parity(got, want)
+    assert got.count() == 0
+
+
+@pytest.mark.parametrize("knob", ["spark_conf", "module_constant"])
+def test_arrow_read_bound_each_side(spark, flagship_table, threshold, monkeypatch, knob):
+    """At the files' summed uncompressed bytes the read stays on the driver;
+    one byte under it, the same read goes through ``spark.read``. Either
+    bound caps it: Spark's local-relation threshold and
+    ``DRIVER_READ_BYTES``."""
+    from langtoolsosm_spark.sources import snapshots
+
+    bound = threshold
+    if knob == "module_constant":
+        bound = lambda v: monkeypatch.setattr(snapshots, "DRIVER_READ_BYTES", v)  # noqa: E731
+    table = flagship_table
+    tiles = sorted(r["tile"] for r in table.read(spark).select("tile").distinct().collect())
+    lo, hi = tiles[0], tiles[4]
+    size = 0
+    for f in table.pruned_files("tile", lo, hi):
+        md = pq.ParquetFile(f).metadata
+        size += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    bound(size)
+    at = table.read_range(spark, "tile", lo, hi)
+    bound(size - 1)
+    over = table.read_range(spark, "tile", lo, hi)
+    assert _arrow_path(_plan(at)) and _spark_path(_plan(over))
+    _assert_parity(at, over)
+
+
+def test_cluster_session_reads_through_spark(spark, enriched, tmp_path, monkeypatch):
+    """Off a local master the driver may not see the files: ``spark.read``."""
+    table = SnapshotTable(str(tmp_path / "t"))
+    write_partitioned(enriched, table, "tile", stats_col="tile")
+    lo, hi = 7919 * 5, 7919 * 15
+    local = table.read_range(spark, "tile", lo, hi)
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://driver:7077")
+    remote, whole = table.read_range(spark, "tile", lo, hi), table.read(spark)
+    monkeypatch.undo()
+    assert _arrow_path(_plan(local))
+    assert _spark_path(_plan(remote)) and _spark_path(_plan(whole))
+    _assert_parity(remote, local)
+
+
+@pytest.mark.parametrize("limit", [None, 0], ids=["arrow", "spark"])
+def test_read_plan_pin(spark, enriched, tmp_path, threshold, limit):
+    """The executed plan names the path: a ``LocalTableScan`` and no
+    ``FileScan`` under the bound, the ``FileScan`` over it."""
+    table = SnapshotTable(str(tmp_path / "t"))
+    write_partitioned(enriched, table, "tile", stats_col="tile")
+    if limit is not None:
+        threshold(limit)
+    check = _arrow_path if limit is None else _spark_path
+    assert check(_plan(table.read(spark)))
+    assert check(_plan(table.read_range(spark, "tile", 7919 * 5, 7919 * 15)))
+
+
+def test_uncommitted_temp_manifest_is_not_a_snapshot(spark, enriched, tmp_path):
+    """A ``.tmp-<hex>.json`` left by a commit that died before its rename
+    (or one still in flight) is not read as a snapshot."""
+    import json
+
+    table = SnapshotTable(str(tmp_path / "t"))
+    write_partitioned(enriched.filter(F.col("tile") < 7919 * 10), table, "tile", stats_col="tile")
+    (snap,) = table.snapshots()
+    files, done = table.live_files(), table.committed_partitions()
+    rows = _rows(table.read(spark))
+    planted = {**snap, "snapshot_id": 2, "parent_id": 1, "files": ["b.parquet"],
+               "lineage": [{"partition_id": 999_999, "rows": 1, "file": "b.parquet"}]}
+    with open(os.path.join(table.snap_dir, ".tmp-deadbeef.json"), "w") as f:
+        json.dump(planted, f)
+    assert [s["snapshot_id"] for s in table.snapshots()] == [1]
+    assert table.live_files() == files
+    assert table.committed_partitions() == done
+    assert _rows(table.read(spark)) == rows
+    assert table.commit([], [])["snapshot_id"] == 2
+    assert [s["snapshot_id"] for s in table.snapshots()] == [1, 2]
