@@ -3113,11 +3113,13 @@ def speed_outliers(
         raise ValueError(f"vmax_micro must be >= 1, got {vmax_micro}")
     from pyspark.sql import Window
 
-    order = [F.col("__ep").asc()]
+    # walk by the full ts, then the tiebreak: the streaming twin's order
+    order = [F.col("__ts").asc()]
     if order_tiebreak:
         order.append(F.col(order_tiebreak).asc())
     base = events.select(
         F.col(entity_col).alias("entity"),
+        F.col(ts_col).alias("__ts"),
         F.unix_timestamp(F.col(ts_col)).alias("__ep"),
         F.floor((F.col(lon) + F.lit(180.0)) * F.lit(float(scale)))
         .cast("long")
@@ -3831,17 +3833,19 @@ def trip_od(
     Plan: the trip_segments walk (one entity-keyed window shuffle:
     lag gap flag + running ordinal), ONE groupBy per (entity, trip)
     taking endpoint cells via lexicographic struct min/max on the
-    unique (ep, tiebreak) key, then a map-side-combined matrix
+    unique (ts, tiebreak) key, then a map-side-combined matrix
     rollup."""
     if max_gap_s < 1:
         raise ValueError(f"max_gap_s must be >= 1, got {max_gap_s}")
     from pyspark.sql import Window
 
-    order = [F.col("__ep").asc()]
+    # walk by the full ts, then the tiebreak: the streaming twin's order
+    order = [F.col("__ts").asc()]
     if order_tiebreak:
         order.append(F.col(order_tiebreak).asc())
     base = events.select(
         F.col(entity_col).alias("entity"),
+        F.col(ts_col).alias("__ts"),
         F.unix_timestamp(F.col(ts_col)).alias("__ep"),
         tile_key_col(F.col(lat), F.col(lon), res).alias("tile"),
         *([F.col(order_tiebreak)] if order_tiebreak else []),
@@ -3856,7 +3860,7 @@ def trip_od(
             ).cast("long")
         ).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
     )
-    key = [F.col("__ep"), *([F.col(order_tiebreak)] if order_tiebreak else [])]
+    key = [F.col("__ts"), *([F.col(order_tiebreak)] if order_tiebreak else [])]
     per = walked.groupBy("entity", "trip_id").agg(
         F.min(F.struct(*key, F.col("tile"))).alias("__f"),
         F.max(F.struct(*key, F.col("tile"))).alias("__l"),

@@ -760,23 +760,20 @@ def dwell_time(
     map-side-combined groupBy on the tile key."""
     from pyspark.sql import Window
 
-    order = [F.col(ts_col).asc()]
+    # walk by the full ts, then the tiebreak: the streaming twin's order
+    order = [F.col("__ts").asc()]
     if order_tiebreak:
         order.append(F.col(order_tiebreak).asc())
-    w = Window.partitionBy(entity_col).orderBy(*order)
-    ep = F.unix_timestamp(F.col(ts_col))
     seg = (
         events.select(
             F.col(entity_col).alias("entity"),
-            ep.alias("__ep"),
+            F.col(ts_col).alias("__ts"),
+            F.unix_timestamp(F.col(ts_col)).alias("__ep"),
             tile_key_col(F.col(lat), F.col(lon), res).alias("tile"),
             *([F.col(order_tiebreak)] if order_tiebreak else []),
         )
         .withColumn("__next", F.lead("__ep").over(
-            Window.partitionBy("entity").orderBy(
-                F.col("__ep").asc(),
-                *([F.col(order_tiebreak).asc()] if order_tiebreak else []),
-            )
+            Window.partitionBy("entity").orderBy(*order)
         ))
         .filter(F.col("__next").isNotNull())
     )

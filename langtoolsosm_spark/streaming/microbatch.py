@@ -16,15 +16,33 @@ asks for more), runs the query to completion on a memory sink (or a
 parquet sink where the driver keeps state across runs), builds the
 result, and drops the memory sink's temp view. The sink's rows then live
 only as long as the returned frame, not until the session ends.
+
+Every stateful kernel without a timeout is one ``keyed_fold`` call.
+Order-free counters (sums, sketches, monotone reservoirs) fold a key's
+micro-batch chunk by chunk; their final state equals the batch operator's
+under any arrival order or batching. Ordered walks see a key's
+micro-batch as one frame sorted by the full ``(ts, id)``: ``ts`` at
+nanoseconds, then the event id, the order the batch operators walk.
+They rely on the ORDERED-INGESTION CONTRACT: per key, every micro-batch
+starts strictly after the last ``(ts, id)`` of the one before, which
+time-split staged files or a log partitioned by the key provide.
+``keyed_fold`` keeps that last ``(ts, id)`` at nanosecond resolution
+beside the kernel's state, and a batch that breaks the contract raises
+an out-of-order ``ValueError`` rather than emit rows the batch operator
+would not. ``stream_od_transitions_late`` is the bounded-lateness
+alternative: it buffers instead of raising.
 """
 
 from __future__ import annotations
 
 import uuid
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 
-from ..functions.cells import micro_deg
+from ..functions.cells import micro_deg, tile_key, tile_key_col
 from ..operators.tiling import assign_tiles
 from ..sources.footers import read_parquet
 from ..sources.snapshots import SnapshotTable
@@ -85,6 +103,130 @@ def drain_once(
     finally:
         if out_dir is None:
             spark.catalog.dropTempView(sink)
+
+
+_PD_TYPES = {"long": "int64", "int": "int32", "timestamp": "datetime64[ns]"}
+
+
+def keyed_fold(
+    stream: DataFrame,
+    keys: list[str],
+    fold,
+    out_schema: str,
+    state_schema: str,
+    order: tuple[str, str] | None = None,
+) -> DataFrame:
+    """Group ``stream`` by ``keys`` into one ``applyInPandasWithState``
+    without a timeout, and per key and trigger call ``fold(key, data,
+    state)``, which returns ``(rows, new_state)``. ``state`` is the tuple
+    (``state_schema``'s fields) the key's last call returned, or None on
+    its first; ``rows`` is anything ``pd.DataFrame(rows, columns=...)``
+    takes, in ``out_schema``'s column order. An empty output keeps the
+    schema's dtypes.
+
+    With ``order=(ts_col, id_col)`` the kernel is an ordered walk in
+    append mode: ``data`` is the key's whole micro-batch as one frame
+    sorted by (ts, id), and the ordered-ingestion check of the module
+    docstring runs here, against a last (ts ns, id) stored after the
+    kernel's own fields. With ``order=None`` it is an order-free counter
+    in update mode: ``data`` is the chunk iterator, so a hot key's
+    micro-batch is never held whole."""
+    fields = [f.split() for f in out_schema.split(",")]
+    cols = [name for name, _ in fields]
+    empty = {name: _PD_TYPES.get(t, object) for name, t in fields}
+
+    def kernel(key, pdf_iter, state):
+        prev = tuple(state.get) if state.exists else None
+        if order is None:
+            rows, new = fold(key, pdf_iter, prev)
+        else:
+            chunks = [pdf for pdf in pdf_iter if len(pdf)]
+            if not chunks:
+                yield pd.DataFrame(columns=cols).astype(empty)
+                return
+            ts_col, id_col = order
+            pdf = pd.concat(chunks, ignore_index=True).sort_values(
+                [ts_col, id_col], kind="mergesort"
+            )
+            ts = _ns(pdf[ts_col])
+            first = (int(ts[0]), int(pdf[id_col].iloc[0]))
+            if prev is not None:
+                if first <= (int(prev[-2]), int(prev[-1])):
+                    raise ValueError(
+                        f"out-of-order micro-batch for {dict(zip(keys, key))}: "
+                        f"it starts at (ts ns, id) {first}, not after the last "
+                        f"{prev[-2:]} — the ordered-ingestion contract is "
+                        "broken, and the walk would diverge from batch"
+                    )
+                prev = prev[:-2]
+            rows, new = fold(key, pdf, prev)
+            new = (*new, int(ts[-1]), int(pdf[id_col].iloc[-1]))
+        state.update(new)
+        out = pd.DataFrame(rows, columns=cols)
+        yield out if len(out) else out.astype(empty)
+
+    if order is not None:
+        state_schema += ", last_ts long, last_id long"
+    return stream.groupBy(*keys).applyInPandasWithState(
+        kernel,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update" if order is None else "append",
+        timeoutConf="NoTimeout",
+    )
+
+
+def _ns(ts: pd.Series) -> np.ndarray:
+    """A timestamp column as int64 nanoseconds."""
+    return ts.to_numpy("datetime64[ns]").astype(np.int64)
+
+
+def _carried(state, *cols: np.ndarray) -> tuple[np.ndarray, ...]:
+    """Each int64 column behind its value in ``state`` — where the key's
+    last micro-batch ended — so consecutive pairs span batches."""
+    if state is None:
+        return cols
+    return tuple(np.concatenate(([np.int64(s)], c)) for s, c in zip(state, cols))
+
+
+def _micro_xy(pdf: pd.DataFrame, lat: str, lon: str, scale: int):
+    """Integer (x, y) positions: floor((lon + 180) * scale) and
+    floor((lat + 90) * scale), the batch operators' micro-degree grid."""
+    xs = np.floor((pdf[lon].to_numpy() + 180.0) * float(scale)).astype(np.int64)
+    ys = np.floor((pdf[lat].to_numpy() + 90.0) * float(scale)).astype(np.int64)
+    return xs, ys
+
+
+def _sums(*terms: tuple[str, ...]):
+    """Order-free fold keeping (n, sum of each term) per key, where a term
+    is the int64 product of its columns. Sums are associative, so the
+    final state equals the batch moments under any arrival order or
+    batching. Rows are (*key, n, *sums)."""
+
+    def fold(key, chunks, state):
+        acc = [int(v) for v in state] if state else [0] * (1 + len(terms))
+        for pdf in chunks:
+            acc[0] += len(pdf)
+            for i, cols in enumerate(terms, 1):
+                acc[i] += int(
+                    np.prod([pdf[c].to_numpy(np.int64) for c in cols], axis=0).sum()
+                )
+        return [(*key, *acc)], tuple(acc)
+
+    return fold
+
+
+def _latest(view: str, keys: str, by: str, where: str = "TRUE") -> str:
+    """SQL subquery over an update-mode sink: per ``keys``, the row with
+    the largest ``by`` (comma-separated columns, compared in order). A
+    kernel's ``by`` only grows from trigger to trigger, so that row is the
+    key's final state."""
+    desc = ", ".join(f"{c.strip()} DESC" for c in by.split(","))
+    return (
+        f"(SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY {keys} "
+        f"ORDER BY {desc}) AS latest_rn FROM {view} WHERE {where}) "
+        "WHERE latest_rn = 1)"
+    )
 
 
 def stream_tile_counts(stream: DataFrame, res: int = 6) -> DataFrame:
@@ -216,9 +358,6 @@ def stream_tile_distinct(stream: DataFrame, res: int = 6, id_col: str = "image_i
     register merge is max(), so the final streaming state is IDENTICAL to
     the batch sketch over the union of all micro-batches (tested).
     """
-    import numpy as np
-    import pandas as pd
-
     from ..operators.sketches import M, estimate_from_registers, hll_reg_rho
 
     reg, rho = hll_reg_rho(id_col)
@@ -226,37 +365,26 @@ def stream_tile_distinct(stream: DataFrame, res: int = 6, id_col: str = "image_i
         "tile", reg.alias("__reg"), rho.alias("__rho")
     )
 
-    def kernel(key, pdf_iter, state):
-        regs = np.zeros(M, dtype=np.uint8)
-        total = 0
-        if state.exists:
-            regs_b, total = state.get
-            regs = np.frombuffer(regs_b, dtype=np.uint8).copy()
+    def fold(key, chunks, state):
+        regs = np.frombuffer(state[0], np.uint8).copy() if state else np.zeros(M, np.uint8)
         batch_rows = 0
-        for pdf in pdf_iter:
+        for pdf in chunks:
             batch_rows += len(pdf)
             np.maximum.at(
                 regs,
                 pdf["__reg"].to_numpy(dtype=np.int64),
                 pdf["__rho"].to_numpy(dtype=np.int64).astype(np.uint8),
             )
-        total = int(total) + batch_rows
-        state.update((regs.tobytes(), total))
-        yield pd.DataFrame(
-            {
-                "tile": [key[0]],
-                "batch_rows": [batch_rows],
-                "total_rows": [total],
-                "est_milli": [estimate_from_registers(regs)],
-            }
+        total = (int(state[1]) if state else 0) + batch_rows
+        return (
+            [(key[0], batch_rows, total, estimate_from_registers(regs))],
+            (regs.tobytes(), total),
         )
 
-    return keyed.groupBy("tile").applyInPandasWithState(
-        kernel,
-        outputStructType="tile long, batch_rows long, total_rows long, est_milli long",
-        stateStructType="regs binary, total long",
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["tile"], fold,
+        "tile long, batch_rows long, total_rows long, est_milli long",
+        "regs binary, total long",
     )
 
 
@@ -271,12 +399,7 @@ def run_tile_distinct_once(
         lambda st: stream_tile_distinct(st.select("image_id", "lat", "lon"), res=res),
         "update",
         lambda v: spark.sql(
-            f"""
-            SELECT tile, total_rows, est_milli FROM (
-              SELECT *, row_number() OVER (PARTITION BY tile ORDER BY total_rows DESC) AS rn
-              FROM {v}
-            ) WHERE rn = 1
-            """
+            f"SELECT tile, total_rows, est_milli FROM {_latest(v, 'tile', 'total_rows')}"
         ),
     )
 
@@ -307,9 +430,6 @@ def stream_sessionize(
     Emits (key, start_epoch, end_epoch, n_events), one row per session
     whose (end + gap) the watermark has strictly passed.
     """
-    import numpy as np
-    import pandas as pd
-
     ws = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withWatermark(
         ts_col, watermark
     )
@@ -460,14 +580,11 @@ def stream_od_transitions(
 ) -> DataFrame:
     """Stateful streaming OD transition extraction (the streaming half of
     operators/spatial.py ``od_flows``): per entity, state carries the
-    last seen (ts, id, tile); each micro-batch's positions — sorted by
-    (ts, id) and appended after the carried position — emit one
-    (entity, from_tile, to_tile) row per consecutive pair.
+    last seen tile; each micro-batch's positions — sorted by (ts, id) and
+    appended after the carried position — emit one (entity, from_tile,
+    to_tile) row per consecutive pair.
 
-    Ingestion contract: event-time order ACROSS micro-batches per entity
-    (time-split staged files / log-compacted Kafka partitions keyed by
-    entity). An out-of-order batch RAISES rather than silently emitting
-    transitions the batch job would not produce. State is one row per
+    Ordered ingestion: see the module docstring. State is one row per
     entity (no timeout here; a live deployment would add an event-time
     timeout to drop idle entities — eviction semantics identical to the
     sessionize kernel's).
@@ -476,54 +593,21 @@ def stream_od_transitions(
     ``tile_key_col`` (bit-identical, property-tested), so the streaming
     and batch paths share the cell math.
     """
-    import numpy as np
-    import pandas as pd
 
-    from ..functions.cells import tile_key
+    def fold(key, pdf, state):
+        # the carried position -> the first new position is a transition too
+        (tiles,) = _carried(state, tile_key(pdf[lat].to_numpy(), pdf[lon].to_numpy(), res))
+        rows = {
+            entity_col: np.repeat(np.int64(key[0]), len(tiles) - 1),
+            "from_tile": tiles[:-1].astype(np.int64),
+            "to_tile": tiles[1:].astype(np.int64),
+        }
+        return rows, (int(tiles[-1]),)
 
-    def kernel(key, pdf_iter, state):
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(
-                columns=[entity_col, "from_tile", "to_tile"]
-            ).astype({entity_col: "int64", "from_tile": "int64", "to_tile": "int64"})
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            [ts_col, id_col], kind="mergesort"
-        )
-        ts_ns = pdf[ts_col].astype("int64").to_numpy()
-        eids = pdf[id_col].astype("int64").to_numpy()
-        tiles = tile_key(pdf[lat].to_numpy(), pdf[lon].to_numpy(), res)
-        if state.exists:
-            lts, leid, ltile = state.get
-            if (ts_ns[0], eids[0]) <= (int(lts), int(leid)):
-                raise ValueError(
-                    f"out-of-order micro-batch for entity {key[0]}: "
-                    f"batch starts at ({ts_ns[0]}, {eids[0]}) but state is "
-                    f"at ({lts}, {leid}) — the ordered-ingestion contract "
-                    "is broken and streaming OD would diverge from batch"
-                )
-            # carried position -> first new position is also a transition
-            from_tiles = np.concatenate(([np.int64(ltile)], tiles[:-1]))
-            tiles_out = tiles
-        else:
-            from_tiles = tiles[:-1]
-            tiles_out = tiles[1:]
-        state.update((int(ts_ns[-1]), int(eids[-1]), int(tiles[-1])))
-        yield pd.DataFrame(
-            {
-                entity_col: np.repeat(np.int64(key[0]), len(tiles_out)),
-                "from_tile": from_tiles.astype(np.int64),
-                "to_tile": tiles_out.astype(np.int64),
-            }
-        )
-
-    return stream.groupBy(entity_col).applyInPandasWithState(
-        kernel,
-        outputStructType=f"{entity_col} long, from_tile long, to_tile long",
-        stateStructType="lts long, leid long, ltile long",
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        stream, [entity_col], fold,
+        f"{entity_col} long, from_tile long, to_tile long", "l_tile long",
+        order=(ts_col, id_col),
     )
 
 
@@ -558,11 +642,6 @@ def stream_od_transitions_late(
     pending buffer — bounded by the entity's event rate x lateness
     window, the same bound Spark's own watermarked aggregations carry.
     """
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.cells import tile_key
-
     lateness_ns = int(lateness_s) * 1_000_000_000
     NEG = np.iinfo(np.int64).min
 
@@ -653,7 +732,7 @@ def stream_od_transitions_late(
             "bts binary, beid binary, btile binary"
         ),
         outputMode="append",
-        timeoutConf="NoTimeout",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -665,18 +744,20 @@ def run_od_late_stream_once(
     (availableNow, one file per trigger) and roll the emitted
     transitions up to the batch ``od_flows`` shape — same downstream
     rollup rationale as ``run_od_stream_once``."""
-    def finish(v):
-        t = spark.table(v)
-        ent = t.columns[0]  # the entity key column (not hard-coded 'user_id')
-        return t.groupBy("from_tile", "to_tile").agg(
-            F.count(F.lit(1)).alias("n_trips"),
-            F.countDistinct(ent).alias("n_entities"),
-        )
-
     return drain_once(
         spark, events_dir, checkpoint,
         lambda st: stream_od_transitions_late(st, res=res, lateness_s=lateness_s),
-        "append", finish,
+        "append", lambda v: _od_rollup(spark.table(v)),
+    )
+
+
+def _od_rollup(transitions: DataFrame) -> DataFrame:
+    """(entity, from_tile, to_tile) transitions -> the batch ``od_flows``
+    shape (from_tile, to_tile, n_trips, n_entities); the entity is the
+    first column, whatever its name."""
+    return transitions.groupBy("from_tile", "to_tile").agg(
+        F.count(F.lit(1)).alias("n_trips"),
+        F.countDistinct(transitions.columns[0]).alias("n_entities"),
     )
 
 
@@ -693,10 +774,7 @@ def run_od_stream_once(
     return drain_once(
         spark, events_dir, checkpoint,
         lambda st: stream_od_transitions(st, res=res), "append",
-        lambda v: spark.table(v).groupBy("from_tile", "to_tile").agg(
-            F.count(F.lit(1)).alias("n_trips"),
-            F.countDistinct("user_id").alias("n_entities"),
-        ),
+        lambda v: _od_rollup(spark.table(v)),
     )
 
 
@@ -716,18 +794,15 @@ def stream_geofence_transitions(
     ray-cast kernel the batch PIP join refines with
     (functions/geo.points_in_polygon — identical half-open tie-breaks),
     unique ownership = lexicographically smallest containing polygon,
-    NULL when outside all. Per-entity state carries (ts, id, zone);
+    NULL when outside all. Per-entity state carries the last zone;
     transitions (zone change, or first position inside a zone) emit as
-    (entity, ts, id, from_zone, to_zone). Ordered-ingestion contract +
-    loud raise, exactly as ``stream_od_transitions``.
+    (entity, ts, id, from_zone, to_zone). Ordered ingestion: see the
+    module docstring.
 
     Scale: the ring dim rides the closure (a few KB per polygon — the
     admin-boundary case that outgrows this would pre-join a cover tile
     dimension stream-static instead); state is one row per entity.
     """
-    import numpy as np
-    import pandas as pd
-
     from ..functions import geo
 
     pids = sorted(rings)
@@ -741,56 +816,29 @@ def stream_geofence_transitions(
             out[inside] = pid
         return out
 
-    def kernel(key, pdf_iter, state):
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(
-                columns=[entity_col, ts_col, id_col, "from_zone", "to_zone"]
-            )
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            [ts_col, id_col], kind="mergesort"
-        )
-        ts_ns = pdf[ts_col].astype("int64").to_numpy()
-        eids = pdf[id_col].astype("int64").to_numpy()
+    def fold(key, pdf, state):
         zones = zone_of(pdf[lat].to_numpy(), pdf[lon].to_numpy())
-        if state.exists:
-            lts, leid, lzone = state.get
-            if (ts_ns[0], eids[0]) <= (int(lts), int(leid)):
-                raise ValueError(
-                    f"out-of-order micro-batch for entity {key[0]}: the "
-                    "ordered-ingestion contract is broken"
-                )
-            prev = np.concatenate(([lzone if lzone != "" else None], zones[:-1]))
-            emit = prev != zones
-        else:
-            prev = np.concatenate(([None], zones[:-1]))
-            emit = prev != zones
-            emit[0] = zones[0] is not None
-        state.update(
-            (int(ts_ns[-1]), int(eids[-1]),
-             zones[-1] if zones[-1] is not None else "")
-        )
-        out = pd.DataFrame(
-            {
-                entity_col: pdf[entity_col].to_numpy()[emit],
-                ts_col: pdf[ts_col].to_numpy()[emit],
-                id_col: eids[emit],
-                "from_zone": prev[emit],
-                "to_zone": zones[emit],
-            }
-        )
-        yield out
+        # no last zone (first batch, or "" = outside all) is NULL, so a
+        # first position inside a zone is an entry
+        prev = np.concatenate((
+            [(state[0] or None) if state else None], zones[:-1]
+        ))
+        emit = prev != zones
+        rows = {
+            entity_col: pdf[entity_col].to_numpy()[emit],
+            ts_col: pdf[ts_col].to_numpy()[emit],
+            id_col: pdf[id_col].to_numpy(np.int64)[emit],
+            "from_zone": prev[emit],
+            "to_zone": zones[emit],
+        }
+        return rows, (zones[-1] or "",)
 
-    return stream.groupBy(entity_col).applyInPandasWithState(
-        kernel,
-        outputStructType=(
-            f"{entity_col} long, {ts_col} timestamp, {id_col} long, "
-            "from_zone string, to_zone string"
-        ),
-        stateStructType="lts long, leid long, lzone string",
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        stream, [entity_col], fold,
+        f"{entity_col} long, {ts_col} timestamp, {id_col} long, "
+        "from_zone string, to_zone string",
+        "l_zone string",
+        order=(ts_col, id_col),
     )
 
 
@@ -862,11 +910,7 @@ def stream_tile_cap(
     output serialize int64): batch ``tile_cap_sample`` accepts any
     orderable id, so the narrower streaming contract is validated UP
     FRONT with a clear error instead of a mid-stream kernel crash."""
-    import numpy as np
-    import pandas as pd
-
     from ..operators.sampling import _hash32
-    from ..operators.tiling import assign_tiles
 
     id_type = stream.schema[id_col].dataType.simpleString()
     if id_type not in ("tinyint", "smallint", "int", "bigint"):
@@ -883,35 +927,23 @@ def stream_tile_cap(
         _hash32(F.col(id_col), salt).alias("__h"),
     )
 
-    def kernel(key, pdf_iter, state):
-        ids = np.empty(0, dtype=np.int64)
-        hs = np.empty(0, dtype=np.int64)
-        n_seen = 0
-        if state.exists:
-            ids_b, hs_b, n_seen = state.get
-            ids = np.frombuffer(ids_b, dtype=np.int64)
-            hs = np.frombuffer(hs_b, dtype=np.int64)
-        for pdf in pdf_iter:
-            n_seen = int(n_seen) + len(pdf)
+    def fold(key, chunks, state):
+        if state:
+            ids, hs = np.frombuffer(state[0], np.int64), np.frombuffer(state[1], np.int64)
+        else:
+            ids = hs = np.empty(0, dtype=np.int64)
+        n_seen = int(state[2]) if state else 0
+        for pdf in chunks:
+            n_seen += len(pdf)
             ids = np.concatenate([ids, pdf["__id"].to_numpy(dtype=np.int64)])
             hs = np.concatenate([hs, pdf["__h"].to_numpy(dtype=np.int64)])
-            order = np.lexsort((ids, hs))[:cap]
-            ids, hs = ids[order], hs[order]
-        state.update((ids.tobytes(), hs.tobytes(), int(n_seen)))
-        yield pd.DataFrame(
-            {
-                "tile": [key[0]],
-                "ids": [ids.tolist()],
-                "n_seen": [int(n_seen)],
-            }
-        )
+            top = np.lexsort((ids, hs))[:cap]
+            ids, hs = ids[top], hs[top]
+        return [(key[0], ids.tolist(), n_seen)], (ids.tobytes(), hs.tobytes(), n_seen)
 
-    return keyed.groupBy("tile").applyInPandasWithState(
-        kernel,
-        outputStructType="tile long, ids array<long>, n_seen long",
-        stateStructType="ids_b binary, hs_b binary, n long",
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["tile"], fold,
+        "tile long, ids array<long>, n_seen long", "ids_b binary, hs_b binary, n long",
     )
 
 
@@ -927,12 +959,9 @@ def run_tile_cap_stream_once(
         lambda st: stream_tile_cap(st, res=res, cap=cap), "update",
         lambda v: spark.sql(
             f"""
-            SELECT point_id, tile, CAST(pos + 1 AS INT) AS rk FROM (
-              SELECT *, row_number() OVER (PARTITION BY tile ORDER BY n_seen DESC) AS rn
-              FROM {v}
-            ) latest
+            SELECT point_id, tile, CAST(pos + 1 AS INT) AS rk
+            FROM {_latest(v, "tile", "n_seen")} latest
             LATERAL VIEW posexplode(ids) t AS pos, point_id
-            WHERE rn = 1
             """
         ),
     )
@@ -950,43 +979,25 @@ def stream_tile_first_seen(
     stream_tile_cap's monotone reservoir). State per tile is the sorted
     unique day array — bounded by the calendar, not the event rate.
     Emits one update row per (tile, trigger)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.tiling import assign_tiles
-
     day = (F.unix_timestamp(F.col(ts_col)) / F.lit(86400)).cast("long")
     keyed = assign_tiles(stream, res=res, lat=lat, lon=lon).select(
         "tile", day.alias("__day")
     )
 
-    def kernel(key, pdf_iter, state):
-        days = np.empty(0, dtype=np.int64)
-        n_events = 0
-        if state.exists:
-            days_b, n_events = state.get
-            days = np.frombuffer(days_b, dtype=np.int64)
-        for pdf in pdf_iter:
-            n_events = int(n_events) + len(pdf)
+    def fold(key, chunks, state):
+        days = np.frombuffer(state[0], np.int64) if state else np.empty(0, np.int64)
+        n_events = int(state[1]) if state else 0
+        for pdf in chunks:
+            n_events += len(pdf)
             days = np.unique(
                 np.concatenate([days, pdf["__day"].to_numpy(np.int64)])
             )
-        state.update((days.tobytes(), int(n_events)))
-        yield pd.DataFrame(
-            {
-                "tile": [key[0]],
-                "first_day": [int(days[0]) if len(days) else None],
-                "n_days": [len(days)],
-                "n_events": [int(n_events)],
-            }
-        )
+        first_day = int(days[0]) if len(days) else None
+        return [(key[0], first_day, len(days), n_events)], (days.tobytes(), n_events)
 
-    return keyed.groupBy("tile").applyInPandasWithState(
-        kernel,
-        outputStructType="tile long, first_day long, n_days long, n_events long",
-        stateStructType="days_b binary, n long",
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["tile"], fold,
+        "tile long, first_day long, n_days long, n_events long", "days_b binary, n long",
     )
 
 
@@ -1000,14 +1011,8 @@ def run_tile_first_seen_stream_once(
         spark, points_dir, checkpoint,
         lambda st: stream_tile_first_seen(st, res=res), "update",
         lambda v: spark.sql(
-            f"""
-            SELECT tile, first_day, n_days, n_events FROM (
-              SELECT *, row_number() OVER (
-                PARTITION BY tile ORDER BY n_events DESC, n_days DESC
-              ) AS rn
-              FROM {v}
-            ) WHERE rn = 1
-            """
+            "SELECT tile, first_day, n_days, n_events "
+            f"FROM {_latest(v, 'tile', 'n_events, n_days')}"
         ),
     )
 
@@ -1026,40 +1031,15 @@ def stream_gyration_moments(
     sxx stays under 2^63 (~4.5e3 years of 1 Hz positions at max
     latitude); the batch operator's DECIMAL path is the overflow-scale
     variant. Emits one update row per (entity, trigger)."""
-    import pandas as pd
-
-    x = micro_deg(lat)
-    y = micro_deg(lon)
     keyed = stream.select(
-        F.col(entity_col).alias("entity"), x.alias("__x"), y.alias("__y")
+        F.col(entity_col).alias("entity"),
+        micro_deg(lat).alias("__x"), micro_deg(lon).alias("__y"),
     )
-
-    def kernel(key, pdf_iter, state):
-        n = sx = sy = sxx = syy = 0
-        if state.exists:
-            n, sx, sy, sxx, syy = (int(v) for v in state.get)
-        for pdf in pdf_iter:
-            xs = pdf["__x"].astype("int64")
-            ys = pdf["__y"].astype("int64")
-            n += len(pdf)
-            sx += int(xs.sum())
-            sy += int(ys.sum())
-            sxx += int((xs * xs).sum())
-            syy += int((ys * ys).sum())
-        state.update((n, sx, sy, sxx, syy))
-        yield pd.DataFrame(
-            {
-                "entity": [key[0]],
-                "n": [n], "sx": [sx], "sy": [sy], "sxx": [sxx], "syy": [syy],
-            }
-        )
-
-    return keyed.groupBy("entity").applyInPandasWithState(
-        kernel,
-        outputStructType="entity long, n long, sx long, sy long, sxx long, syy long",
-        stateStructType="n long, sx long, sy long, sxx long, syy long",
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["entity"],
+        _sums(("__x",), ("__y",), ("__x", "__x"), ("__y", "__y")),
+        "entity long, n long, sx long, sy long, sxx long, syy long",
+        "n long, sx long, sy long, sxx long, syy long",
     )
 
 
@@ -1083,10 +1063,7 @@ def run_gyration_stream_once(
                      AS decimal(38,0)) AS rg2_num,
                    CAST(CAST(n AS decimal(38,0)) * CAST(n AS decimal(38,0))
                      AS decimal(38,0)) AS rg2_den
-            FROM (
-              SELECT *, row_number() OVER (PARTITION BY entity ORDER BY n DESC) AS rn
-              FROM {v}
-            ) WHERE rn = 1
+            FROM {_latest(v, "entity", "n")}
             """
         ),
     )
@@ -1114,96 +1091,46 @@ def stream_staypoints(
     selectable downstream). ``run_staypoints_stream_once`` finishes the
     open segment the way the batch walk finishes its trailing segment.
 
-    Ingestion contract: event-time order ACROSS micro-batches per entity
-    (same as ``stream_od_transitions``) — an out-of-order batch RAISES,
-    because an anchor walk replayed out of order is a different walk.
-    The anchor keep/break decision is the identical integer-squared
-    compare as batch, so final output is byte-equal, not approximately
-    equal.
+    Ordered ingestion: see the module docstring — an anchor walk
+    replayed out of order is a different walk. The anchor keep/break
+    decision is the identical integer-squared compare as batch, so final
+    output is byte-equal, not approximately equal.
     """
-    import numpy as np
-    import pandas as pd
-
     if dist_micro < 1:
         raise ValueError(f"dist_micro must be >= 1, got {dist_micro}")
     d2 = dist_micro * dist_micro
-    cols = [
-        "entity", "start_rn", "end_rn", "n_pts",
-        "start_ep", "end_ep", "ax", "ay", "closed", "seen",
-    ]
 
-    def kernel(key, pdf_iter, state):
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(columns=cols).astype("int64")
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            [ts_col, id_col], kind="mergesort"
-        )
-        ts_ns = pdf[ts_col].astype("int64").to_numpy()
-        eids = pdf[id_col].astype("int64").to_numpy()
-        eps = ts_ns // 1_000_000_000
-        xs = np.floor(
-            (pdf[lon].to_numpy() + 180.0) * float(scale)
-        ).astype(np.int64)
-        ys = np.floor(
-            (pdf[lat].to_numpy() + 90.0) * float(scale)
-        ).astype(np.int64)
-        rows = []
-        if state.exists:
-            ax, ay, a_rn, a_ep, l_rn, l_ep, l_eid, seen = (
-                int(v) for v in state.get
-            )
-            if (int(ts_ns[0] // 1_000_000_000), int(eids[0])) <= (l_ep, l_eid):
-                raise ValueError(
-                    f"out-of-order micro-batch for entity {key[0]}: the "
-                    "ordered-ingestion contract is broken — a stay-point "
-                    "anchor walk replayed out of order diverges from batch"
-                )
-            has_anchor = True
-        else:
-            ax = ay = a_rn = a_ep = l_rn = l_ep = l_eid = seen = 0
-            has_anchor = False
+    def fold(key, pdf, state):
+        xs, ys = _micro_xy(pdf, lat, lon, scale)
+        eps = _ns(pdf[ts_col]) // 1_000_000_000
+        ax, ay, a_rn, a_ep, l_rn, l_ep, seen = (int(v) for v in state or [0] * 7)
+        has_anchor = state is not None
         ent = int(key[0])
-        for i in range(len(pdf)):
+        rows = []
+        for x, y, ep in zip(xs.tolist(), ys.tolist(), eps.tolist()):
             seen += 1
-            x, y, ep = int(xs[i]), int(ys[i]), int(eps[i])
-            if not has_anchor:
-                ax, ay, a_rn, a_ep = x, y, seen, ep
+            if has_anchor and (x - ax) ** 2 + (y - ay) ** 2 <= d2:
                 l_rn, l_ep = seen, ep
-                has_anchor = True
-            elif (x - ax) ** 2 + (y - ay) ** 2 <= d2:
-                l_rn, l_ep = seen, ep
-            else:
-                if l_ep - a_ep >= min_stay_s:
-                    rows.append(
-                        (ent, a_rn, l_rn, l_rn - a_rn + 1,
-                         a_ep, l_ep, ax, ay, 1, seen)
-                    )
-                ax, ay, a_rn, a_ep = x, y, seen, ep
-                l_rn, l_ep = seen, ep
-            l_eid = int(eids[i])
-        state.update((ax, ay, a_rn, a_ep, l_rn, l_ep, l_eid, seen))
+                continue
+            if has_anchor and l_ep - a_ep >= min_stay_s:
+                rows.append(
+                    (ent, a_rn, l_rn, l_rn - a_rn + 1, a_ep, l_ep, ax, ay, 1, seen)
+                )
+            ax, ay, a_rn, a_ep, l_rn, l_ep = x, y, seen, ep, seen, ep
+            has_anchor = True
         rows.append((ent, a_rn, l_rn, l_rn - a_rn + 1, a_ep, l_ep, ax, ay, 0, seen))
-        yield pd.DataFrame(rows, columns=cols)
+        return rows, (ax, ay, a_rn, a_ep, l_rn, l_ep, seen)
 
     keyed = stream.select(
         F.col(entity_col).alias("entity"),
         F.col(ts_col), F.col(id_col), F.col(lat), F.col(lon),
     )
-    return keyed.groupBy("entity").applyInPandasWithState(
-        kernel,
-        outputStructType=(
-            "entity long, start_rn long, end_rn long, n_pts long, "
-            "start_ep long, end_ep long, ax long, ay long, "
-            "closed long, seen long"
-        ),
-        stateStructType=(
-            "ax long, ay long, a_rn long, a_ep long, "
-            "l_rn long, l_ep long, l_eid long, seen long"
-        ),
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["entity"], fold,
+        "entity long, start_rn long, end_rn long, n_pts long, start_ep long, "
+        "end_ep long, ax long, ay long, closed long, seen long",
+        "ax long, ay long, a_rn long, a_ep long, l_rn long, l_ep long, seen long",
+        order=(ts_col, id_col),
     )
 
 
@@ -1229,11 +1156,8 @@ def run_staypoints_stream_once(
             FROM {v} WHERE closed = 1
             UNION ALL
             SELECT entity, start_rn, end_rn, n_pts, start_ep, end_ep, ax, ay
-            FROM (
-              SELECT *, row_number() OVER (PARTITION BY entity
-                                           ORDER BY seen DESC) AS rn2
-              FROM {v} WHERE closed = 0
-            ) WHERE rn2 = 1 AND end_ep - start_ep >= {min_stay_s}
+            FROM {_latest(v, "entity", "seen", where="closed = 0")}
+            WHERE end_ep - start_ep >= {min_stay_s}
             """
         ),
     )
@@ -1260,60 +1184,30 @@ def stream_dwell(
     ``tile_key_col`` (bit-identical, property-tested), so final output
     is byte-equal to batch, not approximately equal.
 
-    Ingestion contract: event-time order ACROSS micro-batches per
-    entity (same as ``stream_staypoints``) — an out-of-order batch
-    RAISES, because a dwell segment replayed out of order is a
-    different segment."""
-    import pandas as pd
+    Ordered ingestion: see the module docstring — a dwell segment
+    replayed out of order is a different segment."""
 
-    from ..functions.cells import tile_key
-
-    cols = ["tile", "entity", "gap"]
-
-    def kernel(key, pdf_iter, state):
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(columns=cols).astype("int64")
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            [ts_col, id_col], kind="mergesort"
+    def fold(key, pdf, state):
+        eps, tiles = _carried(
+            state,
+            _ns(pdf[ts_col]) // 1_000_000_000,
+            tile_key(pdf[lat].to_numpy(), pdf[lon].to_numpy(), res).astype(np.int64),
         )
-        eps = pdf[ts_col].astype("int64").to_numpy() // 1_000_000_000
-        eids = pdf[id_col].astype("int64").to_numpy()
-        tiles = tile_key(pdf[lat].to_numpy(), pdf[lon].to_numpy(), res)
-        ent = int(key[0])
-        if state.exists:
-            l_ep, l_tile, l_eid = (int(v) for v in state.get)
-            if (int(eps[0]), int(eids[0])) <= (l_ep, l_eid):
-                raise ValueError(
-                    f"out-of-order micro-batch for entity {ent}: the "
-                    "ordered-ingestion contract is broken — a dwell "
-                    "segment replayed out of order diverges from batch"
-                )
-            has_prev = True
-        else:
-            l_ep = l_tile = l_eid = 0
-            has_prev = False
-        rows = []
-        for i in range(len(pdf)):
-            ep, tile = int(eps[i]), int(tiles[i])
-            if has_prev:
-                rows.append((l_tile, ent, ep - l_ep))
-            l_ep, l_tile, l_eid = ep, tile, int(eids[i])
-            has_prev = True
-        state.update((l_ep, l_tile, l_eid))
-        yield pd.DataFrame(rows, columns=cols)
+        rows = {
+            "tile": tiles[:-1],
+            "entity": np.repeat(np.int64(key[0]), len(tiles) - 1),
+            "gap": np.diff(eps),
+        }
+        return rows, (int(eps[-1]), int(tiles[-1]))
 
     keyed = stream.select(
         F.col(entity_col).alias("entity"),
         F.col(ts_col), F.col(id_col), F.col(lat), F.col(lon),
     )
-    return keyed.groupBy("entity").applyInPandasWithState(
-        kernel,
-        outputStructType="tile long, entity long, gap long",
-        stateStructType="l_ep long, l_tile long, l_eid long",
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["entity"], fold,
+        "tile long, entity long, gap long", "l_ep long, l_tile long",
+        order=(ts_col, id_col),
     )
 
 
@@ -1358,59 +1252,21 @@ def stream_wait_time(
     micro-batch boundaries. ``run_wait_time_stream_once`` rolls the
     gaps into the batch operator's exact log2-bucket histogram.
 
-    Ingestion contract: event-time order ACROSS micro-batches per cell
-    (implied by globally time-ordered staging) — an out-of-order batch
-    RAISES."""
-    import pandas as pd
+    Ordered ingestion (see the module docstring) is per cell here, which
+    globally time-ordered staging implies."""
 
-    from ..functions.cells import tile_key_col
-
-    cols = ["tile", "gap"]
-
-    def kernel(key, pdf_iter, state):
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(columns=cols).astype("int64")
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            [ts_col, id_col], kind="mergesort"
-        )
-        eps = pdf[ts_col].astype("int64").to_numpy() // 1_000_000_000
-        eids = pdf[id_col].astype("int64").to_numpy()
-        tile = int(key[0])
-        if state.exists:
-            l_ep, l_eid = (int(v) for v in state.get)
-            if (int(eps[0]), int(eids[0])) <= (l_ep, l_eid):
-                raise ValueError(
-                    f"out-of-order micro-batch for tile {tile}: the "
-                    "ordered-ingestion contract is broken — an "
-                    "inter-arrival gap replayed out of order diverges "
-                    "from batch"
-                )
-            has_prev = True
-        else:
-            l_ep = l_eid = 0
-            has_prev = False
-        rows = []
-        for i in range(len(pdf)):
-            ep = int(eps[i])
-            if has_prev:
-                rows.append((tile, ep - l_ep))
-            l_ep, l_eid = ep, int(eids[i])
-            has_prev = True
-        state.update((l_ep, l_eid))
-        yield pd.DataFrame(rows, columns=cols)
+    def fold(key, pdf, state):
+        (eps,) = _carried(state, _ns(pdf[ts_col]) // 1_000_000_000)
+        rows = {"tile": np.repeat(np.int64(key[0]), len(eps) - 1), "gap": np.diff(eps)}
+        return rows, (int(eps[-1]),)
 
     keyed = stream.select(
         tile_key_col(F.col(lat), F.col(lon), res).alias("tile"),
         F.col(ts_col), F.col(id_col),
     )
-    return keyed.groupBy("tile").applyInPandasWithState(
-        kernel,
-        outputStructType="tile long, gap long",
-        stateStructType="l_ep long, l_eid long",
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["tile"], fold, "tile long, gap long", "l_ep long",
+        order=(ts_col, id_col),
     )
 
 
@@ -1457,69 +1313,31 @@ def stream_speed_outliers(
     staging. Emits (entity, start_ep, end_ep, dt_s, dist2) exactly
     once per flagged segment, byte-equal to batch.
 
-    Ingestion contract: event-time order ACROSS micro-batches per
-    entity (same as ``stream_dwell``) — an out-of-order batch RAISES."""
-    import numpy as np
-    import pandas as pd
-
+    Ordered ingestion: see the module docstring."""
     if vmax_micro < 1:
         raise ValueError(f"vmax_micro must be >= 1, got {vmax_micro}")
-    cols = ["entity", "start_ep", "end_ep", "dt_s", "dist2"]
 
-    def kernel(key, pdf_iter, state):
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(columns=cols).astype("int64")
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            [ts_col, id_col], kind="mergesort"
+    def fold(key, pdf, state):
+        walk = _carried(
+            state, _ns(pdf[ts_col]) // 1_000_000_000, *_micro_xy(pdf, lat, lon, scale)
         )
-        eps = pdf[ts_col].astype("int64").to_numpy() // 1_000_000_000
-        eids = pdf[id_col].astype("int64").to_numpy()
-        xs = np.floor((pdf[lon].to_numpy() + 180.0) * float(scale)).astype(
-            np.int64
-        )
-        ys = np.floor((pdf[lat].to_numpy() + 90.0) * float(scale)).astype(
-            np.int64
-        )
-        ent = int(key[0])
-        if state.exists:
-            l_ep, l_x, l_y, l_eid = (int(v) for v in state.get)
-            if (int(eps[0]), int(eids[0])) <= (l_ep, l_eid):
-                raise ValueError(
-                    f"out-of-order micro-batch for entity {ent}: the "
-                    "ordered-ingestion contract is broken — a speed "
-                    "segment replayed out of order diverges from batch"
-                )
-            has_prev = True
-        else:
-            l_ep = l_x = l_y = l_eid = 0
-            has_prev = False
+        pts = list(zip(*(c.tolist() for c in walk)))
         rows = []
-        for i in range(len(pdf)):
-            ep, x, y = int(eps[i]), int(xs[i]), int(ys[i])
-            if has_prev:
-                dt = ep - l_ep
-                d2 = (x - l_x) ** 2 + (y - l_y) ** 2
-                if d2 > (vmax_micro * dt) ** 2:
-                    rows.append((ent, l_ep, ep, dt, d2))
-            l_ep, l_x, l_y, l_eid = ep, x, y, int(eids[i])
-            has_prev = True
-        state.update((l_ep, l_x, l_y, l_eid))
-        yield pd.DataFrame(rows, columns=cols)
+        for (e0, x0, y0), (e1, x1, y1) in zip(pts, pts[1:]):
+            dt, d2 = e1 - e0, (x1 - x0) ** 2 + (y1 - y0) ** 2
+            if d2 > (vmax_micro * dt) ** 2:
+                rows.append((int(key[0]), e0, e1, dt, d2))
+        return rows, pts[-1]
 
     keyed = stream.select(
         F.col(entity_col).alias("entity"),
         F.col(ts_col), F.col(id_col), F.col(lat), F.col(lon),
     )
-    return keyed.groupBy("entity").applyInPandasWithState(
-        kernel,
-        outputStructType=(
-            "entity long, start_ep long, end_ep long, dt_s long, dist2 long"
-        ),
-        stateStructType="l_ep long, l_x long, l_y long, l_eid long",
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["entity"], fold,
+        "entity long, start_ep long, end_ep long, dt_s long, dist2 long",
+        "l_ep long, l_x long, l_y long",
+        order=(ts_col, id_col),
     )
 
 
@@ -1549,64 +1367,30 @@ def stream_cohorts(
     """Stateful streaming cohort tracker (the streaming half of
     operators/tiling.py ``user_cohorts``): per entity, state carries
     (cohort = first active period, last emitted period); because the
-    ordered-ingestion contract guarantees per-entity event-time order,
-    a NEW active period is exactly an event whose period exceeds the
-    last emitted one — each (entity, period) emits exactly once with
-    its cohort attached, across micro-batch boundaries.
-    ``run_cohorts_stream_once`` rolls the emissions into the batch
-    operator's exact retention triangle."""
-    import pandas as pd
-
+    ordered-ingestion contract (module docstring) guarantees per-entity
+    event-time order, a NEW active period is exactly an event whose
+    period exceeds the last emitted one — each (entity, period) emits
+    exactly once with its cohort attached, across micro-batch
+    boundaries. ``run_cohorts_stream_once`` rolls the emissions into
+    the batch operator's exact retention triangle."""
     if period_s < 1:
         raise ValueError(f"period_s must be >= 1, got {period_s}")
-    cols = ["entity", "cohort", "period"]
 
-    def kernel(key, pdf_iter, state):
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(columns=cols).astype("int64")
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            [ts_col, id_col], kind="mergesort"
-        )
-        eps = pdf[ts_col].astype("int64").to_numpy() // 1_000_000_000
-        eids = pdf[id_col].astype("int64").to_numpy()
-        ent = int(key[0])
-        if state.exists:
-            cohort, last_p, l_ep, l_eid = (int(v) for v in state.get)
-            if (int(eps[0]), int(eids[0])) <= (l_ep, l_eid):
-                raise ValueError(
-                    f"out-of-order micro-batch for entity {ent}: the "
-                    "ordered-ingestion contract is broken — a cohort "
-                    "walk replayed out of order diverges from batch"
-                )
-            has_state = True
-        else:
-            cohort = last_p = l_ep = l_eid = 0
-            has_state = False
-        rows = []
-        for i in range(len(pdf)):
-            p = int(eps[i]) // period_s
-            if not has_state:
-                cohort, last_p = p, p
-                rows.append((ent, cohort, p))
-                has_state = True
-            elif p > last_p:
-                rows.append((ent, cohort, p))
-                last_p = p
-            l_ep, l_eid = int(eps[i]), int(eids[i])
-        state.update((cohort, last_p, l_ep, l_eid))
-        yield pd.DataFrame(rows, columns=cols)
+    def fold(key, pdf, state):
+        periods = _ns(pdf[ts_col]) // 1_000_000_000 // period_s
+        cohort, last_p = state or (int(periods[0]), int(periods[0]) - 1)
+        # periods are sorted, so the new ones are the distinct tail
+        new = np.unique(periods[periods > last_p]).tolist()
+        rows = [(int(key[0]), int(cohort), p) for p in new]
+        return rows, (int(cohort), new[-1] if new else int(last_p))
 
     keyed = stream.select(
         F.col(entity_col).alias("entity"), F.col(ts_col), F.col(id_col)
     )
-    return keyed.groupBy("entity").applyInPandasWithState(
-        kernel,
-        outputStructType="entity long, cohort long, period long",
-        stateStructType="cohort long, last_p long, l_ep long, l_eid long",
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["entity"], fold,
+        "entity long, cohort long, period long", "cohort long, last_p long",
+        order=(ts_col, id_col),
     )
 
 
@@ -1650,69 +1434,37 @@ def stream_trip_od(
     (closed = 0, monotone ``seen``) so ``run_trip_od_stream_once`` can
     finish the final open trip the way batch finishes its trailing
     trip. Cells come from the numpy ``tile_key`` twin (bit-identical to
-    batch). Ordered-ingestion contract as everywhere: an out-of-order
-    batch RAISES."""
-    import pandas as pd
-
-    from ..functions.cells import tile_key
-
+    batch). Ordered ingestion: see the module docstring."""
     if max_gap_s < 1:
         raise ValueError(f"max_gap_s must be >= 1, got {max_gap_s}")
-    cols = ["entity", "from_tile", "to_tile", "closed", "seen"]
 
-    def kernel(key, pdf_iter, state):
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(columns=cols).astype("int64")
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            [ts_col, id_col], kind="mergesort"
-        )
-        eps = pdf[ts_col].astype("int64").to_numpy() // 1_000_000_000
-        eids = pdf[id_col].astype("int64").to_numpy()
+    def fold(key, pdf, state):
+        eps = _ns(pdf[ts_col]) // 1_000_000_000
         tiles = tile_key(pdf[lat].to_numpy(), pdf[lon].to_numpy(), res)
+        o_tile, l_tile, l_ep, seen = (int(v) for v in state or [0] * 4)
+        has_trip = state is not None
         ent = int(key[0])
-        if state.exists:
-            o_tile, l_tile, l_ep, l_eid, seen = (int(v) for v in state.get)
-            if (int(eps[0]), int(eids[0])) <= (l_ep, l_eid):
-                raise ValueError(
-                    f"out-of-order micro-batch for entity {ent}: the "
-                    "ordered-ingestion contract is broken — a trip walk "
-                    "replayed out of order diverges from batch"
-                )
-            has_trip = True
-        else:
-            o_tile = l_tile = l_ep = l_eid = seen = 0
-            has_trip = False
         rows = []
-        for i in range(len(pdf)):
-            ep, tile = int(eps[i]), int(tiles[i])
+        for ep, tile in zip(eps.tolist(), tiles.tolist()):
             seen += 1
             if has_trip and ep - l_ep > max_gap_s:
                 rows.append((ent, o_tile, l_tile, 1, seen))
                 has_trip = False
             if not has_trip:
-                o_tile = tile
-                has_trip = True
-            l_tile, l_ep, l_eid = tile, ep, int(eids[i])
-        state.update((o_tile, l_tile, l_ep, l_eid, seen))
+                o_tile, has_trip = tile, True
+            l_tile, l_ep = tile, ep
         rows.append((ent, o_tile, l_tile, 0, seen))
-        yield pd.DataFrame(rows, columns=cols)
+        return rows, (o_tile, l_tile, l_ep, seen)
 
     keyed = stream.select(
         F.col(entity_col).alias("entity"),
         F.col(ts_col), F.col(id_col), F.col(lat), F.col(lon),
     )
-    return keyed.groupBy("entity").applyInPandasWithState(
-        kernel,
-        outputStructType=(
-            "entity long, from_tile long, to_tile long, closed long, seen long"
-        ),
-        stateStructType=(
-            "o_tile long, l_tile long, l_ep long, l_eid long, seen long"
-        ),
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["entity"], fold,
+        "entity long, from_tile long, to_tile long, closed long, seen long",
+        "o_tile long, l_tile long, l_ep long, seen long",
+        order=(ts_col, id_col),
     )
 
 
@@ -1735,11 +1487,8 @@ def run_trip_od_stream_once(
             WITH trips AS (
               SELECT entity, from_tile, to_tile FROM {v} WHERE closed = 1
               UNION ALL
-              SELECT entity, from_tile, to_tile FROM (
-                SELECT *, row_number() OVER (PARTITION BY entity
-                                             ORDER BY seen DESC) AS rn2
-                FROM {v} WHERE closed = 0
-              ) WHERE rn2 = 1
+              SELECT entity, from_tile, to_tile
+              FROM {_latest(v, "entity", "seen", where="closed = 0")}
             )
             SELECT from_tile, to_tile, count(*) AS n_trips,
                    count(DISTINCT entity) AS n_entities
@@ -1765,8 +1514,6 @@ def stream_cms_hitters(
     (kind, id, n) row per touched group per trigger; heavy-hitter
     extraction happens once over final states via the SAME
     ``cms_score`` back half the batch operator uses."""
-    import pandas as pd
-
     from ..operators.sketches import CMS_DEPTH, CMS_SALTS, CMS_WIDTH, cms_bucket
 
     key = F.col("tile")
@@ -1788,19 +1535,8 @@ def stream_cms_hitters(
         .select("g.kind", "g.id")
     )
 
-    def kernel(key, pdf_iter, state):
-        n = state.get[0] if state.exists else 0
-        for pdf in pdf_iter:
-            n = int(n) + len(pdf)
-        state.update((int(n),))
-        yield pd.DataFrame({"kind": [key[0]], "id": [key[1]], "n": [int(n)]})
-
-    return keyed.groupBy("kind", "id").applyInPandasWithState(
-        kernel,
-        outputStructType="kind int, id long, n long",
-        stateStructType="n long",
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["kind", "id"], _sums(), "kind int, id long, n long", "n long"
     )
 
 
@@ -1819,13 +1555,7 @@ def run_cms_stream_once(
 
     def finish(v):
         fin = spark.sql(
-            f"""
-            SELECT kind, id, n FROM (
-              SELECT *, row_number() OVER (
-                PARTITION BY kind, id ORDER BY n DESC
-              ) AS rn FROM {v}
-            ) WHERE rn = 1
-            """
+            f"SELECT kind, id, n FROM {_latest(v, 'kind, id', 'n')}"
         ).localCheckpoint(eager=True)
         exact = fin.filter(F.col("kind") == CMS_DEPTH).select(
             F.col("id").alias("key"), F.col("n").alias("exact_n")
@@ -1859,68 +1589,37 @@ def stream_line_density(
     once, already per-segment deduped — the same
     ((x0*(s-i) + x1*i) div s) walk as batch, via the numpy
     ``tile_key`` twin. No trailing state to flush: a segment closes
-    the moment its end ping arrives. Ordered-ingestion contract as
-    everywhere: an out-of-order batch RAISES."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.cells import tile_key
-
+    the moment its end ping arrives. Ordered ingestion: see the module
+    docstring."""
     n = 1 << res
-    cols = ["entity", "tile"]
 
-    def kernel(key, pdf_iter, state):
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(columns=cols).astype("int64")
-            return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            [ts_col, id_col], kind="mergesort"
+    def fold(key, pdf, state):
+        (tiles,) = _carried(
+            state, tile_key(pdf[lat].to_numpy(), pdf[lon].to_numpy(), res).astype(np.int64)
         )
-        eps = pdf[ts_col].astype("int64").to_numpy() // 1_000_000_000
-        eids = pdf[id_col].astype("int64").to_numpy()
-        tiles = tile_key(pdf[lat].to_numpy(), pdf[lon].to_numpy(), res)
         ent = int(key[0])
-        if state.exists:
-            prev, l_ep, l_eid = (int(v) for v in state.get)
-            if (int(eps[0]), int(eids[0])) <= (l_ep, l_eid):
-                raise ValueError(
-                    f"out-of-order micro-batch for entity {ent}: the "
-                    "ordered-ingestion contract is broken — a segment "
-                    "walk replayed out of order diverges from batch"
-                )
-            has = True
-        else:
-            prev, has = 0, False
         rows = []
-        for i in range(len(pdf)):
-            t = int(tiles[i])
-            if has:
-                x0, y0 = prev // n, prev % n
-                x1, y1 = t // n, t % n
-                s = max(abs(x1 - x0), abs(y1 - y0))
-                if s == 0:
-                    cells = [prev]
-                else:
-                    ii = np.arange(s + 1, dtype=np.int64)
-                    cx = (x0 * (s - ii) + x1 * ii) // s
-                    cy = (y0 * (s - ii) + y1 * ii) // s
-                    cells = np.unique(cx * n + cy).tolist()
-                rows.extend((ent, int(c)) for c in cells)
-            prev, has = t, True
-        state.update((prev, int(eps[-1]), int(eids[-1])))
-        yield pd.DataFrame(rows, columns=cols)
+        for prev, t in zip(tiles[:-1].tolist(), tiles[1:].tolist()):
+            x0, y0 = prev // n, prev % n
+            x1, y1 = t // n, t % n
+            s = max(abs(x1 - x0), abs(y1 - y0))
+            if s == 0:
+                cells = [prev]
+            else:
+                ii = np.arange(s + 1, dtype=np.int64)
+                cx = (x0 * (s - ii) + x1 * ii) // s
+                cy = (y0 * (s - ii) + y1 * ii) // s
+                cells = np.unique(cx * n + cy).tolist()
+            rows.extend((ent, int(c)) for c in cells)
+        return rows, (int(tiles[-1]),)
 
     keyed = stream.select(
         F.col(entity_col).alias("entity"),
         F.col(ts_col), F.col(id_col), F.col(lat), F.col(lon),
     )
-    return keyed.groupBy("entity").applyInPandasWithState(
-        kernel,
-        outputStructType="entity long, tile long",
-        stateStructType="l_tile long, l_ep long, l_eid long",
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["entity"], fold, "entity long, tile long", "l_tile long",
+        order=(ts_col, id_col),
     )
 
 
@@ -1961,10 +1660,6 @@ def stream_tile_trend(
     the same bound as batch (day ~ 2e4, |y| <= ~1e6, per-cell n <= ~1e6
     keeps every term under 2^63). Emits one update row per
     (tile, trigger)."""
-    import pandas as pd
-
-    from ..functions.cells import tile_key_col
-
     day = (F.unix_timestamp(F.col(ts_col)) / F.lit(86400)).cast("long")
     yq = F.round(F.col(value_col).cast("double") * q_scale).cast("long")
     keyed = stream.select(
@@ -1972,33 +1667,11 @@ def stream_tile_trend(
         day.alias("__t"),
         yq.alias("__y"),
     )
-
-    def kernel(key, pdf_iter, state):
-        n = st = sy = sty = stt = 0
-        if state.exists:
-            n, st, sy, sty, stt = (int(v) for v in state.get)
-        for pdf in pdf_iter:
-            ts = pdf["__t"].astype("int64")
-            ys = pdf["__y"].astype("int64")
-            n += len(pdf)
-            st += int(ts.sum())
-            sy += int(ys.sum())
-            sty += int((ts * ys).sum())
-            stt += int((ts * ts).sum())
-        state.update((n, st, sy, sty, stt))
-        yield pd.DataFrame(
-            {
-                "tile": [key[0]],
-                "n": [n], "st": [st], "sy": [sy], "sty": [sty], "stt": [stt],
-            }
-        )
-
-    return keyed.groupBy("tile").applyInPandasWithState(
-        kernel,
-        outputStructType="tile long, n long, st long, sy long, sty long, stt long",
-        stateStructType="n long, st long, sy long, sty long, stt long",
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["tile"],
+        _sums(("__t",), ("__y",), ("__t", "__y"), ("__t", "__t")),
+        "tile long, n long, st long, sy long, sty long, stt long",
+        "n long, st long, sy long, sty long, stt long",
     )
 
 
@@ -2008,23 +1681,16 @@ def run_tile_trend_stream_once(
     """Drive the streaming trend moments over all staged files and finish
     each tile's FINAL state with the same rational-slope algebra as batch
     ``tile_trend`` — byte-identical output schema and values."""
-    # update-mode memory sink keeps every trigger's row; the per-tile
-    # final state is the one with the largest n (sums only grow)
     return drain_once(
         spark, points_dir, checkpoint,
         lambda st: stream_tile_trend(st, res=res), "update",
         lambda v: spark.sql(
             f"""
-            WITH fin AS (
-              SELECT tile, n, st, sy, sty, stt,
-                     row_number() OVER (PARTITION BY tile ORDER BY n DESC) AS rk
-              FROM {v}
-            )
             SELECT tile, CAST(n AS BIGINT) AS n_events, CAST(st AS BIGINT) AS sum_t,
                    CAST(sy AS BIGINT) AS sum_y,
                    CAST(n * sty - st * sy AS BIGINT) AS slope_num,
                    CAST(n * stt - st * st AS BIGINT) AS slope_den
-            FROM fin WHERE rk = 1
+            FROM {_latest(v, "tile", "n")}
             """
         ),
     )
@@ -2041,33 +1707,14 @@ def stream_centroid_moments(
     strongest parity class), so the final per-day state equals the
     batch daily rollup of ``centroid_drift`` under ANY arrival order.
     Emits one update row per (day, trigger)."""
-    import pandas as pd
-
     keyed = stream.select(
         F.expr(f"div(unix_timestamp({ts_col}), 86400)").alias("day"),
         micro_deg(lat).alias("__x"),
         micro_deg(lon).alias("__y"),
     )
-
-    def kernel(key, pdf_iter, state):
-        n = sx = sy = 0
-        if state.exists:
-            n, sx, sy = (int(v) for v in state.get)
-        for pdf in pdf_iter:
-            xs = pdf["__x"].astype("int64")
-            ys = pdf["__y"].astype("int64")
-            n += len(pdf)
-            sx += int(xs.sum())
-            sy += int(ys.sum())
-        state.update((n, sx, sy))
-        yield pd.DataFrame({"day": [key[0]], "n": [n], "sx": [sx], "sy": [sy]})
-
-    return keyed.groupBy("day").applyInPandasWithState(
-        kernel,
-        outputStructType="day long, n long, sx long, sy long",
-        stateStructType="n long, sx long, sy long",
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["day"], _sums(("__x",), ("__y",)),
+        "day long, n long, sx long, sy long", "n long, sx long, sy long",
     )
 
 
@@ -2082,12 +1729,7 @@ def run_centroid_drift_stream_once(
         stream_centroid_moments, "update",
         lambda v: spark.sql(
             f"""
-            WITH fin AS (
-              SELECT day, n, sx, sy,
-                     row_number() OVER (PARTITION BY day ORDER BY n DESC) AS rk
-              FROM {v}
-            ),
-            daily AS (SELECT day, n, sx, sy FROM fin WHERE rk = 1),
+            WITH daily AS (SELECT day, n, sx, sy FROM {_latest(v, "day", "n")}),
             lagged AS (
               SELECT day, n, sx, sy,
                      lag(n) OVER (ORDER BY day) AS pn,
@@ -2115,30 +1757,12 @@ def stream_hour_type_counts(
     counts per cell — order-free sums keyed by (hour, etype), so the
     final state equals the batch contingency under ANY arrival order.
     Emits one update row per (cell, trigger)."""
-    import pandas as pd
-
     keyed = stream.select(
         F.expr(f"(unix_timestamp({ts_col}) % 86400) div 3600").alias("hour"),
         F.col(type_col).alias("etype"),
     )
-
-    def kernel(key, pdf_iter, state):
-        n = 0
-        if state.exists:
-            (n,) = (int(v) for v in state.get)
-        for pdf in pdf_iter:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame(
-            {"hour": [key[0]], "etype": [key[1]], "obs": [n]}
-        )
-
-    return keyed.groupBy("hour", "etype").applyInPandasWithState(
-        kernel,
-        outputStructType="hour long, etype string, obs long",
-        stateStructType="n long",
-        outputMode="update",
-        timeoutConf="NoTimeout",
+    return keyed_fold(
+        keyed, ["hour", "etype"], _sums(), "hour long, etype string, obs long", "n long"
     )
 
 
@@ -2153,13 +1777,7 @@ def run_hour_type_stream_once(
         stream_hour_type_counts, "update",
         lambda v: spark.sql(
             f"""
-            WITH fin AS (
-              SELECT hour, etype, obs,
-                     row_number() OVER (PARTITION BY hour, etype
-                                        ORDER BY obs DESC) AS rk
-              FROM {v}
-            ),
-            obs AS (SELECT hour, etype, obs FROM fin WHERE rk = 1),
+            WITH obs AS (SELECT hour, etype, obs FROM {_latest(v, "hour, etype", "obs")}),
             mh AS (SELECT hour, sum(obs) AS n_hour FROM obs GROUP BY 1),
             mt AS (SELECT etype, sum(obs) AS n_type FROM obs GROUP BY 1),
             tot AS (SELECT sum(obs) AS n_total FROM obs)

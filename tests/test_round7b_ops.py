@@ -477,29 +477,6 @@ def test_stream_dwell_parity_and_contract(spark, tmp_path):
         assert s[t]["n_entities"] == bt[t]["n_entities"]
 
 
-def test_stream_dwell_rejects_out_of_order(spark, tmp_path):
-    from langtoolsosm_spark.streaming.microbatch import run_dwell_stream_once
-
-    a = (10.0, 10.0)
-    pdf = pd.DataFrame(
-        [(1, 100, 0, *a), (1, 50, 1, *a)],  # second batch goes BACK in time
-        columns=["user_id", "epoch", "event_id", "lat", "lon"],
-    )
-    pdf["ts"] = pd.to_datetime(pdf["epoch"], unit="s").astype("datetime64[us]")
-    pdf = pdf[["user_id", "ts", "event_id", "lat", "lon"]]
-    src = tmp_path / "src"
-    src.mkdir()
-    import os
-    for i in range(2):
-        p = str(src / f"b{i}.parquet")
-        pdf.iloc[i : i + 1].to_parquet(p, index=False)
-        os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-    with pytest.raises(Exception, match="out-of-order|StreamingQueryException"):
-        run_dwell_stream_once(
-            spark, str(src), str(tmp_path / "ckpt"), res=6
-        ).collect()
-
-
 def test_knn_classify_vote_and_tiebreak(spark):
     # replicate the registry composition on a hand case: 1 query point,
     # 5 features with labels 0,0,1,1,2 at increasing distance -> labels

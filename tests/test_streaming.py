@@ -352,3 +352,95 @@ def test_stream_od_transitions_parity_and_order_contract(spark, tmp_path):
     src2 = stage(tmp_path / "bad", [(1000, slice(3, 5)), (2000, slice(0, 3))])
     with pytest.raises(Exception, match="out-of-order|ordered-ingestion|StreamingQuery"):
         run_od_stream_once(spark, src2, str(tmp_path / "bad" / "ckpt"), res=4)
+
+
+def _ordered_cases():
+    """The 9 ordered walks: (streaming driver, batch operator) on the same
+    events, both called with the parameters that make two positions yield
+    rows (A inside zone G1, B outside every zone, one res-4 cell, two
+    res-8 cells)."""
+    import numpy as np
+
+    from langtoolsosm_spark.operators import spatial as sp
+    from langtoolsosm_spark.operators import tiling as tl
+    from langtoolsosm_spark.plans.driver_queries import GEO_POLYGONS, geo_polygons_df
+
+    rings = {pid: np.asarray(ring, dtype=float) for pid, ring in GEO_POLYGONS}
+    tb = {"order_tiebreak": "event_id"}
+    return {
+        "od": (
+            lambda s, src, ck: mb.run_od_stream_once(s, src, ck, res=8),
+            lambda ev: sp.od_flows(ev, "user_id", "ts", res=8, **tb),
+        ),
+        "geofence": (
+            lambda s, src, ck: mb.run_geofence_stream_once(s, src, ck, rings),
+            lambda ev: sp.geofence_transitions(
+                ev, geo_polygons_df(ev.sparkSession), "user_id", "ts", res=8, **tb
+            ),
+        ),
+        "staypoints": (
+            lambda s, src, ck: mb.run_staypoints_stream_once(s, src, ck, 1_000_000, 0),
+            lambda ev: sp.staypoints(ev, 1_000_000, 0),
+        ),
+        "dwell": (
+            lambda s, src, ck: mb.run_dwell_stream_once(s, src, ck, res=8),
+            lambda ev: tl.dwell_time(ev, res=8, **tb),
+        ),
+        "wait_time": (
+            lambda s, src, ck: mb.run_wait_time_stream_once(s, src, ck, res=4),
+            lambda ev: tl.wait_time_hist(ev, res=4, **tb),
+        ),
+        "speed": (
+            lambda s, src, ck: mb.run_speed_stream_once(s, src, ck, vmax_micro=1),
+            lambda ev: sp.speed_outliers(ev, "user_id", "ts", vmax_micro=1, **tb),
+        ),
+        "cohorts": (
+            lambda s, src, ck: mb.run_cohorts_stream_once(s, src, ck, period_s=60),
+            lambda ev: tl.user_cohorts(ev, "user_id", "ts", period_s=60),
+        ),
+        "trip_od": (
+            lambda s, src, ck: mb.run_trip_od_stream_once(s, src, ck, max_gap_s=1, res=8),
+            lambda ev: sp.trip_od(ev, "user_id", "ts", max_gap_s=1, res=8, **tb),
+        ),
+        "line_density": (
+            lambda s, src, ck: mb.run_line_density_stream_once(s, src, ck, res=8),
+            lambda ev: sp.line_density(ev, "user_id", "ts", res=8, **tb),
+        ),
+    }
+
+
+@pytest.mark.parametrize("kernel", list(_ordered_cases()))
+def test_ordered_ingestion_at_full_ts_resolution(spark, tmp_path, kernel):
+    """The ordered-ingestion check compares full (ts, event_id), the order
+    the batch operators walk. Two one-row files, one per trigger, for one
+    entity: (a) 100.7 s id 5 then 100.9 s id 3 is in order although the
+    ids fall inside one second — it must run and equal batch; (b) 100.9 s
+    id 3 then 100.2 s id 7 goes back in time inside one second — it must
+    raise."""
+    import os
+
+    import pandas as pd
+
+    run, batch = _ordered_cases()[kernel]
+
+    def stage(name, rows):
+        pdf = pd.DataFrame(rows, columns=["user_id", "epoch", "event_id", "lat", "lon"])
+        pdf["ts"] = pd.to_datetime(pdf["epoch"], unit="s").astype("datetime64[us]")
+        pdf = pdf[["user_id", "ts", "event_id", "lat", "lon"]]
+        src = tmp_path / name / "src"
+        src.mkdir(parents=True)
+        for i in range(len(pdf)):
+            p = str(src / f"b{i}.parquet")
+            pdf.iloc[i : i + 1].to_parquet(p, index=False)
+            os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
+        return pdf, str(src), str(tmp_path / name / "ckpt")
+
+    a, b = (37.0, 0.5), (38.0, 2.0)
+    pdf, src, ck = stage("ok", [(1, 100.7, 5, *a), (1, 100.9, 3, *b)])
+    got = sorted(map(tuple, run(spark, src, ck).collect()))
+    want = sorted(map(tuple, batch(spark.createDataFrame(pdf)).collect()))
+    assert got == want and len(want) > 0
+
+    _, src, ck = stage("bad", [(1, 100.9, 3, *a), (1, 100.2, 7, *b)])
+    with pytest.raises(Exception, match="out-of-order micro-batch"):
+        run(spark, src, ck).collect()
